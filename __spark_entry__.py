@@ -569,9 +569,10 @@ def ts_lb_keogh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     envelope radius 2 on the candidate, exceedance sum from the query —
     expressible as SQL end-to-end."""
     from tslearn_spark.metrics import (
-        _spread, envelope_cols, envelope_struct_col, lb_keogh_env_col,
+        envelope_cols, envelope_struct_col, lb_keogh_env_col,
     )
     from tslearn_spark.preprocessing import resample
+    from tslearn_spark.session import size_tasks
 
     # materialize the series build once (both join sides read it), spread
     # the stream side (the non-equi join's 562k interpreted LB evals were
@@ -585,7 +586,9 @@ def ts_lb_keogh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = ts.select(
         F.col("series_id").alias("id2"), lo.alias("lo"), up.alias("up")
     ).select("id2", envelope_struct_col("lo", "up").alias("env")).localCheckpoint()
-    q = _spread(ts.select(F.col("series_id").alias("id1"), F.col("values").alias("qv")))
+    q = size_tasks(
+        ts.select(F.col("series_id").alias("id1"), F.col("values").alias("qv"))
+    )
     sm = _oracle_sample_mod()
     if sm:  # board sampling: query side only; envelope side stays full
         q = q.where(F.col("id1") % sm == 0)
@@ -988,10 +991,11 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprinting in one doc_id-grain query (the driver caps the board
     at 50 queries; all four operators stay hash-gated — fingerprints
     merged here in r7 to free a slot for dedup_minhash_verified)."""
-    from tslearn_spark.pipeline.dedup import _spread_docs
+    from tslearn_spark.pipeline.dedup import DOC_WORK
     from tslearn_spark.pipeline.text import (
         fingerprint_col, language_cols, quality_cols, token_count_cols,
     )
+    from tslearn_spark.session import size_tasks
 
     t = load_tables(spark, sf_dir)
     # r14 (guide §2.4): all four operators are map-only projections of
@@ -1007,7 +1011,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
               ("upper_ratio", upper), ("digit_ratio", digit),
               ("stopword_ratio", stop)]
     pred_lang, score = language_cols()
-    return _spread_docs(t["documents"]).select(
+    return size_tasks(t["documents"], DOC_WORK).select(
         "doc_id",
         n_chars_q, n_words,
         *[F.round(c, 6).alias(n) for n, c in round6],
@@ -1073,8 +1077,15 @@ _TINY_INT_SQL = """
 def _tiny_int_series(spark: SparkSession) -> DataFrame:
     """12 tiny integer-valued series (lengths 5..8) for the exact-DP hash
     gates: floor()-quantized values keep every kernel arithmetic step an
-    exact integer so Spark and DuckDB agree bit-for-bit."""
-    return spark.sql(_TINY_INT_SQL)
+    exact integer so Spark and DuckDB agree bit-for-bit.
+
+    Returned as a local relation: several kernel subplans consume the
+    slice, so the events scan + window runs once.  Spark spreads local
+    data one row per partition up to the slot count, and task sizing
+    passes that through, so each kernel stage runs min(12, slots) tasks
+    (4 on a 4-slot session, 12 on 32 slots)."""
+    df = spark.sql(_TINY_INT_SQL)
+    return spark.createDataFrame(df.toPandas(), df.schema)
 
 
 def cdist_dtw_tiny(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1129,19 +1140,11 @@ def cdist_dtw_tiny(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tslearn_spark.metrics import cdist, pair_metric_udf, self_pairs
 
     load_tables(spark, sf_dir)
-    # localCheckpoint: six kernel subplans consume the tiny series —
-    # materialize the 12-row input once instead of re-running the
-    # events scan + window per subplan
-    tiny = _tiny_int_series(spark).localCheckpoint()
-    # spread_to=8: this slice is CONSTANT-size by construction (12
-    # series, <=144 pairs, at every sf) — full-cluster spread costs
-    # ~10 ms of Arrow task overhead per partition per kernel stage for
-    # microseconds of DP work (r14, guide §2: size partitioning to the
-    # work).  Real-scale cdist callers pass nothing and keep all cores.
-    edges = cdist(tiny, metric="dtw", spread_to=8).select(
+    tiny = _tiny_int_series(spark)
+    edges = cdist(tiny, metric="dtw").select(
         "id1", "id2", F.round("dist", 6).alias("dtw")
     )
-    tri = self_pairs(tiny, spread_to=8).select(
+    tri = self_pairs(tiny).select(
         "id1", "id2",
         F.round(pair_metric_udf("lcss", eps=1.0)("values1", "values2"), 6).alias("lcss"),
     )
@@ -1153,8 +1156,7 @@ def cdist_dtw_tiny(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  F.col("series_id").alias("id2"),
                                  F.lit(1.0).alias("lcss")))
     )
-    edges_band = cdist(tiny, metric="dtw", sakoe_chiba_radius=2,
-                       spread_to=8).select(
+    edges_band = cdist(tiny, metric="dtw", sakoe_chiba_radius=2).select(
         "id1", "id2", F.round("dist", 6).alias("dtw_band")
     )
     # full ordered 12x12 pair grid drives the batched mixed-shape
@@ -1253,7 +1255,7 @@ def knn_dtw_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     (neighbors.py:353-562 kneighbors + :502-531 vote).
 
     Runs the REAL distributed path — broadcast train, mixed-shape
-    banded batch DP (kernels.py:248 dtw_banded_batch), tie-aware top-k,
+    banded batch DP (kernels.dtw_banded_batch_mixed), tie-aware top-k,
     majority vote — on floor()-quantized integer series (lengths 12..16
     by user, sakoe_chiba_radius=5, labels user_id % 3).  On integer
     values every DP cell is an exact integer (the row-scan cumsum trick
@@ -1487,12 +1489,9 @@ def kernel_kmeans_assign_tiny(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tslearn_spark.clustering import KernelKMeans
 
     load_tables(spark, sf_dir)
-    tiny = _tiny_int_series(spark).localCheckpoint()
-    # spread_to=8 rides kernel_params into the GAK cdist: the gate's
-    # series set is constant-size (12 rows) at every sf — see
-    # cdist_dtw_tiny's note (r14)
+    tiny = _tiny_int_series(spark)
     kk = KernelKMeans(n_clusters=3, kernel="gak",
-                      kernel_params={"sigma": 100.0, "spread_to": 8})
+                      kernel_params={"sigma": 100.0})
     kk.labels_ = tiny.select(
         "series_id", (F.col("series_id") % 3).cast("int").alias("cluster")
     )
@@ -1588,9 +1587,7 @@ def shapelet_score_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tslearn_spark.shapelets import LearningShapelets
 
     load_tables(spark, sf_dir)
-    tiny = _tiny_int_series(spark).cache()  # two UDF consumers; the
-    # seeds collect below materializes the cache (r14: an extra count()
-    # job bought nothing)
+    tiny = _tiny_int_series(spark)
     seeds = {
         r["series_id"]: r["values"]
         for r in tiny.where(F.col("series_id") < 3).collect()
@@ -1660,7 +1657,7 @@ def svc_gak_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tslearn_spark.svm import TimeSeriesSVC
 
     load_tables(spark, sf_dir)
-    tiny = _tiny_int_series(spark).localCheckpoint()
+    tiny = _tiny_int_series(spark)
     labeled = tiny.withColumn(
         "label", (F.col("series_id") % 2).cast("string"))
     train = labeled.where(F.col("series_id") < 2)

@@ -113,3 +113,16 @@ class TestCKernelBitwise:
         aa, bb = _mixed(rs, 8), _mixed(rs, 8)
         out = K.dtw_banded_batch_mixed(aa, bb, 5)  # must not raise
         assert np.isfinite(out).all()
+
+
+def test_so_path_keys_on_build_flags(monkeypatch):
+    """The .so cache key covers the compile flags (and the compiler and
+    machine): changing _CFLAGS must build a fresh library, never reuse
+    one compiled under the old flags."""
+    before = ck._so_path()
+    assert ck._so_path() == before  # stable for an unchanged build
+    monkeypatch.setattr(ck, "_CFLAGS", [*ck._CFLAGS, "-DTSLEARN_SPARK_PROBE"])
+    flagged = ck._so_path()
+    assert flagged != before
+    monkeypatch.setattr(ck.platform, "machine", lambda: "other-arch")
+    assert ck._so_path() not in (before, flagged)

@@ -569,38 +569,83 @@ class TestSimsearch:
         # must match bit-for-bit however the batches were shaped
         assert small == big
 
-    def test_spread_compute_work_derived(self, spark):
-        """r15 (guide §2): _spread_compute sizes the task count by WORK
-        (flops_per_row x rows vs a per-task flop quantum), capped at
-        defaultParallelism, instead of always manufacturing one task
-        per slot out of sub-slot-count inputs.  Partitioning never
-        affects results (per-task partial top-k + exact tie-aware final
-        rank — pinned by the per-task-merge tests above); this pins the
-        task-count derivation itself."""
-        from tslearn_spark.pipeline.simsearch import (
-            _SPREAD_FLOPS_PER_TASK, _spread_compute,
-        )
+    def test_size_tasks_work_derived(self, spark):
+        """session.size_tasks sizes the task count by WORK (work_per_row
+        x rows vs the per-task quantum), capped at the slot count, and
+        leaves an input alone when it is already that wide (or wider,
+        at the slot cap); a wider input holding less work is brought
+        down to its target.
+        Partitioning never affects results (per-task partial top-k +
+        exact tie-aware final rank — pinned by the per-task-merge tests
+        above); this pins the task-count derivation itself."""
+        import pandas as pd
+
+        from tslearn_spark.session import TASK_WORK, size_tasks
 
         slots = spark.sparkContext.defaultParallelism
         df = spark.range(1000).selectExpr("id as vec_id").coalesce(1)
-        # legacy: no work hint -> one task per slot
-        assert _spread_compute(df).rdd.getNumPartitions() == slots
         # light rows (one task quantum covers everything) -> unchanged
-        light = _spread_compute(
-            df, flops_per_row=_SPREAD_FLOPS_PER_TASK / 2000, n_rows=1000)
-        assert light.rdd.getNumPartitions() == 1
+        assert size_tasks(df, TASK_WORK / 2000, n_rows=1000) is df
         # heavy rows (a full quantum EACH) -> one task per row, capped
-        heavy = _spread_compute(
-            df, flops_per_row=_SPREAD_FLOPS_PER_TASK, n_rows=1000)
+        heavy = size_tasks(df, TASK_WORK, n_rows=1000)
         assert heavy.rdd.getNumPartitions() == min(slots, 1000)
-        # intermediate: 1000 rows x quantum/100 flops -> 10 tasks
-        mid = _spread_compute(
-            df, flops_per_row=_SPREAD_FLOPS_PER_TASK / 100, n_rows=1000)
-        assert mid.rdd.getNumPartitions() == min(slots, 10)
-        # already >= slots splits (real scale): untouched, no shuffle
+        # intermediate: 1000 rows x quantum/500 -> 2 tasks
+        mid = size_tasks(df, TASK_WORK / 500, n_rows=1000)
+        assert mid.rdd.getNumPartitions() == min(slots, 2)
+        # no work estimate (a row's cost unknown): one task per row
+        assert size_tasks(df).rdd.getNumPartitions() == min(slots, 1000)
+        # already >= the target (real scale): untouched, no shuffle
         wide = df.repartition(slots)
-        assert _spread_compute(
-            wide, flops_per_row=1.0, n_rows=10**9) is wide
+        assert size_tasks(wide, TASK_WORK, n_rows=10**9) is wide
+        # ... and so is a materialized cache of that width, read through
+        # a projection
+        cached = spark.range(1000).repartition(slots + 1).cache()
+        cached.count()
+        proj = cached.selectExpr("id * 2 AS y")
+        assert size_tasks(proj) is proj
+        # ... but little work on that many partitions is brought down to
+        # its target: 1000 rows x quantum/2000 -> one task
+        if slots > 1:
+            assert size_tasks(proj, TASK_WORK / 2000).rdd.getNumPartitions() == 1
+        cached.unpersist()
+        # no caller row count: plan statistics carry it (50 local rows,
+        # behind a key shuffle whose width AQE decides)
+        local = spark.createDataFrame(pd.DataFrame({"x": np.arange(50)}))
+        sized = size_tasks(local.repartition("x"), TASK_WORK / 10)
+        assert sized.rdd.getNumPartitions() == min(slots, 5)
+
+    def test_size_tasks_launches_no_job(self, spark, tmp_path):
+        """Sizing reads plan statistics only: on an events_to_ts output (a
+        shuffle-rooted plan, whose RDD would run the shuffle stage under
+        AQE) it must launch no Spark job at all."""
+        import pandas as pd
+
+        from tslearn_spark.dataset import events_to_ts
+        from tslearn_spark.session import TASK_WORK, _plan_width, size_tasks
+
+        rs = np.random.RandomState(0)
+        n = 1000  # an sf0.001-sized event log
+        path = str(tmp_path / "events.parquet")
+        spark.createDataFrame(pd.DataFrame({
+            "event_id": np.arange(n),
+            "ts": pd.Timestamp("2024-01-01") + pd.to_timedelta(np.arange(n), "s"),
+            "user_id": rs.randint(0, 40, n),
+            "value": rs.randn(n),
+        })).write.parquet(path)
+        scan = spark.read.parquet(path)
+        ts = events_to_ts(scan)
+        sc = spark.sparkContext
+        group = "size_tasks_no_job"
+        sc.setJobGroup(group, "task sizing must not run a job")
+        try:
+            sized = size_tasks(ts, TASK_WORK)
+            width = _plan_width(scan)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert sized is not ts  # a shuffle output's width is unknown
+        # a file scan's width is the split count Spark plans for it
+        assert width == scan.rdd.getNumPartitions()
 
     def test_auto_ivf_params(self):
         """Corpus-size defaults: n_lists ~ sqrt(n) (clamped), n_probe =

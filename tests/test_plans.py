@@ -313,7 +313,6 @@ class TestSaxWordDedup:
     def test_dedup_path_matches_naive_full_join(self, spark):
         """Exactness: the word-dedup result set (id1, id2, rank) equals
         the naive all-pairs MINDIST top-k, including id tie-breaks."""
-        from tslearn_spark.metrics import _spread
         from tslearn_spark.neighbors import kneighbors
         from tslearn_spark.piecewise import SAX
 
@@ -330,7 +329,7 @@ class TestSaxWordDedup:
             F.col("series_id").alias("id2"), F.col("sax").alias("sax2"))
         from pyspark.sql import Window
         naive = (
-            _spread(q).crossJoin(F.broadcast(t))
+            q.crossJoin(F.broadcast(t))
             .where(F.col("id1") != F.col("id2"))
             .withColumn("dist", sax.distance_col("sax1", "sax2", "sz1"))
             .withColumn("rank", F.row_number().over(
@@ -385,3 +384,23 @@ class TestSampledBoardPushdown:
                     if "% 3) = 0" in ln and "Filter" in ln]
         assert join_idx and filt_idx
         assert min(filt_idx) > min(join_idx)
+
+
+class TestOneTaskSizingRule:
+    def test_only_size_tasks_reads_slots_or_partitions(self):
+        """Task sizing has one policy, session.size_tasks: no other
+        engine module reads the slot count or asks a DataFrame for its
+        partition count (which, on a shuffle-rooted plan, runs the
+        shuffle under AQE).  Cheap source scan, no Spark."""
+        import pathlib
+        import re
+
+        import tslearn_spark
+
+        pkg = pathlib.Path(tslearn_spark.__file__).parent
+        banned = re.compile(r"defaultParallelism|getNumPartitions\s*\(")
+        offenders = sorted(
+            str(p.relative_to(pkg)) for p in pkg.rglob("*.py")
+            if p != pkg / "session.py" and banned.search(p.read_text())
+        )
+        assert offenders == []

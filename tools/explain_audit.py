@@ -124,8 +124,9 @@ AUDITS = [
      "tumbling window = plain grouped aggregate, map-side combinable, "
      "one shuffle"),
     ("matrix_profile_events", ["ArrowEvalPython", "ObjectHashAggregate"], 2,
-     "series build shuffle + the deliberate compute-spread repartition "
-     "(partitioning follows compute for the O(sz^2) kernel, not bytes); "
+     "series build shuffle + size_tasks' round-robin repartition "
+     "(one series per task up to the slots: partitioning follows "
+     "compute for the O(sz^2) kernel, not bytes); "
      "the profile kernel is an Arrow-vectorized map"),
     ("stream_lsh_batch", ["MapInPandas", "!ArrowEvalPython"], 1,
      "streaming-LSH batch twin: signatures+banding in ONE MapInPandas "

@@ -5,6 +5,9 @@ get_spark(); this replica measures per-query wall time the way the driver
 would see it, to catch anything slow enough to blow a harness timeout.
 
     python tools/time_queries.py [sf_dir] [query ...]
+
+SPARK_GRAFT_CPUS (default 32) and SPARK_GRAFT_DRIVER_MEM (default 16g)
+size the local master and the driver heap, as in get_spark.
 """
 
 from __future__ import annotations
@@ -24,10 +27,12 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     t0 = time.time()
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
         SparkSession.builder.appName("time_queries")
-        .master("local[32]")
-        .config("spark.driver.memory", "16g")
+        .master(f"local[{cpus}]")
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -2,10 +2,11 @@
 Arrow boundary).
 
 Compiles ``_dtw_kernel.c`` with the system C compiler into a per-machine
-cache (`$TMPDIR/tslearn_spark_ck/dtw_<srchash>.so`) the first time it is
-needed and loads it via ctypes.  Spark local-mode python workers share
-the cache with the driver (the driver's import builds it before workers
-spawn); at cluster scale each executor machine builds its own copy once.
+cache (`$TMPDIR/tslearn_spark_ck/dtw_<hash>.so`, keyed on source, flags,
+compiler version and machine) the first time it is needed and loads it
+via ctypes.  Spark local-mode python workers share the cache with the
+driver (the driver's import builds it before workers spawn); at cluster
+scale each executor machine builds its own copy once.
 
 Everything is best-effort: no compiler, a failed compile, or
 ``TSLEARN_SPARK_CKERNEL=0`` silently leaves ``lib_or_none()`` returning
@@ -20,6 +21,7 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import platform
 import subprocess
 import tempfile
 import threading
@@ -42,11 +44,23 @@ _F64P = np.ctypeslib.ndpointer(np.float64, flags="C_CONTIGUOUS")
 
 
 def _so_path() -> str:
+    """Cache path keyed on everything that shapes the binary: the C
+    source, the flags, the compiler's version banner and the machine
+    architecture — a change to any of them builds a fresh .so instead
+    of loading a stale one."""
+    try:
+        cc = subprocess.run([_CC, "--version"], capture_output=True,
+                            timeout=30).stdout
+    except (OSError, subprocess.SubprocessError):
+        cc = b""  # no compiler: the build below fails and numpy runs
+    h = hashlib.sha256()
     with open(_SRC, "rb") as f:
-        h = hashlib.sha256(f.read()).hexdigest()[:16]
+        h.update(f.read())
+    for part in (" ".join(_CFLAGS).encode(), cc, platform.machine().encode()):
+        h.update(b"\0" + part)
     cache = os.environ.get("TSLEARN_SPARK_CK_DIR") or os.path.join(
         tempfile.gettempdir(), "tslearn_spark_ck")
-    return os.path.join(cache, f"dtw_{h}.so")
+    return os.path.join(cache, f"dtw_{h.hexdigest()[:16]}.so")
 
 
 def lib_or_none():

@@ -25,6 +25,7 @@ from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 from tslearn_spark import kernels as K
 from tslearn_spark.barycenters import dtw_barycenter_averaging, softdtw_barycenter
 from tslearn_spark.bases import BaseModelPackage, TimeSeriesBaseEstimator
+from tslearn_spark.session import size_tasks
 
 
 class EmptyClusterError(Exception):
@@ -470,11 +471,11 @@ class TimeSeriesKMeans(_LabelsCompatMixin, BaseModelPackage,
 
         raw = df
         df, self._fit_was_array = as_ts_df(df)
-        # spread across cores before caching: assignment UDF stages are
-        # compute-bound, and AQE would otherwise coalesce small inputs
-        # to one partition (see metrics._spread)
-        n_par = df.sparkSession.sparkContext.defaultParallelism
-        df = df.select("series_id", "values").repartition(n_par).cache()
+        # spread before caching: every iteration's assignment stage is
+        # compute-bound (one kernel pair per row and centroid, of series
+        # lengths the plan does not carry, so no work estimate), and AQE
+        # would otherwise coalesce small inputs to one partition
+        df = size_tasks(df.select("series_id", "values")).cache()
         n = df.count()
         if self.metric == "euclidean":
             # the euclidean metric is defined on equal-size series only;

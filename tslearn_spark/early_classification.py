@@ -41,18 +41,6 @@ from tslearn_spark.bases import BaseModelPackage, TimeSeriesBaseEstimator
 _CLF_BROADCAST_LIMIT_VALUES = 8_000_000  # ~64 MB
 
 
-def _cum_prefix_d2(v1: str = "values1", v2: str = "values2"):
-    """Per-position squared distance between two equal-length nested
-    series — the building block for every prefix distance at once."""
-    return F.expr(
-        f"""
-        zip_with({v1}, {v2}, (r1, r2) ->
-          aggregate(zip_with(r1, r2, (x, y) -> (x - y) * (x - y)),
-                    0.0D, (acc, z) -> acc + z))
-        """
-    )
-
-
 def _make_stopper(centers, pyck, pyhatyck, sz, d, min_t, lamb, alpha, k):
     """Self-contained stopping-time function from the small model arrays
     (early_classification.py:213-359) — safe to ship in a UDF closure."""

@@ -49,12 +49,6 @@ H5PY_MSG = (
 _SCALARS = (str, bool, int, float, np.integer, np.floating, np.bool_)
 
 
-def _require_h5py() -> None:
-    """Historical gate — HDF5 is now always available (purehdf5 backs
-    the codec when h5py is absent), so this is a no-op kept for the
-    call sites and tests that used to probe it."""
-
-
 def _write_entry(grp, key: str, value: Any) -> None:
     if isinstance(value, np.ndarray):
         if value.dtype.kind not in "Uiufb":

@@ -245,50 +245,6 @@ def dtw(s1, s2, global_constraint=None, sakoe_chiba_radius=None,
     return float(np.sqrt(C[-1, -1]))
 
 
-def dtw_banded_batch(A: np.ndarray, B: np.ndarray, radius: int | None = None) -> np.ndarray:
-    """Banded DTW for a BATCH of same-shape pairs — the executor hot path.
-
-    A: (n, sz1, d), B: (n, sz2, d).  Works in band coordinates: per DP row
-    only the [lo_i, hi_i] window is stored, and every numpy op runs on a
-    (n_pairs, band_width) array — the Python-level loop is over sz1 rows
-    only, amortizing interpreter overhead across the whole batch (~100x
-    over per-pair kernels at batch sizes in the thousands).
-    radius=None -> unconstrained (full-width band).
-    """
-    n, sz1, d = A.shape
-    sz2 = B.shape[1]
-    if radius is None:
-        radius = max(sz1, sz2)
-    lo, hi = sakoe_chiba_bounds(sz1, sz2, int(radius))
-    W = int((hi - lo + 1).max())
-    w0 = int(hi[0] - lo[0] + 1)
-    D0 = ((A[:, 0:1, :] - B[:, lo[0]:hi[0] + 1, :]) ** 2).sum(-1)
-    prev = np.full((n, W), np.inf)
-    prev[:, :w0] = np.cumsum(D0, axis=1)
-    prev_lo = int(lo[0])
-    for i in range(1, sz1):
-        li, hi_i = int(lo[i]), int(hi[i])
-        w = hi_i - li + 1
-        D = ((A[:, i:i + 1, :] - B[:, li:hi_i + 1, :]) ** 2).sum(-1)
-        shift = li - prev_lo
-        idx_up = np.arange(w) + shift
-        up = np.full((n, w), np.inf)
-        mask = idx_up < W
-        up[:, mask] = prev[:, idx_up[mask]]
-        idx_dg = idx_up - 1
-        diag = np.full((n, w), np.inf)
-        mask2 = (idx_dg >= 0) & (idx_dg < W)
-        diag[:, mask2] = prev[:, idx_dg[mask2]]
-        a = D + np.minimum(up, diag)
-        s = np.cumsum(D, axis=1)
-        row = s + np.minimum.accumulate(a - s, axis=1)
-        prev = np.full((n, W), np.inf)
-        prev[:, :w] = row
-        prev_lo = li
-    k_last = sz2 - 1 - int(lo[sz1 - 1])
-    return np.sqrt(prev[:, k_last])
-
-
 # unconstrained row-scan DP works on (n, L2) rows (not the (n, L^2) grid of
 # the anti-diagonal kernels), so the sweet spot is larger than _GRID_SUBBATCH:
 # ~512 pairs keeps the ~6 live (n, L2) row buffers L2-cache-resident
@@ -384,7 +340,7 @@ def dtw_banded_batch_mixed(arrs_a: list, arrs_b: list, radius: int | None = None
                            tau2: np.ndarray | None = None) -> np.ndarray:
     """Banded DTW for a batch of MIXED-shape pairs — padded, masked DP.
 
-    ``dtw_banded_batch`` needs same-shape stacks, so with variable-length
+    A same-shape batch kernel needs same-shape stacks, so with variable-length
     series the per-(shape,shape) buckets degenerate to a handful of pairs
     and the batch effect dies (measured ~500us/pair vs ~30us here at
     sz 45-99).  This kernel pads every pair to (Lmax1, Lmax2), runs ONE
@@ -438,20 +394,10 @@ def dtw_banded_batch_mixed(arrs_a: list, arrs_b: list, radius: int | None = None
     for p in range(n):
         A[p, : la[p]] = arrs_a[p].reshape(la[p], d)
         B[p, : lb[p]] = arrs_b[p].reshape(lb[p], d)
-    if radius is None:
-        # Unconstrained DTW: the window at DP row i must span the whole B
-        # axis for EVERY row, i.e. cur_lo = max(0, i - wlo) == 0 up to
-        # i = la - 1.  wlo must therefore be >= la - 1 (use L1, the batch
-        # max); using L2 here empties the window whenever a pair has
-        # la - 1 > L2 (A twice as long as every B), returning inf or a
-        # silently band-constrained (too large) distance.
-        wlo = np.full(n, L1, dtype=np.int64)
-        whi = np.full(n, L2, dtype=np.int64)
-    else:
-        r = int(radius)
-        bigger = la > lb
-        wlo = np.where(bigger, la - lb + r, r)
-        whi = np.where(bigger, r, lb - la + r)
+    r = int(radius)
+    bigger = la > lb
+    wlo = np.where(bigger, la - lb + r, r)
+    whi = np.where(bigger, r, lb - la + r)
     # band width per pair <= wlo + whi + 1, capped by the series itself;
     # callers sort partitions by size so |la - lb| (hence W) stays small
     W = int(np.minimum(lb, np.minimum(wlo, L2) + np.minimum(whi, L2) + 1).max())

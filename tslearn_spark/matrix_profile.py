@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 from tslearn_spark.bases import BaseModelPackage, TimeSeriesBaseEstimator
+from tslearn_spark.session import size_tasks
 
 
 def matrix_profile_np(ts: np.ndarray, m: int, scale: bool = True) -> np.ndarray:
@@ -67,19 +68,19 @@ def matrix_profile_udf(m: int, scale: bool = True):
 
 
 def transform(df: DataFrame, subsequence_length: int, scale: bool = True,
-              values_col: str = "values", out_col: str = "profile",
-              spread: bool = True) -> DataFrame:
+              values_col: str = "values", out_col: str = "profile") -> DataFrame:
     """Matrix profile per series.
 
-    spread=True repartitions to the cluster's parallelism first: the UDF
-    is O(sz^2) per row, so partitioning must follow compute, not bytes
-    (AQE would coalesce a small series table to one task).
+    The UDF is O(sz^2) per row, so partitioning must follow compute, not
+    bytes (AQE would coalesce a small series table to one task): the
+    input goes through session.size_tasks with no work estimate, since
+    the plan does not carry the series lengths — one task per row, up to
+    the slot count.
 
     For series too long for one task (O(sz^2) memory per row), use
     ``transform_long`` — same output, chunked window self-join.
     """
-    if spread:
-        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    df = size_tasks(df)
     return df.withColumn(out_col, matrix_profile_udf(subsequence_length, scale)(values_col))
 
 
@@ -179,7 +180,7 @@ def transform_long(df: DataFrame, subsequence_length: int, scale: bool = True,
         F.col("chunk").alias("chunk_j"),
     )
     pairs = left.join(right, F.col("series_id") == F.col("sid_j")).drop("sid_j")
-    pairs = pairs.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    pairs = size_tasks(pairs)
     partials = pairs.mapInPandas(
         _block_min_gen(m, scale, band),
         "series_id long, off_i int, mins array<double>",

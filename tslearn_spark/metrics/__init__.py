@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
 
 from tslearn_spark import kernels as K
+from tslearn_spark.session import size_tasks
 
 # reference metric registries (tslearn/metrics/__init__.py:28-29): the
 # metric names accepted by estimators, all of which tolerate
@@ -274,26 +275,14 @@ def dtw_path_udf(**params):
 # pair enumeration (the join layer)
 # ---------------------------------------------------------------------------
 
-def _spread(df: DataFrame, n: int | None = None) -> DataFrame:
-    """Round-robin the kernel-feeding side across all cores.
-
-    Metric joins are COMPUTE-bound: a few thousand series rows generate
-    millions of O(sz^2) kernel calls.  AQE sizes partitions by bytes, so
-    it happily coalesces a small-but-expensive input to one partition and
-    serializes the whole UDF stage (measured 356s -> ~15s at sf0.1).  An
-    explicit repartition of the tiny row set costs nothing and pins the
-    parallelism to the cluster, not the input size.
-
-    ``n``: caller-known parallelism for CONSTANT-size inputs (r14): a
-    query whose row count is fixed by construction (e.g. the 12-series
-    hash-gate slices) pays ~10 ms of Arrow task overhead per partition
-    per UDF stage, so full-cluster spread costs more than it buys; the
-    hint sizes the stage to the work instead (guide §2 — derive
-    partitioning from input size).  Default: all cores, unchanged.
-    """
-    sc = df.sparkSession.sparkContext
-    return df.repartition(n or sc.defaultParallelism)
-
+# The kernel-feeding side of every pair join goes through
+# session.size_tasks.  Metric joins are COMPUTE-bound: a few thousand
+# series rows generate millions of O(sz^2) kernel calls, and AQE sizes
+# partitions by bytes, so it would coalesce the small-but-expensive side
+# to one partition and serialize the UDF stage (measured 356 s -> ~15 s
+# at sf0.1).  A row's cost grows with the series lengths, which the plan
+# does not carry, so no work estimate is passed: one task per row, up to
+# the slot count.
 
 
 def _pair_sort(df: DataFrame, band: bool = True) -> DataFrame:
@@ -312,17 +301,15 @@ def _pair_sort(df: DataFrame, band: bool = True) -> DataFrame:
         )
     return df.sortWithinPartitions(F.size("values1"), F.size("values2"))
 
-def cross_pairs(d1: DataFrame, d2: DataFrame, broadcast_right: bool = True,
-                spread_to: int | None = None) -> DataFrame:
+def cross_pairs(d1: DataFrame, d2: DataFrame, broadcast_right: bool = True) -> DataFrame:
     """Full rectangle d1 × d2 with columns (id1, values1, id2, values2).
 
     For kNN-style queries the train side is usually the small one —
     broadcast it so the join is shuffle-free; the left side is spread
-    over all cores (see _spread).
+    over tasks (session.size_tasks).
     """
-    left = _spread(
-        d1.select(F.col("series_id").alias("id1"), F.col("values").alias("values1")),
-        spread_to,
+    left = size_tasks(
+        d1.select(F.col("series_id").alias("id1"), F.col("values").alias("values1"))
     )
     right = d2.select(F.col("series_id").alias("id2"), F.col("values").alias("values2"))
     if broadcast_right:
@@ -330,7 +317,7 @@ def cross_pairs(d1: DataFrame, d2: DataFrame, broadcast_right: bool = True,
     return left.crossJoin(right)
 
 
-def self_pairs(df: DataFrame, spread_to: int | None = None) -> DataFrame:
+def self_pairs(df: DataFrame) -> DataFrame:
     """Strict upper triangle of df × df (id1 < id2).
 
     Mirrors the symmetry optimization of metrics/utils.py:58-75: kernel
@@ -338,9 +325,8 @@ def self_pairs(df: DataFrame, spread_to: int | None = None) -> DataFrame:
     right side broadcast (self-joins have identical sides — broadcasting
     one avoids a sort-merge shuffle of series payloads).
     """
-    left = _spread(
-        df.select(F.col("series_id").alias("id1"), F.col("values").alias("values1")),
-        spread_to,
+    left = size_tasks(
+        df.select(F.col("series_id").alias("id1"), F.col("values").alias("values1"))
     )
     right = F.broadcast(
         df.select(F.col("series_id").alias("id2"), F.col("values").alias("values2"))
@@ -353,7 +339,6 @@ def cdist(
     d2: DataFrame | None = None,
     metric: str = "dtw",
     symmetric_zero_diag: bool | None = None,
-    spread_to: int | None = None,
     **params,
 ) -> DataFrame:
     """Distributed cross-similarity: returns edges (id1, id2, dist).
@@ -367,13 +352,13 @@ def cdist(
     softdtw/gak whose self-score is nonzero — softdtw_variants.py:451-532).
     """
     if metric == "gak":
-        return _cdist_gak_normalized(d1, d2, spread_to=spread_to, **params)
+        return _cdist_gak_normalized(d1, d2, **params)
     udf = pair_metric_udf(metric, **params)
     a1, a2 = _kernel_args(dim_of(d1))
     if d2 is None:
         if symmetric_zero_diag is None:
             symmetric_zero_diag = metric not in ("softdtw", "unnormalized_gak")
-        upper = _pair_sort(self_pairs(d1, spread_to), band=metric == "dtw").withColumn("dist", udf(a1, a2))
+        upper = _pair_sort(self_pairs(d1), band=metric == "dtw").withColumn("dist", udf(a1, a2))
         # r14 (guide §2.4 — don't compute things twice): emit BOTH
         # directions of each pair from ONE evaluated row via explode.
         # The old up.unionByName(mirror) referenced the ``upper``
@@ -411,7 +396,7 @@ def cdist(
                 .select("id1", "id2", "dist")
             )
         return both.unionByName(diag)
-    pairs = _pair_sort(cross_pairs(d1, d2, spread_to=spread_to), band=metric == "dtw")
+    pairs = _pair_sort(cross_pairs(d1, d2), band=metric == "dtw")
     return pairs.withColumn("dist", udf(a1, a2)).select("id1", "id2", "dist")
 
 
@@ -424,8 +409,8 @@ def _self_gak_udf(sigma: float):
     return _udf
 
 
-def _cdist_gak_normalized(d1: DataFrame, d2: DataFrame | None, sigma: float = 1.0,
-                          spread_to: int | None = None) -> DataFrame:
+def _cdist_gak_normalized(d1: DataFrame, d2: DataFrame | None,
+                          sigma: float = 1.0) -> DataFrame:
     """Normalized GAK Gram with cached diagonals (softdtw_variants.py:185-217).
 
     The naive per-pair normalization runs THREE DPs per pair (xy, xx, yy);
@@ -438,14 +423,14 @@ def _cdist_gak_normalized(d1: DataFrame, d2: DataFrame | None, sigma: float = 1.
     a1, a2 = _kernel_args(dim)
 
     def selfs(df: DataFrame) -> DataFrame:
-        return _spread(df.select("series_id", "values"), spread_to).select(
+        return size_tasks(df.select("series_id", "values")).select(
             "series_id", _self_gak_udf(sigma)(vcol).alias("kself")
         )
 
     udf = pair_metric_udf("unnormalized_gak", sigma=sigma)
     s1 = selfs(d1)
     if d2 is None:
-        upper = _pair_sort(self_pairs(d1, spread_to), band=False).withColumn("kxy", udf(a1, a2)).select("id1", "id2", "kxy")
+        upper = _pair_sort(self_pairs(d1), band=False).withColumn("kxy", udf(a1, a2)).select("id1", "id2", "kxy")
         # r14 (guide §2.4): both directions from ONE evaluated pair row
         # (the old upper.unionByName(upper.select(...)) ran the GAK-UDF
         # stage twice), and ONE broadcast of the self-kernel table used
@@ -476,7 +461,7 @@ def _cdist_gak_normalized(d1: DataFrame, d2: DataFrame | None, sigma: float = 1.
         )
         return off.unionByName(diag)
     s2 = selfs(d2)
-    pairs = _pair_sort(cross_pairs(d1, d2, spread_to=spread_to), band=False).withColumn("kxy", udf(a1, a2)).select("id1", "id2", "kxy")
+    pairs = _pair_sort(cross_pairs(d1, d2), band=False).withColumn("kxy", udf(a1, a2)).select("id1", "id2", "kxy")
     k1 = F.broadcast(s1.select(F.col("series_id").alias("id1"), F.col("kself").alias("k1")))
     k2 = F.broadcast(s2.select(F.col("series_id").alias("id2"), F.col("kself").alias("k2")))
     return pairs.join(k1, "id1").join(k2, "id2").select(
@@ -613,7 +598,7 @@ def cdist_with_lb_pruning(
     ).select(
         "id2", "values2", envelope_struct_col("_lb_lo", "_lb_up").alias("_lb_env")
     )
-    q = _spread(
+    q = size_tasks(
         queries.select(F.col("series_id").alias("id1"), F.col("values").alias("values1"))
     )
     pairs = q.crossJoin(F.broadcast(cand))

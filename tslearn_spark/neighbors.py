@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from tslearn_spark import metrics as M
 from tslearn_spark.bases import (BaseModelPackage, ClassifierScoreMixin,
                                  RegressorScoreMixin, TimeSeriesBaseEstimator)
+from tslearn_spark.session import size_tasks
 from tslearn_spark.topk import topk_matrix_tiebreak, topk_rows_tiebreak
 
 # query sets up to ~this many float64s (~64 MB) ride the broadcast-matmul
@@ -111,96 +112,16 @@ def _euclidean_topk(queries: DataFrame, train: DataFrame, k: int,
     )
 
 
-def _dtw_knn_pruned(
-    queries: DataFrame,
-    train: DataFrame,
-    k: int,
-    env_radius: int,
-    drop_self: bool,
-    params: dict,
-) -> DataFrame:
-    """Exact DTW kNN with an LB_Keogh pruning cascade.
-
-    The bound is the engine's optimizer rule (dtw_variants.py:1224-1368):
-
-    1. train-side envelopes — one JVM array expression per train row;
-    2. LB_Keogh for every pair — codegen, no Python;
-    3. rank candidates per query by LB; DTW only the k best-LB seeds;
-    4. tau(query) = max seed DTW >= true k-th-best distance, so any
-       candidate with LB > tau has DTW >= LB > tau and can never enter
-       the top-k — filter it JVM-side before the kernel UDF;
-    5. DTW the survivors, union with seeds, final top-k.
-
-    Exactness: LB_Keogh with envelope radius r lower-bounds band-r DTW
-    on equal lengths; on unequal lengths the band itself widens to
-    |la - lb| + r, so the CALLER passes env_radius = r + max length
-    difference across the dataset (kneighbors does this), or full width
-    for unconstrained DTW, where the envelope degenerates to the global
-    min/max and the bound holds for any monotone alignment.  The LB cascade typically
-    kills 80-95%% of kernel calls — at 100x data that is the difference
-    between quadratic DTW work and quadratic *expression* work.
-    """
-    lo, up = M.envelope_cols("values", env_radius)
-    cand = train.select(
-        F.col("series_id").alias("id2"),
-        lo.alias("_lo"),
-        up.alias("_up"),
-    )
-    q_named = queries.select(
-        F.col("series_id").alias("id1"), F.col("values").alias("values1")
-    )
-    t_named = train.select(
-        F.col("series_id").alias("id2"), F.col("values").alias("values2")
-    )
-    pairs = M._spread(q_named).crossJoin(F.broadcast(cand))
-    if drop_self:
-        pairs = pairs.where(F.col("id1") != F.col("id2"))
-    # (id1, id2, _lb) only — the series payloads stay out of the shuffle
-    lb = pairs.withColumn(
-        "_lb", M.lb_keogh_col("values1", "_lo", "_up")
-    ).select("id1", "id2", "_lb")
-    # reused by the seed branch AND the survivor branch — materialize the
-    # small triple table once instead of recomputing the cross-LB twice
-    lb = lb.localCheckpoint()
-    w_lb = Window.partitionBy("id1").orderBy(F.col("_lb").asc(), F.col("id2").asc())
-    ranked = lb.withColumn("_lbr", F.row_number().over(w_lb))
-
-    udf = M.pair_metric_udf("dtw", **params)
-
-    def score(cands: DataFrame) -> DataFrame:
-        with_vals = cands.join(q_named, "id1").join(F.broadcast(t_named), "id2")
-        # kernel stage is compute-bound: AQE would coalesce these few small
-        # rows to 1-2 partitions and serialize the DTW UDF — spread them
-        with_vals = M._pair_sort(M._spread(with_vals))
-        # this path is univariate-only (gated in kneighbors): flat arrays
-        return with_vals.withColumn(
-            "dist", udf(F.flatten("values1"), F.flatten("values2"))
-        ).select("id1", "id2", "dist")
-
-    seeds = score(ranked.where(F.col("_lbr") <= k)).localCheckpoint()
-    tau = seeds.groupBy("id1").agg(F.max("dist").alias("_tau"))
-    survivors = (
-        ranked.where(F.col("_lbr") > k)
-        .join(tau, "id1")
-        .where(F.col("_lb") <= F.col("_tau"))
-        .select("id1", "id2")
-    )
-    scored = seeds.unionByName(score(survivors))
-    w = Window.partitionBy("id1").orderBy(F.col("dist").asc(), F.col("id2").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("id1", "id2", "dist", "rank")
-    )
-
-
-# full-width envelope radius: makes LB_Keogh valid for unconstrained DTW
-# (the envelope degenerates to per-candidate global min/max)
-_FULL_ENVELOPE = 1 << 20
-
 # train sets up to ~this many float64s ride the broadcast DTW fast path;
 # bigger train sides fall back to the generic pair join
 _DTW_BROADCAST_LIMIT_VALUES = 8_000_000  # ~64 MB
+
+# task-sizing work of one banded-DP cell of the batched DTW kernel
+# (flop-equivalents of ~0.5 ns, see session.TASK_WORK).  Measured
+# single-thread on a 4-vCPU x86-64 VM: 6.4 ns/cell at sz 50-85 r=4,
+# 6.0 at sz 120-136 r=5, 2.9 at sz 480-544 r=50, i.e. 6-13 units, so 16
+# errs toward more tasks
+_DP_CELL_WORK = 16
 
 
 def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
@@ -347,7 +268,11 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
                 "dist": np.asarray(out_d, dtype=np.float64),
             })
 
-    partial = M._spread(queries.select("series_id", "values")).mapInPandas(
+    # per query row: one banded DP against every train series
+    partial = size_tasks(
+        queries.select("series_id", "values"),
+        n_t * (med_t * w_est) * _DP_CELL_WORK,
+    ).mapInPandas(
         gen, "id1 long, id2 long, dist double"
     ).where(F.col("dist") < float("inf"))
     w = Window.partitionBy("id1").orderBy(F.col("dist").asc(), F.col("id2").asc())
@@ -364,7 +289,7 @@ def _sax_word_candidates(q_words: DataFrame, t_cand: DataFrame, sax,
     (query word, query length) x (train word, id) rows, top ``keep`` per
     (w1, sz1) by (dist, id2) — split out so tests can count/plan-check
     the scored pair set independently of the join back to series ids."""
-    pairs = M._spread(q_words).crossJoin(F.broadcast(t_cand))
+    pairs = size_tasks(q_words).crossJoin(F.broadcast(t_cand))
     scored = pairs.withColumn(
         "dist", sax.distance_col("sax1", "sax2", "sz1")
     ).select("w1", "sz1", "id2", "dist")
@@ -460,7 +385,6 @@ def kneighbors(
     k: int = 1,
     metric: str = "dtw",
     drop_self: bool = False,
-    prune: bool = False,
     **params,
 ) -> DataFrame:
     """(id1=query, id2=neighbor, dist, rank), rank<=k per query.
@@ -468,62 +392,27 @@ def kneighbors(
     drop_self: for self-kNN, exclude the identical id (neighbors.py:163-168).
     metric="euclidean" on a broadcastable query set takes the BLAS
     matmul + partial-top-k path; everything else runs the pair join with
-    the Arrow-batched kernel UDF (mixed-shape batch DP for DTW).
-
-    prune=True routes univariate DTW through the LB_Keogh cascade
-    (exact — see _dtw_knn_pruned).  It is OFF by default because the
-    bound's power is data-dependent: on long, smooth series with a tight
-    band it kills 80-95%% of kernel calls, but on the short wiggly events
-    series (sz 45-99) the measured best-POSSIBLE prune rate is ~11%%
-    (envelopes of dissimilar wiggly series are wide, so LB ~ 0), and the
-    cascade's extra phases cost more than the skipped kernels.  Measure
-    on your data before enabling: if median LB is below the typical NN
-    distance, leave it off.
+    the Arrow-batched kernel UDF (mixed-shape batch DP for DTW).  The
+    compute-bound query side is spread by session.size_tasks: on the
+    broadcast DTW path by its DP cells, measured from the collected
+    train lengths; on the pair join one query per task, up to the slots.
     """
     if metric == "dtw" and params.get("itakura_max_slope") is None \
             and params.get("global_constraint") != "itakura":
         radius = params.get("sakoe_chiba_radius")
         if params.get("global_constraint") == "sakoe_chiba" and radius is None:
             radius = 1
-        if prune:
-            env_radius = int(radius) if radius is not None else _FULL_ENVELOPE
-            if radius is not None:
-                # The Sakoe-Chiba band on an (la, lb) pair widens to
-                # |la - lb| + r (kernels.sakoe_chiba_bounds), so an
-                # envelope built with radius r alone can EXCEED banded
-                # DTW on unequal lengths (q=[9,9,0] vs c=[9,9,9,9,0],
-                # r=1: LB=9 but DTW=0) and prune true neighbors.  Widen
-                # by the worst-case length difference across the two
-                # sides so LB lower-bounds every pair's banded DTW.
-                ln = (
-                    queries.select(F.size("values").alias("n"))
-                    .unionAll(train.select(F.size("values").alias("n")))
-                    .agg(F.max("n").alias("mx"), F.min("n").alias("mn"))
-                    .first()
-                )
-                if ln is not None and ln["mx"] is not None:
-                    env_radius = min(
-                        env_radius + int(ln["mx"] - ln["mn"]), _FULL_ENVELOPE
-                    )
-            first = train.select(
-                F.size(F.element_at(F.col("values"), 1)).alias("d")
-            ).first()
-            if first is not None and first["d"] == 1:  # envelope expr univariate
-                return _dtw_knn_pruned(
-                    queries, train, k, env_radius, drop_self, params
-                )
-        else:
-            stats = train.select(
-                F.count("*").alias("n"),
-                F.sum(F.size("values") * F.size(F.element_at("values", 1))).alias(
-                    "n_vals"
-                ),
-            ).first()
-            if stats is not None and stats["n"] and stats["n_vals"] is not None \
-                    and stats["n_vals"] <= _DTW_BROADCAST_LIMIT_VALUES:
-                return _dtw_topk_broadcast(
-                    queries, train, k, radius, drop_self, params
-                )
+        stats = train.select(
+            F.count("*").alias("n"),
+            F.sum(F.size("values") * F.size(F.element_at("values", 1))).alias(
+                "n_vals"
+            ),
+        ).first()
+        if stats is not None and stats["n"] and stats["n_vals"] is not None \
+                and stats["n_vals"] <= _DTW_BROADCAST_LIMIT_VALUES:
+            return _dtw_topk_broadcast(
+                queries, train, k, radius, drop_self, params
+            )
     if metric == "sax":
         return _sax_knn(queries, train, k, drop_self, params)
     if metric == "euclidean" and not params:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from tslearn_spark.bases import (BaseModelPackage, ClassifierScoreMixin,
                                  RegressorScoreMixin, TimeSeriesBaseEstimator)
+from tslearn_spark.session import TASK_WORK, size_tasks
 
 
 def _act(z: np.ndarray, kind: str) -> np.ndarray:
@@ -241,10 +242,7 @@ class TimeSeriesMLPClassifier(ClassifierScoreMixin, _MLPBase):
         # them to the data (~50k rows/partition) so maxIter x n_partitions
         # task overhead doesn't dominate on small inputs, then cache —
         # every iteration re-reads the features otherwise
-        n_rows = df.count()
-        n_par = max(1, min(df.sparkSession.sparkContext.defaultParallelism,
-                           n_rows // 50_000 + 1))
-        feats = feats.repartition(n_par).cache()
+        feats = size_tasks(feats, TASK_WORK / 50_000).cache()
         n_feat = int(df.select(F.size(F.flatten("values")).alias("n")).first()["n"])
         layers = [n_feat, *self.hidden_layer_sizes, len(classes)]
         self._layers_ = layers
@@ -375,12 +373,9 @@ class TimeSeriesMLPRegressor(RegressorScoreMixin, _MLPBase):
             F.coalesce(F.stddev_pop("y"), F.lit(0.0)).alias("sd"),
         ).first()
         n = int(agg["n"])
-        # one Spark job per Adam step: size partitions to the data
-        # (~10k rows each) so maxIter x n_partitions task overhead does
-        # not dominate small fits, as in the classifier's L-BFGS setup
-        sc = df.sparkSession.sparkContext
-        n_par = max(1, min(sc.defaultParallelism, n // 10_000 + 1))
-        flat = flat.repartition(n_par).cache()
+        # one Spark job per Adam step: size partitions to the data (~10k
+        # rows per task), as in the classifier's L-BFGS setup
+        flat = size_tasks(flat, TASK_WORK / 10_000, n_rows=n).cache()
         self.y_mean_ = float(agg["mu"])
         self.y_std_ = float(agg["sd"]) or 1.0
         n_feat = int(flat.select(F.size("x").alias("k")).first()["k"])

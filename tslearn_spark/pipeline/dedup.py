@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tslearn_spark.session import size_tasks
+
 # Mersenne prime 2^61 - 1: fingerprint space for 60-bit token ids
 MERSENNE_P = (1 << 61) - 1
 # Mersenne prime 2^31 - 1: MinHash permutation modulus.  Chosen so that
@@ -32,17 +34,11 @@ MERSENNE_P = (1 << 61) - 1
 MINHASH_P = (1 << 31) - 1
 
 
-def _spread_docs(docs: DataFrame) -> DataFrame:
-    """Small-but-compute-heavy doc tables (one parquet split) must be
-    spread across cores before md5/regex-heavy map stages — Spark sizes
-    splits by bytes, so a 2 MB file otherwise runs on one task.  Inputs
-    that already have at least core-count splits (any real corpus) pass
-    through untouched: repartitioning those would add a full shuffle of
-    the text payload for nothing."""
-    ncores = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < ncores:
-        return docs.repartition(ncores)
-    return docs
+# task-sizing work of tokenizing one document (flop-equivalents, see
+# session.TASK_WORK): regex split + lowercase + per-token md5 measured at
+# ~50 us per ~300-char sf0.1 document on one core.  Doc tables are
+# byte-small but md5/regex-heavy — the classic one-partition trap.
+DOC_WORK = 1e5
 
 
 def _norm_text(col: str = "text") -> Column:
@@ -92,11 +88,10 @@ def _doc_token_arrays(docs: DataFrame, text_col: str, n_shingle: int = 1) -> Dat
     Dedup happens via array_distinct INSIDE each row — a map-side
     expression — instead of a cluster-wide ``.distinct()`` shuffle of the
     exploded table (the distinct key is (doc_id, token), so per-row
-    dedup is equivalent and free).  Input is spread first: doc tables
-    are small-by-bytes but md5/regex-heavy, the classic AQE
-    one-partition trap.
+    dedup is equivalent and free).  Input is spread first: size_tasks at
+    DOC_WORK per document.
     """
-    base = _spread_docs(docs).select("doc_id", tokens_col(text_col).alias("toks"))
+    base = size_tasks(docs, DOC_WORK).select("doc_id", tokens_col(text_col).alias("toks"))
     if n_shingle > 1:
         base = base.select(
             "doc_id",
@@ -208,7 +203,7 @@ def minhash_signatures(
     """
     coefs = minhash_coefficients(num_hashes, seed)
     if toks is None:
-        tok = _doc_tokens(_spread_docs(docs), text_col, n_shingle)
+        tok = _doc_tokens(size_tasks(docs, DOC_WORK), text_col, n_shingle)
     else:
         tok = toks.select("doc_id", F.explode("toks").alias("token"))
     tok = tok.select("doc_id", token_id28_col(F.col("token")).alias("tid"))
@@ -342,7 +337,7 @@ def simhash_signatures(
     Fully SQL: explode tokens, per-bit +/-1 contributions aggregated,
     repacked with bit arithmetic.  One shuffle by doc_id.
     """
-    tok = _doc_tokens(_spread_docs(docs), text_col)
+    tok = _doc_tokens(size_tasks(docs, DOC_WORK), text_col)
     tok = tok.select("doc_id", token_id_col(F.col("token")).alias("tid"))
     # 60 usable bits from the md5-derived id
     bits = min(bits, 60)
@@ -511,16 +506,13 @@ def embedding_neardup_pairs(
                     "cosine": sims[r, c],
                 })
 
-        from tslearn_spark.pipeline.simsearch import _spread_compute
-
-        # compute-spread like brute_force_topk: a byte-sized scan must
-        # not serialize the GEMM stage on one (now single-BLAS-thread)
-        # worker; no-op when the input already has >= cores splits.
-        # flops-derived target (r15): per row one dot vs the whole
-        # broadcast matrix; n_rows known from the driver-side matrix.
-        return _spread_compute(
+        # like brute_force_topk: a byte-sized scan must not serialize
+        # the GEMM stage on one single-BLAS-thread worker.  Per row one
+        # dot against the whole broadcast matrix; the row count is the
+        # driver-side matrix's.
+        return size_tasks(
             embeddings.select(F.col(id_col), F.col(vec_col)),
-            flops_per_row=float(Qn.size), n_rows=len(ids)).mapInPandas(
+            float(Qn.size), n_rows=len(ids)).mapInPandas(
             gen, "id1 long, id2 long, cosine double"
         )
 

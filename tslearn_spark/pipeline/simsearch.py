@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tslearn_spark.session import size_tasks
 from tslearn_spark.topk import topk_matrix_tiebreak
 
 
@@ -67,72 +68,6 @@ def cosine_from_norms(dot_a: str, dot_b: str, n_a: str, n_b: str):
         f"{_dot(dot_a, dot_b)} / (CASE WHEN {n_a} * {n_b} = 0.0D THEN 1.0D "
         f"ELSE {n_a} * {n_b} END)"
     )
-
-
-# Work quantum for _spread_compute's flops-derived target: one task
-# should carry >= ~64 MFLOP of single-thread BLAS (~25-50 ms) so the
-# per-task overhead (scheduling + Arrow round-trip + python dispatch)
-# stays amortized.  Calibrated r15 on the sf0.1 ANN queries: optimum
-# measured at 4-8 tasks for 2000 rows x 128 kFLOP/row (brute force,
-# 32-64 MFLOP/task) and 1-2 tasks at 33 kFLOP/row (IVF) — interleaved
-# A/B: brute 0.99 s (32 slots-derived tasks) -> 0.72 s, IVF 1.09 -> 0.70.
-_SPREAD_FLOPS_PER_TASK = 64e6
-
-
-def _spread_compute(df: DataFrame, flops_per_row: float | None = None,
-                    n_rows: int | None = None,
-                    bytes_per_row: float | None = None) -> DataFrame:
-    """Round-robin a COMPUTE-bound mapInPandas input across cores when
-    the scan yields fewer splits than the cluster has slots.
-
-    Parquet splits are sized by BYTES: a small-but-GEMM-heavy table
-    (the sf0.1 embeddings are one 0.8 MB file -> ONE task) serializes
-    the whole scoring stage on a single worker — with the r12 one-BLAS-
-    thread-per-worker cap that is a single CORE.  The repartition costs
-    one shuffle of the (tiny, by definition) row set; at real scale the
-    input has >= cores splits and this is a no-op, so the 100-TB plan
-    is unchanged.  Same rationale as metrics._spread for kernel joins.
-
-    r15 (guide §2): when the caller knows its per-row work
-    (``flops_per_row``), the spread target is sized by WORK, not by
-    cluster slots: tasks of >= _SPREAD_FLOPS_PER_TASK flops each,
-    capped at defaultParallelism.  Slot-count spreading manufactured
-    32 sub-overhead tasks out of 2000-row inputs (measured: the 8-core
-    driver run beat the 32-core run on every ANN query at sf0.1).  The
-    row count is taken from ``n_rows`` if the caller already holds it,
-    else estimated driver-side from the optimized plan's sizeInBytes
-    statistic (no job) via ``bytes_per_row``, else ONE count job — all
-    only ever reached when the input has fewer bytes-sized splits than
-    slots, i.e. when it is small by definition.  A 2x row-estimate
-    error shifts the task count 2x, which the A/B measured as
-    insensitive (4 vs 8 tasks within noise) — task sizing needs the
-    order of magnitude, not the exact count.
-    Partitioning does not affect results: every caller emits per-task
-    partial top-k (or threshold survivors) merged by an exact
-    tie-aware final rank, invariant to the split of rows into tasks.
-    """
-    sc = df.sparkSession.sparkContext
-    slots = sc.defaultParallelism
-    cur = df.rdd.getNumPartitions()
-    if cur >= slots:
-        return df
-    if flops_per_row is None:
-        return df.repartition(slots)
-    rows_per_task = max(
-        1, int(_SPREAD_FLOPS_PER_TASK / max(float(flops_per_row), 1.0)))
-    if n_rows is None and bytes_per_row is not None:
-        try:
-            sz = float(df._jdf.queryExecution().optimizedPlan()
-                       .stats().sizeInBytes())
-            n_rows = max(1, int(sz / max(float(bytes_per_row), 1.0)))
-        except Exception:
-            pass
-    if n_rows is None:
-        n_rows = df.count()
-    tgt = min(slots, max(cur, -(-int(n_rows) // rows_per_task)))
-    if tgt <= cur:
-        return df
-    return df.repartition(tgt)
 
 
 def brute_force_topk(
@@ -226,10 +161,10 @@ def brute_force_topk(
                 "cosine": best_s.T.ravel(),
             })
 
-    partial = _spread_compute(
-        candidates, flops_per_row=float(Qn.size),
+    partial = size_tasks(
+        candidates, float(Qn.size),
         # parquet float32 array + id: ~5 B/element + fixed overhead
-        bytes_per_row=16.0 + 5.0 * Qn.shape[1]
+        row_bytes=16.0 + 5.0 * Qn.shape[1]
     ).mapInPandas(
         gen, "query_id long, neighbor_id long, cosine double"
     ).where(F.col("cosine") > float("-inf"))
@@ -282,10 +217,9 @@ def assign_ivf_lists(
 
     schema = candidates.select(id_col, vec_col).schema.add(
         list_col, "integer")
-    return _spread_compute(
-        candidates.select(id_col, vec_col),
-        flops_per_row=float(Cen.size),
-        bytes_per_row=16.0 + 5.0 * Cen.shape[1]).mapInPandas(gen, schema)
+    return size_tasks(
+        candidates.select(id_col, vec_col), float(Cen.size),
+        row_bytes=16.0 + 5.0 * Cen.shape[1]).mapInPandas(gen, schema)
 
 
 def ivf_topk(
@@ -466,9 +400,8 @@ def ivf_topk(
                    / max(len(Cen), 1))
     fpr = avg_probers * d_dim + (0.0 if list_col is not None
                                  else float(Cen.size))
-    partial = _spread_compute(
-        cand_src, flops_per_row=fpr,
-        bytes_per_row=16.0 + 5.0 * d_dim).mapInPandas(
+    partial = size_tasks(
+        cand_src, fpr, row_bytes=16.0 + 5.0 * d_dim).mapInPandas(
         score_gen, "query_id long, neighbor_id long, cosine double"
     ).where(F.col("cosine") > float("-inf"))
     w = Window.partitionBy("query_id").orderBy(
@@ -843,12 +776,11 @@ def lsh_topk(
         )
     if broadcast_queries:
         # a broadcast join inherits the candidate scan's parallelism; a
-        # small-file scan (fewer splits than cores) would score every
-        # bucket pair in one task, so spread the exploded rows first.
-        # At scale the input has >= cores splits and this never fires.
-        ncores = candidates.sparkSession.sparkContext.defaultParallelism
-        if candidates.rdd.getNumPartitions() < ncores:
-            cb = cb.repartition(ncores, "t", "bucket")
+        # small-file scan would score every bucket pair in one task, so
+        # spread the exploded rows first: one row per task up to the
+        # slots, since a row's bucket-partner count follows the bucket
+        # skew, which the plan does not show.
+        cb = size_tasks(cb)
     qside = F.broadcast(qb) if broadcast_queries else qb
     scored = cb.join(qside, ["t", "bucket"]).select(
         "query_id", "neighbor_id",

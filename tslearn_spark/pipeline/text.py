@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tslearn_spark.pipeline.dedup import _spread_docs, tokens_col
+from tslearn_spark.pipeline.dedup import DOC_WORK, tokens_col
+from tslearn_spark.session import size_tasks
 
 # Tiny per-language stopword marker sets (top function words).  Public
 # knowledge; the oracle SQL uses the identical lists.
@@ -60,7 +61,7 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     length, punctuation ratio, stopword ratio, uppercase ratio, digit
     ratio — all closed-form SQL.
     """
-    return _spread_docs(docs).select("doc_id", *quality_cols(text_col))
+    return size_tasks(docs, DOC_WORK).select("doc_id", *quality_cols(text_col))
 
 
 def quality_cols(text_col: str = "text") -> list[Column]:
@@ -127,7 +128,7 @@ def document_fingerprints(docs: DataFrame, text_col: str = "text",
     character n-grams of length ``window``; documents sharing a
     fingerprint are near-dup candidates.  Pure SQL.
     """
-    return _spread_docs(docs).select(
+    return size_tasks(docs, DOC_WORK).select(
         "doc_id", fingerprint_col(text_col, window))
 
 

@@ -8,6 +8,7 @@ to the input rather than the 200 default.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,7 +59,7 @@ def get_spark(app_name: str = "tslearn_spark", shuffle_partitions: int | None = 
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # InferFiltersFromGenerate synthesizes size(child)>0 filters under
         # every explode; predicate pushdown then drags the generator's
-        # child expression below our compute-spreading repartitions, so
+        # child expression below size_tasks' round-robin repartition, so
         # md5/regex/HOF tokenization chains run TWICE — once single-task
         # on the scan side.  Generate already skips empty arrays; the
         # filter buys nothing for this engine's operators (measured 12x
@@ -70,6 +71,137 @@ def get_spark(app_name: str = "tslearn_spark", shuffle_partitions: int | None = 
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     builder = builder.master(master)
     return builder.getOrCreate()
+
+
+# Work per task, in flop-equivalents (one unit ~ one double flop of
+# compiled code, ~0.5 ns on one core): 64e6 units is 25-50 ms of
+# single-thread compute, enough that the per-task overhead (scheduling,
+# Arrow round trip, Python dispatch) stays amortized.  Calibrated on the
+# sf0.1 ANN queries: the optimum sat at 4-8 tasks for 2000 rows x
+# 128 kflop/row and 1-2 tasks at 33 kflop/row, against one task per slot
+# (interleaved A/B: brute force 0.99 -> 0.72 s, IVF 1.09 -> 0.70 s).
+TASK_WORK = 64e6
+
+# logical operators that keep their child's partitioning (no exchange)
+_NARROW = frozenset((
+    "Project", "Filter", "Generate", "SubqueryAlias", "Sample",
+    "MapInPandas", "MapInArrow", "Expand",
+))
+# logical operators whose output has at most their child's row count
+_ROW_BOUNDED = frozenset((
+    "Project", "Filter", "SubqueryAlias", "Sort", "Repartition",
+    "RepartitionByExpression",
+))
+
+
+def _plan_rows(df: DataFrame, row_bytes: float | None = None) -> float:
+    """Row-count estimate from the optimized plan's statistics, with no
+    job.  A row count wins when the plan carries one — at the root or
+    below projections and filters (a materialized cache knows its rows;
+    through a filter the count is an upper bound).  Otherwise it is
+    sizeInBytes over the row size: ``row_bytes`` defaults to the
+    optimizer's own row estimate (8 + the schema's default size), which
+    recovers the row count the statistics were scaled from; a caller
+    that knows the stored bytes per row of the scan (parquet float
+    arrays, say) passes them.  That figure is an order of magnitude:
+    compressed scans read low, and filters and aggregates, which do not
+    shrink the statistics, read high."""
+    node = top = df._jdf.queryExecution().optimizedPlan()
+    while True:
+        count = node.stats().rowCount()
+        if count.isDefined():
+            return float(count.get())
+        if node.getClass().getSimpleName() not in _ROW_BOUNDED:
+            break
+        node = node.child()
+    per_row = row_bytes or 8.0 + df._jdf.schema().defaultSize()
+    return float(top.stats().sizeInBytes()) / per_row
+
+
+def _plan_width(df: DataFrame) -> int:
+    """Partitions the input is known to produce, found without a job.
+    Under narrow operators: an explicit repartition(n)/coalesce(n), a
+    materialized cache (its buffers' partition count), or a leaf — file
+    scan, checkpoint, local data, range — whose count Spark itself reads
+    off the shuffle-free executed plan's RDD.  Anything else counts as
+    0: a shuffle's width is AQE's to coalesce at runtime (a byte-small
+    shuffle output ends up as a single partition), and so is the width
+    of a cache that has not run yet."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while True:
+        kind = node.getClass().getSimpleName()
+        if kind == "Repartition":
+            return int(node.numPartitions())
+        if kind == "RepartitionByExpression":
+            opt = node.optNumPartitions()
+            return int(opt.get()) if opt.isDefined() else 0
+        if kind == "InMemoryRelation":
+            cache = node.cacheBuilder()
+            if cache.isCachedColumnBuffersLoaded():
+                return int(cache.cachedColumnBuffers().getNumPartitions())
+            return 0
+        if node.children().isEmpty():
+            # building the executed plan's RDD runs no job unless the
+            # plan is adaptive (AQE would run its shuffle stages to settle
+            # the width) or has subqueries (they execute first)
+            plan = df._jdf.queryExecution().executedPlan()
+            if (plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+                    or not plan.subqueriesAll().isEmpty()):
+                return 0
+            return int(plan.execute().getNumPartitions())
+        if kind in _NARROW or (kind == "Sort" and not getattr(node, "global")()):
+            node = node.child()
+            continue
+        return 0
+
+
+def size_tasks(df: DataFrame, work_per_row: float | None = None,
+               n_rows: float | None = None,
+               row_bytes: float | None = None) -> DataFrame:
+    """The engine's one task-sizing rule for compute-bound stages.
+
+    Returns ``df`` on ``min(slots, ceil(n_rows * work_per_row /
+    TASK_WORK))`` tasks (never more tasks than rows).  ``df`` itself
+    comes back when it is known to have exactly that many partitions
+    (see _plan_width), or at least the slot count when the target is
+    the slot count: a real-scale scan or materialized cache stays
+    shuffle-free.  Any other input is round-robined to the target by
+    one shuffle of what is then a small row set — narrower inputs, a
+    shuffle output or a cache that has not run (width unknown), and
+    inputs wider than a below-slots target, whose little work would
+    otherwise pay one task's overhead per partition (an iterative fit
+    pays it once per iteration).
+
+    Spark sizes partitions by bytes, so a small-but-expensive input (a
+    few thousand series feeding millions of DP cells, a 1 MB doc table
+    feeding regex tokenization) lands in one or two partitions and
+    serializes the stage; one round-robin shuffle of the small row set
+    spreads it.  Sizing by work instead of by slot count keeps tiny
+    inputs from paying one task's overhead per slot for microseconds of
+    compute.
+
+    ``work_per_row``: the caller's estimate in flop-equivalents (see
+    TASK_WORK), or None when a row's cost is unknown and may be large
+    (a DP over series of unknown length): each row then counts as a
+    full task, i.e. one task per row up to the slot count.  ``n_rows``:
+    the row count when the caller holds it; otherwise it comes from
+    plan statistics (see _plan_rows), never from a count() job or an RDD
+    of a shuffle-rooted plan.  Results do not depend on the
+    partitioning: callers are per-row maps or merge per-task partials
+    with an exact tie-aware final rank; only the iterative fits'
+    floating-point sums (k-means, MLP) follow the partition count in
+    their last bits, as they always did.
+    """
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    if n_rows is None:
+        n_rows = _plan_rows(df, row_bytes)
+    work = TASK_WORK if work_per_row is None else float(work_per_row)
+    rows_per_task = max(1.0, TASK_WORK / max(work, 1.0))
+    target = max(1, min(slots, math.ceil(n_rows / rows_per_task)))
+    width = _plan_width(df)
+    if width == target or (width > target and target == slots):
+        return df
+    return df.repartition(target)
 
 
 # columns stored as TIMESTAMP(NANOS) in the driver parquet — surfaced as
@@ -159,7 +291,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         ("spark.sql.adaptive.enabled", "true"),
         ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
         # see get_spark: the inferred size()>0 filter under explode drags
-        # heavy tokenization chains below the compute-spread repartition
+        # heavy tokenization chains below size_tasks' repartition
         ("spark.sql.optimizer.excludedRules",
          "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"),
     ):

@@ -29,10 +29,6 @@ def _norm_cdf(x: float) -> float:
     return 0.5 * math.erfc(-x / math.sqrt(2.0))
 
 
-def _norm_pdf(x: float) -> float:
-    return math.exp(-0.5 * x * x) / math.sqrt(2.0 * math.pi)
-
-
 def norm_ppf_scalar(p: float, scale: float = 1.0) -> float:
     if p <= 0.0:
         return -math.inf
