@@ -1254,9 +1254,9 @@ def knn_dtw_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-NN banded-DTW classification under the HASH GATE
     (neighbors.py:353-562 kneighbors + :502-531 vote).
 
-    Runs the REAL distributed path — broadcast train, mixed-shape
-    banded batch DP (kernels.dtw_banded_batch_mixed), tie-aware top-k,
-    majority vote — on floor()-quantized integer series (lengths 12..16
+    Runs the REAL distributed path — broadcast train, fused banded-DP
+    top-k (kernels.dtw_knn_topk), tie-aware ranking, majority vote —
+    on floor()-quantized integer series (lengths 12..16
     by user, sakoe_chiba_radius=5, labels user_id % 3).  On integer
     values every DP cell is an exact integer (the row-scan cumsum trick
     is exact under integer associativity), the +inf band border

@@ -8,12 +8,17 @@ via ctypes.  Spark local-mode python workers share the cache with the
 driver (the driver's import builds it before workers spawn); at cluster
 scale each executor machine builds its own copy once.
 
-Everything is best-effort: no compiler, a failed compile, or
-``TSLEARN_SPARK_CKERNEL=0`` silently leaves ``lib_or_none()`` returning
-None and the numpy kernels run unchanged.  The compiled DP is
-bit-identical to the numpy kernel on non-abandoned pairs (see the .c
-header; pinned by tests/test_ckernel.py), so which path executed is
-unobservable in results.
+The library holds one DP core behind two entry points, bound from the
+``_ENTRY_POINTS`` table: ``dtw_batch`` (one distance per pair, wrapped
+by ``dtw_batch`` here) and ``dtw_knn`` (each query's top-k over a train
+set, every DP capped at the running k-th best; wrapped by ``dtw_knn``).
+
+Everything is best-effort: no compiler, a failed compile, a symbol that
+does not bind, or ``TSLEARN_SPARK_CKERNEL=0`` silently leaves
+``lib_or_none()`` returning None and the numpy kernels run unchanged.
+The compiled DP is bit-identical to the numpy kernel on non-abandoned
+pairs (see the .c header; pinned by tests/test_ckernel.py), so which
+path executed is unobservable in results.
 """
 
 from __future__ import annotations
@@ -41,6 +46,25 @@ _tried = False
 
 _I64P = np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS")
 _F64P = np.ctypeslib.ndpointer(np.float64, flags="C_CONTIGUOUS")
+_LL = ctypes.c_longlong
+
+# every exported symbol and its argument types; each returns 0, or -1
+# when its scratch allocation failed
+_ENTRY_POINTS = {
+    "dtw_batch": [
+        _F64P, _I64P, _I64P,        # bufA, offA, lenA
+        _F64P, _I64P, _I64P,        # bufB, offB, lenB
+        _LL, _LL, _LL,              # n, d, radius (<0: none)
+        ctypes.c_void_p,            # tau2 (NULL: none)
+        _F64P,                      # out
+    ],
+    "dtw_knn": [
+        _F64P, _I64P, _I64P, _I64P, _LL,    # queries: buf, off, len, id, n
+        _F64P, _I64P, _I64P, _I64P, _LL,    # train: buf, off, len, id, n
+        _LL, _LL, _LL, ctypes.c_int,        # d, radius (<0: none), k, drop_self
+        _F64P, _I64P, _I64P,                # out dist, train index, count
+    ],
+}
 
 
 def _so_path() -> str:
@@ -86,16 +110,10 @@ def lib_or_none():
                         check=True, capture_output=True, timeout=120)
                     os.replace(tmp, so)
                 cand = ctypes.CDLL(so)
-                cand.dtw_batch.restype = None
-                cand.dtw_batch.argtypes = [
-                    _F64P, _I64P, _I64P,        # bufA, offA, lenA
-                    _F64P, _I64P, _I64P,        # bufB, offB, lenB
-                    ctypes.c_longlong,          # n
-                    ctypes.c_longlong,          # d
-                    ctypes.c_longlong,          # radius (<0: none)
-                    ctypes.c_void_p,            # tau2 (NULL: none)
-                    _F64P,                      # out
-                ]
+                for name, argtypes in _ENTRY_POINTS.items():
+                    fn = getattr(cand, name)
+                    fn.restype = ctypes.c_int
+                    fn.argtypes = argtypes
                 lib = cand
             except Exception:
                 lib = None
@@ -112,6 +130,10 @@ def _flatten(arrs: list, d: int):
     buf = np.concatenate(
         [np.ascontiguousarray(a, dtype=np.float64).reshape(-1) for a in arrs]
     ) if n else np.empty(0)
+    # the kernel reads lens[i] * d values at offs[i]: a series of another
+    # width would send it past the buffer
+    if buf.size != int(lens.sum()) * d:
+        raise ValueError(f"series must all be (sz, {d}) for the C kernel")
     return buf, offs, lens
 
 
@@ -133,8 +155,38 @@ def dtw_batch(arrs_a: list, arrs_b: list, radius, tau2=None) -> np.ndarray:
     else:
         tau_arr = np.ascontiguousarray(tau2, dtype=np.float64)
         tau_p = tau_arr.ctypes.data_as(ctypes.c_void_p)
-    lib.dtw_batch(buf_a, off_a, len_a, buf_b, off_b, len_b,
-                  n, d, -1 if radius is None else int(radius), tau_p, out)
-    if n and out[0] == -1.0 and np.all(out == -1.0):
+    if lib.dtw_batch(buf_a, off_a, len_a, buf_b, off_b, len_b,
+                     n, d, -1 if radius is None else int(radius), tau_p, out):
         raise MemoryError("dtw_batch scratch allocation failed")
     return out
+
+
+def dtw_knn(q_arrs: list, q_ids, t_arrs: list, t_ids, radius, k: int,
+            drop_self: bool):
+    """Each query's ``min(k, n_t)`` nearest train series under (banded)
+    DTW, in one compiled pass: ``(id1, id2, dist)`` arrays, query order,
+    then ascending (dist, id2) within a query; non-finite distances and,
+    under ``drop_self``, equal ids are left out.
+
+    Caller guarantees lib_or_none() is not None and both sides are
+    non-empty.  Raises MemoryError when the kernel's scratch allocation
+    fails (nothing is returned then).
+    """
+    lib = lib_or_none()
+    n_q, n_t = len(q_arrs), len(t_arrs)
+    d = t_arrs[0].shape[1] if t_arrs[0].ndim > 1 else 1
+    kk = min(int(k), n_t)
+    q_ids = np.ascontiguousarray(q_ids, dtype=np.int64)
+    t_ids = np.ascontiguousarray(t_ids, dtype=np.int64)
+    if q_ids.shape != (n_q,) or t_ids.shape != (n_t,):
+        raise ValueError("one id per series on each side")
+    dist = np.empty(n_q * kk, dtype=np.float64)
+    idx = np.empty(n_q * kk, dtype=np.int64)
+    cnt = np.empty(n_q, dtype=np.int64)
+    if lib.dtw_knn(*_flatten(q_arrs, d), q_ids, n_q,
+                   *_flatten(t_arrs, d), t_ids, n_t,
+                   d, -1 if radius is None else int(radius), kk,
+                   int(bool(drop_self)), dist, idx, cnt):
+        raise MemoryError("dtw_knn scratch allocation failed")
+    held = (np.arange(kk)[None, :] < cnt[:, None]).ravel()
+    return np.repeat(q_ids, cnt), t_ids[idx[held]], dist[held]

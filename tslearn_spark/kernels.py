@@ -492,6 +492,161 @@ def dtw_banded_batch_mixed(arrs_a: list, arrs_b: list, radius: int | None = None
     return np.sqrt(res)
 
 
+def dtw_band_estimate(lens_t: np.ndarray, radius) -> tuple[float, float]:
+    """(median train length, typical band width) of a train set's DTW
+    rows: the DP cells of one query against it are about
+    ``len(lens_t) * med_t * w_est``.
+
+    The band width of an (la, lb) pair is |la - lb| + 2r + 1, so on
+    mixed-length corpora a bare 2r+1 estimate undercounts.  The typical
+    |la - lb| is the Gini mean difference of the train lengths (O(n log n)
+    via the sorted-array identity); queries are assumed length-distributed
+    like the train side.
+    """
+    n_t = len(lens_t)
+    med_t = float(np.median(lens_t)) if n_t else 0.0
+    if n_t > 1:
+        ls = np.sort(lens_t).astype(np.float64)
+        idx = np.arange(n_t, dtype=np.float64)
+        mean_len_diff = float(np.sum((2 * idx - n_t + 1) * ls)
+                              * 2.0 / (n_t * (n_t - 1)))
+    else:
+        mean_len_diff = 0.0
+    w_est = (2 * int(radius) + 1 + mean_len_diff) if radius is not None else med_t
+    return med_t, w_est
+
+
+def dtw_knn_topk(q_arrs: list, q_ids, t_arrs: list, t_ids, radius, k: int,
+                 drop_self: bool):
+    """Each query's k nearest train series under (banded) DTW: ``(id1,
+    id2, dist)`` arrays in query order, then ascending (dist, id2) — the
+    order of the final (dist, id2) window — with non-finite distances
+    and, under ``drop_self``, equal ids left out.  Every pair that could
+    rank is evaluated exactly.
+
+    Runs the fused compiled kernel (``ckernel.dtw_knn``: one pass over
+    the train set per query, each DP capped at the running k-th best)
+    when it is loaded; otherwise, or when its scratch allocation fails,
+    the numpy batchers below.  Both tiers return the same rows bit for
+    bit (tests/test_ckernel.py).
+    """
+    from tslearn_spark import ckernel
+
+    q_ids = np.asarray(q_ids, dtype=np.int64)
+    t_ids = np.asarray(t_ids, dtype=np.int64)
+    if not q_arrs or not t_arrs or k < 1:
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty, np.empty(0)
+    if ckernel.lib_or_none() is not None:
+        try:
+            return ckernel.dtw_knn(q_arrs, q_ids, t_arrs, t_ids, radius, k,
+                                   drop_self)
+        except MemoryError:
+            pass
+    return _dtw_knn_topk_numpy(q_arrs, q_ids, t_arrs, t_ids, radius, k,
+                               drop_self)
+
+
+def _dtw_knn_topk_numpy(q_arrs, qids, T, ids_t, radius, k, drop_self):
+    """numpy tier of ``dtw_knn_topk``: ~64k-pair chunks of the batched
+    DP, either over every pair or seeded and capped."""
+    from tslearn_spark.topk import topk_matrix_tiebreak, topk_rows_tiebreak
+
+    n_t = len(T)
+    chunk_q = max(1, 65536 // max(n_t, 1))  # ~64k pairs per kernel call
+    lens_t = np.fromiter((t.shape[0] for t in T), dtype=np.int64, count=n_t)
+    # seed-and-cap pays only where the DP lanes are expensive: the per-row
+    # interpreter cost of the batched kernel is fixed, so abandoning lanes
+    # saves time only when (band width x series length) dominates it.
+    # Measured on local[32]: events-like sz~67 W~16 -> capped is a net LOSS
+    # despite 44% abandonment; sz=128 W=11 -> breakeven; sz=512 W~101 ->
+    # 1.9x win at 87% abandonment.  Threshold below separates those regimes.
+    # Both paths are exact; this only picks which.
+    med_t, w_est = dtw_band_estimate(lens_t, radius)
+    use_prune = radius is not None and med_t * w_est >= 8192
+    out_q, out_n, out_d = [], [], []
+    kk = min(k, n_t)
+    # seed count: enough to fill the top-k plus slack for a tight cap
+    s_seed = min(n_t, max(kk, 8))
+    for s in range(0, len(q_arrs), chunk_q):
+        qs = q_arrs[s : s + chunk_q]
+        qi = qids[s : s + chunk_q]
+        n_q = len(qs)
+        rr = np.arange(n_q)[:, None]
+        if not use_prune:
+            # plain exact pass: one batched DP over every pair
+            arrs_a = [q for q in qs for _ in range(n_t)]
+            arrs_b = T * n_q
+            flat = dtw_banded_batch_mixed(arrs_a, arrs_b, radius)
+            dists = flat.reshape(n_q, n_t)
+            if drop_self:
+                dists[qi[:, None] == ids_t[None, :]] = np.inf
+            # tie-aware top-k (tslearn_spark.topk): duplicate
+            # train series tie exactly and the cutoff must
+            # resolve by smallest id, like the final window
+            best_i = topk_matrix_tiebreak(dists.T, ids_t, kk).T
+            best_d = dists[rr, best_i]
+        else:
+            # pass 1 (seeds): per query the s_seed closest-LENGTH
+            # train series — cheapest bands AND likely-near under
+            # banded DTW, so their k-th best is a tight exact cap
+            q_lens = np.fromiter((q.shape[0] for q in qs),
+                                 dtype=np.int64, count=n_q)
+            seed_idx = np.argpartition(
+                np.abs(lens_t[None, :] - q_lens[:, None]),
+                s_seed - 1, axis=1)[:, :s_seed]
+            arrs_a = [qs[r] for r in range(n_q) for _ in range(s_seed)]
+            arrs_b = [T[j] for r in range(n_q) for j in seed_idx[r]]
+            d_seed = dtw_banded_batch_mixed(arrs_a, arrs_b, radius)
+            d_seed = d_seed.reshape(n_q, s_seed)
+            if drop_self:
+                d_seed[qi[:, None] == ids_t[seed_idx]] = np.inf
+            sel_s = np.stack([
+                topk_rows_tiebreak(d_seed[row],
+                                   ids_t[seed_idx[row]], kk)
+                for row in range(n_q)
+            ])
+            best_d = d_seed[rr, sel_s]        # (n_q, kk) running top-k
+            best_i = seed_idx[rr, sel_s]      # train indices
+            # pass 2: every non-seed candidate, capped at the current
+            # k-th best (exact early abandon inside the batched DP)
+            is_seed = np.zeros((n_q, n_t), dtype=bool)
+            is_seed[rr, seed_idx] = True
+            rest_counts = n_t - s_seed
+            if rest_counts > 0:
+                r_of, j_of = np.nonzero(~is_seed)  # row-major pairs
+                arrs_a = [qs[r] for r in r_of]
+                arrs_b = [T[j] for j in j_of]
+                tau = best_d.max(axis=1)      # k-th best per query
+                flat = dtw_banded_batch_mixed(
+                    arrs_a, arrs_b, radius, tau2=(tau * tau)[r_of])
+                d_rest = flat.reshape(n_q, rest_counts)
+                j_rest = j_of.reshape(n_q, rest_counts)
+                if drop_self:
+                    d_rest[qi[:, None] == ids_t[j_rest]] = np.inf
+                cat_d = np.concatenate([best_d, d_rest], axis=1)
+                cat_i = np.concatenate([best_i, j_rest], axis=1)
+                sel2 = np.stack([
+                    topk_rows_tiebreak(cat_d[row],
+                                       ids_t[cat_i[row]], kk)
+                    for row in range(n_q)
+                ])
+                best_d = cat_d[rr, sel2]
+                best_i = cat_i[rr, sel2]
+        for row in range(n_q):
+            out_q.extend([s + row] * kk)
+            out_n.extend(ids_t[best_i[row]])
+            out_d.extend(best_d[row])
+    pos = np.asarray(out_q, dtype=np.int64)
+    id2 = np.asarray(out_n, dtype=np.int64)
+    dist = np.asarray(out_d, dtype=np.float64)
+    # the final window's filter and order, so both tiers return one shape
+    keep = dist < np.inf
+    pos, id2, dist = pos[keep], id2[keep], dist[keep]
+    order = np.lexsort((id2, dist, pos))
+    return qids[pos[order]], id2[order], dist[order]
+
+
 def _return_path(C: np.ndarray) -> list[tuple[int, int]]:
     """Backtrack optimal path; diagonal preferred on ties (dtw_variants.py:85-106)."""
     i, j = C.shape[0] - 1, C.shape[1] - 1

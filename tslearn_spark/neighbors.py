@@ -27,7 +27,7 @@ from tslearn_spark import metrics as M
 from tslearn_spark.bases import (BaseModelPackage, ClassifierScoreMixin,
                                  RegressorScoreMixin, TimeSeriesBaseEstimator)
 from tslearn_spark.session import size_tasks
-from tslearn_spark.topk import topk_matrix_tiebreak, topk_rows_tiebreak
+from tslearn_spark.topk import topk_matrix_tiebreak
 
 # query sets up to ~this many float64s (~64 MB) ride the broadcast-matmul
 # fast path for euclidean; beyond it (or for elastic metrics) the generic
@@ -46,10 +46,7 @@ def _euclidean_topk(queries: DataFrame, train: DataFrame, k: int,
     """
     q_pdf = queries.select("series_id", "values").toPandas()
     q_ids = q_pdf["series_id"].to_numpy(dtype=np.int64)
-    Q = np.array([
-        np.asarray([np.asarray(x, dtype=np.float64) for x in v]).ravel()
-        for v in q_pdf["values"]
-    ])
+    Q = np.array([M._to_arr(v).ravel() for v in q_pdf["values"]])
     spark = train.sparkSession
     bc = spark.sparkContext.broadcast((q_ids, Q))
 
@@ -62,10 +59,7 @@ def _euclidean_topk(queries: DataFrame, train: DataFrame, k: int,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = np.array([
-                np.asarray([np.asarray(r, dtype=np.float64) for r in v]).ravel()
-                for v in pdf["values"]
-            ])
+            C = np.array([M._to_arr(v).ravel() for v in pdf["values"]])
             cid = pdf["series_id"].to_numpy(dtype=np.int64)
             c_sq = np.einsum("ij,ij->i", C, C)
             d2 = c_sq[:, None] + q_sq[None, :] - 2.0 * (C @ Qm.T)
@@ -126,16 +120,19 @@ _DP_CELL_WORK = 16
 
 def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
                         radius, drop_self: bool, params: dict) -> DataFrame:
-    """DTW kNN via broadcast train + per-partition batched DP.
+    """DTW kNN via broadcast train + one fused top-k call per Arrow batch.
 
     The pair-join plan ships every train series once PER QUERY through
     Arrow (n_q x n_t nested rows — the dominant stage cost, not the
-    kernel).  Here the train set is broadcast once per executor, each
-    query partition runs the mixed-shape batched DP against ALL train
-    series in numpy, and only the per-partition top-k candidate rows
-    (id1, id2, dist) are emitted — Arrow traffic drops from O(n_q*n_t)
-    series payloads to O(n_q) + O(n_q*k) scalars, the same shape as the
-    euclidean BLAS path.  Exact: every pair is still evaluated.
+    kernel).  Here the train set is broadcast once per executor and each
+    query batch makes one ``kernels.dtw_knn_topk`` call against ALL train
+    series, emitting only the per-query top-k rows (id1, id2, dist) —
+    Arrow traffic drops from O(n_q*n_t) series payloads to O(n_q) +
+    O(n_q*k) scalars, the same shape as the euclidean BLAS path.  In the
+    compiled tier each query scans the train set once and every DP is
+    capped at its running k-th best (exact early abandon, always on);
+    the numpy tier evaluates every pair, or seeds and caps on long bands.
+    Exact either way: every pair that could rank is evaluated in full.
     """
     from tslearn_spark import kernels as K
 
@@ -144,137 +141,30 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
     # doubles, which matters near _DTW_BROADCAST_LIMIT_VALUES
     t_pdf = train.select("series_id", "values").toPandas()
     t_ids = t_pdf["series_id"].to_numpy(dtype=np.int64)
-    t_arrs = [
-        np.asarray([np.asarray(x, dtype=np.float64) for x in v])
-        for v in t_pdf["values"]
-    ]
+    t_arrs = [M._to_arr(v) for v in t_pdf["values"]]
     spark = queries.sparkSession
     bc = spark.sparkContext.broadcast((t_ids, t_arrs))
     n_t = len(t_arrs)
-    chunk_q = max(1, 65536 // max(n_t, 1))  # ~64k pairs per kernel call
-
-    # seed-and-cap pays only where the DP lanes are expensive: the per-row
-    # interpreter cost of the batched kernel is fixed, so abandoning lanes
-    # saves time only when (band width x series length) dominates it.
-    # Measured on local[32]: events-like sz~67 W~16 -> capped is a net LOSS
-    # despite 44% abandonment; sz=128 W=11 -> breakeven; sz=512 W~101 ->
-    # 1.9x win at 87% abandonment.  Threshold below separates those regimes.
-    lens_t_drv = np.fromiter((t.shape[0] for t in t_arrs), dtype=np.int64,
-                             count=n_t)
-    med_t = float(np.median(lens_t_drv)) if n_t else 0.0
-    # the actual band width of an (la, lb) pair is |la - lb| + 2r + 1, so
-    # on mixed-length corpora a bare 2r+1 estimate undercounts and the
-    # seed-and-cap path under-triggers.  Estimate the typical |la - lb|
-    # with the Gini mean difference of the train lengths (O(n log n) via
-    # the sorted-array identity) — queries are assumed length-distributed
-    # like the train side.  Both paths are exact; this only picks which.
-    if n_t > 1:
-        ls = np.sort(lens_t_drv).astype(np.float64)
-        idx = np.arange(n_t, dtype=np.float64)
-        mean_len_diff = float(np.sum((2 * idx - n_t + 1) * ls)
-                              * 2.0 / (n_t * (n_t - 1)))
-    else:
-        mean_len_diff = 0.0
-    w_est = (2 * int(radius) + 1 + mean_len_diff) if radius is not None else med_t
-    use_prune = radius is not None and med_t * w_est >= 8192
+    med_t, w_est = K.dtw_band_estimate(
+        np.fromiter((t.shape[0] for t in t_arrs), dtype=np.int64, count=n_t),
+        radius)
 
     def gen(batches):
         ids_t, T = bc.value
-        lens_t = np.fromiter((t.shape[0] for t in T), dtype=np.int64, count=n_t)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            qids = pdf["series_id"].to_numpy(dtype=np.int64)
-            q_arrs = [
-                np.asarray([np.asarray(x, dtype=np.float64) for x in v])
-                for v in pdf["values"]
-            ]
-            out_q, out_n, out_d = [], [], []
-            kk = min(k, n_t)
-            # seed count: enough to fill the top-k plus slack for a tight cap
-            s_seed = min(n_t, max(kk, 8))
-            for s in range(0, len(q_arrs), chunk_q):
-                qs = q_arrs[s : s + chunk_q]
-                qi = qids[s : s + chunk_q]
-                n_q = len(qs)
-                rr = np.arange(n_q)[:, None]
-                if not use_prune:
-                    # plain exact pass: one batched DP over every pair
-                    arrs_a = [q for q in qs for _ in range(n_t)]
-                    arrs_b = T * n_q
-                    flat = K.dtw_banded_batch_mixed(arrs_a, arrs_b, radius)
-                    dists = flat.reshape(n_q, n_t)
-                    if drop_self:
-                        dists[qi[:, None] == ids_t[None, :]] = np.inf
-                    # tie-aware top-k (tslearn_spark.topk): duplicate
-                    # train series tie exactly and the cutoff must
-                    # resolve by smallest id, like the final window
-                    best_i = topk_matrix_tiebreak(dists.T, ids_t, kk).T
-                    best_d = dists[rr, best_i]
-                else:
-                    # pass 1 (seeds): per query the s_seed closest-LENGTH
-                    # train series — cheapest bands AND likely-near under
-                    # banded DTW, so their k-th best is a tight exact cap
-                    q_lens = np.fromiter((q.shape[0] for q in qs),
-                                         dtype=np.int64, count=n_q)
-                    seed_idx = np.argpartition(
-                        np.abs(lens_t[None, :] - q_lens[:, None]),
-                        s_seed - 1, axis=1)[:, :s_seed]
-                    arrs_a = [qs[r] for r in range(n_q) for _ in range(s_seed)]
-                    arrs_b = [T[j] for r in range(n_q) for j in seed_idx[r]]
-                    d_seed = K.dtw_banded_batch_mixed(arrs_a, arrs_b, radius)
-                    d_seed = d_seed.reshape(n_q, s_seed)
-                    if drop_self:
-                        d_seed[qi[:, None] == ids_t[seed_idx]] = np.inf
-                    sel_s = np.stack([
-                        topk_rows_tiebreak(d_seed[row],
-                                           ids_t[seed_idx[row]], kk)
-                        for row in range(n_q)
-                    ])
-                    best_d = d_seed[rr, sel_s]        # (n_q, kk) running top-k
-                    best_i = seed_idx[rr, sel_s]      # train indices
-                    # pass 2: every non-seed candidate, capped at the current
-                    # k-th best (exact early abandon inside the batched DP)
-                    is_seed = np.zeros((n_q, n_t), dtype=bool)
-                    is_seed[rr, seed_idx] = True
-                    rest_counts = n_t - s_seed
-                    if rest_counts > 0:
-                        r_of, j_of = np.nonzero(~is_seed)  # row-major pairs
-                        arrs_a = [qs[r] for r in r_of]
-                        arrs_b = [T[j] for j in j_of]
-                        tau = best_d.max(axis=1)      # k-th best per query
-                        flat = K.dtw_banded_batch_mixed(
-                            arrs_a, arrs_b, radius, tau2=(tau * tau)[r_of])
-                        d_rest = flat.reshape(n_q, rest_counts)
-                        j_rest = j_of.reshape(n_q, rest_counts)
-                        if drop_self:
-                            d_rest[qi[:, None] == ids_t[j_rest]] = np.inf
-                        cat_d = np.concatenate([best_d, d_rest], axis=1)
-                        cat_i = np.concatenate([best_i, j_rest], axis=1)
-                        sel2 = np.stack([
-                            topk_rows_tiebreak(cat_d[row],
-                                               ids_t[cat_i[row]], kk)
-                            for row in range(n_q)
-                        ])
-                        best_d = cat_d[rr, sel2]
-                        best_i = cat_i[rr, sel2]
-                for row in range(n_q):
-                    out_q.extend([qi[row]] * kk)
-                    out_n.extend(ids_t[best_i[row]])
-                    out_d.extend(best_d[row])
-            yield pd.DataFrame({
-                "id1": np.asarray(out_q, dtype=np.int64),
-                "id2": np.asarray(out_n, dtype=np.int64),
-                "dist": np.asarray(out_d, dtype=np.float64),
-            })
+            id1, id2, dist = K.dtw_knn_topk(
+                [M._to_arr(v) for v in pdf["values"]],
+                pdf["series_id"].to_numpy(dtype=np.int64),
+                T, ids_t, radius, k, drop_self)
+            yield pd.DataFrame({"id1": id1, "id2": id2, "dist": dist})
 
     # per query row: one banded DP against every train series
     partial = size_tasks(
         queries.select("series_id", "values"),
         n_t * (med_t * w_est) * _DP_CELL_WORK,
-    ).mapInPandas(
-        gen, "id1 long, id2 long, dist double"
-    ).where(F.col("dist") < float("inf"))
+    ).mapInPandas(gen, "id1 long, id2 long, dist double")
     w = Window.partitionBy("id1").orderBy(F.col("dist").asc(), F.col("id2").asc())
     return (
         partial.withColumn("rank", F.row_number().over(w))
@@ -390,10 +280,13 @@ def kneighbors(
     """(id1=query, id2=neighbor, dist, rank), rank<=k per query.
 
     drop_self: for self-kNN, exclude the identical id (neighbors.py:163-168).
-    metric="euclidean" on a broadcastable query set takes the BLAS
-    matmul + partial-top-k path; everything else runs the pair join with
-    the Arrow-batched kernel UDF (mixed-shape batch DP for DTW).  The
-    compute-bound query side is spread by session.size_tasks: on the
+    metric="dtw" (unconstrained or Sakoe-Chiba) on a broadcastable train
+    set takes the fused top-k path (_dtw_topk_broadcast: one
+    kernels.dtw_knn_topk call per query batch, early abandon at the
+    running k-th best in the compiled tier); metric="euclidean" on a
+    broadcastable query set takes the BLAS matmul + partial-top-k path;
+    everything else runs the pair join with the Arrow-batched kernel UDF.
+    The compute-bound query side is spread by session.size_tasks: on the
     broadcast DTW path by its DP cells, measured from the collected
     train lengths; on the pair join one query per task, up to the slots.
     """
