@@ -1209,14 +1209,15 @@ def knn_dtw_classify_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERF twin: pair count grows quadratically with sf (562k banded DTWs
     at sf0.1), which is exactly what bench measures — and exactly why it
     cannot carry a DuckDB DP-replay oracle.  The hash-gated roster twin
-    is knn_dtw_classify below (same kneighbors/vote machinery on a
-    scale-invariant integer sample)."""
+    is knn_dtw_classify below (the same one-stage broadcast-DTW plan on
+    a scale-invariant integer sample)."""
     from tslearn_spark.neighbors import knn_classify
     from tslearn_spark.preprocessing import transform_mean_variance
 
     ts = transform_mean_variance(_events_series(spark, sf_dir))
-    # localCheckpoint: the labeled set feeds three consumers (left side,
-    # broadcast right side, label join) — materialize once, truncate lineage
+    # localCheckpoint: the labeled set feeds two consumers (the query
+    # side and the broadcast train side, which carries the labels) —
+    # materialize once, truncate lineage
     labeled = ts.withColumn(
         "label", (F.col("series_id") % 3).cast("string")
     ).localCheckpoint()
@@ -1254,9 +1255,10 @@ def knn_dtw_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-NN banded-DTW classification under the HASH GATE
     (neighbors.py:353-562 kneighbors + :502-531 vote).
 
-    Runs the REAL distributed path — broadcast train, fused banded-DP
-    top-k (kernels.dtw_knn_topk), tie-aware ranking, majority vote —
-    on floor()-quantized integer series (lengths 12..16
+    Runs the REAL distributed path — broadcast train and labels, then
+    in one map stage the fused banded-DP top-k (kernels.dtw_knn_topk),
+    tie-aware ranking and the majority vote, with no shuffle after the
+    kernel — on floor()-quantized integer series (lengths 12..16
     by user, sakoe_chiba_radius=5, labels user_id % 3).  On integer
     values every DP cell is an exact integer (the row-scan cumsum trick
     is exact under integer associativity), the +inf band border

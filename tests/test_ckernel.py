@@ -319,6 +319,20 @@ class TestDtwKnnAbandonSoundness:
             assert np.isfinite(c[2]).all()
             assert len(c[0]) == 5 * 3
 
+    @pytest.mark.parametrize("d", [1, 2])
+    def test_empty_train_series_produce_no_row(self, d):
+        # a train series with 0 timestamps has no finite distance: both
+        # tiers leave it out and return the other rows unchanged
+        rs = np.random.RandomState(14)
+        q, qid, t, tid = _knn_case(rs, 5, 10, d, 3, 20, dup=False)
+        t_e = t[:4] + [np.empty((0,) + t[0].shape[1:])] + t[4:]
+        tid_e = np.r_[tid[:4], 99, tid[4:]]
+        for radius in (None, 3):
+            want = _knn_both(q, qid, t, tid, radius, 3, False)[0]
+            c, n = _knn_both(q, qid, t_e, tid_e, radius, 3, False)
+            _assert_same_rows(c, n)
+            _assert_same_rows(c, want)
+
     def test_scratch_allocation_failure_falls_back(self, monkeypatch):
         rs = np.random.RandomState(14)
         q, qid, t, tid = _knn_case(rs, 7, 20, 1)

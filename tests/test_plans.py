@@ -95,6 +95,38 @@ class TestBroadcastShapes:
         plan = plan_of(pred)
         assert "BroadcastHashJoin" in plan
 
+    @pytest.mark.parametrize("op", ["classify", "regress"])
+    def test_broadcast_dtw_predict_is_one_map_stage(self, spark, op):
+        """Broadcast-DTW kNN predict ranks and votes inside the kernel
+        task: one MapInPandas, no Window, no label BroadcastHashJoin and
+        exactly one Exchange (size_tasks' round-robin below the map)."""
+        import re
+
+        from tslearn_spark.neighbors import knn_classify, knn_regress
+
+        # three query partitions for one task's work: size_tasks
+        # round-robins them to one
+        df = series_df(spark).withColumn("y", F.col("label") * 1.5)
+        q = df.repartition(3)
+        if op == "classify":
+            pred = knn_classify(q, df, k=3, metric="dtw",
+                                sakoe_chiba_radius=2)
+        else:
+            pred = knn_regress(q, df, k=3, metric="dtw", weights="distance")
+        plan = plan_of(pred)
+        assert len(re.findall(r"\(\d+\) MapInPandas\b", plan)) == 1
+        assert "Window" not in plan
+        assert "BroadcastHashJoin" not in plan
+        assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 1
+
+    def test_broadcast_dtw_kneighbors_has_no_window(self, spark):
+        from tslearn_spark.neighbors import kneighbors
+
+        df = series_df(spark)
+        plan = plan_of(kneighbors(df, df, k=3, metric="dtw", drop_self=True))
+        assert "MapInPandas" in plan
+        assert "Window" not in plan
+
     def test_euclidean_gate_falls_back_past_byte_budget(self, spark, monkeypatch):
         """Past the broadcast values budget the euclidean path must use
         the generic distributed pair join, not a driver collect."""

@@ -66,14 +66,15 @@ AUDITS = [
     ("dedup_ngram_jaccard", ["HashAggregate"], None,
      "inverted-index equi-join with size-ratio prefilter during the join; "
      "token sets deduped per-row (array_distinct), no cluster-wide distinct"),
-    ("knn_dtw_classify", ["MapInPandas", "Window"], None,
-     "broadcast-train batched DTW (r11: hash-gated integer sample; the "
-     "same kneighbors plan): each query partition runs the mixed-shape "
-     "band DP against the broadcast train set; only (id, id, dist) "
-     "candidates reach the top-k window"),
-    ("knn_dtw_classify_full", ["MapInPandas", "Window"], None,
-     "the full-population perf twin keeps the identical broadcast-train "
-     "batched band-DP plan at quadratic pair count"),
+    ("knn_dtw_classify", ["MapInPandas", "!Window", "!BroadcastHashJoin"], 1,
+     "broadcast-train banded DTW in ONE map stage (r11: hash-gated "
+     "integer sample): the train series and labels are broadcast, each "
+     "query task runs the fused top-k DP, ranks and votes its own "
+     "queries; the only Exchange is size_tasks' round-robin below the "
+     "map — no rank window, no label join, no vote shuffle"),
+    ("knn_dtw_classify_full", ["MapInPandas", "!Window", "!BroadcastHashJoin"], 1,
+     "the full-population perf twin keeps the identical one-stage "
+     "broadcast-DTW plan at quadratic pair count"),
     ("clustering_labels", ["ArrowEvalPython", "!SortMergeJoin"], 2,
      "r11 hash-gated explicit-init Lloyd: the returned labels_ plan is "
      "ONE Arrow-vectorized assignment pass over the checkpointed series "

@@ -33,11 +33,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from tslearn_spark.bases import BaseModelPackage, TimeSeriesBaseEstimator
+from tslearn_spark.session import broadcast_gate
 
 
 # classifier halves up to ~this many float64 values ride the one-shot
 # broadcast confusion pass; bigger halves stream through in budget-sized
-# chunks (same gate+fallback shape as neighbors._DTW_BROADCAST_LIMIT_VALUES)
+# chunks (session.broadcast_gate, as for the neighbors fast paths)
 _CLF_BROADCAST_LIMIT_VALUES = 8_000_000  # ~64 MB
 
 
@@ -219,9 +220,10 @@ class NonMyopicEarlyClassifier(BaseModelPackage, TimeSeriesBaseEstimator):
         spark = df.sparkSession
         classes_b = self.classes_
         min_t = self.min_t
-        n_clf = self._clf_df.count()
-        n_vals = n_clf * sz * d
-        if n_vals <= _CLF_BROADCAST_LIMIT_VALUES:
+        fits, stats = broadcast_gate(self._clf_df,
+                                     _CLF_BROADCAST_LIMIT_VALUES)
+        n_clf = stats["n"]
+        if fits:
             # fast path: the whole classifier half fits the broadcast
             # byte budget — ship it once, one map pass over half2
             self._conf_plan_ = "broadcast"

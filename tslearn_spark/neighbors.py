@@ -4,16 +4,26 @@ Reference: tslearn/neighbors/neighbors.py:19-717.
 
 Spark-first: the reference materializes the full query×train distance
 matrix then argpartitions (neighbors.py:145-161).  We never materialize
-it — the metric join streams into a per-query top-k:
+it.  DTW on a train set within the broadcast budget runs in ONE map
+stage, with no shuffle after the kernel:
 
-    crossJoin(queries, broadcast(train)) -> metric UDF
-      -> row_number() OVER (PARTITION BY query ORDER BY dist, id) <= k
-      -> vote/avg aggregate
+    broadcast(train series, ids, labels|targets)
+    size_tasks(queries) -> mapInPandas: per query batch, the fused
+      top-k (kernels.dtw_knn_topk, rows in (dist, id) order), then in
+      the same task rank -> (id1, id2, dist, rank) | vote / weighted
+      mean -> (series_id, prediction)
 
-Ties break by train id for determinism.  The train side is broadcast
-(it is the small side in the common serve pattern); for train sets too
-big to broadcast the same plan runs as a shuffle join and AQE picks the
-strategy.
+Every other path spreads a query's candidates over several tasks and
+ranks and votes in SQL:
+
+    queries x train (pair join, euclidean BLAS partials, SAX words)
+      -> metric -> row_number() OVER (PARTITION BY query
+                                      ORDER BY dist, id) <= k
+      -> join broadcast(train labels) -> groupBy + window vote / avg
+
+Ties break by train id for determinism, and both vote forms apply the
+same rules.  For train sets too big to broadcast the pair join runs as a
+shuffle join and AQE picks the strategy.
 """
 
 from __future__ import annotations
@@ -26,13 +36,12 @@ from pyspark.sql import functions as F
 from tslearn_spark import metrics as M
 from tslearn_spark.bases import (BaseModelPackage, ClassifierScoreMixin,
                                  RegressorScoreMixin, TimeSeriesBaseEstimator)
-from tslearn_spark.session import size_tasks
+from tslearn_spark.session import broadcast_gate, size_tasks
 from tslearn_spark.topk import topk_matrix_tiebreak
 
 # query sets up to ~this many float64s (~64 MB) ride the broadcast-matmul
 # fast path for euclidean; beyond it (or for elastic metrics) the generic
-# pair join runs.  A values budget, not a row count: 200k rows of sz*d=1024
-# would be a ~1.6 GB driver collect under a row gate.
+# pair join runs (session.broadcast_gate)
 _EUCLIDEAN_BROADCAST_LIMIT_VALUES = 8_000_000
 
 
@@ -118,39 +127,158 @@ _DTW_BROADCAST_LIMIT_VALUES = 8_000_000  # ~64 MB
 _DP_CELL_WORK = 16
 
 
+def _dtw_broadcast_radius(train: DataFrame, metric: str, params: dict):
+    """``(fused, radius)``: whether a kNN call takes the broadcast-DTW
+    path (DTW without an Itakura constraint, a non-empty train set
+    within the broadcast budget), and its Sakoe-Chiba radius."""
+    if metric != "dtw" or params.get("itakura_max_slope") is not None \
+            or params.get("global_constraint") == "itakura":
+        return False, None
+    radius = params.get("sakoe_chiba_radius")
+    if params.get("global_constraint") == "sakoe_chiba" and radius is None:
+        radius = 1
+    fits, stats = broadcast_gate(train, _DTW_BROADCAST_LIMIT_VALUES)
+    return fits and stats["n"] > 0, radius
+
+
+def _weight_col(weights: str):
+    """The vote weight of a neighbor row: 1, or 1/dist with dist <= 0
+    clamped to 1e-12 (``_weights`` is its numpy twin)."""
+    if weights == "distance":
+        return 1.0 / F.when(F.col("dist") <= 0.0, F.lit(1e-12)).otherwise(
+            F.col("dist"))
+    return F.lit(1.0)
+
+
+def _weights(dist: np.ndarray, weights: str) -> np.ndarray:
+    if weights == "distance":
+        return 1.0 / np.where(dist <= 0.0, 1e-12, dist)
+    return np.ones_like(dist)
+
+
+def _query_runs(id1: np.ndarray):
+    """``(starts, run)``: each query's first row and every row's query
+    index, for rows grouped by query (the fused top-k's row order)."""
+    new = np.ones(id1.size, dtype=bool)
+    new[1:] = id1[1:] != id1[:-1]
+    starts = np.flatnonzero(new)
+    run = np.repeat(np.arange(starts.size),
+                    np.diff(np.r_[starts, id1.size]))
+    return starts, run
+
+
+def _vote(id1, dist, codes, weights):
+    """Per query, the winning label code among its top-k rows (grouped
+    by query, each in rank order), by the SQL vote's rules: max summed
+    weight, then the smallest first rank, then the smallest code
+    (codes follow the label order, nulls first).  Weights add up in
+    rank order.  Returns ``(query ids, codes)``."""
+    starts, run = _query_runs(id1)
+    rank = np.arange(id1.size) - starts[run]
+    key = run * (int(codes.max(initial=0)) + 1) + codes
+    _, first, inv = np.unique(key, return_index=True, return_inverse=True)
+    w = np.bincount(inv.ravel(), weights=_weights(dist, weights))
+    k_run = run[first]
+    order = np.lexsort((codes[first], rank[first], -w, k_run))
+    win = order[_query_runs(k_run[order])[0]]  # each query's best
+    return id1[starts], codes[first][win]
+
+
+def _weighted_mean(id1, dist, y, weights):
+    """Per query, sum(y*w)/sum(w) over its top-k rows, summed in rank
+    order.  Like the SQL ``sum``, a null (NaN) target leaves the
+    numerator only, and a query whose targets are all null predicts
+    null.  Returns ``(query ids, predictions)``."""
+    starts, run = _query_runs(id1)
+    w = _weights(dist, weights)
+    known = ~np.isnan(y)
+    num = np.bincount(run, weights=np.where(known, y * w, 0.0),
+                      minlength=starts.size)
+    den = np.bincount(run, weights=w, minlength=starts.size)
+    has = np.bincount(run, weights=known, minlength=starts.size) > 0
+    return id1[starts], np.where(has, num / den, np.nan)
+
+
+def _label_codes(labels: pd.Series, dtype):
+    """``(codes, values)``: each train label's code (0 for null, then
+    1.. in ascending label order) and the label value of every code, as
+    Python objects of the column's Spark type.  NaN labels read as null
+    (pandas holds both as NaN)."""
+    from pyspark.sql.types import IntegralType
+
+    codes, uniq = pd.factorize(labels, sort=True)
+    values = np.empty(len(uniq) + 1, dtype=object)
+    # integer labels with nulls arrive as float64
+    values[1:] = ([int(v) for v in uniq] if isinstance(dtype, IntegralType)
+                  else uniq.tolist())
+    return codes.astype(np.int64) + 1, values
+
+
 def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
-                        radius, drop_self: bool, params: dict) -> DataFrame:
-    """DTW kNN via broadcast train + one fused top-k call per Arrow batch.
+                        radius, drop_self: bool, reduce=None) -> DataFrame:
+    """DTW kNN via broadcast train + one fused top-k call per Arrow
+    batch; each task emits its queries' FINAL rows.
 
     The pair-join plan ships every train series once PER QUERY through
     Arrow (n_q x n_t nested rows — the dominant stage cost, not the
     kernel).  Here the train set is broadcast once per executor and each
     query batch makes one ``kernels.dtw_knn_topk`` call against ALL train
-    series, emitting only the per-query top-k rows (id1, id2, dist) —
-    Arrow traffic drops from O(n_q*n_t) series payloads to O(n_q) +
-    O(n_q*k) scalars, the same shape as the euclidean BLAS path.  In the
-    compiled tier each query scans the train set once and every DP is
-    capped at its running k-th best (exact early abandon, always on);
-    the numpy tier evaluates every pair, or seeds and caps on long bands.
-    Exact either way: every pair that could rank is evaluated in full.
+    series.  In the compiled tier each query scans the train set once
+    and every DP is capped at its running k-th best (exact early
+    abandon, always on); the numpy tier evaluates every pair, or seeds
+    and caps on long bands.  Exact either way: every pair that could
+    rank is evaluated in full.
+
+    A query's top-k rows come out of one call, in the final (dist, id2)
+    order, so the task ranks and reduces them itself and no shuffle
+    follows the map (the query ``series_id`` is a unique key).
+    ``reduce`` picks the rows:
+
+    * None: ``(id1, id2, dist, rank)``, rank from that order;
+    * ``("classify", label_col, weights)``: ``(series_id, prediction)``
+      by ``_vote`` — the train labels ride the broadcast, so there is no
+      label join;
+    * ``("regress", target_col, weights)``: ``(series_id, prediction)``
+      by ``_weighted_mean``.
+
+    Distance-weighted sums add up in rank order, so they are
+    deterministic.  A query with no finite neighbor (a NaN series, an
+    empty train series) emits no row.
     """
     from tslearn_spark import kernels as K
 
+    kind, col, weights = reduce or (None, None, None)
+    cols = ["series_id", "values"]
+    if kind is not None:
+        cols.append(F.col(col).alias("_y"))
     # Arrow transfer (toPandas), not collect(): Row objects wrap nested
     # lists in per-element Python objects — ~5-10x the heap of the raw
     # doubles, which matters near _DTW_BROADCAST_LIMIT_VALUES
-    t_pdf = train.select("series_id", "values").toPandas()
+    t_pdf = train.select(*cols).toPandas()
     t_ids = t_pdf["series_id"].to_numpy(dtype=np.int64)
     t_arrs = [M._to_arr(v) for v in t_pdf["values"]]
+    if kind is None:
+        schema, side = "id1 long, id2 long, dist double, rank int", None
+    else:
+        by_id = np.argsort(t_ids, kind="stable")
+        if kind == "classify":
+            dtype = train.schema[col].dataType
+            codes, values = _label_codes(t_pdf["_y"], dtype)
+            side = (t_ids[by_id], codes[by_id], values)
+            schema = f"series_id long, prediction {dtype.simpleString()}"
+        else:
+            y = t_pdf["_y"].to_numpy(dtype=np.float64, na_value=np.nan)
+            side = (t_ids[by_id], y[by_id], None)
+            schema = "series_id long, prediction double"
     spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast((t_ids, t_arrs))
+    bc = spark.sparkContext.broadcast((t_ids, t_arrs, side))
     n_t = len(t_arrs)
     med_t, w_est = K.dtw_band_estimate(
         np.fromiter((t.shape[0] for t in t_arrs), dtype=np.int64, count=n_t),
         radius)
 
     def gen(batches):
-        ids_t, T = bc.value
+        ids_t, T, side_b = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -158,19 +286,28 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
                 [M._to_arr(v) for v in pdf["values"]],
                 pdf["series_id"].to_numpy(dtype=np.int64),
                 T, ids_t, radius, k, drop_self)
-            yield pd.DataFrame({"id1": id1, "id2": id2, "dist": dist})
+            if id1.size == 0:
+                continue
+            if kind is None:
+                starts, run = _query_runs(id1)
+                rank = np.arange(id1.size) - starts[run] + 1
+                yield pd.DataFrame({"id1": id1, "id2": id2, "dist": dist,
+                                    "rank": rank.astype(np.int32)})
+                continue
+            sorted_ids, per_train, values = side_b
+            at = per_train[np.searchsorted(sorted_ids, id2)]
+            if kind == "regress":
+                sid, pred = _weighted_mean(id1, dist, at, weights)
+            else:
+                sid, code = _vote(id1, dist, at, weights)
+                pred = pd.Series(values[code], dtype=object)
+            yield pd.DataFrame({"series_id": sid, "prediction": pred})
 
     # per query row: one banded DP against every train series
-    partial = size_tasks(
+    return size_tasks(
         queries.select("series_id", "values"),
         n_t * (med_t * w_est) * _DP_CELL_WORK,
-    ).mapInPandas(gen, "id1 long, id2 long, dist double")
-    w = Window.partitionBy("id1").orderBy(F.col("dist").asc(), F.col("id2").asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("id1", "id2", "dist", "rank")
-    )
+    ).mapInPandas(gen, schema)
 
 
 def _sax_word_candidates(q_words: DataFrame, t_cand: DataFrame, sax,
@@ -277,53 +414,47 @@ def kneighbors(
     drop_self: bool = False,
     **params,
 ) -> DataFrame:
-    """(id1=query, id2=neighbor, dist, rank), rank<=k per query.
+    """(id1=query, id2=neighbor, dist, rank), rank<=k per query; the
+    query ``series_id`` is a unique key.
 
     drop_self: for self-kNN, exclude the identical id (neighbors.py:163-168).
     metric="dtw" (unconstrained or Sakoe-Chiba) on a broadcastable train
     set takes the fused top-k path (_dtw_topk_broadcast: one
     kernels.dtw_knn_topk call per query batch, early abandon at the
-    running k-th best in the compiled tier); metric="euclidean" on a
-    broadcastable query set takes the BLAS matmul + partial-top-k path;
-    everything else runs the pair join with the Arrow-batched kernel UDF.
-    The compute-bound query side is spread by session.size_tasks: on the
-    broadcast DTW path by its DP cells, measured from the collected
-    train lengths; on the pair join one query per task, up to the slots.
+    running k-th best in the compiled tier, rank assigned in the task,
+    no shuffle after it); metric="euclidean" on a broadcastable query
+    set takes the BLAS matmul + partial-top-k path; everything else runs
+    the pair join with the Arrow-batched kernel UDF.  On every path a
+    pair without a finite distance (a NaN series, a train series with 0
+    timestamps) never ranks.  The compute-bound query side is spread by
+    session.size_tasks: on the broadcast DTW path by its DP cells,
+    measured from the collected train lengths; on the pair join one
+    query per task, up to the slots.
     """
-    if metric == "dtw" and params.get("itakura_max_slope") is None \
-            and params.get("global_constraint") != "itakura":
-        radius = params.get("sakoe_chiba_radius")
-        if params.get("global_constraint") == "sakoe_chiba" and radius is None:
-            radius = 1
-        stats = train.select(
-            F.count("*").alias("n"),
-            F.sum(F.size("values") * F.size(F.element_at("values", 1))).alias(
-                "n_vals"
-            ),
-        ).first()
-        if stats is not None and stats["n"] and stats["n_vals"] is not None \
-                and stats["n_vals"] <= _DTW_BROADCAST_LIMIT_VALUES:
-            return _dtw_topk_broadcast(
-                queries, train, k, radius, drop_self, params
-            )
+    fused, radius = _dtw_broadcast_radius(train, metric, params)
+    if fused:
+        return _dtw_topk_broadcast(queries, train, k, radius, drop_self)
+    return _kneighbors_spread(queries, train, k, metric, drop_self, params)
+
+
+def _kneighbors_spread(queries: DataFrame, train: DataFrame, k: int,
+                       metric: str, drop_self: bool,
+                       params: dict) -> DataFrame:
+    """kneighbors off the broadcast-DTW path: a query's candidate rows
+    are spread over several tasks, so a final (dist, id2) window ranks
+    them."""
     if metric == "sax":
         return _sax_knn(queries, train, k, drop_self, params)
     if metric == "euclidean" and not params:
-        shape = queries.select(F.lit(True).alias("_q"), "values").unionByName(
-            train.select(F.lit(False).alias("_q"), "values")
-        ).select(
-            F.countDistinct(F.size("values")).alias("n_sz"),
-            F.sum(
-                F.when(
-                    F.col("_q"),
-                    F.size("values") * F.size(F.element_at("values", 1)),
-                ).otherwise(F.lit(0))
-            ).alias("q_vals"),
-        ).first()
         # fast path needs equal-length series and a query set within the
-        # broadcast byte budget (values count, mirroring the DTW gate)
-        if shape["n_sz"] == 1 and shape["q_vals"] is not None \
-                and shape["q_vals"] <= _EUCLIDEAN_BROADCAST_LIMIT_VALUES:
+        # broadcast byte budget
+        fits, shape = broadcast_gate(
+            queries.select(F.lit(True).alias("_q"), "values").unionByName(
+                train.select(F.lit(False).alias("_q"), "values")),
+            _EUCLIDEAN_BROADCAST_LIMIT_VALUES, where=F.col("_q"),
+            n_sz=F.countDistinct(F.size("values")),
+        )
+        if fits and shape["n_sz"] == 1:
             return _euclidean_topk(queries, train, k, drop_self)
     pairs = M.cross_pairs(queries, train)
     if drop_self:
@@ -334,15 +465,25 @@ def kneighbors(
     udf = M.pair_metric_udf(metric, **params)
     a1, a2 = M._kernel_args(M.dim_of(train))
     # project the (large) value arrays away BEFORE the top-k shuffle:
-    # only (id1, id2, dist) rows move, not the series payloads
+    # only (id1, id2, dist) rows move, not the series payloads; a
+    # non-finite distance (a NaN or empty series) never ranks, as on the
+    # fused and euclidean paths
     scored = pairs.withColumn("dist", udf(a1, a2)).select(
         "id1", "id2", "dist"
-    )
+    ).where(F.col("dist") < float("inf"))
     w = Window.partitionBy("id1").orderBy(F.col("dist").asc(), F.col("id2").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("id1", "id2", "dist", "rank")
+    )
+
+
+def _labeled(nn: DataFrame, train: DataFrame, col: str) -> DataFrame:
+    """Top-k rows joined to the (tiny, broadcast) train column ``col``."""
+    return nn.join(
+        F.broadcast(train.select(F.col("series_id").alias("id2"), F.col(col))),
+        "id2",
     )
 
 
@@ -357,21 +498,25 @@ def knn_classify(
 ) -> DataFrame:
     """kNN vote (neighbors.py:502-531): mode, or 1/dist-weighted mode.
 
-    Returns (series_id, prediction).  The label join is a broadcast of
-    the (tiny) train labels.
+    Returns (series_id, prediction); the query ``series_id`` is a unique
+    key.  The vote: weight 1 or 1/dist (dist <= 0 clamped to 1e-12) per
+    neighbor; max summed weight wins, ties go to the label seen at the
+    smallest rank, then to the smallest label (nulls first).  On the
+    broadcast-DTW path each task votes over its queries' top-k rows
+    (``_vote``, weights summed in rank order, so distance-weighted votes
+    are deterministic) and the plan is one map stage; elsewhere the
+    top-k rows join the broadcast train labels and a grouped aggregate
+    plus a window vote.
     """
-    nn = kneighbors(queries, train, k=k, metric=metric, **params)
-    labeled = nn.join(
-        F.broadcast(train.select(F.col("series_id").alias("id2"), F.col(label_col))),
-        "id2",
-    )
-    if weights == "distance":
-        wexpr = 1.0 / F.when(F.col("dist") <= 0.0, F.lit(1e-12)).otherwise(F.col("dist"))
-    else:
-        wexpr = F.lit(1.0)
+    fused, radius = _dtw_broadcast_radius(train, metric, params)
+    if fused:
+        return _dtw_topk_broadcast(queries, train, k, radius, False,
+                                   ("classify", label_col, weights))
+    nn = _kneighbors_spread(queries, train, k, metric, False, params)
     votes = (
-        labeled.groupBy("id1", label_col)
-        .agg(F.sum(wexpr).alias("w"), F.min("rank").alias("first_rank"))
+        _labeled(nn, train, label_col).groupBy("id1", label_col)
+        .agg(F.sum(_weight_col(weights)).alias("w"),
+             F.min("rank").alias("first_rank"))
     )
     # max weight wins; ties -> label seen at the smallest rank, then lexical
     w = Window.partitionBy("id1").orderBy(
@@ -393,18 +538,22 @@ def knn_regress(
     target_col: str = "y",
     **params,
 ) -> DataFrame:
-    """kNN mean / distance-weighted mean of y (neighbors.py:565-717)."""
-    nn = kneighbors(queries, train, k=k, metric=metric, **params)
-    joined = nn.join(
-        F.broadcast(train.select(F.col("series_id").alias("id2"), F.col(target_col))),
-        "id2",
-    )
-    if weights == "distance":
-        wexpr = 1.0 / F.when(F.col("dist") <= 0.0, F.lit(1e-12)).otherwise(F.col("dist"))
-    else:
-        wexpr = F.lit(1.0)
+    """kNN mean / distance-weighted mean of y (neighbors.py:565-717).
+
+    Returns (series_id, prediction); the query ``series_id`` is a unique
+    key.  Weights as in knn_classify.  On the broadcast-DTW path each
+    task reduces its queries' top-k rows (``_weighted_mean``, sums in
+    rank order); elsewhere the top-k rows join the broadcast train
+    targets and one grouped aggregate averages them.
+    """
+    fused, radius = _dtw_broadcast_radius(train, metric, params)
+    if fused:
+        return _dtw_topk_broadcast(queries, train, k, radius, False,
+                                   ("regress", target_col, weights))
+    nn = _kneighbors_spread(queries, train, k, metric, False, params)
+    wexpr = _weight_col(weights)
     return (
-        joined.groupBy("id1")
+        _labeled(nn, train, target_col).groupBy("id1")
         .agg((F.sum(F.col(target_col) * wexpr) / F.sum(wexpr)).alias("prediction"))
         .select(F.col("id1").alias("series_id"), "prediction")
     )
@@ -633,9 +782,10 @@ class KNeighborsTimeSeriesClassifier(ClassifierScoreMixin,
         probabilities array<double>) ordered by ``classes_``; array
         input returns the (n, n_classes) matrix.
 
-        Same distributed shape as predict: top-k join, then ONE grouped
-        aggregate — the per-class mass pivots to an array via a map
-        lookup, no extra shuffle beyond the vote's."""
+        Distributed shape of the SQL vote (on every metric path): top-k
+        rows, the broadcast label join, then ONE grouped aggregate — the
+        per-class mass pivots to an array via a map lookup, no extra
+        shuffle beyond the vote's."""
         from tslearn_spark.bases import (as_ts_df, check_query_dims,
                                          collect_col)
 
@@ -645,19 +795,10 @@ class KNeighborsTimeSeriesClassifier(ClassifierScoreMixin,
         lc = self._label_col
         nn = kneighbors(queries, self._index, k=self.n_neighbors,
                         metric=self.metric, **self._metric_call_params())
-        labeled = nn.join(
-            F.broadcast(self._index.select(F.col("series_id").alias("id2"),
-                                           F.col(lc))),
-            "id2",
-        )
-        if self.weights == "distance":
-            wexpr = 1.0 / F.when(F.col("dist") <= 0.0,
-                                 F.lit(1e-12)).otherwise(F.col("dist"))
-        else:
-            wexpr = F.lit(1.0)
         # map keys must be unique: aggregate vote weight per class first
         per_class = (
-            labeled.groupBy("id1", lc).agg(F.sum(wexpr).alias("_w"))
+            _labeled(nn, self._index, lc).groupBy("id1", lc)
+            .agg(F.sum(_weight_col(self.weights)).alias("_w"))
             .groupBy("id1")
             .agg(F.map_from_arrays(
                 F.collect_list(F.col(lc).cast("string")),

@@ -227,6 +227,27 @@ def size_tasks(df: DataFrame, work_per_row: float | None = None,
     return df.repartition(target)
 
 
+def broadcast_gate(df: DataFrame, limit: int, where=None, **aggs):
+    """The engine's one broadcast-budget gate: ``(fits, row)`` from ONE
+    aggregate job over ``df``.
+
+    ``row`` holds ``n`` (rows), ``n_vals`` (the float64s held by the
+    ``values`` series of the rows where the boolean column ``where``
+    holds, all rows by default) and the caller's extra aggregates
+    ``aggs``; ``fits`` says ``n_vals <= limit`` (an empty ``df``
+    fits).  The budget counts values, not rows: 200k rows of sz*d=1024
+    would be a ~1.6 GB driver collect under a row gate.  A series counts
+    the size of its flattened values, so one with 0 timestamps counts 0
+    (``element_at(values, 1)`` would raise under ANSI mode).
+    """
+    n_vals = F.size(F.flatten("values"))
+    if where is not None:
+        n_vals = F.when(where, n_vals).otherwise(F.lit(0))
+    row = df.select(F.count("*").alias("n"), F.sum(n_vals).alias("n_vals"),
+                    *[c.alias(name) for name, c in aggs.items()]).first()
+    return (row["n_vals"] or 0) <= limit, row
+
+
 # columns stored as TIMESTAMP(NANOS) in the driver parquet — surfaced as
 # long (nanos) under nanosAsLong and converted to microsecond timestamps
 _NANO_TS_COLS = {
