@@ -1,9 +1,13 @@
-"""r15: the compiled DTW kernel (tslearn_spark/_dtw_kernel.c via
-tslearn_spark.ckernel) must be bit-identical to the numpy batchers on
-every non-abandoned pair, and downstream-equivalent on tau2 paths —
-the dispatch in kernels.dtw_banded_batch_mixed / dtw_full_batch_mixed
-is unobservable in results.  The fused top-k entry point behind
-kernels.dtw_knn_topk must return the numpy tier's rows bit for bit."""
+"""The compiled DTW kernel (tslearn_spark/_dtw_kernel.c via
+tslearn_spark.ckernel) is the engine's one batched DTW.  On every
+non-abandoned pair it must return the per-pair reference's doubles bit
+for bit, for d = 1, 2 and 3, and the fused top-k behind
+kernels.dtw_knn_topk must return the reference tier's rows bit for bit.
+The kernels.* dispatches run that reference tier when no library loads,
+and the driver's build reaches executors that cannot compile it."""
+
+import os
+import warnings
 
 import numpy as np
 import pytest
@@ -15,7 +19,7 @@ import tslearn_spark.kernels as K
 LIB = ck.lib_or_none()
 
 pytestmark = pytest.mark.skipif(
-    LIB is None, reason="no C compiler available; numpy fallback active"
+    LIB is None, reason="no C compiler available; reference tier active"
 )
 
 
@@ -25,8 +29,9 @@ def _mixed(rs, n, lo=5, hi=100, d=1):
     return [rs.randn(rs.randint(lo, hi), d) for _ in range(n)]
 
 
-def _numpy_path(fn, *args, **kw):
-    """Run a kernels.* batcher with the C dispatch disabled."""
+def _reference_path(fn, *args, **kw):
+    """Run a kernels.* dispatch with the compiled kernel hidden, so it
+    loops over the per-pair reference."""
     saved = ck._lib
     ck._lib = None
     try:
@@ -35,21 +40,23 @@ def _numpy_path(fn, *args, **kw):
         ck._lib = saved
 
 
+def _same_bits(a, b):
+    return a.shape == b.shape and np.array_equal(a.view(np.int64),
+                                                 b.view(np.int64))
+
+
 class TestCKernelBitwise:
-    @pytest.mark.parametrize("d", [1, 3])
+    @pytest.mark.parametrize("d", [1, 2, 3])
     @pytest.mark.parametrize("radius", [None, 0, 2, 5, 20])
-    def test_bitwise_vs_numpy(self, d, radius):
+    def test_bitwise_vs_reference(self, d, radius):
         rs = np.random.RandomState(11)
-        aa, bb = _mixed(rs, 700, d=d), _mixed(rs, 700, d=d)
+        aa, bb = _mixed(rs, 150, d=d), _mixed(rs, 150, d=d)
         c = ck.dtw_batch(aa, bb, radius)
-        if radius is None:
-            base = _numpy_path(K.dtw_full_batch_mixed, aa, bb)
-        else:
-            base = _numpy_path(K.dtw_banded_batch_mixed, aa, bb, radius)
-        # bit-for-bit: the C DP replicates the cumsum/prefix-min float
-        # association of the numpy kernels exactly (no FMA: built with
-        # -ffp-contract=off)
-        assert (c == base).all()
+        base = _reference_path(K.dtw_banded_batch_mixed, aa, bb, radius)
+        # bit-for-bit: the C DP replicates the reference row scan's
+        # cumsum/prefix-min float association and its channel-order
+        # local cost exactly (no FMA: built with -ffp-contract=off)
+        assert _same_bits(c, base)
 
     def test_dispatch_is_wired(self):
         """kernels.dtw_banded_batch_mixed actually takes the C path when
@@ -74,55 +81,87 @@ class TestCKernelBitwise:
         """Below-cap pairs bitwise equal; above-cap pairs either the
         exact value or +inf, and +inf only where the true value is
         provably above the cap (the caller contract: both are discarded
-        identically by the seeded top-k)."""
+        identically by a capped top-k)."""
         rs = np.random.RandomState(5)
-        aa = [rs.randn(rs.randint(30, 100), 1) for _ in range(500)]
-        bb = [rs.randn(rs.randint(30, 100), 1) for _ in range(500)]
-        base = _numpy_path(K.dtw_banded_batch_mixed, aa, bb, 5)
-        tau = np.full(500, float(np.percentile(base, 30)) ** 2)
+        aa = [rs.randn(rs.randint(30, 100), 1) for _ in range(300)]
+        bb = [rs.randn(rs.randint(30, 100), 1) for _ in range(300)]
+        base = _reference_path(K.dtw_banded_batch_mixed, aa, bb, 5)
+        tau = np.full(300, float(np.percentile(base, 30)) ** 2)
         c = ck.dtw_batch(aa, bb, 5, tau)
         below = base ** 2 <= tau
         assert (c[below] == base[below]).all()
         above = ~below
         assert (np.isinf(c[above]) | (c[above] == base[above])).all()
         inf_cases = np.isinf(c) & ~np.isinf(base)
+        assert inf_cases.any()
         assert (base[inf_cases] ** 2 > tau[inf_cases]).all()
+        # the reference never abandons: a cap changes none of its values
+        assert _same_bits(
+            _reference_path(K.dtw_banded_batch_mixed, aa, bb, 5, tau), base)
         # inf cap == no pruning, bitwise
-        assert (ck.dtw_batch(aa, bb, 5, np.full(500, np.inf)) == base).all()
+        assert _same_bits(ck.dtw_batch(aa, bb, 5, np.full(300, np.inf)), base)
 
-    def test_extreme_length_ratios(self):
+    @pytest.mark.parametrize("d", [1, 2, 3])
+    def test_extreme_length_ratios(self, d):
         """la >> lb and lb >> la (including la or lb == 1) keep the
-        band-window bookkeeping exact in both engines."""
+        band-window bookkeeping exact in both tiers."""
         rs = np.random.RandomState(9)
-        aa = [rs.randn(1), rs.randn(99), rs.randn(2), rs.randn(50)]
-        bb = [rs.randn(80), rs.randn(1), rs.randn(60), rs.randn(3)]
+        aa = [rs.randn(n, d) for n in (1, 99, 2, 50)]
+        bb = [rs.randn(n, d) for n in (80, 1, 60, 3)]
         for radius in (None, 2, 10):
             c = ck.dtw_batch(aa, bb, radius)
-            if radius is None:
-                base = _numpy_path(K.dtw_full_batch_mixed, aa, bb)
-            else:
-                base = _numpy_path(K.dtw_banded_batch_mixed, aa, bb, radius)
-            assert (c == base).all()
+            base = _reference_path(K.dtw_banded_batch_mixed, aa, bb, radius)
+            assert _same_bits(c, base)
 
-    def test_kill_switch_falls_back(self, monkeypatch):
-        """TSLEARN_SPARK_CKERNEL=0 leaves the numpy path running (fresh
-        module state simulated by resetting the memo)."""
+    @pytest.mark.parametrize("d", [1, 3])
+    def test_empty_series_give_inf(self, d):
+        rs = np.random.RandomState(6)
+        aa = [rs.randn(4, d), np.empty((0, d)), rs.randn(5, d)]
+        bb = [np.empty((0, d)), rs.randn(3, d), rs.randn(5, d)]
+        for radius in (None, 2):
+            c = ck.dtw_batch(aa, bb, radius)
+            base = _reference_path(K.dtw_banded_batch_mixed, aa, bb, radius)
+            assert _same_bits(c, base)
+            assert np.isinf(c[:2]).all() and np.isfinite(c[2])
+
+    def test_malformed_batches_raise(self):
+        # the kernel reads every series at the first one's width and n
+        # entries of each side, so mixed widths or unequal sides must
+        # raise on both tiers, never run
+        rs = np.random.RandomState(5)
+        aa = [rs.randn(6, 3), rs.randn(5, 2)]
+        bb = [rs.randn(4, 3), rs.randn(7, 3)]
+        for a, b in ((aa, bb), (bb, bb[:1])):
+            with pytest.raises(ValueError):
+                K.dtw_banded_batch_mixed(a, b, 2)
+            with pytest.raises(ValueError):
+                _reference_path(K.dtw_banded_batch_mixed, a, b, 2)
+
+    def test_kill_switch_selects_reference(self, monkeypatch):
+        """TSLEARN_SPARK_CKERNEL=0 selects the reference tier (fresh
+        module state simulated by resetting the memo), on purpose and so
+        without the unavailable-kernel warning."""
+        rs = np.random.RandomState(2)
+        aa, bb = _mixed(rs, 8, d=2), _mixed(rs, 8, d=2)
+        want = K.dtw_banded_batch_mixed(aa, bb, 5)
         monkeypatch.setenv("TSLEARN_SPARK_CKERNEL", "0")
         monkeypatch.setattr(ck, "_lib", None)
         monkeypatch.setattr(ck, "_tried", False)
-        assert ck.lib_or_none() is None
-        rs = np.random.RandomState(2)
-        aa, bb = _mixed(rs, 8), _mixed(rs, 8)
-        out = K.dtw_banded_batch_mixed(aa, bb, 5)  # must not raise
-        assert np.isfinite(out).all()
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            assert ck.lib_or_none() is None
+            assert _same_bits(K.dtw_banded_batch_mixed(aa, bb, 5), want)
 
 
 def test_so_path_keys_on_build_flags(monkeypatch):
-    """The .so cache key covers the compile flags (and the compiler and
-    machine): changing _CFLAGS must build a fresh library, never reuse
-    one compiled under the old flags."""
+    """The .so cache key covers the C source, the compile flags and the
+    machine: changing _CFLAGS must build a fresh library, never reuse
+    one compiled under the old flags.  It does not depend on the
+    compiler, so a machine without one names the driver's build."""
     before = ck._so_path()
     assert ck._so_path() == before  # stable for an unchanged build
+    monkeypatch.setenv("TSLEARN_SPARK_CC", "/nonexistent/cc")
+    assert ck._so_path() == before
     monkeypatch.setattr(ck, "_CFLAGS", [*ck._CFLAGS, "-DTSLEARN_SPARK_PROBE"])
     flagged = ck._so_path()
     assert flagged != before
@@ -130,15 +169,121 @@ def test_so_path_keys_on_build_flags(monkeypatch):
     assert ck._so_path() not in (before, flagged)
 
 
+def _no_compiler_probe(hide_shipped):
+    """A Spark-task function: from a fresh loader state with no compiler
+    and an empty cache directory (and, under ``hide_shipped``, no shipped
+    files), load the kernel and run its partition's one pair batch; then
+    restore the worker for later tasks."""
+    def probe(batches):
+        import os
+        import shutil
+        import tempfile
+        import warnings
+
+        from pyspark import SparkFiles
+
+        import tslearn_spark.ckernel as ck
+        import tslearn_spark.kernels as K
+
+        (aa, bb), = batches
+        empty = tempfile.mkdtemp()
+        saved = (ck._lib, ck._tried, SparkFiles._root_directory,
+                 {v: os.environ.get(v) for v in
+                  ("TSLEARN_SPARK_CC", "TSLEARN_SPARK_CK_DIR")})
+        os.environ["TSLEARN_SPARK_CC"] = os.path.join(empty, "no-cc")
+        os.environ["TSLEARN_SPARK_CK_DIR"] = empty
+        if hide_shipped:
+            SparkFiles._root_directory = empty
+        ck._lib, ck._tried = None, False
+        try:
+            with warnings.catch_warnings(record=True) as w:
+                warnings.simplefilter("always")
+                lib = ck.lib_or_none()
+                ck.lib_or_none()
+                out = K.dtw_banded_batch_mixed(aa, bb, 3)
+            return [(None if lib is None else os.path.relpath(
+                         lib._name, SparkFiles.getRootDirectory()),
+                     [str(x.message) for x in w], os.listdir(empty),
+                     out.tobytes())]
+        finally:
+            ck._lib, ck._tried, SparkFiles._root_directory = saved[:3]
+            for v, val in saved[3].items():
+                if val is None:
+                    os.environ.pop(v, None)
+                else:
+                    os.environ[v] = val
+            shutil.rmtree(empty)
+    return probe
+
+
+def _run_probe(spark, hide_shipped):
+    """(loaded path relative to the shipped files, warnings, files
+    built, values) of the probe task, and the driver's C values for the
+    same pairs."""
+    rs = np.random.RandomState(1)
+    aa, bb = _mixed(rs, 20, 5, 40, 2), _mixed(rs, 20, 5, 40, 2)
+    (got,) = spark.sparkContext.parallelize([(aa, bb)], 1).mapPartitions(
+        _no_compiler_probe(hide_shipped)).collect()
+    return got, ck.dtw_batch(aa, bb, 3).tobytes()
+
+
+class TestShippedKernel:
+    def test_task_without_compiler_loads_shipped_kernel(self, spark):
+        """get_spark ships the driver's build; a task on a machine with
+        no compiler and no cached build loads that copy and runs C."""
+        name = os.path.basename(ck._so_path())
+        assert any(f.endswith("/" + name)
+                   for f in spark.sparkContext.listFiles)
+        (path, warned, built, out), want = _run_probe(spark, False)
+        assert path == name
+        assert warned == [] and built == []
+        assert out == want
+
+    def test_task_with_nothing_shipped_warns_once(self, spark):
+        (path, warned, built, out), want = _run_probe(spark, True)
+        assert path is None and built == []
+        assert len(warned) == 1
+        assert "unavailable" in warned[0] and "no-cc" in warned[0]
+        assert out == want
+
+    def test_no_kernel_warns_once_and_returns_reference(self, monkeypatch,
+                                                        tmp_path):
+        """Outside Spark, with no compiler and an empty cache, the loader
+        warns exactly once, naming each cause, and both dispatches return
+        the C tier's values from the reference."""
+        rs = np.random.RandomState(8)
+        q, qid, t, tid = _knn_case(rs, 4, 12, 3)
+        want_knn = K.dtw_knn_topk(q, qid, t, tid, 4, 3, True)
+        want = K.dtw_banded_batch_mixed(q * 3, t, None)
+        monkeypatch.setenv("TSLEARN_SPARK_CC", str(tmp_path / "no-cc"))
+        monkeypatch.setenv("TSLEARN_SPARK_CK_DIR", str(tmp_path))
+        monkeypatch.setattr(ck, "_lib", None)
+        monkeypatch.setattr(ck, "_tried", False)
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            assert ck.lib_or_none() is None
+            got = K.dtw_banded_batch_mixed(q * 3, t, None)
+            got_knn = K.dtw_knn_topk(q, qid, t, tid, 4, 3, True)
+            assert ck.lib_or_none() is None
+        assert [x.category for x in w] == [RuntimeWarning]
+        msg = str(w[0].message)
+        for cause in ("cache:", "shipped:", "build:", "no-cc"):
+            assert cause in msg
+        assert _same_bits(got, want)
+        _assert_same_rows(got_knn, want_knn)
+        assert list(tmp_path.iterdir()) == []
+
+
 # ---------------------------------------------------------------------------
 # kernels.dtw_knn_topk: the fused C top-k (ckernel.dtw_knn, early abandon
-# at the running k-th best) against its numpy tier, bit for bit
+# at the running k-th best) against its reference tier, bit for bit
 # ---------------------------------------------------------------------------
 
 def _knn_both(q, qid, t, tid, radius, k, drop_self):
-    """(C tier, numpy tier) results of kernels.dtw_knn_topk."""
+    """(C tier, reference tier) results of kernels.dtw_knn_topk."""
     c = K.dtw_knn_topk(q, qid, t, tid, radius, k, drop_self)
-    n = _numpy_path(K.dtw_knn_topk, q, qid, t, tid, radius, k, drop_self)
+    n = _reference_path(K.dtw_knn_topk, q, qid, t, tid, radius, k,
+                        drop_self)
     return c, n
 
 
@@ -185,19 +330,14 @@ def _knn_case(rs, n_q, n_t, d, lo=1, hi=40, dup=True):
 
 
 class TestDtwKnnTiers:
-    @pytest.mark.parametrize("d", [1, 3])
+    @pytest.mark.parametrize("d", [1, 2, 3])
     @pytest.mark.parametrize("radius", [None, 0, 5, 500])
     @pytest.mark.parametrize("k", [1, 3, 50])
     @pytest.mark.parametrize("drop_self", [False, True])
-    def test_c_equals_numpy(self, d, radius, k, drop_self):
+    def test_c_equals_reference(self, d, radius, k, drop_self):
+        # radius 500 exceeds both lengths of every pair
         rs = np.random.RandomState(100 * d + k)
         q, qid, t, tid = _knn_case(rs, 9, 24, d)
-        if radius == 500:
-            # exceeds both lengths; its wide bands put the numpy tier on
-            # its seed-and-cap path (the ~8k cells/pair gate)
-            med_t, w_est = K.dtw_band_estimate(
-                np.array([b.shape[0] for b in t]), radius)
-            assert med_t * w_est >= 8192
         c, n = _knn_both(q, qid, t, tid, radius, k, drop_self)
         _assert_same_rows(c, n)
         kk = min(k, len(t))
@@ -220,9 +360,10 @@ class TestDtwKnnTiers:
         # must never reach the kernel
         rs = np.random.RandomState(5)
         t = _mixed(rs, 4, 3, 9, 2)
-        with pytest.raises(ValueError):
-            K.dtw_knn_topk([rs.randn(6, 3)], [0], t, np.arange(4), 2, 1,
-                           False)
+        for run in (K.dtw_knn_topk, lambda *a: _reference_path(
+                K.dtw_knn_topk, *a)):
+            with pytest.raises(ValueError):
+                run([rs.randn(6, 3)], [0], t, np.arange(4), 2, 1, False)
 
     @pytest.mark.parametrize("radius", [None, 2])
     def test_drop_self_with_k_equal_n_t(self, radius):
@@ -238,18 +379,13 @@ class TestDtwKnnTiers:
     @pytest.mark.parametrize("d", [1, 3])
     @pytest.mark.parametrize("radius", [None, 0, 5])
     def test_agrees_with_per_pair_dtw(self, d, radius):
+        # the public per-pair kernels.dtw sums the same local costs in
+        # the same order as the scalar DP, for every d
         rs = np.random.RandomState(7 + d)
         q, qid, t, tid = _knn_case(rs, 5, 16, d)
         got = K.dtw_knn_topk(q, qid, t, tid, radius, 3, True)
-        ref = _knn_reference(q, qid, t, tid, radius, 3, True)
-        assert np.array_equal(got[0], ref[0])
-        assert np.array_equal(got[1], ref[1])
-        if d == 1:
-            # the scalar DP sums the same local costs in the same order
-            assert np.array_equal(got[2], ref[2])
-        else:
-            # einsum sums the channels in another association
-            np.testing.assert_allclose(got[2], ref[2], rtol=1e-12)
+        _assert_same_rows(got, _knn_reference(q, qid, t, tid, radius, 3,
+                                              True))
 
 
 class TestDtwKnnAbandonSoundness:
@@ -336,7 +472,7 @@ class TestDtwKnnAbandonSoundness:
     def test_scratch_allocation_failure_falls_back(self, monkeypatch):
         rs = np.random.RandomState(14)
         q, qid, t, tid = _knn_case(rs, 7, 20, 1)
-        want = _numpy_path(K.dtw_knn_topk, q, qid, t, tid, 5, 2, True)
+        want = _reference_path(K.dtw_knn_topk, q, qid, t, tid, 5, 2, True)
         real_knn, real_batch = LIB.dtw_knn, LIB.dtw_batch
         status = []
 
@@ -353,13 +489,14 @@ class TestDtwKnnAbandonSoundness:
         monkeypatch.setattr(LIB, "dtw_knn", starved(real_knn, 7))
         _assert_same_rows(K.dtw_knn_topk(q, qid, t, tid, 5, 2, True), want)
         assert status == [-1]
-        # the batch entry point fails the same way and its callers fall
-        # back to numpy as well
+        # the batch entry point fails the same way and its dispatch runs
+        # the reference as well
+        want_b = _reference_path(K.dtw_banded_batch_mixed, q, t[:7], 5)
         monkeypatch.setattr(LIB, "dtw_batch", starved(real_batch, 5))
         with pytest.raises(MemoryError):
             ck.dtw_batch(q, t[:7], 5)
-        _assert_same_rows(K.dtw_knn_topk(q, qid, t, tid, 5, 2, True), want)
-        assert status[1:] and set(status[1:]) == {-1}
+        assert _same_bits(K.dtw_banded_batch_mixed(q, t[:7], 5), want_b)
+        assert status[1:] == [-1, -1]
 
 
 def _check_knn_tiers(seed, n_q, n_t, k, radius, drop_self, d, hi, quantized):
@@ -378,7 +515,7 @@ def _knn_params(max_q, max_t, max_len):
         seed=st.integers(0, 2**31 - 1), n_q=st.integers(1, max_q),
         n_t=st.integers(1, max_t), k=st.integers(1, max_t + 2),
         radius=st.sampled_from([None, 0, 1, 3, 40, 2000]),
-        drop_self=st.booleans(), d=st.sampled_from([1, 2]),
+        drop_self=st.booleans(), d=st.sampled_from([1, 2, 3]),
         hi=st.integers(2, max_len), quantized=st.booleans())
 
 

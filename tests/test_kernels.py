@@ -63,15 +63,11 @@ class TestDTW:
             np.testing.assert_allclose(got, want, atol=1e-9)
 
     def test_mixed_banded_adjacent_min_bitwise(self):
-        """r15: the banded row scan replaced the (n, W) fancy-index
-        gather of the previous DP row with an adjacent-pair min over an
-        inf-padded prev + two-slice select (valid because cur_lo =
-        max(0, i - wlo) steps by 0 or 1 per row, so min(up, diag) for
-        lane k is the min of prev cells k+shift-1 and k+shift).  Pin
-        BITWISE equality with the per-pair accumulated-matrix reference
-        on univariate batches — the rewrite must not change a single
-        ulp, including on bands clipped at both series edges and on
-        batches big enough to hit the diff-sorted sub-batch splitter."""
+        """The batched DP reads min(up, diag) for lane k as the min of
+        the adjacent prev cells k+shift-1 and k+shift (cur_lo =
+        max(0, i - wlo) steps by 0 or 1 per row).  Pin BITWISE equality
+        with the per-pair accumulated-matrix reference on univariate
+        batches, including on bands clipped at both series edges."""
         rs = np.random.RandomState(23)
         # wide length spread: band widths W from ~2r+1 up to |la-lb|+2r+1
         arrs_a = [rs.randn(rs.randint(4, 60), 1) for _ in range(700)]

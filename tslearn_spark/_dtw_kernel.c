@@ -1,43 +1,45 @@
 /* Banded / unconstrained DTW: one DP core, two entry points.
  *
  *   dtw_batch  a batch of variable-length pairs -> one distance each
- *              (the scalar C twin of kernels.dtw_banded_batch_mixed /
- *              dtw_full_batch_mixed, with an optional per-pair tau2 cap)
+ *              (behind kernels.dtw_banded_batch_mixed, with an optional
+ *              per-pair tau2 cap)
  *   dtw_knn    queries x train -> each query's k nearest train series,
  *              every DP capped at the running k-th best (exact early
- *              abandon inside the kernel)
+ *              abandon inside the kernel; behind kernels.dtw_knn_topk)
  *
- * Both run dtw_core, the file's only recurrence.  It is BIT-IDENTICAL to
- * the numpy kernels on the non-abandoned path — the per-cell float
- * association is replicated exactly:
+ * This file is the engine's only batched DTW.  Both entry points run
+ * dtw_core, the file's only recurrence, the twin of the per-pair
+ * reference row scan (kernels._dtw_rows).  It is BIT-IDENTICAL to that
+ * reference on the non-abandoned path: the per-cell float association
+ * is replicated exactly.
  *
- *   the numpy kernels vectorize the in-row `left` dependence with the
+ *   the reference vectorizes the in-row `left` dependence with the
  *   prefix identity  row[k] = s[k] + min_{j<=k}(a[j] - s[j])  where
- *   s = inclusive cumsum(Dw) and a[k] = Dw[k] + min(up, diag); this
- *   file computes the SAME expressions in the SAME order (sequential
- *   running sum s, running min m of (a - s), row[k] = s + m), so every
- *   intermediate double rounds identically.  min/sqrt are exact IEEE
- *   ops; compile with -ffp-contract=off so no FMA re-rounds the
+ *   s = inclusive cumsum(D) and a[k] = D[k] + min(up, diag); this file
+ *   computes the SAME expressions in the SAME order (sequential running
+ *   sum s, running min m of (a - s), row[k] = s + m), and both sum a
+ *   cell's local cost over the channels in channel order from 0.0, so
+ *   every intermediate double rounds identically.  min/sqrt are exact
+ *   IEEE ops; compile with -ffp-contract=off so no FMA re-rounds the
  *   subtract-square local cost.
  *
- * Out-of-band prev lanes read inf, like the inf pad of the numpy P/Q
- * construction, through two sentinels instead of per-cell bounds tests:
- * prev[-1] and prev[prev_w + 1] hold +inf.  Lane k of a row reads prev
- * lanes k+shift-1 and k+shift with shift = cur_lo - prev_lo in {0, 1},
- * and a row is at most one lane wider than the one before it
+ * Out-of-band prev lanes read inf, like the reference's inf cells
+ * outside the band, through two sentinels instead of per-cell bounds
+ * tests: prev[-1] and prev[prev_w + 1] hold +inf.  Lane k of a row reads
+ * prev lanes k+shift-1 and k+shift with shift = cur_lo - prev_lo in
+ * {0, 1}, and a row is at most one lane wider than the one before it
  * (width <= prev_w + 1 - shift), so every read lands in [-1, prev_w+1].
  *
  * Early abandon: a pair whose running band minimum exceeds its cap is
- * reported +inf at once (the numpy kernel defers the inf until a batch
- * compaction fires, so it sometimes returns the true value instead —
- * callers treat both as "provably worse than the current top-k").
+ * reported +inf at once (the reference never abandons and returns the
+ * true value — callers treat both as "provably worse than the current
+ * top-k").
  *
  * radius < 0 means unconstrained (full window): wlo/whi are set so
- * cur_lo == 0 and hi == lb-1 on every row, which reduces the
- * recurrence to _dtw_full_core's exactly.
+ * cur_lo == 0 and hi == lb-1 on every row.
  *
  * Both entry points return 0, or -1 when the scratch allocation fails
- * (nothing is written then; the Python side falls back to numpy).
+ * (nothing is written then; the Python side runs the reference).
  */
 #include <float.h>
 #include <math.h>
@@ -51,8 +53,8 @@ static void band(long long la, long long lb, long long radius,
     else { *wlo = radius; *whi = lb - la + radius; }
 }
 
-/* squared local cost of cell (i, c): the numpy kernels' (a - b)^2,
- * summed over the d channels in channel order */
+/* squared local cost of cell (i, c): (a - b)^2 summed over the d
+ * channels in channel order, like kernels._dtw_local_cost */
 static inline __attribute__((always_inline)) double
 cost(const double *A, const double *B, long long i, long long c,
      long long d)
@@ -98,7 +100,7 @@ dtw_core(const double *A, long long la, const double *B, long long lb,
         const double *Bc = B + cur_lo * d;
         double s = 0.0, rmin = INFINITY;
         if (i == 0) {
-            /* row 0: row = cumsum(Dw), like the numpy i==0 branch */
+            /* row 0: row = cumsum(D), like the reference's row 0 */
             for (k = 0; k <= width; k++) {
                 s += cost(A, Bc, i, k, d);
                 row[k] = s;

@@ -16,6 +16,10 @@ Implementation notes (Spark-first, not a port):
   no Python inner loop and no JIT dependency.  Constraint bands are
   handled by slicing each row to its feasible window so no ``inf`` ever
   enters a cumsum.
+* Batched DTW (``dtw_banded_batch_mixed``, ``dtw_knn_topk``) has one
+  implementation, the compiled kernel (``ckernel``, ``_dtw_kernel.c``),
+  which replays this row scan's float association exactly.  Where no
+  kernel can be loaded they loop over the per-pair row scan instead.
 * soft-DTW and GAK use anti-diagonal vectorization (cells of one
   anti-diagonal depend only on the previous two).
 * No numba/Cython: the container has neither; numpy vectorization keeps
@@ -200,17 +204,24 @@ def sq_dist_matrix(s1: np.ndarray, s2: np.ndarray) -> np.ndarray:
 # DTW (reference: dtw_variants.py:24-82, 384-465)
 # ---------------------------------------------------------------------------
 
-def dtw_accumulated_matrix(s1, s2, global_constraint=None, sakoe_chiba_radius=None,
-                           itakura_max_slope=None) -> np.ndarray:
-    """Full accumulated-cost matrix (squared costs), inf outside the band.
+def _dtw_local_cost(s1: np.ndarray, s2: np.ndarray) -> np.ndarray:
+    """DTW's squared local costs, (sz1, sz2): the channels' squared
+    differences summed in channel order from 0.0, the compiled kernel's
+    association, so the two return the same doubles for every d (for
+    d=1 this is the single product ``sq_dist_matrix`` computes too)."""
+    D = np.zeros((s1.shape[0], s2.shape[0]))
+    for k in range(s1.shape[1]):
+        t = s1[:, k, None] - s2[None, :, k]
+        D += t * t
+    return D
 
-    Row-scan vectorization (see module docstring) — each row is one
-    ``cumsum`` + one ``minimum.accumulate`` over its feasible window.
-    """
-    s1, s2 = to_2d(s1), to_2d(s2)
+
+def _dtw_rows(s1: np.ndarray, s2: np.ndarray, lo: np.ndarray,
+              hi: np.ndarray) -> np.ndarray:
+    """Accumulated-cost matrix of two (sz, d) arrays taken as given, row
+    ``i`` restricted to columns ``lo[i]..hi[i]``."""
     sz1, sz2 = s1.shape[0], s2.shape[0]
-    lo, hi = _bounds(sz1, sz2, global_constraint, sakoe_chiba_radius, itakura_max_slope)
-    D = sq_dist_matrix(s1, s2)
+    D = _dtw_local_cost(s1, s2)
     C = np.full((sz1, sz2), np.inf)
     l0, h0 = lo[0], hi[0]
     if l0 <= h0:
@@ -238,6 +249,19 @@ def dtw_accumulated_matrix(s1, s2, global_constraint=None, sakoe_chiba_radius=No
     return C
 
 
+def dtw_accumulated_matrix(s1, s2, global_constraint=None, sakoe_chiba_radius=None,
+                           itakura_max_slope=None) -> np.ndarray:
+    """Full accumulated-cost matrix (squared costs), inf outside the band.
+
+    Row-scan vectorization (see module docstring) — each row is one
+    ``cumsum`` + one ``minimum.accumulate`` over its feasible window.
+    """
+    s1, s2 = to_2d(s1), to_2d(s2)
+    lo, hi = _bounds(s1.shape[0], s2.shape[0], global_constraint,
+                     sakoe_chiba_radius, itakura_max_slope)
+    return _dtw_rows(s1, s2, lo, hi)
+
+
 def dtw(s1, s2, global_constraint=None, sakoe_chiba_radius=None,
         itakura_max_slope=None) -> float:
     """DTW distance ``sqrt(min-path sum of squared dists)`` (dtw_variants.py:384-465)."""
@@ -245,257 +269,62 @@ def dtw(s1, s2, global_constraint=None, sakoe_chiba_radius=None,
     return float(np.sqrt(C[-1, -1]))
 
 
-# unconstrained row-scan DP works on (n, L2) rows (not the (n, L^2) grid of
-# the anti-diagonal kernels), so the sweet spot is larger than _GRID_SUBBATCH:
-# ~512 pairs keeps the ~6 live (n, L2) row buffers L2-cache-resident
-# (measured 136us/pair at 512 vs 506us/pair at 8192, events-like lengths)
-_DTW_FULL_SUBBATCH = 512
-
-
-def _dtw_full_core(A: np.ndarray, B: np.ndarray, la: np.ndarray, lb: np.ndarray) -> np.ndarray:
-    """Unconstrained DTW row-scan over padded stacks — gather-free.
-
-    With no band, every DP row spans the full B axis: `up` IS the previous
-    row and `diag` is the previous row shifted one cell right, so the two
-    take_along_axis gathers of the banded kernel (its dominant cost on
-    full-width windows) disappear.  Dead cells (k >= lb or i >= la) are
-    masked to +inf before the horizontal min-accumulate, exactly like the
-    banded kernel.
-    """
-    n, L1, d = A.shape
-    res = np.empty(n)
-    kgrid = np.arange(B.shape[1])[None, :]
-    dead_cols = kgrid >= lb[:, None]  # fixed per pair: beyond its own B
-    Bf = B[:, :, 0]
-    prev = None
-    for i in range(L1):
-        if d == 1:
-            Dw = (A[:, i, 0][:, None] - Bf) ** 2
-        else:
-            Dw = ((A[:, i : i + 1, :] - B) ** 2).sum(-1)
-        if i == 0:
-            row = np.cumsum(Dw, axis=1)
-            row[dead_cols] = np.inf
-        else:
-            dead = dead_cols | (i >= la)[:, None]
-            diag = np.empty_like(prev)
-            diag[:, 0] = np.inf
-            diag[:, 1:] = prev[:, :-1]
-            a = Dw + np.minimum(prev, diag)
-            a[dead] = np.inf
-            s = np.cumsum(Dw, axis=1)
-            with np.errstate(invalid="ignore"):
-                row = s + np.minimum.accumulate(a - s, axis=1)
-            row[dead] = np.inf
-        done = la == i + 1
-        if done.any():
-            idx = np.nonzero(done)[0]
-            res[idx] = row[idx, lb[idx] - 1]
-        prev = row
-    return np.sqrt(res)
-
-
-def _dtw_c_or_none(arrs_a: list, arrs_b: list, radius, tau2=None):
-    """Compiled-DP dispatch (guide §4.2): run the batch through the C
-    kernel when it is available, else return None so the caller falls
-    through to the numpy path.  Values are bit-identical to the numpy
-    kernels (tslearn_spark.ckernel docstring; pinned by
-    tests/test_ckernel.py), so the dispatch is unobservable in results —
-    it only removes the per-row numpy dispatch overhead (~60us/pair ->
-    ~5us/pair on events-length series, measured)."""
-    from tslearn_spark import ckernel
-
-    if not arrs_a or ckernel.lib_or_none() is None:
-        return None
-    try:
-        return ckernel.dtw_batch(arrs_a, arrs_b, radius, tau2)
-    except Exception:
-        return None
-
-
-def dtw_full_batch_mixed(arrs_a: list, arrs_b: list) -> np.ndarray:
-    """Unconstrained DTW for a mixed-shape batch: size-sorted cache-sized
-    chunks through the gather-free row scan (the radius=None fast path of
-    ``dtw_banded_batch_mixed``)."""
-    c = _dtw_c_or_none(arrs_a, arrs_b, None)
-    if c is not None:
-        return c
-    n = len(arrs_a)
-    la = np.fromiter((a.shape[0] for a in arrs_a), dtype=np.int64, count=n)
-    lb = np.fromiter((b.shape[0] for b in arrs_b), dtype=np.int64, count=n)
-    # size sort, not diff sort: with no band the padded cost is L1 x L2,
-    # so homogeneous (la, lb) chunks minimize padding
-    order = np.lexsort((lb, la))
-    out = np.empty(n)
-    for s in range(0, n, _DTW_FULL_SUBBATCH):
-        sel = order[s : s + _DTW_FULL_SUBBATCH]
-        A, B, sla, slb = _pad_pair_stacks(
-            [arrs_a[i] for i in sel], [arrs_b[i] for i in sel]
-        )
-        out[sel] = _dtw_full_core(A, B, sla, slb)
+def _dtw_reference_pairs(arrs_a: list, arrs_b: list, radius, d: int) -> np.ndarray:
+    """The per-pair reference over a batch, series taken as given (no
+    trailing-NaN trim), each read as (sz, d); a 0-length series gives
+    +inf.  It never abandons."""
+    out = np.full(len(arrs_a), np.inf)
+    for p, (a, b) in enumerate(zip(arrs_a, arrs_b, strict=True)):
+        a = np.asarray(a, dtype=np.float64).reshape(a.shape[0], d)
+        b = np.asarray(b, dtype=np.float64).reshape(b.shape[0], d)
+        if len(a) and len(b):
+            lo, hi = _bounds(len(a), len(b), sakoe_chiba_radius=radius)
+            out[p] = np.sqrt(_dtw_rows(a, b, lo, hi)[-1, -1])
     return out
+
+
+def _width(arrs: list) -> int:
+    return arrs[0].shape[1] if arrs[0].ndim > 1 else 1
 
 
 def dtw_banded_batch_mixed(arrs_a: list, arrs_b: list, radius: int | None = None,
                            tau2: np.ndarray | None = None) -> np.ndarray:
-    """Banded DTW for a batch of MIXED-shape pairs — padded, masked DP.
+    """DTW of each pair ``(arrs_a[p], arrs_b[p])`` of a mixed-shape batch,
+    Sakoe-Chiba band ``radius`` (sakoe_chiba_bounds semantics,
+    dtw_variants.py:906-956; None: unconstrained).  Every series is
+    ``(sz, d)`` (or 1-D for d=1) with the width of ``arrs_a[0]``; another
+    width, or sides of unequal length, raise ValueError.
 
-    A same-shape batch kernel needs same-shape stacks, so with variable-length
-    series the per-(shape,shape) buckets degenerate to a handful of pairs
-    and the batch effect dies (measured ~500us/pair vs ~30us here at
-    sz 45-99).  This kernel pads every pair to (Lmax1, Lmax2), runs ONE
-    row-scan DP over the whole batch, masks cells outside each pair's
-    Sakoe-Chiba band (sakoe_chiba_bounds semantics, dtw_variants.py:906-956)
-    to +inf, and gathers each pair's result at its own (la-1, lb-1) cell.
-    Extra padded cells cost vector lanes, not Python iterations — the
-    interpreter loop is Lmax1 rows for the entire batch.
-
-    radius=None -> unconstrained DTW, delegated to the gather-free
-    full-grid row scan (``dtw_full_batch_mixed``, ~3.7x faster).
-
-    Large batches are internally split into diff-sorted cache-sized
-    chunks (W tracks |la - lb| + 2r + 1, so the diff-first sort keeps
-    each chunk's band width homogeneous): measured 152us/pair at 512 vs
-    236us/pair at 8192 on events-like lengths — callers can hand over
-    whole Arrow batches without their own sub-batching.
+    Runs the compiled kernel (``ckernel.dtw_batch``).  When it is not
+    loaded, or its scratch allocation fails, the per-pair reference
+    (``dtw_accumulated_matrix``'s row scan) runs instead; both return the
+    same doubles (tests/test_ckernel.py).
 
     ``tau2``: optional per-pair SQUARED distance caps (early abandon).
-    A pair whose running per-row band minimum exceeds its cap can never
-    finish below the cap (every warping path crosses every row), so its
-    result is reported as +inf and its vector lane is reclaimed when
-    enough of the batch is abandoned.  EXACT for top-k pruning: callers
-    pass the current k-th-best squared distance and treat +inf as
-    "provably worse than the current top-k".
+    The compiled kernel reports +inf for a pair once a row's band minimum
+    passes its cap: every warping path crosses every row, so its final
+    cost is provably above the cap.  A pair above its cap may also come
+    back exact (the reference never abandons).  Callers pass the current
+    k-th-best squared distance and treat both as "provably worse than the
+    current top-k".
     """
-    if radius is None:
-        return dtw_full_batch_mixed(arrs_a, arrs_b)
-    c = _dtw_c_or_none(arrs_a, arrs_b, radius, tau2)
-    if c is not None:
-        return c
-    n = len(arrs_a)
-    if n > _DTW_FULL_SUBBATCH:
-        la_all = np.fromiter((a.shape[0] for a in arrs_a), dtype=np.int64, count=n)
-        lb_all = np.fromiter((b.shape[0] for b in arrs_b), dtype=np.int64, count=n)
-        order = np.lexsort((la_all, np.abs(la_all - lb_all)))
-        out = np.empty(n)
-        for s in range(0, n, _DTW_FULL_SUBBATCH):
-            sel = order[s : s + _DTW_FULL_SUBBATCH]
-            out[sel] = dtw_banded_batch_mixed(
-                [arrs_a[i] for i in sel], [arrs_b[i] for i in sel], radius,
-                tau2=None if tau2 is None else np.asarray(tau2)[sel],
-            )
-        return out
-    la = np.fromiter((a.shape[0] for a in arrs_a), dtype=np.int64, count=n)
-    lb = np.fromiter((b.shape[0] for b in arrs_b), dtype=np.int64, count=n)
-    L1, L2 = int(la.max()), int(lb.max())
-    d = arrs_a[0].shape[1] if arrs_a[0].ndim > 1 else 1
-    A = np.zeros((n, L1, d))
-    B = np.zeros((n, L2, d))
-    for p in range(n):
-        A[p, : la[p]] = arrs_a[p].reshape(la[p], d)
-        B[p, : lb[p]] = arrs_b[p].reshape(lb[p], d)
-    r = int(radius)
-    bigger = la > lb
-    wlo = np.where(bigger, la - lb + r, r)
-    whi = np.where(bigger, r, lb - la + r)
-    # band width per pair <= wlo + whi + 1, capped by the series itself;
-    # callers sort partitions by size so |la - lb| (hence W) stays small
-    W = int(np.minimum(lb, np.minimum(wlo, L2) + np.minimum(whi, L2) + 1).max())
-    kgrid = np.arange(W)[None, :]
-    res = np.empty(n)
-    prev = np.empty((n, W))
-    prev_lo = np.zeros(n, dtype=np.int64)
-    # `keep` maps live batch lanes back to original pair indices; lanes are
-    # reclaimed (arrays compacted) when tau2 abandons enough of the batch
-    keep = np.arange(n)
-    tau2v = None if tau2 is None else np.asarray(tau2, dtype=np.float64)
-    rows_idx = np.arange(n)[:, None]
-    rows_1d = np.arange(n)
-    if d == 1:
-        # pad so a full-W window starting at any cur_lo stays in bounds,
-        # then each row's B window is ONE row-gather over the window view
-        Bp = np.zeros((n, L2 + W))
-        Bp[:, :L2] = B[:, :, 0]
-        BW = np.lib.stride_tricks.sliding_window_view(Bp, W, axis=1)
-    for i in range(L1):
-        cur_lo = np.maximum(0, i - wlo)
-        hi_i = np.minimum(lb - 1, i + whi)
-        width = hi_i - cur_lo  # inclusive: valid k in [0, width]
-        # window cost row: D[p, k] = dist(A[p, i], B[p, cur_lo[p] + k])^2
-        if d == 1:
-            # rows past a pair's la are fully dead; clamp their window
-            # start into range — the values are masked to inf below
-            Dw = (A[:, i, 0][:, None] - BW[rows_1d, np.minimum(cur_lo, L2)]) ** 2
-        else:
-            idxB = np.minimum(cur_lo[:, None] + kgrid, L2 - 1)
-            Dw = np.zeros((len(keep), W))
-            for dim in range(d):
-                Dw += (A[:, i, dim][:, None] - B[:, :, dim][rows_idx, idxB]) ** 2
-        dead = (kgrid > width[:, None]) | (i >= la)[:, None]
-        if i == 0:
-            row = np.cumsum(Dw, axis=1)
-            row[dead] = np.inf
-        else:
-            # this row's k=0 sits `shift` cells right of the previous
-            # row's k=0, and cur_lo = max(0, i - wlo) grows by 0 or 1 per
-            # DP row, so shift is BINARY.  min(up, diag) for lane k is
-            # then the min of the two ADJACENT prev cells (k+shift-1,
-            # k+shift): one adjacent-pair min over an inf-padded prev +
-            # a two-slice select replaces the (n, W) fancy-index gather
-            # (the dominant per-row cost — cf. _dtw_full_core's note) by
-            # contiguous slice arithmetic.  Out-of-range cells read the
-            # inf pad, exactly like the old okU/ok0 masks; values are
-            # bit-identical (r15, same-seed full-batch equality test).
-            shift = cur_lo - prev_lo
-            nk = prev.shape[0]
-            P = np.empty((nk, W + 2))
-            P[:, 0] = np.inf
-            P[:, 1:W + 1] = prev
-            P[:, W + 1] = np.inf
-            Q = np.minimum(P[:, :W + 1], P[:, 1:])
-            a = Dw + np.where((shift == 1)[:, None], Q[:, 1:], Q[:, :W])
-            # mask BEFORE the horizontal accumulate: a live cell must not
-            # chain off an out-of-band cell to its left
-            a[dead] = np.inf
-            s = np.cumsum(Dw, axis=1)
-            with np.errstate(invalid="ignore"):
-                row = s + np.minimum.accumulate(a - s, axis=1)
-            row[dead] = np.inf
-        done = la == i + 1
-        if done.any():
-            idx = np.nonzero(done)[0]
-            res[keep[idx]] = row[idx, lb[idx] - 1 - cur_lo[idx]]
-        if tau2v is not None and i + 1 < L1:
-            # exact early abandon: every path visits every DP row, so a
-            # running band minimum above the cap bounds the final cost
-            drop = (np.min(row, axis=1) > tau2v) & (la > i + 1)
-            # compact only when a meaningful share of lanes died — the
-            # copy is O(alive * L) and must not run every row
-            if drop.mean() > 0.25:
-                res[keep[drop]] = np.inf
-                alive = ~drop
-                keep = keep[alive]
-                if keep.size == 0:
-                    return np.sqrt(res)
-                la, lb = la[alive], lb[alive]
-                wlo, whi = wlo[alive], whi[alive]
-                A, B = A[alive], B[alive]
-                if d == 1:
-                    Bp = Bp[alive]
-                    BW = np.lib.stride_tricks.sliding_window_view(Bp, W, axis=1)
-                row, cur_lo = row[alive], cur_lo[alive]
-                tau2v = tau2v[alive]
-                rows_idx = np.arange(keep.size)[:, None]
-                rows_1d = np.arange(keep.size)
-        prev = row
-        prev_lo = cur_lo
-    return np.sqrt(res)
+    from tslearn_spark import ckernel
+
+    if not arrs_a:
+        return np.empty(0)
+    if ckernel.lib_or_none() is not None:
+        try:
+            return ckernel.dtw_batch(arrs_a, arrs_b, radius, tau2)
+        except MemoryError:
+            pass
+    return _dtw_reference_pairs(arrs_a, arrs_b, radius, _width(arrs_a))
 
 
 def dtw_band_estimate(lens_t: np.ndarray, radius) -> tuple[float, float]:
     """(median train length, typical band width) of a train set's DTW
     rows: the DP cells of one query against it are about
-    ``len(lens_t) * med_t * w_est``.
+    ``len(lens_t) * med_t * w_est`` (the kNN predict sizes its tasks on
+    this).
 
     The band width of an (la, lb) pair is |la - lb| + 2r + 1, so on
     mixed-length corpora a bare 2r+1 estimate undercounts.  The typical
@@ -525,12 +354,14 @@ def dtw_knn_topk(q_arrs: list, q_ids, t_arrs: list, t_ids, radius, k: int,
     rank is evaluated exactly.
 
     Runs the fused compiled kernel (``ckernel.dtw_knn``: one pass over
-    the train set per query, each DP capped at the running k-th best)
-    when it is loaded; otherwise, or when its scratch allocation fails,
-    the numpy batchers below.  Both tiers return the same rows bit for
+    the train set per query, each DP capped at the running k-th best).
+    When it is not loaded, or its scratch allocation fails, each query
+    runs the per-pair reference against every train series and ranks
+    with ``topk_rows_tiebreak``.  Both tiers return the same rows bit for
     bit (tests/test_ckernel.py).
     """
     from tslearn_spark import ckernel
+    from tslearn_spark.topk import topk_rows_tiebreak
 
     q_ids = np.asarray(q_ids, dtype=np.int64)
     t_ids = np.asarray(t_ids, dtype=np.int64)
@@ -543,108 +374,19 @@ def dtw_knn_topk(q_arrs: list, q_ids, t_arrs: list, t_ids, radius, k: int,
                                    drop_self)
         except MemoryError:
             pass
-    return _dtw_knn_topk_numpy(q_arrs, q_ids, t_arrs, t_ids, radius, k,
-                               drop_self)
-
-
-def _dtw_knn_topk_numpy(q_arrs, qids, T, ids_t, radius, k, drop_self):
-    """numpy tier of ``dtw_knn_topk``: ~64k-pair chunks of the batched
-    DP, either over every pair or seeded and capped."""
-    from tslearn_spark.topk import topk_matrix_tiebreak, topk_rows_tiebreak
-
-    n_t = len(T)
-    chunk_q = max(1, 65536 // max(n_t, 1))  # ~64k pairs per kernel call
-    lens_t = np.fromiter((t.shape[0] for t in T), dtype=np.int64, count=n_t)
-    # seed-and-cap pays only where the DP lanes are expensive: the per-row
-    # interpreter cost of the batched kernel is fixed, so abandoning lanes
-    # saves time only when (band width x series length) dominates it.
-    # Measured on local[32]: events-like sz~67 W~16 -> capped is a net LOSS
-    # despite 44% abandonment; sz=128 W=11 -> breakeven; sz=512 W~101 ->
-    # 1.9x win at 87% abandonment.  Threshold below separates those regimes.
-    # Both paths are exact; this only picks which.
-    med_t, w_est = dtw_band_estimate(lens_t, radius)
-    use_prune = radius is not None and med_t * w_est >= 8192
-    out_q, out_n, out_d = [], [], []
-    kk = min(k, n_t)
-    # seed count: enough to fill the top-k plus slack for a tight cap
-    s_seed = min(n_t, max(kk, 8))
-    for s in range(0, len(q_arrs), chunk_q):
-        qs = q_arrs[s : s + chunk_q]
-        qi = qids[s : s + chunk_q]
-        n_q = len(qs)
-        rr = np.arange(n_q)[:, None]
-        if not use_prune:
-            # plain exact pass: one batched DP over every pair
-            arrs_a = [q for q in qs for _ in range(n_t)]
-            arrs_b = T * n_q
-            flat = dtw_banded_batch_mixed(arrs_a, arrs_b, radius)
-            dists = flat.reshape(n_q, n_t)
-            if drop_self:
-                dists[qi[:, None] == ids_t[None, :]] = np.inf
-            # tie-aware top-k (tslearn_spark.topk): duplicate
-            # train series tie exactly and the cutoff must
-            # resolve by smallest id, like the final window
-            best_i = topk_matrix_tiebreak(dists.T, ids_t, kk).T
-            best_d = dists[rr, best_i]
-        else:
-            # pass 1 (seeds): per query the s_seed closest-LENGTH
-            # train series — cheapest bands AND likely-near under
-            # banded DTW, so their k-th best is a tight exact cap
-            q_lens = np.fromiter((q.shape[0] for q in qs),
-                                 dtype=np.int64, count=n_q)
-            seed_idx = np.argpartition(
-                np.abs(lens_t[None, :] - q_lens[:, None]),
-                s_seed - 1, axis=1)[:, :s_seed]
-            arrs_a = [qs[r] for r in range(n_q) for _ in range(s_seed)]
-            arrs_b = [T[j] for r in range(n_q) for j in seed_idx[r]]
-            d_seed = dtw_banded_batch_mixed(arrs_a, arrs_b, radius)
-            d_seed = d_seed.reshape(n_q, s_seed)
-            if drop_self:
-                d_seed[qi[:, None] == ids_t[seed_idx]] = np.inf
-            sel_s = np.stack([
-                topk_rows_tiebreak(d_seed[row],
-                                   ids_t[seed_idx[row]], kk)
-                for row in range(n_q)
-            ])
-            best_d = d_seed[rr, sel_s]        # (n_q, kk) running top-k
-            best_i = seed_idx[rr, sel_s]      # train indices
-            # pass 2: every non-seed candidate, capped at the current
-            # k-th best (exact early abandon inside the batched DP)
-            is_seed = np.zeros((n_q, n_t), dtype=bool)
-            is_seed[rr, seed_idx] = True
-            rest_counts = n_t - s_seed
-            if rest_counts > 0:
-                r_of, j_of = np.nonzero(~is_seed)  # row-major pairs
-                arrs_a = [qs[r] for r in r_of]
-                arrs_b = [T[j] for j in j_of]
-                tau = best_d.max(axis=1)      # k-th best per query
-                flat = dtw_banded_batch_mixed(
-                    arrs_a, arrs_b, radius, tau2=(tau * tau)[r_of])
-                d_rest = flat.reshape(n_q, rest_counts)
-                j_rest = j_of.reshape(n_q, rest_counts)
-                if drop_self:
-                    d_rest[qi[:, None] == ids_t[j_rest]] = np.inf
-                cat_d = np.concatenate([best_d, d_rest], axis=1)
-                cat_i = np.concatenate([best_i, j_rest], axis=1)
-                sel2 = np.stack([
-                    topk_rows_tiebreak(cat_d[row],
-                                       ids_t[cat_i[row]], kk)
-                    for row in range(n_q)
-                ])
-                best_d = cat_d[rr, sel2]
-                best_i = cat_i[rr, sel2]
-        for row in range(n_q):
-            out_q.extend([s + row] * kk)
-            out_n.extend(ids_t[best_i[row]])
-            out_d.extend(best_d[row])
-    pos = np.asarray(out_q, dtype=np.int64)
-    id2 = np.asarray(out_n, dtype=np.int64)
-    dist = np.asarray(out_d, dtype=np.float64)
-    # the final window's filter and order, so both tiers return one shape
-    keep = dist < np.inf
-    pos, id2, dist = pos[keep], id2[keep], dist[keep]
-    order = np.lexsort((id2, dist, pos))
-    return qids[pos[order]], id2[order], dist[order]
+    kk, d = min(k, len(t_arrs)), _width(t_arrs)
+    id1, id2, dist = [], [], []
+    for qi, a in zip(q_ids, q_arrs):
+        dd = _dtw_reference_pairs([a] * len(t_arrs), t_arrs, radius, d)
+        # NaN never ranks, like a non-finite distance in the kernel
+        dd[~(dd < np.inf) | (drop_self & (t_ids == qi))] = np.inf
+        sel = topk_rows_tiebreak(dd, t_ids, kk)
+        sel = sel[dd[sel] < np.inf]
+        sel = sel[np.lexsort((t_ids[sel], dd[sel]))]
+        id1.append(np.full(len(sel), qi))
+        id2.append(t_ids[sel])
+        dist.append(dd[sel])
+    return np.concatenate(id1), np.concatenate(id2), np.concatenate(dist)
 
 
 def _return_path(C: np.ndarray) -> list[tuple[int, int]]:

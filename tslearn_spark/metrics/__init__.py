@@ -181,10 +181,11 @@ def _mixed_batch_kernel(metric: str, params: dict):
 
     With variable-length series the per-(shape,shape) buckets of the
     same-shape path shrink to a handful of pairs and the batch effect
-    dies (~500us/pair measured); the padded masked DP keeps one Python
-    loop per batch regardless of shape spread.  Callers sort partitions
-    by series size, so Arrow batches are length-homogeneous and padding
-    waste stays small.
+    dies (~500us/pair measured).  DTW runs the compiled kernel, one C
+    loop per batch; the padded masked DPs of the other families keep one
+    Python loop per batch regardless of shape spread.  Callers sort
+    partitions by series size, so Arrow batches are length-homogeneous
+    and padding waste stays small.
     """
     if metric == "dtw" and params.get("global_constraint") != "itakura" \
             and params.get("itakura_max_slope") is None:

@@ -225,9 +225,8 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
     query batch makes one ``kernels.dtw_knn_topk`` call against ALL train
     series.  In the compiled tier each query scans the train set once
     and every DP is capped at its running k-th best (exact early
-    abandon, always on); the numpy tier evaluates every pair, or seeds
-    and caps on long bands.  Exact either way: every pair that could
-    rank is evaluated in full.
+    abandon, always on); the reference tier evaluates every pair.  Exact
+    either way: every pair that could rank is evaluated in full.
 
     A query's top-k rows come out of one call, in the final (dist, id2)
     order, so the task ranks and reduces them itself and no shuffle

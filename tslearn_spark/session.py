@@ -28,6 +28,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tslearn_spark import ckernel
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -57,6 +59,10 @@ def get_spark(app_name: str = "tslearn_spark", shuffle_partitions: int | None = 
     docstring).  Executors must be able to import ``tslearn_spark``, as
     for every engine UDF.  A session that already exists when this is
     called (``getOrCreate``) keeps the daemon it started with.
+
+    The driver's build of the compiled DTW kernel is shipped to the
+    executors (``ckernel.ship``), so one without a C compiler loads it
+    rather than falling back to the per-pair reference.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -92,8 +98,9 @@ def get_spark(app_name: str = "tslearn_spark", shuffle_partitions: int | None = 
                 "InferFiltersFromGenerate")
     )
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    builder = builder.master(master)
-    return builder.getOrCreate()
+    spark = builder.master(master).getOrCreate()
+    ckernel.ship(spark.sparkContext)
+    return spark
 
 
 # Work per task, in flop-equivalents (one unit ~ one double flop of
