@@ -77,30 +77,6 @@ class TestCKernelBitwise:
             ck.dtw_batch = saved
         assert called.get("yes")
 
-    def test_tau2_semantics(self):
-        """Below-cap pairs bitwise equal; above-cap pairs either the
-        exact value or +inf, and +inf only where the true value is
-        provably above the cap (the caller contract: both are discarded
-        identically by a capped top-k)."""
-        rs = np.random.RandomState(5)
-        aa = [rs.randn(rs.randint(30, 100), 1) for _ in range(300)]
-        bb = [rs.randn(rs.randint(30, 100), 1) for _ in range(300)]
-        base = _reference_path(K.dtw_banded_batch_mixed, aa, bb, 5)
-        tau = np.full(300, float(np.percentile(base, 30)) ** 2)
-        c = ck.dtw_batch(aa, bb, 5, tau)
-        below = base ** 2 <= tau
-        assert (c[below] == base[below]).all()
-        above = ~below
-        assert (np.isinf(c[above]) | (c[above] == base[above])).all()
-        inf_cases = np.isinf(c) & ~np.isinf(base)
-        assert inf_cases.any()
-        assert (base[inf_cases] ** 2 > tau[inf_cases]).all()
-        # the reference never abandons: a cap changes none of its values
-        assert _same_bits(
-            _reference_path(K.dtw_banded_batch_mixed, aa, bb, 5, tau), base)
-        # inf cap == no pruning, bitwise
-        assert _same_bits(ck.dtw_batch(aa, bb, 5, np.full(300, np.inf)), base)
-
     @pytest.mark.parametrize("d", [1, 2, 3])
     def test_extreme_length_ratios(self, d):
         """la >> lb and lb >> la (including la or lb == 1) keep the
@@ -151,6 +127,32 @@ class TestCKernelBitwise:
             warnings.simplefilter("error")
             assert ck.lib_or_none() is None
             assert _same_bits(K.dtw_banded_batch_mixed(aa, bb, 5), want)
+
+
+@pytest.mark.parametrize("d", [1, 2])
+def test_flat_from_arrow_matches_flatten(d):
+    """Flat.from_arrow reads a list<list<double>> column off its list
+    offsets into the layout flatten builds, on a sliced, chunked column
+    with empty series; a mixed-width column is refused like flatten."""
+    import pyarrow as pa
+
+    rs = np.random.RandomState(2)
+    arrs = [rs.randn(n, d) for n in (3, 0, 5, 1, 0, 4)]
+    col = pa.array([a.tolist() for a in arrs],
+                   pa.list_(pa.list_(pa.float64())))
+    chunked = pa.chunked_array([col.slice(0, 1), col.slice(1, 3),
+                                col.slice(4)])
+    for values, want in ((col, arrs), (chunked, arrs),
+                         (col.slice(2, 3), arrs[2:5])):
+        got, ref = ck.Flat.from_arrow(values), ck.flatten(want)
+        assert got.d == d
+        for a, b in zip(got[:3], ref[:3]):
+            assert a.dtype == b.dtype and np.array_equal(a, b)
+    empty = ck.Flat.from_arrow(pa.chunked_array([], col.type))
+    assert empty.lens.size == 0 and empty.buf.size == 0
+    with pytest.raises(ValueError):
+        ck.Flat.from_arrow(pa.array([[[1.0, 2.0]], [[1.0]]],
+                                    pa.list_(pa.list_(pa.float64()))))
 
 
 def test_so_path_keys_on_build_flags(monkeypatch):

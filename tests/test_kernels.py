@@ -797,49 +797,3 @@ class TestNormalizedCCNorms:
         base = K.normalized_cc(ref, data[0])
         np.testing.assert_allclose(
             prof, base * float(np.linalg.norm(data[0])) / 2.0)
-
-
-class TestDtwBatchTauCap:
-    """Round-6: exact early abandon (tau2) in the batched banded DP."""
-
-    def test_cap_exactness_mixed_lengths(self):
-        rs = np.random.RandomState(5)
-        aa = [rs.randn(rs.randint(30, 100), 1) for _ in range(600)]
-        bb = [rs.randn(rs.randint(30, 100), 1) for _ in range(600)]
-        base = K.dtw_banded_batch_mixed(aa, bb, 5)
-        # spot-check the batch against the scalar DP
-        for i in range(0, 600, 97):
-            assert base[i] == pytest.approx(
-                K.dtw(aa[i], bb[i], sakoe_chiba_radius=5))
-        tau = np.full(600, float(np.percentile(base, 30)) ** 2)
-        capped = K.dtw_banded_batch_mixed(aa, bb, 5, tau2=tau)
-        below = base ** 2 <= tau
-        np.testing.assert_allclose(capped[below], base[below])
-        above = ~below
-        ok = np.isinf(capped[above]) | np.isclose(capped[above], base[above])
-        assert ok.all()  # above-cap: provably-worse inf or the exact value
-        # inf cap == no pruning
-        np.testing.assert_allclose(
-            K.dtw_banded_batch_mixed(aa, bb, 5, tau2=np.full(600, np.inf)),
-            base)
-
-    def test_capped_knn_equals_plain(self):
-        # the seeded+capped kNN flow must return the identical 1-NN set
-        rs = np.random.RandomState(6)
-        train = [np.cumsum(rs.randn(256)).reshape(-1, 1) for _ in range(40)]
-        test = [np.cumsum(rs.randn(256)).reshape(-1, 1) for _ in range(6)]
-        n_t = len(train)
-        base = K.dtw_banded_batch_mixed(
-            [q for q in test for _ in range(n_t)], train * len(test), 20
-        ).reshape(len(test), n_t)
-        d_seed = K.dtw_banded_batch_mixed(
-            [q for q in test for _ in range(8)],
-            [train[j] for _ in test for j in range(8)], 20).reshape(-1, 8)
-        tau = d_seed.min(axis=1)
-        r_of = np.repeat(np.arange(len(test)), n_t - 8)
-        j_of = np.tile(np.arange(8, n_t), len(test))
-        flat = K.dtw_banded_batch_mixed(
-            [test[r] for r in r_of], [train[j] for j in j_of], 20,
-            tau2=(tau * tau)[r_of])
-        nn = np.minimum(tau, flat.reshape(len(test), n_t - 8).min(axis=1))
-        np.testing.assert_allclose(nn, base.min(axis=1))

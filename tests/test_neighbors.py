@@ -129,14 +129,78 @@ def test_empty_train_series_never_ranks(spark, monkeypatch):
                    for a, b in zip(ranked, ranked[1:]) if a[0] == b[0])
 
 
-def test_broadcast_gate_counts_values_without_indexing(spark):
-    from tslearn_spark.session import broadcast_gate
+def test_collect_within_counts_values_without_indexing(spark):
+    from tslearn_spark.session import collect_within
 
+    schema = "series_id long, values array<array<double>>"
     df = spark.createDataFrame(
-        [(0, [[1.0, 2.0]] * 3), (1, []), (2, [[0.0, 0.0]])],
-        "series_id long, values array<array<double>>")
-    fits, row = broadcast_gate(df, 8)
-    assert fits and row["n"] == 3 and row["n_vals"] == 8
-    assert not broadcast_gate(df, 7)[0]
-    fits, row = broadcast_gate(df.limit(0), 0)
-    assert fits and row["n"] == 0
+        [(0, [[1.0, 2.0]] * 3), (1, []), (2, [[0.0, 0.0]])], schema)
+    # 6 + 0 + 2 values: a 0-timestamp series counts 0, and a total
+    # exactly at the limit fits
+    got = collect_within(df, 8)
+    assert got.column("series_id").to_pylist() == [0, 1, 2]
+    assert got.column("values").to_pylist()[1] == []
+    assert collect_within(df, 7) is None
+    empty = collect_within(df.limit(0), 0)
+    assert empty.num_rows == 0 and empty.schema.names == ["series_id",
+                                                          "values"]
+    # a multi-partition frame comes back in partition order, although
+    # its first partition finishes last
+    def slow_first_partition(batches):
+        import time
+
+        for pdf in batches:
+            if (pdf["series_id"] == 0).any():
+                time.sleep(1.0)
+            yield pdf
+
+    wide = spark.range(0, 4000, 1, 4).selectExpr(
+        "id AS series_id", "array(array(CAST(id AS double))) AS values"
+    ).mapInPandas(slow_first_partition, schema)
+    got = collect_within(wide, 4000)
+    assert got.column("series_id").to_pylist() == list(range(4000))
+
+
+def test_collect_within_cancels_past_the_budget(spark):
+    """An over-budget collect returns None and leaves the session as it
+    found it: no active job, no job tag, the caller's job group intact
+    (its jobs ran under that group), and the next query runs."""
+    from tslearn_spark.session import collect_within
+
+    sc = spark.sparkContext
+    big = spark.range(0, 400_000, 1, 8).selectExpr(
+        "id AS series_id", "array(array(CAST(id AS double), 1.0D)) AS values")
+    group = "collect_within_over_budget"
+    sc.setJobGroup(group, "over-budget collect")
+    try:
+        assert collect_within(big, 1000) is None
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
+        assert len(sc.getJobTags()) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    assert list(tracker.getActiveJobsIds()) == []
+    assert len(tracker.getJobIdsForGroup(group)) == 1
+    assert spark.range(10).count() == 10
+
+
+def test_broadcast_dtw_predict_runs_three_jobs(spark):
+    """knn_classify on the broadcast-DTW path runs exactly 3 Spark jobs
+    from the call to the collected result: the bounded train collect,
+    then size_tasks' round-robin shuffle and the map of the predict
+    (three query partitions for one task's work, as in
+    test_plans.py::test_broadcast_dtw_predict_is_one_map_stage)."""
+    q, t = _frames(spark, 2)
+    q = q.repartition(3)
+    sc = spark.sparkContext
+    group = "broadcast_dtw_predict_jobs"
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    sc.setJobGroup(group, "broadcast-DTW kNN predict")
+    try:
+        got = N.knn_classify(q, t, k=3, sakoe_chiba_radius=2).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(got) == 8
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3

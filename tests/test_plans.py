@@ -436,3 +436,21 @@ class TestOneTaskSizingRule:
             if p != pkg / "session.py" and banned.search(p.read_text())
         )
         assert offenders == []
+
+
+class TestOneBroadcastBudget:
+    def test_only_session_collects_arrow_streams(self):
+        """The broadcast budget has one policy, session.collect_within:
+        no other engine module starts an Arrow collect of its own, and
+        the gate it replaced is gone.  Cheap source scan, no Spark."""
+        import pathlib
+
+        import tslearn_spark
+
+        pkg = pathlib.Path(tslearn_spark.__file__).parent
+        sources = {p: p.read_text() for p in pkg.rglob("*.py")}
+        arrow = sorted(str(p.relative_to(pkg)) for p, src in sources.items()
+                       if "collectAsArrowToPython" in src)
+        assert arrow == ["session.py"]
+        assert not [p for p, src in sources.items()
+                    if "broadcast_gate" in src]

@@ -1,8 +1,7 @@
 /* Banded / unconstrained DTW: one DP core, two entry points.
  *
  *   dtw_batch  a batch of variable-length pairs -> one distance each
- *              (behind kernels.dtw_banded_batch_mixed, with an optional
- *              per-pair tau2 cap)
+ *              (behind kernels.dtw_banded_batch_mixed)
  *   dtw_knn    queries x train -> each query's k nearest train series,
  *              every DP capped at the running k-th best (exact early
  *              abandon inside the kernel; behind kernels.dtw_knn_topk)
@@ -30,10 +29,10 @@
  * {0, 1}, and a row is at most one lane wider than the one before it
  * (width <= prev_w + 1 - shift), so every read lands in [-1, prev_w+1].
  *
- * Early abandon: a pair whose running band minimum exceeds its cap is
- * reported +inf at once (the reference never abandons and returns the
- * true value — callers treat both as "provably worse than the current
- * top-k").
+ * Early abandon (dtw_knn only; dtw_batch runs every pair uncapped): a
+ * pair whose running band minimum exceeds its cap is reported +inf at
+ * once (the reference never abandons and returns the true value; both
+ * are "provably worse than the current top-k").
  *
  * radius < 0 means unconstrained (full window): wlo/whi are set so
  * cur_lo == 0 and hi == lb-1 on every row.
@@ -163,8 +162,7 @@ static double *dp_scratch(long long lanes, long long extra,
 
 int dtw_batch(const double *bufA, const long long *offA, const long long *lenA,
               const double *bufB, const long long *offB, const long long *lenB,
-              long long n, long long d, long long radius,
-              const double *tau2, double *out)
+              long long n, long long d, long long radius, double *out)
 {
     long long lanes = 1, p;
     double *prev, *row, *buf;
@@ -175,8 +173,7 @@ int dtw_batch(const double *bufA, const long long *offA, const long long *lenA,
         return -1;
     for (p = 0; p < n; p++)
         out[p] = sqrt(dtw_pair(bufA + offA[p], lenA[p], bufB + offB[p],
-                               lenB[p], d, radius,
-                               tau2 != NULL ? tau2[p] : INFINITY, 0.0,
+                               lenB[p], d, radius, INFINITY, 0.0,
                                prev, row));
     free(buf);
     return 0;

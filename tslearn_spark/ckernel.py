@@ -18,6 +18,9 @@ The library holds one DP core behind two entry points, bound from the
 ``_ENTRY_POINTS`` table: ``dtw_batch`` (one distance per pair, wrapped
 by ``dtw_batch`` here) and ``dtw_knn`` (each query's top-k over a train
 set, every DP capped at the running k-th best; wrapped by ``dtw_knn``).
+Both read series stored back to back (``Flat``: one float64 buffer,
+offsets and lengths), built from arrays by ``flatten`` or straight from
+an Arrow column by ``Flat.from_arrow``.
 
 When all three sources fail, ``lib_or_none`` returns None and warns once
 (a RuntimeWarning naming each cause): ``kernels.dtw_banded_batch_mixed``
@@ -41,6 +44,7 @@ import tempfile
 import threading
 import warnings
 import weakref
+from typing import NamedTuple
 
 import numpy as np
 
@@ -68,7 +72,6 @@ _ENTRY_POINTS = {
         _F64P, _I64P, _I64P,        # bufA, offA, lenA
         _F64P, _I64P, _I64P,        # bufB, offB, lenB
         _LL, _LL, _LL,              # n, d, radius (<0: none)
-        ctypes.c_void_p,            # tau2 (NULL: none)
         _F64P,                      # out
     ],
     "dtw_knn": [
@@ -181,8 +184,48 @@ def ship(sc) -> None:
     _shipped_to.add(sc)
 
 
-def _flatten(arrs: list, d: int):
+class Flat(NamedTuple):
+    """Series stored back to back, the layout the kernel reads: series
+    ``i`` is the row-major ``(lens[i], d)`` block of ``buf`` starting at
+    ``off[i]`` (float64 buf, int64 off and lens)."""
+
+    buf: np.ndarray
+    off: np.ndarray
+    lens: np.ndarray
+    d: int
+
+    @classmethod
+    def from_arrow(cls, values) -> "Flat":
+        """The series of an Arrow ``list<list<double>>`` column (an Array
+        or a ChunkedArray), read off its list offsets with no per-row
+        Python and at most one copy of the leaf doubles (a null reads
+        NaN).  Every timestamp must have the same width d (1 when no
+        series has a timestamp); another width raises ValueError, as
+        ``flatten``."""
+        import pyarrow as pa
+
+        if isinstance(values, pa.ChunkedArray):
+            values = (values.combine_chunks() if values.num_chunks
+                      else pa.array([], values.type))
+        outer = values.offsets.to_numpy().astype(np.int64)
+        steps = values.values.offsets.to_numpy().astype(np.int64)
+        steps = steps[outer[0]:outer[-1] + 1]
+        widths = np.diff(steps)
+        d = int(widths[0]) if widths.size else 1
+        if (widths != d).any():
+            raise ValueError(f"series must all be (sz, {d}) for the C kernel")
+        leaf = values.values.values.slice(steps[0], steps[-1] - steps[0])
+        buf = np.ascontiguousarray(
+            leaf.to_numpy(zero_copy_only=False), dtype=np.float64)
+        return cls(buf, (outer[:-1] - outer[0]) * d, np.diff(outer), d)
+
+
+def flatten(arrs: list, d: int | None = None) -> Flat:
+    """A list of ``(sz, d)`` series (1-D for d=1) as one ``Flat``; d
+    defaults to the width of ``arrs[0]``."""
     n = len(arrs)
+    if d is None:
+        d = arrs[0].shape[1] if n and arrs[0].ndim > 1 else 1
     lens = np.fromiter((a.shape[0] for a in arrs), dtype=np.int64, count=n)
     offs = np.zeros(n, dtype=np.int64)
     np.cumsum(lens[:-1] * d, out=offs[1:])
@@ -193,50 +236,43 @@ def _flatten(arrs: list, d: int):
     # width would send it past the buffer
     if buf.size != int(lens.sum()) * d:
         raise ValueError(f"series must all be (sz, {d}) for the C kernel")
-    return buf, offs, lens
+    return Flat(buf, offs, lens, d)
 
 
-def dtw_batch(arrs_a: list, arrs_b: list, radius, tau2=None) -> np.ndarray:
+def dtw_batch(arrs_a: list, arrs_b: list, radius) -> np.ndarray:
     """Run the compiled DP over a mixed-shape pair batch.
 
     Caller guarantees lib_or_none() is not None.  Returns the same
-    doubles as the per-pair reference (bitwise, modulo the documented
-    tau2 inf-vs-above-cap freedom).
+    doubles as the per-pair reference, bit for bit.
     """
     lib = lib_or_none()
     n = len(arrs_a)
     # the kernel reads n offsets and lengths of each side
     if len(arrs_b) != n:
         raise ValueError("one series on each side per pair")
-    d = arrs_a[0].shape[1] if arrs_a[0].ndim > 1 else 1
-    buf_a, off_a, len_a = _flatten(arrs_a, d)
-    buf_b, off_b, len_b = _flatten(arrs_b, d)
+    a = flatten(arrs_a)
+    b = flatten(arrs_b, a.d)
     out = np.empty(n, dtype=np.float64)
-    if tau2 is None:
-        tau_p = None
-    else:
-        tau_arr = np.ascontiguousarray(tau2, dtype=np.float64)
-        tau_p = tau_arr.ctypes.data_as(ctypes.c_void_p)
-    if lib.dtw_batch(buf_a, off_a, len_a, buf_b, off_b, len_b,
-                     n, d, -1 if radius is None else int(radius), tau_p, out):
+    if lib.dtw_batch(*a[:3], *b[:3], n, a.d,
+                     -1 if radius is None else int(radius), out):
         raise MemoryError("dtw_batch scratch allocation failed")
     return out
 
 
-def dtw_knn(q_arrs: list, q_ids, t_arrs: list, t_ids, radius, k: int,
+def dtw_knn(q_arrs: list, q_ids, train: Flat, t_ids, radius, k: int,
             drop_self: bool):
     """Each query's ``min(k, n_t)`` nearest train series under (banded)
     DTW, in one compiled pass: ``(id1, id2, dist)`` arrays, query order,
     then ascending (dist, id2) within a query; non-finite distances and,
-    under ``drop_self``, equal ids are left out.
+    under ``drop_self``, equal ids are left out.  The queries are
+    ``(sz, d)`` arrays of the train side's width d.
 
     Caller guarantees lib_or_none() is not None and both sides are
     non-empty.  Raises MemoryError when the kernel's scratch allocation
     fails (nothing is returned then).
     """
     lib = lib_or_none()
-    n_q, n_t = len(q_arrs), len(t_arrs)
-    d = t_arrs[0].shape[1] if t_arrs[0].ndim > 1 else 1
+    n_q, n_t = len(q_arrs), len(train.lens)
     kk = min(int(k), n_t)
     q_ids = np.ascontiguousarray(q_ids, dtype=np.int64)
     t_ids = np.ascontiguousarray(t_ids, dtype=np.int64)
@@ -245,9 +281,9 @@ def dtw_knn(q_arrs: list, q_ids, t_arrs: list, t_ids, radius, k: int,
     dist = np.empty(n_q * kk, dtype=np.float64)
     idx = np.empty(n_q * kk, dtype=np.int64)
     cnt = np.empty(n_q, dtype=np.int64)
-    if lib.dtw_knn(*_flatten(q_arrs, d), q_ids, n_q,
-                   *_flatten(t_arrs, d), t_ids, n_t,
-                   d, -1 if radius is None else int(radius), kk,
+    if lib.dtw_knn(*flatten(q_arrs, train.d)[:3], q_ids, n_q,
+                   *train[:3], t_ids, n_t,
+                   train.d, -1 if radius is None else int(radius), kk,
                    int(bool(drop_self)), dist, idx, cnt):
         raise MemoryError("dtw_knn scratch allocation failed")
     held = (np.arange(kk)[None, :] < cnt[:, None]).ravel()

@@ -33,13 +33,27 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from tslearn_spark.bases import BaseModelPackage, TimeSeriesBaseEstimator
-from tslearn_spark.session import broadcast_gate
+from tslearn_spark.ckernel import Flat
+from tslearn_spark.session import collect_within
 
 
 # classifier halves up to ~this many float64 values ride the one-shot
 # broadcast confusion pass; bigger halves stream through in budget-sized
-# chunks (session.broadcast_gate, as for the neighbors fast paths)
+# chunks (session.collect_within, as for the neighbors fast paths)
 _CLF_BROADCAST_LIMIT_VALUES = 8_000_000  # ~64 MB
+
+
+def _dense_by_id(tab):
+    """``(T, y)``: the series of a collected (series_id, values, _y)
+    Arrow table as one dense ``(n, sz, d)`` array and their labels, both
+    in series_id order, read from the Arrow buffers (no per-element
+    Python).  The series must share one length."""
+    flat = Flat.from_arrow(tab.column("values"))
+    if (flat.lens != flat.lens[0]).any():
+        raise ValueError("the classifier half must be equal-length")
+    order = np.argsort(tab.column("series_id").to_numpy(), kind="stable")
+    T = flat.buf.reshape(order.size, -1, flat.d)[order]
+    return T, np.asarray(tab.column("_y").to_pylist())[order]
 
 
 def _make_stopper(centers, pyck, pyhatyck, sz, d, min_t, lamb, alpha, k):
@@ -220,25 +234,15 @@ class NonMyopicEarlyClassifier(BaseModelPackage, TimeSeriesBaseEstimator):
         spark = df.sparkSession
         classes_b = self.classes_
         min_t = self.min_t
-        fits, stats = broadcast_gate(self._clf_df,
-                                     _CLF_BROADCAST_LIMIT_VALUES)
-        n_clf = stats["n"]
-        if fits:
+        t_tab = collect_within(self._clf_df, _CLF_BROADCAST_LIMIT_VALUES)
+        if t_tab is not None:
             # fast path: the whole classifier half fits the broadcast
             # byte budget — ship it once, one map pass over half2
             self._conf_plan_ = "broadcast"
-            t_rows = sorted(
-                self._clf_df.select("series_id", "values", "_y").collect(),
-                key=lambda r: r["series_id"],
-            )
-            T = np.asarray(
-                [[list(map(float, ts)) for ts in r["values"]]
-                 for r in t_rows], dtype=np.float64,
-            )  # (n_t, sz, d)
+            T, yh = _dense_by_id(t_tab)  # (n_t, sz, d), tid order
             # label INDICES travel instead of label values, so the
             # partial rows stay typed (int) whatever the label dtype is
-            yh_idx = np.searchsorted(
-                self.classes_, np.asarray([r["_y"] for r in t_rows]))
+            yh_idx = np.searchsorted(self.classes_, yh)
             bc = spark.sparkContext.broadcast((T, yh_idx, classes_b))
 
             def _conf_partials(batches):
@@ -300,7 +304,7 @@ class NonMyopicEarlyClassifier(BaseModelPackage, TimeSeriesBaseEstimator):
             # scalar rows; worker memory stays <= budget + ~32 MB.
             self._conf_plan_ = "chunked"
             stats = self._conf_stats_chunked(
-                spark, half2, sz, d, n_clf, classes_b, min_t)
+                spark, half2, sz, d, self._clf_df.count(), classes_b, min_t)
 
         self.pyhatyck_ = np.zeros(
             (sz - self.min_t + 1, self.n_clusters, n_classes, n_classes)

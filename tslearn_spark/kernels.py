@@ -287,8 +287,8 @@ def _width(arrs: list) -> int:
     return arrs[0].shape[1] if arrs[0].ndim > 1 else 1
 
 
-def dtw_banded_batch_mixed(arrs_a: list, arrs_b: list, radius: int | None = None,
-                           tau2: np.ndarray | None = None) -> np.ndarray:
+def dtw_banded_batch_mixed(arrs_a: list, arrs_b: list,
+                           radius: int | None = None) -> np.ndarray:
     """DTW of each pair ``(arrs_a[p], arrs_b[p])`` of a mixed-shape batch,
     Sakoe-Chiba band ``radius`` (sakoe_chiba_bounds semantics,
     dtw_variants.py:906-956; None: unconstrained).  Every series is
@@ -299,14 +299,6 @@ def dtw_banded_batch_mixed(arrs_a: list, arrs_b: list, radius: int | None = None
     loaded, or its scratch allocation fails, the per-pair reference
     (``dtw_accumulated_matrix``'s row scan) runs instead; both return the
     same doubles (tests/test_ckernel.py).
-
-    ``tau2``: optional per-pair SQUARED distance caps (early abandon).
-    The compiled kernel reports +inf for a pair once a row's band minimum
-    passes its cap: every warping path crosses every row, so its final
-    cost is provably above the cap.  A pair above its cap may also come
-    back exact (the reference never abandons).  Callers pass the current
-    k-th-best squared distance and treat both as "provably worse than the
-    current top-k".
     """
     from tslearn_spark import ckernel
 
@@ -314,7 +306,7 @@ def dtw_banded_batch_mixed(arrs_a: list, arrs_b: list, radius: int | None = None
         return np.empty(0)
     if ckernel.lib_or_none() is not None:
         try:
-            return ckernel.dtw_batch(arrs_a, arrs_b, radius, tau2)
+            return ckernel.dtw_batch(arrs_a, arrs_b, radius)
         except MemoryError:
             pass
     return _dtw_reference_pairs(arrs_a, arrs_b, radius, _width(arrs_a))
@@ -345,13 +337,15 @@ def dtw_band_estimate(lens_t: np.ndarray, radius) -> tuple[float, float]:
     return med_t, w_est
 
 
-def dtw_knn_topk(q_arrs: list, q_ids, t_arrs: list, t_ids, radius, k: int,
+def dtw_knn_topk(q_arrs: list, q_ids, train, t_ids, radius, k: int,
                  drop_self: bool):
     """Each query's k nearest train series under (banded) DTW: ``(id1,
     id2, dist)`` arrays in query order, then ascending (dist, id2) — the
     order of the final (dist, id2) window — with non-finite distances
     and, under ``drop_self``, equal ids left out.  Every pair that could
-    rank is evaluated exactly.
+    rank is evaluated exactly.  ``train``: a list of ``(sz, d)`` arrays,
+    or the ``ckernel.Flat`` buffer the kernel reads (what the broadcast
+    kNN ships).
 
     Runs the fused compiled kernel (``ckernel.dtw_knn``: one pass over
     the train set per query, each DP capped at the running k-th best).
@@ -365,19 +359,23 @@ def dtw_knn_topk(q_arrs: list, q_ids, t_arrs: list, t_ids, radius, k: int,
 
     q_ids = np.asarray(q_ids, dtype=np.int64)
     t_ids = np.asarray(t_ids, dtype=np.int64)
-    if not q_arrs or not t_arrs or k < 1:
+    if not isinstance(train, ckernel.Flat):
+        train = ckernel.flatten(train)
+    if not q_arrs or not train.lens.size or k < 1:
         empty = np.empty(0, dtype=np.int64)
         return empty, empty, np.empty(0)
     if ckernel.lib_or_none() is not None:
         try:
-            return ckernel.dtw_knn(q_arrs, q_ids, t_arrs, t_ids, radius, k,
+            return ckernel.dtw_knn(q_arrs, q_ids, train, t_ids, radius, k,
                                    drop_self)
         except MemoryError:
             pass
-    kk, d = min(k, len(t_arrs)), _width(t_arrs)
+    t_arrs = [train.buf[o:o + n * train.d].reshape(n, train.d)
+              for o, n in zip(train.off, train.lens)]
+    kk = min(k, len(t_arrs))
     id1, id2, dist = [], [], []
     for qi, a in zip(q_ids, q_arrs):
-        dd = _dtw_reference_pairs([a] * len(t_arrs), t_arrs, radius, d)
+        dd = _dtw_reference_pairs([a] * len(t_arrs), t_arrs, radius, train.d)
         # NaN never ranks, like a non-finite distance in the kernel
         dd[~(dd < np.inf) | (drop_self & (t_ids == qi))] = np.inf
         sel = topk_rows_tiebreak(dd, t_ids, kk)

@@ -5,13 +5,17 @@ Reference: tslearn/neighbors/neighbors.py:19-717.
 Spark-first: the reference materializes the full query×train distance
 matrix then argpartitions (neighbors.py:145-161).  We never materialize
 it.  DTW on a train set within the broadcast budget runs in ONE map
-stage, with no shuffle after the kernel:
+stage, with no shuffle after the kernel, after one bounded collect:
 
-    broadcast(train series, ids, labels|targets)
-    size_tasks(queries) -> mapInPandas: per query batch, the fused
-      top-k (kernels.dtw_knn_topk, rows in (dist, id) order), then in
-      the same task rank -> (id1, id2, dist, rank) | vote / weighted
-      mean -> (series_id, prediction)
+    session.collect_within(train)   one Arrow job, cancelled past the
+      budget -> flat train buffer (ckernel.Flat), ids, labels|targets
+    broadcast(that) -> size_tasks(queries) -> mapInPandas: per query
+      batch, the fused top-k (kernels.dtw_knn_topk, rows in (dist, id)
+      order), then in the same task rank -> (id1, id2, dist, rank) |
+      vote / weighted mean -> (series_id, prediction)
+
+A kNN predict on this path runs 3 Spark jobs: the collect, then the
+round-robin shuffle and the map of the predict itself.
 
 Every other path spreads a query's candidates over several tasks and
 ranks and votes in SQL:
@@ -33,29 +37,44 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tslearn_spark import ckernel
 from tslearn_spark import metrics as M
 from tslearn_spark.bases import (BaseModelPackage, ClassifierScoreMixin,
                                  RegressorScoreMixin, TimeSeriesBaseEstimator)
-from tslearn_spark.session import broadcast_gate, size_tasks
+from tslearn_spark.session import collect_within, size_tasks
 from tslearn_spark.topk import topk_matrix_tiebreak
 
 # query sets up to ~this many float64s (~64 MB) ride the broadcast-matmul
 # fast path for euclidean; beyond it (or for elastic metrics) the generic
-# pair join runs (session.broadcast_gate)
+# pair join runs (session.collect_within)
 _EUCLIDEAN_BROADCAST_LIMIT_VALUES = 8_000_000
 
 
 def _euclidean_topk(queries: DataFrame, train: DataFrame, k: int,
-                    drop_self: bool) -> DataFrame:
+                    drop_self: bool):
     """Equal-length euclidean kNN via broadcast queries + per-partition
-    BLAS matmul and map-side partial top-k (the simsearch pattern).
+    BLAS matmul and map-side partial top-k (the simsearch pattern), or
+    None when the query set is over the broadcast budget or the series
+    are not all of one length (one aggregate over train checks it).
 
     Shuffle volume is O(n_queries x k x n_partitions); the train side is
     streamed, never collected.
     """
-    q_pdf = queries.select("series_id", "values").toPandas()
-    q_ids = q_pdf["series_id"].to_numpy(dtype=np.int64)
-    Q = np.array([M._to_arr(v).ravel() for v in q_pdf["values"]])
+    q_tab = collect_within(queries.select("series_id", "values"),
+                           _EUCLIDEAN_BROADCAST_LIMIT_VALUES)
+    if q_tab is None:
+        return None
+    q_flat = ckernel.Flat.from_arrow(q_tab.column("values"))
+    sizes = set(q_flat.lens.tolist())
+    if len(sizes) != 1:  # no queries, or several lengths
+        return None
+    t_sz = train.select(F.min(F.size("values")).alias("lo"),
+                        F.max(F.size("values")).alias("hi")).first()
+    sizes.update(v for v in t_sz if v is not None)
+    if len(sizes) != 1:
+        return None
+    q_ids = q_tab.column("series_id").to_numpy()
+    Q = q_flat.buf.reshape(len(q_ids), -1)
     spark = train.sparkSession
     bc = spark.sparkContext.broadcast((q_ids, Q))
 
@@ -125,20 +144,6 @@ _DTW_BROADCAST_LIMIT_VALUES = 8_000_000  # ~64 MB
 # 6.0 at sz 120-136 r=5, 2.9 at sz 480-544 r=50, i.e. 6-13 units, so 16
 # errs toward more tasks
 _DP_CELL_WORK = 16
-
-
-def _dtw_broadcast_radius(train: DataFrame, metric: str, params: dict):
-    """``(fused, radius)``: whether a kNN call takes the broadcast-DTW
-    path (DTW without an Itakura constraint, a non-empty train set
-    within the broadcast budget), and its Sakoe-Chiba radius."""
-    if metric != "dtw" or params.get("itakura_max_slope") is not None \
-            or params.get("global_constraint") == "itakura":
-        return False, None
-    radius = params.get("sakoe_chiba_radius")
-    if params.get("global_constraint") == "sakoe_chiba" and radius is None:
-        radius = 1
-    fits, stats = broadcast_gate(train, _DTW_BROADCAST_LIMIT_VALUES)
-    return fits and stats["n"] > 0, radius
 
 
 def _weight_col(weights: str):
@@ -215,14 +220,20 @@ def _label_codes(labels: pd.Series, dtype):
 
 
 def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
-                        radius, drop_self: bool, reduce=None) -> DataFrame:
+                        metric: str, params: dict, drop_self: bool,
+                        reduce=None):
     """DTW kNN via broadcast train + one fused top-k call per Arrow
-    batch; each task emits its queries' FINAL rows.
+    batch; each task emits its queries' FINAL rows.  None off this path:
+    another metric, an Itakura constraint, or a train set that is empty
+    or over the broadcast budget (``session.collect_within``, the one
+    job this call runs; the caller then takes the pair join).
 
     The pair-join plan ships every train series once PER QUERY through
     Arrow (n_q x n_t nested rows — the dominant stage cost, not the
-    kernel).  Here the train set is broadcast once per executor and each
-    query batch makes one ``kernels.dtw_knn_topk`` call against ALL train
+    kernel).  Here the train set is collected once, straight from Arrow
+    into the flat buffer, offsets and lengths the compiled kernel reads
+    (``ckernel.Flat``), broadcast once per executor, and each query
+    batch makes one ``kernels.dtw_knn_topk`` call against ALL train
     series.  In the compiled tier each query scans the train set once
     and every DP is capped at its running k-th best (exact early
     abandon, always on); the reference tier evaluates every pair.  Exact
@@ -246,35 +257,39 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
     """
     from tslearn_spark import kernels as K
 
+    if metric != "dtw" or params.get("itakura_max_slope") is not None \
+            or params.get("global_constraint") == "itakura":
+        return None
+    radius = params.get("sakoe_chiba_radius")
+    if params.get("global_constraint") == "sakoe_chiba" and radius is None:
+        radius = 1
     kind, col, weights = reduce or (None, None, None)
     cols = ["series_id", "values"]
     if kind is not None:
         cols.append(F.col(col).alias("_y"))
-    # Arrow transfer (toPandas), not collect(): Row objects wrap nested
-    # lists in per-element Python objects — ~5-10x the heap of the raw
-    # doubles, which matters near _DTW_BROADCAST_LIMIT_VALUES
-    t_pdf = train.select(*cols).toPandas()
-    t_ids = t_pdf["series_id"].to_numpy(dtype=np.int64)
-    t_arrs = [M._to_arr(v) for v in t_pdf["values"]]
+    t_tab = collect_within(train.select(*cols), _DTW_BROADCAST_LIMIT_VALUES)
+    if t_tab is None or t_tab.num_rows == 0:
+        return None
+    t_ids = t_tab.column("series_id").to_numpy()
+    T = ckernel.Flat.from_arrow(t_tab.column("values"))
     if kind is None:
         schema, side = "id1 long, id2 long, dist double, rank int", None
     else:
         by_id = np.argsort(t_ids, kind="stable")
+        y = t_tab.column("_y").to_pandas()
         if kind == "classify":
             dtype = train.schema[col].dataType
-            codes, values = _label_codes(t_pdf["_y"], dtype)
+            codes, values = _label_codes(y, dtype)
             side = (t_ids[by_id], codes[by_id], values)
             schema = f"series_id long, prediction {dtype.simpleString()}"
         else:
-            y = t_pdf["_y"].to_numpy(dtype=np.float64, na_value=np.nan)
+            y = y.to_numpy(dtype=np.float64, na_value=np.nan)
             side = (t_ids[by_id], y[by_id], None)
             schema = "series_id long, prediction double"
     spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast((t_ids, t_arrs, side))
-    n_t = len(t_arrs)
-    med_t, w_est = K.dtw_band_estimate(
-        np.fromiter((t.shape[0] for t in t_arrs), dtype=np.int64, count=n_t),
-        radius)
+    bc = spark.sparkContext.broadcast((t_ids, T, side))
+    n_t = len(t_ids)
+    med_t, w_est = K.dtw_band_estimate(T.lens, radius)
 
     def gen(batches):
         ids_t, T, side_b = bc.value
@@ -418,21 +433,26 @@ def kneighbors(
 
     drop_self: for self-kNN, exclude the identical id (neighbors.py:163-168).
     metric="dtw" (unconstrained or Sakoe-Chiba) on a broadcastable train
-    set takes the fused top-k path (_dtw_topk_broadcast: one
-    kernels.dtw_knn_topk call per query batch, early abandon at the
+    set takes the fused top-k path (_dtw_topk_broadcast: the train side
+    is collected once by session.collect_within, which also decides
+    "broadcastable" — one Arrow job, cancelled past the budget — then
+    one kernels.dtw_knn_topk call per query batch, early abandon at the
     running k-th best in the compiled tier, rank assigned in the task,
-    no shuffle after it); metric="euclidean" on a broadcastable query
-    set takes the BLAS matmul + partial-top-k path; everything else runs
-    the pair join with the Arrow-batched kernel UDF.  On every path a
-    pair without a finite distance (a NaN series, a train series with 0
-    timestamps) never ranks.  The compute-bound query side is spread by
-    session.size_tasks: on the broadcast DTW path by its DP cells,
-    measured from the collected train lengths; on the pair join one
-    query per task, up to the slots.
+    no shuffle after it); metric="euclidean" on equal-length series and
+    a query set within the budget (collect_within over the queries, one
+    aggregate over train for its lengths) takes the BLAS matmul +
+    partial-top-k path; everything else runs the pair join with the
+    Arrow-batched kernel UDF.  On every path a pair without a finite
+    distance (a NaN series, a train series with 0 timestamps) never
+    ranks.  The compute-bound query side is spread by session.size_tasks:
+    on the broadcast DTW path by its DP cells, measured from the
+    collected train lengths; on the pair join one query per task, up to
+    the slots.
     """
-    fused, radius = _dtw_broadcast_radius(train, metric, params)
-    if fused:
-        return _dtw_topk_broadcast(queries, train, k, radius, drop_self)
+    fused = _dtw_topk_broadcast(queries, train, k, metric, params,
+                                drop_self)
+    if fused is not None:
+        return fused
     return _kneighbors_spread(queries, train, k, metric, drop_self, params)
 
 
@@ -445,16 +465,10 @@ def _kneighbors_spread(queries: DataFrame, train: DataFrame, k: int,
     if metric == "sax":
         return _sax_knn(queries, train, k, drop_self, params)
     if metric == "euclidean" and not params:
-        # fast path needs equal-length series and a query set within the
-        # broadcast byte budget
-        fits, shape = broadcast_gate(
-            queries.select(F.lit(True).alias("_q"), "values").unionByName(
-                train.select(F.lit(False).alias("_q"), "values")),
-            _EUCLIDEAN_BROADCAST_LIMIT_VALUES, where=F.col("_q"),
-            n_sz=F.countDistinct(F.size("values")),
-        )
-        if fits and shape["n_sz"] == 1:
-            return _euclidean_topk(queries, train, k, drop_self)
+        # fast path: equal-length series, query set within the budget
+        out = _euclidean_topk(queries, train, k, drop_self)
+        if out is not None:
+            return out
     pairs = M.cross_pairs(queries, train)
     if drop_self:
         pairs = pairs.where(F.col("id1") != F.col("id2"))
@@ -503,14 +517,17 @@ def knn_classify(
     smallest rank, then to the smallest label (nulls first).  On the
     broadcast-DTW path each task votes over its queries' top-k rows
     (``_vote``, weights summed in rank order, so distance-weighted votes
-    are deterministic) and the plan is one map stage; elsewhere the
-    top-k rows join the broadcast train labels and a grouped aggregate
-    plus a window vote.
+    are deterministic) and the plan is one map stage, so the call runs 3
+    Spark jobs to its collected result: the bounded train collect
+    (session.collect_within, which also gates the path), then the
+    predict's round-robin shuffle and its map.  Elsewhere the top-k rows
+    join the broadcast train labels and a grouped aggregate plus a
+    window vote.
     """
-    fused, radius = _dtw_broadcast_radius(train, metric, params)
-    if fused:
-        return _dtw_topk_broadcast(queries, train, k, radius, False,
-                                   ("classify", label_col, weights))
+    fused = _dtw_topk_broadcast(queries, train, k, metric, params, False,
+                                ("classify", label_col, weights))
+    if fused is not None:
+        return fused
     nn = _kneighbors_spread(queries, train, k, metric, False, params)
     votes = (
         _labeled(nn, train, label_col).groupBy("id1", label_col)
@@ -545,10 +562,10 @@ def knn_regress(
     rank order); elsewhere the top-k rows join the broadcast train
     targets and one grouped aggregate averages them.
     """
-    fused, radius = _dtw_broadcast_radius(train, metric, params)
-    if fused:
-        return _dtw_topk_broadcast(queries, train, k, radius, False,
-                                   ("regress", target_col, weights))
+    fused = _dtw_topk_broadcast(queries, train, k, metric, params, False,
+                                ("regress", target_col, weights))
+    if fused is not None:
+        return fused
     nn = _kneighbors_spread(queries, train, k, metric, False, params)
     wexpr = _weight_col(weights)
     return (

@@ -18,6 +18,15 @@ harness's own vanilla ``SparkSession`` (such as the one
 ``tools/time_queries.py`` builds), or one created before ``get_spark``
 is called, since the daemon module is a static config fixed when the
 session starts.
+
+Two engine-wide policies live here too.  ``size_tasks`` is the one
+task-sizing rule.  ``collect_within`` is the one broadcast budget: the
+side a fast path broadcasts (kNN train or query sets, the early
+classifier's classifier half) is collected by a single Arrow job that is
+cancelled at the first record batch past the budget, so deciding "does
+it fit" costs no job of its own.  Its memory bound: Python holds at most
+``limit`` values plus one batch; the JVM holds at most the partitions
+that finish before the cancel, capped by ``spark.driver.maxResultSize``.
 """
 
 from __future__ import annotations
@@ -234,25 +243,88 @@ def size_tasks(df: DataFrame, work_per_row: float | None = None,
     return df.repartition(target)
 
 
-def broadcast_gate(df: DataFrame, limit: int, where=None, **aggs):
-    """The engine's one broadcast-budget gate: ``(fits, row)`` from ONE
-    aggregate job over ``df``.
+def _leaf_count(col) -> int:
+    """Leaf values of an Arrow (nested) list column, read off its list
+    offsets: a series with 0 timestamps counts 0."""
+    import pyarrow as pa
 
-    ``row`` holds ``n`` (rows), ``n_vals`` (the float64s held by the
-    ``values`` series of the rows where the boolean column ``where``
-    holds, all rows by default) and the caller's extra aggregates
-    ``aggs``; ``fits`` says ``n_vals <= limit`` (an empty ``df``
-    fits).  The budget counts values, not rows: 200k rows of sz*d=1024
-    would be a ~1.6 GB driver collect under a row gate.  A series counts
-    the size of its flattened values, so one with 0 timestamps counts 0
-    (``element_at(values, 1)`` would raise under ANSI mode).
+    while pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
+        col = col.flatten()
+    return len(col)
+
+
+def collect_within(df: DataFrame, limit: int):
+    """The engine's one broadcast-budget policy: ``df`` collected to the
+    driver as a ``pyarrow.Table`` in partition order, or None when its
+    ``values`` column holds more than ``limit`` float64s.
+
+    One Arrow collect (``collectAsArrowToPython``), the only job, runs
+    under a job tag of its own; the caller's job group and tags are left
+    as they were.  The stream is read one record batch at a time (in the
+    order the partitions finish), counting the leaf values of ``values``
+    from the Arrow list offsets: a series with 0 timestamps counts 0 and
+    a total of exactly ``limit`` fits.  At the first batch past the
+    budget the tagged jobs are cancelled, the batches held so far are
+    dropped and the rest of the stream is read and discarded (the JVM
+    writes it from the scheduler's result handler, which must not
+    block).  A collect that fails on ``spark.driver.maxResultSize`` does
+    not fit either; any other failure raises.
+
+    Memory bound: Python holds at most ``limit`` values plus one batch
+    (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows); the JVM
+    holds at most the partitions that finish before the cancel, capped
+    by ``spark.driver.maxResultSize``.  The budget counts values, not
+    rows: 200k rows of sz*d=1024 would be a ~1.6 GB driver collect under
+    a row budget.
     """
-    n_vals = F.size(F.flatten("values"))
-    if where is not None:
-        n_vals = F.when(where, n_vals).otherwise(F.lit(0))
-    row = df.select(F.count("*").alias("n"), F.sum(n_vals).alias("n_vals"),
-                    *[c.alias(name) for name, c in aggs.items()]).first()
-    return (row["n_vals"] or 0) <= limit, row
+    import uuid
+
+    import pyarrow as pa
+    from pyspark.serializers import read_int
+    from pyspark.util import _create_local_socket
+
+    sc = df.sparkSession.sparkContext
+    tag = f"tslearn_spark.collect_within.{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        # the serving thread that runs the job inherits the tag
+        port, secret, server = df._jdf.collectAsArrowToPython()
+    finally:
+        sc.removeJobTag(tag)
+    batches, n_vals, over, failure = [], 0, False, None
+    stream = _create_local_socket((port, secret))
+    try:
+        reader = pa.ipc.open_stream(stream)
+        for batch in reader:
+            if over:
+                continue
+            n_vals += _leaf_count(batch.column("values"))
+            if n_vals > limit:
+                over, batches = True, []
+                sc.cancelJobsWithTag(tag)
+            else:
+                batches.append(batch)
+        n_order = read_int(stream)
+        if n_order < 0:
+            raise RuntimeError("the JVM failed the Arrow collect")
+        order = [read_int(stream) for _ in range(n_order)]
+    except Exception as e:  # noqa: BLE001 — raised after the JVM's own
+        failure = e
+    finally:
+        # a closed socket also fails a JVM writer still blocked on it
+        stream.close()
+    try:
+        server.getResult()  # joins the serving thread, raises its error
+    except Exception as e:  # noqa: BLE001 — classified here
+        if over or "maxResultSize" in str(e):
+            return None
+        raise
+    if over:
+        return None
+    if failure is not None:
+        raise failure
+    return pa.Table.from_batches([batches[i] for i in order],
+                                 schema=reader.schema)
 
 
 # columns stored as TIMESTAMP(NANOS) in the driver parquet — surfaced as
