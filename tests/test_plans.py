@@ -454,3 +454,57 @@ class TestOneBroadcastBudget:
         assert arrow == ["session.py"]
         assert not [p for p, src in sources.items()
                     if "broadcast_gate" in src]
+
+
+class TestPostShuffleWidth:
+    @staticmethod
+    def _post_shuffle_tasks(session, sf_dir, group):
+        """Tasks of ``events_to_ts``'s post-shuffle stage on ``sf_dir``,
+        read from the status store (the last stage of the group's last
+        job: AQE runs the map stage first, then the reduce side)."""
+        from tslearn_spark.dataset import events_to_ts
+        from tslearn_spark.session import load_tables
+
+        events = load_tables(session, sf_dir)["events"]
+        sc = session.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        sc.setJobGroup(group, "events_to_ts post-shuffle width")
+        try:
+            (events_to_ts(events).write.format("noop").mode("overwrite")
+             .save())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = sc.statusTracker()
+        last_job = max(st.getJobIdsForGroup(group))
+        last_stage = max(st.getJobInfo(last_job).stageIds)
+        return st.getStageInfo(last_stage).numTasks
+
+    def test_events_to_ts_runs_on_every_slot(self, spark):
+        """On the sf0.1 events table (perfbench's byte-for-byte copy) the
+        shuffle is ~2 MB, which AQE's default 1 MB coalescing floor packed
+        onto 2 tasks.  Both session kinds the engine runs on put the
+        stage on defaultParallelism tasks: a session of the get_spark
+        context (its confs, its own temp views), and a vanilla session
+        once load_tables has set the shared confs."""
+        import pathlib
+
+        from tslearn_spark.session import _sql_confs
+
+        sf01 = str(pathlib.Path(__file__).resolve().parents[1]
+                   / "perfbench" / "data")
+        if not pathlib.Path(sf01, "events.parquet").exists():
+            pytest.skip("sf0.1 events copy absent")
+        slots = spark.sparkContext.defaultParallelism
+        built = spark.newSession()
+        assert self._post_shuffle_tasks(built, sf01, "width_built") == slots
+
+        vanilla = spark.newSession()
+        for key, _ in _sql_confs():
+            vanilla.conf.unset(key)
+        assert vanilla.conf.get("spark.sql.shuffle.partitions") == "200"
+        assert self._post_shuffle_tasks(vanilla, sf01,
+                                        "width_vanilla") == slots
+        for session in (spark, built, vanilla):
+            for key, val in _sql_confs():
+                assert session.conf.get(key) == val, key

@@ -418,6 +418,34 @@ class TestEarlyClassification:
         assert p1.max() > 0.99  # hard assignment at high lambda
 
 
+class TestStackSeries:
+    def test_matches_per_element_conversion(self):
+        """early_classification._stack_series equals the per-element
+        Python conversion it replaced, on Arrow-converted columns (NaN,
+        +-inf, d=1 and d=2, one series; all-empty has size 0)."""
+        import pyarrow as pa
+
+        from tslearn_spark.early_classification import _stack_series
+
+        rs = np.random.RandomState(7)
+        typ = pa.list_(pa.list_(pa.float64()))
+        for m, sz, d in ((5, 12, 1), (3, 4, 2), (1, 1, 1)):
+            X = rs.randn(m, sz, d)
+            X[0, 0, 0] = np.nan
+            X[-1, -1, -1] = np.inf
+            X[0, -1, 0] = -np.inf
+            col = pa.array(X.tolist(), type=typ).to_pandas()
+            old = np.asarray([[list(map(float, ts)) for ts in v]
+                              for v in col], dtype=np.float64)
+            got = _stack_series(col)
+            assert got.dtype == np.float64 and got.shape == old.shape
+            assert got.tobytes() == old.tobytes()
+        assert _stack_series(pa.array([[], []], type=typ).to_pandas()).size == 0
+        with pytest.raises(ValueError):
+            _stack_series(pa.array([[[1.0]], [[1.0], [2.0]]], type=typ)
+                          .to_pandas())
+
+
 class TestLoadTablesMemo:
     def test_memo_and_sf_switch(self, spark):
         """Table handles are memoized per (session, sf_dir); switching

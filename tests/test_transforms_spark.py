@@ -48,6 +48,112 @@ class TestScalers:
         np.testing.assert_allclose(out, [[0, 0], [0.5, 0.5], [1, 1]])
 
 
+def _fold_scaled(X, mu, std, lo, hi):
+    """Sequential-fold reference for both scalers on one (sz, d) series:
+    per dim, left folds over the non-NaN values in timestamp order (the
+    association of Spark's ``aggregate``), numpy's nan* semantics (a
+    dim with no non-NaN value has NaN statistics), and the same
+    per-value arithmetic as the expressions."""
+    z = np.empty_like(X)
+    m = np.empty_like(X)
+    for d in range(X.shape[1]):
+        dv = [x for x in X[:, d] if not np.isnan(x)]
+        with np.errstate(all="ignore"):  # inf and NaN are inputs here
+            if dv:
+                s = ss = 0.0
+                for x in dv:
+                    s = s + x
+                    ss = ss + x * x
+                mean = s / len(dv)
+                var = ss / len(dv) - mean * mean
+                sd = np.sqrt(var if np.isnan(var) or var > 0.0 else 0.0)
+                sd = 1.0 if sd == 0.0 else sd
+                mn = min(dv)
+                rng = max(dv) - mn
+                rng = 1.0 if rng == 0.0 else rng
+            else:
+                mean = sd = mn = rng = np.nan
+            z[:, d] = mu + (std * (X[:, d] - mean)) / sd
+            m[:, d] = lo + ((hi - lo) * (X[:, d] - mn)) / rng
+    return z, m
+
+
+def _assert_bitwise(got, exp):
+    assert got.shape == exp.shape
+    nan = np.isnan(exp)
+    assert (np.isnan(got) == nan).all()
+    assert got[~nan].tobytes() == exp[~nan].tobytes()
+
+
+class TestScalerTierAgreement:
+    """The Spark SQL scalers against a numpy sequential-fold reference,
+    bitwise, on seeded random series plus adversarial ones."""
+
+    @staticmethod
+    def _series():
+        rs = np.random.RandomState(20261020)
+        out = [rs.randn(rs.randint(2, 40), rs.randint(1, 4)) * 10 ** rs.randint(-3, 4)
+               for _ in range(40)]
+        nan_mix = rs.randn(30, 2)
+        nan_mix[rs.rand(30, 2) < 0.3] = np.nan
+        nan_chan = rs.randn(12, 3)
+        nan_chan[:, 1] = np.nan  # an all-NaN channel among finite ones
+        return out + [
+            nan_mix,
+            nan_chan,
+            np.array([[1.0, -np.inf], [np.inf, 2.0], [3.0, 4.0]]),   # +-inf
+            np.array([[np.inf], [np.inf]]),                         # inf - inf
+            np.full((9, 2), 7.25),                                  # constant
+            np.array([[3.5, -1.0]]),                                # length 1
+            np.array([[np.nan], [np.nan]]),                         # length 0
+            np.array([[np.nan, 1.0], [np.nan, 2.0]]),               # NaN dim 0
+            np.array([[1e300], [-1e300], [1e300]]),                 # x*x -> inf
+        ]
+
+    @pytest.mark.parametrize("mu,std,lo,hi", [(0.0, 1.0, 0.0, 1.0),
+                                              (0.25, 3.0, -1.0, 2.0)])
+    def test_bitwise_vs_fold(self, spark, mu, std, lo, hi):
+        df = DS.dataset_to_df(spark, self._series())
+        out = (df.withColumn("z", P.scaler_mean_variance("values", mu, std))
+               .withColumn("m", P.scaler_min_max("values", (lo, hi)))
+               .select("series_id", "values", "z", "m")
+               .orderBy("series_id").collect())
+        assert len(out) == 49
+        assert sum(len(r["values"]) == 0 for r in out) == 1
+        for r in out:
+            X = np.asarray(r["values"], dtype=np.float64)
+            if X.size == 0:
+                assert r["z"] == [] and r["m"] == []
+                continue
+            z, m = _fold_scaled(X, mu, std, lo, hi)
+            _assert_bitwise(np.asarray(r["z"], dtype=np.float64), z)
+            _assert_bitwise(np.asarray(r["m"], dtype=np.float64), m)
+
+    def test_empty_series_and_nan_channel_do_not_raise(self, spark):
+        """Spark's default ANSI mode raises on an out-of-bounds array
+        index or a zero divisor: a 0-timestamp series maps to an empty
+        series and an all-NaN channel to a NaN channel through every
+        per-series transform."""
+        df = DS.dataset_to_df(spark, [[np.nan, np.nan],
+                                      np.array([[1.0, np.nan], [2.0, np.nan],
+                                                [4.0, np.nan]])])
+        sax = PW.SAX(n_segments=1, alphabet_size_avg=3).fit(df)
+        outs = {
+            "z": P.transform_mean_variance(df, out_col="o"),
+            "mm": P.transform_min_max(df, out_col="o"),
+            "rs1": P.resample(df, 1, out_col="o"),
+            "rs3": P.resample(df, 3, out_col="o"),
+            "paa": PW.transform_paa(df, 1, out_col="o"),
+            "sax": sax.transform(df, out_col="o"),
+        }
+        for name, got in outs.items():
+            empty, chan = arrays(got, "o")
+            assert empty.size == 0, name
+            if name != "sax":
+                assert np.isnan(chan[:, 1]).all(), name
+                assert not np.isnan(chan[:, 0]).any(), name
+
+
 class TestResampler:
     def test_golden(self, spark):
         # preprocessing.py:26-31

@@ -56,6 +56,16 @@ def _dense_by_id(tab):
     return T, np.asarray(tab.column("_y").to_pylist())[order]
 
 
+def _stack_series(values) -> np.ndarray:
+    """A pandas column of equal-length series (Arrow-converted: each an
+    array of per-timestamp arrays) as one dense ``(m, sz, d)`` float64
+    array, built by ``np.stack`` (no per-element Python).  Series of 0
+    timestamps stack as ``(0, 0)``, so an all-empty column has size 0;
+    mixed lengths raise ``ValueError``."""
+    return np.stack([np.stack(v) if len(v) else np.empty((0, 0))
+                     for v in values])
+
+
 def _make_stopper(centers, pyck, pyhatyck, sz, d, min_t, lamb, alpha, k):
     """Self-contained stopping-time function from the small model arrays
     (early_classification.py:213-359) — safe to ship in a UDF closure."""
@@ -258,9 +268,7 @@ class NonMyopicEarlyClassifier(BaseModelPackage, TimeSeriesBaseEstimator):
                     counts: dict = {}
                     for lo in range(0, len(pdf), chunk):
                         sub = pdf.iloc[lo:lo + chunk]
-                        Q = np.asarray(
-                            [[list(map(float, ts)) for ts in v]
-                             for v in sub["values"]], dtype=np.float64)
+                        Q = _stack_series(sub["values"])
                         if Q.size == 0:
                             continue
                         # (m, n_t, sz): per-position squared distance
@@ -354,9 +362,7 @@ class NonMyopicEarlyClassifier(BaseModelPackage, TimeSeriesBaseEstimator):
             if len(c_pdf) == 0:
                 continue
             c_pdf = c_pdf.sort_values("series_id").reset_index(drop=True)
-            T = np.asarray(
-                [[list(map(float, ts)) for ts in v]
-                 for v in c_pdf["values"]], dtype=np.float64)
+            T = _stack_series(c_pdf["values"])
             tids = c_pdf["series_id"].to_numpy(dtype=np.int64)
             yh_idx = np.searchsorted(
                 classes_b, np.asarray(list(c_pdf["_y"])))
@@ -372,9 +378,7 @@ class NonMyopicEarlyClassifier(BaseModelPackage, TimeSeriesBaseEstimator):
                     outs = []
                     for lo in range(0, len(pdf), chunk):
                         sub = pdf.iloc[lo:lo + chunk]
-                        Q = np.asarray(
-                            [[list(map(float, ts)) for ts in v]
-                             for v in sub["values"]], dtype=np.float64)
+                        Q = _stack_series(sub["values"])
                         if Q.size == 0:
                             continue
                         m = Q.shape[0]

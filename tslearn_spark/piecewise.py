@@ -20,8 +20,7 @@ from pyspark.sql import functions as F
 
 from tslearn_spark.stats import sax_bin_medians, sax_breakpoints
 from tslearn_spark.bases import BaseModelPackage, TimeSeriesBaseEstimator
-
-_NDIMS = "size({v}[0])"
+from tslearn_spark.preprocessing import per_series
 
 
 def _lit_array(vals) -> str:
@@ -38,13 +37,11 @@ def paa_col(values_col: str = "values", n_segments: int = 1) -> Column:
     seg_sz = ts_size // n_segments; the tail remainder is dropped
     (piecewise.py:147-153).  slice() is 1-indexed in Spark SQL.  The
     source is let-bound (evaluated once per row) so chaining after a
-    scaler does not re-evaluate the scaler per segment.
+    scaler does not re-evaluate the scaler per segment.  An empty series
+    maps to an empty series.
     """
-    v = values_col
     n = n_segments
-    return F.expr(
-        f"""
-        transform(array({v}), src ->
+    return F.expr(per_series(values_col, f"""
           transform(sequence(0, {n - 1}), s ->
             transform(sequence(0, size(src[0]) - 1), d ->
               aggregate(
@@ -53,9 +50,7 @@ def paa_col(values_col: str = "values", n_segments: int = 1) -> Column:
               ) / (size(src) div {n})
             )
           )
-        )[0]
-        """
-    )
+        """))
 
 
 def paa_inverse_col(paa_col_name: str, original_size: int) -> Column:
@@ -525,14 +520,12 @@ class OneDSAX(SAX):
         """Per-segment per-dim OLS slope over absolute t (cyslopes).
 
         slope = (sum(t*x) - sum(t)*sum(x)/n) / (sum(t^2) - sum(t)^2/n)
-        computed over t in [s*seg, s*seg+seg).
+        computed over t in [s*seg, s*seg+seg).  An empty series maps to
+        an empty series.
         """
-        v = values_col
         n = self.n_segments
         seg = "(size(src) div " + str(n) + ")"
-        return F.expr(
-            f"""
-            transform(array({v}), src ->
+        return F.expr(per_series(values_col, f"""
               transform(sequence(0, {n - 1}), s ->
                 transform(sequence(0, size(src[0]) - 1), d ->
                   (
@@ -550,9 +543,7 @@ class OneDSAX(SAX):
                   )
                 )
               )
-            )[0]
-            """
-        )
+            """))
 
     def transform(self, df: DataFrame, values_col: str = "values",
                   out_col: str = "sax1d") -> DataFrame:

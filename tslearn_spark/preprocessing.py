@@ -13,11 +13,21 @@ naively referencing per-series stats inside a per-element lambda
 re-evaluates the whole stats aggregate once *per element* — and chained
 transforms (scale -> PAA -> SAX) compound multiplicatively.  Every
 expression here therefore **let-binds** shared subexpressions via the
-``transform(array(<expr>), x -> ...)[0]`` idiom: the bound value is
-evaluated exactly once per row no matter how the projection collapses.
+``transform(array(<expr>), x -> ...)[0]`` idiom (``_let``): the bound
+value is evaluated exactly once per row no matter how the projection
+collapses.  That covers the source series (``per_series``) and the
+scalers' per-dim constants: the mean and guarded std, or the min and
+guarded range, are bound once per row, so each value costs two array
+reads and the affine arithmetic (higher-order functions are interpreted
+per value; the guards and ``sqrt`` run once per dim).  Every let is a
+level of lambda nesting the analyzer resolves on each new DataFrame, so
+the expressions bind as few as they need.
 
 All stats are NaN-aware like the reference (numpy nanmean/nanstd/nanmin):
-NaN values are excluded from the statistics and pass through unscaled.
+NaN values are excluded from the statistics and pass through unscaled;
+a channel with no non-NaN value gets NaN statistics, as numpy's do.  An
+empty series (0 timestamps, which is what ``dataset_to_df`` makes of an
+all-NaN input) maps to an empty series.
 """
 
 from __future__ import annotations
@@ -26,57 +36,62 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from tslearn_spark.bases import TimeSeriesBaseEstimator
 
-_NDIMS = "size({v}[0])"
+_NAN = "CAST('NaN' AS DOUBLE)"
 
 
-def _stats_expr(v: str) -> str:
-    """Per-dim struct(mean, var, mn, mx), each aggregate evaluated once.
+def _let(var: str, value: str, body: str) -> str:
+    """SQL for ``body`` with lambda variable ``var`` bound to ``value``,
+    which is evaluated once per row (module docstring)."""
+    return f"transform(array({value}), {var} -> {body})[0]"
 
-    Population variance (numpy nanstd default, preprocessing.py:276-281).
-    """
-    ndims = _NDIMS.format(v=v)
-    return f"""
-      transform(sequence(0, {ndims} - 1), d ->
-        transform(array(filter(transform({v}, r -> r[d]), x -> NOT isnan(x))), dv ->
-          transform(array(named_struct(
-              's',  aggregate(dv, 0.0D, (a, x) -> a + x),
-              'ss', aggregate(dv, 0.0D, (a, x) -> a + x * x),
-              'n',  cast(size(dv) as double),
-              'mn', array_min(dv),
-              'mx', array_max(dv))), t ->
-            named_struct(
-              'mean', t.s / t.n,
-              'var',  t.ss / t.n - (t.s / t.n) * (t.s / t.n),
-              'mn',   t.mn,
-              'mx',   t.mx)
-          )[0]
-        )[0]
-      )
-    """
+
+def per_series(values_col: str, body: str) -> str:
+    """SQL for ``body`` over ``src``, the let-bound series
+    ``values_col``.  An empty series maps to itself, so ``body`` may read
+    ``src[0]`` (ANSI mode raises on an out-of-bounds index) and must
+    return the series' own type."""
+    return _let("src", values_col,
+                f"CASE WHEN size(src) = 0 THEN src ELSE {body} END")
+
+
+def _per_dim(consts: str) -> str:
+    """SQL for one ``consts`` value per dim of the non-empty series
+    ``src``: ``consts`` reads ``dv``, the dim's non-NaN values."""
+    return ("transform(sequence(0, size(src[0]) - 1), d -> "
+            + _let("dv", "filter(transform(src, r -> r[d]), x -> NOT isnan(x))",
+                   consts)
+            + ")")
+
+
+def _affine_scaler(values_col: str, shift_scale: str, base: float,
+                   gain: float) -> Column:
+    """``base + (gain * (x - k[d][0])) / k[d][1]`` for every value ``x``
+    of dim ``d``, where ``k[d]`` is ``shift_scale``, a two-element array
+    from the dim's non-NaN values ``dv`` (at least one; a dim with none
+    gets NaNs).  ``k`` is bound once per row."""
+    consts = _per_dim(
+        f"CASE WHEN size(dv) = 0 THEN array({_NAN}, {_NAN})"
+        f" ELSE {shift_scale} END")
+    return F.expr(per_series(values_col, _let(
+        "k", consts,
+        f"transform(src, row -> transform(row, (x, d) ->"
+        f" {base}D + ({gain}D * (x - k[d][0])) / k[d][1]))")))
 
 
 def scaler_mean_variance(values_col: str = "values", mu: float = 0.0, std: float = 1.0) -> Column:
     """z-normalize each series per dim to mean ``mu`` / std ``std``.
 
     Reference: TimeSeriesScalerMeanVariance (preprocessing.py:204-298);
-    zero std -> 1 guard at preprocessing.py:281.  Stats are let-bound:
-    one evaluation per row regardless of series length.
+    population variance (numpy nanstd default, preprocessing.py:276-281)
+    and the zero std -> 1 guard at preprocessing.py:281.
     """
-    v = values_col
-    return F.expr(
-        f"""
-        transform(array({_stats_expr(v)}), st ->
-          transform({v}, row ->
-            transform(row, (x, d) ->
-              transform(array(CASE WHEN sqrt(greatest(st[d].var, 0.0D)) = 0.0D THEN 1.0D
-                                   ELSE sqrt(greatest(st[d].var, 0.0D)) END), sd ->
-                {mu}D + ({std}D * (x - st[d].mean)) / sd
-              )[0]
-            )
-          )
-        )[0]
-        """
-    )
+    # t = (mean, mean of squares); the guard repeats sqrt once per dim
+    sd = "sqrt(greatest(t[1] - t[0] * t[0], 0.0D))"
+    mean_sd = _let(
+        "t", "array(aggregate(dv, 0.0D, (a, x) -> a + x) / size(dv),"
+             " aggregate(dv, 0.0D, (a, x) -> a + x * x) / size(dv))",
+        f"array(t[0], CASE WHEN {sd} = 0.0D THEN 1.0D ELSE {sd} END)")
+    return _affine_scaler(values_col, mean_sd, mu, std)
 
 
 def scaler_min_max(values_col: str = "values",
@@ -87,20 +102,11 @@ def scaler_min_max(values_col: str = "values",
     range -> 1 guard.
     """
     lo, hi = value_range
-    v = values_col
-    return F.expr(
-        f"""
-        transform(array({_stats_expr(v)}), st ->
-          transform({v}, row ->
-            transform(row, (x, d) ->
-              {lo}D + ({hi - lo}D * (x - st[d].mn))
-                    / (CASE WHEN st[d].mx - st[d].mn = 0.0D THEN 1.0D
-                            ELSE st[d].mx - st[d].mn END)
-            )
-          )
-        )[0]
-        """
-    )
+    min_range = _let(
+        "t", "array(array_min(dv), array_max(dv))",
+        "array(t[0], CASE WHEN t[1] - t[0] = 0.0D THEN 1.0D"
+        " ELSE t[1] - t[0] END)")
+    return _affine_scaler(values_col, min_range, lo, hi - lo)
 
 
 def transform_mean_variance(df: DataFrame, values_col: str = "values", mu: float = 0.0,
@@ -125,21 +131,13 @@ def resample(df: DataFrame, sz: int, values_col: str = "values",
     The source array is let-bound so chained upstream transforms are
     evaluated once, not once per output point.
     """
-    v = values_col
     out = out_col or values_col
     if sz == 1:
-        expr = f"""
-          transform(array({v}), src ->
-            array(transform(sequence(0, size(src[0]) - 1), d ->
-              transform(array(filter(transform(src, r -> r[d]), x -> NOT isnan(x))), dv ->
-                aggregate(dv, 0.0D, (a, x) -> a + x) / size(dv)
-              )[0]
-            ))
-          )[0]
-        """
+        body = "array(" + _per_dim(
+            f"CASE WHEN size(dv) = 0 THEN {_NAN}"
+            " ELSE aggregate(dv, 0.0D, (a, x) -> a + x) / size(dv) END") + ")"
     else:
-        expr = f"""
-          transform(array({v}), src ->
+        body = f"""
             transform(sequence(0, {sz - 1}), i ->
               transform(sequence(0, size(src[0]) - 1), d ->
                 transform(array(i * (size(src) - 1) / {sz - 1.0}D), p ->
@@ -150,8 +148,8 @@ def resample(df: DataFrame, sz: int, values_col: str = "values",
                 )[0]
               )
             )
-          )[0]
         """
+    expr = per_series(values_col, body)
     return df.withColumn(out, F.expr(expr))
 
 

@@ -3,7 +3,22 @@
 Local testing runs on ``local[N]``; the configs below are the ones that
 matter at cluster scale too: AQE for runtime re-planning/skew handling,
 Arrow for the pandas-UDF kernel path, and a shuffle-partition count sized
-to the input rather than the 200 default.
+to the input rather than the 200 default.  Both session kinds the engine
+runs on get the same SQL confs from one table, ``_sql_confs()``:
+``get_spark`` sets them when it creates the session, and ``load_tables``
+sets them at runtime on a session the engine did not create (a
+harness's own vanilla ``SparkSession``).
+
+Post-shuffle width policy: a post-shuffle stage runs on every slot.
+AQE coalesces shuffle partitions towards ``bytes / defaultParallelism``
+each, but never below ``coalescePartitions.minPartitionSize``, whose
+1 MB default is sized for stages whose cost follows their bytes.  The
+engine's per-series stages do not: ``events_to_ts``'s sf0.1 shuffle is
+2.1 MB, so the default floor coalesced it onto 2 of 4 slots, and the
+scaler, PAA and SAX expressions that run in that stage (interpreted
+higher-order functions, most of ``ts_scale``'s ~0.4 s of executor CPU)
+left half the slots idle.  A 64 KB floor lets the stage take every slot
+while a tiny shuffle still coalesces to one task.
 
 Sessions from ``get_spark`` also run their Python workers under the
 engine's daemon, ``tslearn_spark._daemon``.  With the stock daemon, every
@@ -53,7 +68,43 @@ TPCH_TABLES = (
 )
 
 
-def get_spark(app_name: str = "tslearn_spark", shuffle_partitions: int | None = None) -> SparkSession:
+def _sql_confs() -> tuple[tuple[str, str], ...]:
+    """The SQL confs of every session the engine runs on (all dynamic,
+    scoped to one session): ``get_spark`` builds with them and
+    ``load_tables`` sets them on sessions it did not build."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return (
+        # a vanilla session runs 200 shuffle partitions — at local[32] on
+        # sf-scale data that is pure scheduling overhead (iterative ops
+        # like kshape pay it per round)
+        ("spark.sql.shuffle.partitions", cpus if cpus.isdigit() else "32"),
+        ("spark.sql.adaptive.enabled", "true"),
+        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+        # post-shuffle stages on every slot (module docstring)
+        ("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+         str(64 * 1024)),
+        ("spark.sql.adaptive.skewJoin.enabled", "true"),
+        # Arrow keeps the pandas-UDF kernel path batched, not pickled
+        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+        ("spark.sql.execution.arrow.maxRecordsPerBatch", "2048"),
+        # the test data's parquet stores TIMESTAMP(NANOS); Spark has no
+        # nanos timestamp type — read as long and convert in load_tables
+        # (DuckDB likewise truncates ns -> us on read, so both engines
+        # see identical microsecond values)
+        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+        # InferFiltersFromGenerate synthesizes size(child)>0 filters under
+        # every explode; predicate pushdown then drags the generator's
+        # child expression below size_tasks' round-robin repartition, so
+        # md5/regex/HOF tokenization chains run TWICE — once single-task
+        # on the scan side.  Generate already skips empty arrays; the
+        # filter buys nothing for this engine's operators (measured 12x
+        # on the shingle explode: 5.0s -> 0.4s at sf0.1).
+        ("spark.sql.optimizer.excludedRules",
+         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"),
+    )
+
+
+def get_spark(app_name: str = "tslearn_spark") -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
     Scale notes: every config here is what we would set on a 1000-executor
@@ -74,37 +125,19 @@ def get_spark(app_name: str = "tslearn_spark", shuffle_partitions: int | None = 
     rather than falling back to the per-pair reference.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+    builder = SparkSession.builder.appName(app_name)
+    for key, val in _sql_confs():
+        builder = builder.config(key, val)
+    # static confs and the session owner's choices (time zone, broadcast
+    # threshold): only a session the engine builds gets these
     builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        builder
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # workers skip re-reading unchanged zip archives before each task
         .config("spark.python.daemon.module", "tslearn_spark._daemon")
-        # driver testdata parquet stores TIMESTAMP(NANOS); Spark has no
-        # nanos timestamp type — read as long and convert in load_tables
-        # (DuckDB likewise truncates ns -> us on read, so both engines
-        # see identical microsecond values)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # InferFiltersFromGenerate synthesizes size(child)>0 filters under
-        # every explode; predicate pushdown then drags the generator's
-        # child expression below size_tasks' round-robin repartition, so
-        # md5/regex/HOF tokenization chains run TWICE — once single-task
-        # on the scan side.  Generate already skips empty arrays; the
-        # filter buys nothing for this engine's operators (measured 12x
-        # on the shingle explode: 5.0s -> 0.4s at sf0.1).
-        .config("spark.sql.optimizer.excludedRules",
-                "org.apache.spark.sql.catalyst.optimizer."
-                "InferFiltersFromGenerate")
     )
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     spark = builder.master(master).getOrCreate()
@@ -392,36 +425,14 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
                     pass
             return out
 
-    # The driver harness passes its OWN SparkSession (not get_spark()'s), so
-    # set the nanos conf here too — events.parquet stores TIMESTAMP(NANOS)
-    # which Spark can't read natively. This is a dynamic SQL conf in
-    # PySpark 4.x, safe to set at runtime on any session.
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # immutable on some builds; get_spark() sessions already have it
-
-    # Performance confs for harness-owned sessions (all dynamic SQL confs,
-    # scoped to this session, semantics-neutral).  A vanilla session runs
-    # 200 shuffle partitions — at local[32] on sf-scale data that is pure
-    # scheduling overhead (iterative ops like kshape pay it per round);
-    # Arrow keeps the pandas-UDF kernel path batched instead of pickled.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    for key, val in (
-        ("spark.sql.shuffle.partitions", cpus if cpus.isdigit() else "32"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.execution.arrow.maxRecordsPerBatch", "2048"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        # see get_spark: the inferred size()>0 filter under explode drags
-        # heavy tokenization chains below size_tasks' repartition
-        ("spark.sql.optimizer.excludedRules",
-         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"),
-    ):
+    # A harness may pass its OWN SparkSession (not get_spark()'s): give
+    # it the engine's SQL confs too.  nanosAsLong among them is what
+    # lets events.parquet's TIMESTAMP(NANOS) be read at all.
+    for key, val in _sql_confs():
         try:
             spark.conf.set(key, val)
         except Exception:
-            pass
+            pass  # immutable on some builds; get_spark() sessions have it
 
     out: dict[str, DataFrame] = {}
     errors: dict[str, Exception] = {}
