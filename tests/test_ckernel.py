@@ -534,3 +534,55 @@ def test_property_knn_tiers_agree(seed, n_q, n_t, k, radius, drop_self, d,
 def test_property_knn_tiers_agree_deep(seed, n_q, n_t, k, radius, drop_self,
                                        d, hi, quantized):
     _check_knn_tiers(seed, n_q, n_t, k, radius, drop_self, d, hi, quantized)
+
+
+# ---------------------------------------------------------------------------
+# non-finite and overflowing input: both entry points return the
+# reference's value, any NaN equal to any NaN
+# ---------------------------------------------------------------------------
+
+# NaN, +-inf, and magnitudes whose squares (or row sums) overflow
+_EXTREME = [np.nan, np.inf, -np.inf, 1e154, -3e155, 1e200, 1e308, -1e308,
+            2.5e153, 0.0]
+
+
+def _same_or_both_nan(a, b):
+    both_nan = np.isnan(a) & np.isnan(b)
+    return a.shape == b.shape and np.array_equal(
+        a[~both_nan].view(np.int64), b[~both_nan].view(np.int64))
+
+
+def _extreme_series(rs, n, d, hi):
+    out = []
+    for _ in range(n):
+        x = rs.randn(rs.randint(1, hi + 1), d)
+        for _ in range(rs.randint(0, 4)):
+            x[rs.randint(len(x)), rs.randint(d)] = \
+                _EXTREME[rs.randint(len(_EXTREME))]
+        out.append(x[:, 0].copy() if d == 1 and rs.rand() < 0.5 else x)
+    return out
+
+
+@hyp_settings(max_examples=60, deadline=None, derandomize=True)
+@given(seed=st.integers(0, 2**31 - 1), d=st.sampled_from([1, 2, 3]),
+       radius=st.sampled_from([None, 0, 1, 3, 2000]),
+       hi=st.integers(1, 12), k=st.integers(1, 6),
+       drop_self=st.booleans())
+def test_property_non_finite_input_matches_reference(seed, d, radius, hi, k,
+                                                     drop_self):
+    """NaN, +-inf and values >= 1e154 (length-1 series included, radius
+    0, None and past both lengths): dtw_batch returns the reference's
+    value per pair, and the fused top-k the reference tier's rows."""
+    import warnings
+
+    rs = np.random.RandomState(seed)
+    aa, bb = _extreme_series(rs, 24, d, hi), _extreme_series(rs, 24, d, hi)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        c = ck.dtw_batch(aa, bb, radius)
+        base = _reference_path(K.dtw_banded_batch_mixed, aa, bb, radius)
+        assert _same_or_both_nan(c, base)
+        qid = np.arange(6, dtype=np.int64)
+        tid = np.arange(3, 3 + len(bb), dtype=np.int64)
+        c, n = _knn_both(aa[:6], qid, bb, tid, radius, k, drop_self)
+    _assert_same_rows(c, n)

@@ -954,3 +954,24 @@ class TestRaggedSeries:
         assert len({pred[i] for i in range(4)}) == 1
         assert len({pred[i] for i in range(4, 8)}) == 1
         assert pred[0] != pred[4]
+
+
+@pytest.mark.parametrize("d", [1, 2, 3])
+def test_to_arr_matches_the_nested_decoder(d):
+    """metrics._to_arr, the engine's one series decoder, returns exactly
+    the array of the per-row nested decoder it replaced, for series as
+    Arrow hands them to pandas (object arrays of rows) and as plain
+    lists: NaN and +-inf values, length 1 and length 0 included."""
+    import pyarrow as pa
+
+    rs = np.random.RandomState(d)
+    series = [rs.randn(sz, d).tolist() for sz in (1, 5, 17)] + [[]]
+    series[1][2][0] = float("nan")
+    series[2][0][d - 1] = float("inf")
+    series[2][3][0] = float("-inf")
+    arrow = pa.array(series, type=pa.list_(pa.list_(pa.float64())))
+    for v in list(arrow.to_pandas()) + series:
+        want = np.asarray([np.asarray(r, dtype=np.float64) for r in v])
+        got = M._to_arr(v)
+        assert got.dtype == want.dtype and got.shape == want.shape
+        assert np.array_equal(got.view(np.int64), want.view(np.int64))

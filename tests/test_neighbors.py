@@ -3,7 +3,7 @@
 On the broadcast-DTW path each task ranks and reduces its queries'
 top-k rows itself (neighbors._vote / _weighted_mean); every other path
 ranks in a window and votes in SQL.  Forcing the train set past the
-broadcast budget (``_DTW_BROADCAST_LIMIT_VALUES = 0``) sends the same
+broadcast budget (``session.BROADCAST_LIMIT_VALUES = 0``) sends the same
 call down the pair join and the SQL vote, so the two reducers can be
 compared on one input.
 """
@@ -14,6 +14,7 @@ import numpy as np
 import pytest
 
 import tslearn_spark.neighbors as N
+import tslearn_spark.session as S
 
 SCHEMA = "series_id long, values array<array<double>>, label {}, y double"
 
@@ -59,7 +60,7 @@ def _both(monkeypatch, fn, *args, **kw):
         .toString()
     got = sorted(map(tuple, fused.collect()))
     with monkeypatch.context() as m:
-        m.setattr(N, "_DTW_BROADCAST_LIMIT_VALUES", 0)
+        m.setattr(S, "BROADCAST_LIMIT_VALUES", 0)
         sql = fn(*args, **kw)
         assert sql.schema.simpleString() == fused.schema.simpleString()
         want = sorted(map(tuple, sql.collect()))

@@ -131,9 +131,10 @@ class TestBroadcastShapes:
         """Past the broadcast values budget the euclidean path must use
         the generic distributed pair join, not a driver collect."""
         import tslearn_spark.neighbors as N
+        import tslearn_spark.session as S
 
         df = series_df(spark, n=10, sz=16)
-        monkeypatch.setattr(N, "_EUCLIDEAN_BROADCAST_LIMIT_VALUES", 10)
+        monkeypatch.setattr(S, "BROADCAST_LIMIT_VALUES", 10)
         nn = N.kneighbors(df, df, k=2, metric="euclidean", drop_self=True)
         plan = plan_of(nn)
         # generic path: no MapInPandas partial-top-k stage (that is the

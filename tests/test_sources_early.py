@@ -331,7 +331,7 @@ class TestEarlyClassification:
         BIT-IDENTICAL to the broadcast plan's — the per-pair cumsum
         arithmetic is chunk-invariant and the struct-min merge replays
         the (cum asc, tid asc) argmin tie order."""
-        import tslearn_spark.early_classification as EC
+        import tslearn_spark.session as S
         from tslearn_spark.early_classification import NonMyopicEarlyClassifier
 
         data = [
@@ -351,7 +351,7 @@ class TestEarlyClassification:
         assert ref._conf_plan_ == "broadcast"
         # 10 series * 6 positions * 1 dim = 60 values; budget 12 forces
         # the ~5-row classifier half into >= 2 chunks
-        monkeypatch.setattr(EC, "_CLF_BROADCAST_LIMIT_VALUES", 12)
+        monkeypatch.setattr(S, "BROADCAST_LIMIT_VALUES", 12)
         alt = NonMyopicEarlyClassifier(
             n_clusters=3, lamb=1000.0, cost_time_parameter=0.1,
             random_state=0).fit(df)

@@ -176,6 +176,31 @@ class TestResampler:
 class TestPAASAX:
     FIX = [[-1, 2, 0.1, -1, 1, -1], [1.0, 3.2, -1.0, -3.0, 1.0, -1.0]]
 
+    def test_series_shorter_than_n_segments(self, spark):
+        """Under ANSI a zero segment size must not raise DIVIDE_BY_ZERO.
+        A series shorter than n_segments has empty segments: NaN means
+        (numpy's empty-slice mean), so SAX gives the top symbol (NaN
+        falls below no breakpoint) and 1d-SAX NaN slopes; one-point
+        segments get slope 0."""
+        df = DS.dataset_to_df(spark, [[1.0, 2.0], [1.0, 2.0, 4.0, 3.0],
+                                      [1.0, 2.0, 3.0, 4.0, 5.0, 6.0]])
+        short, four, six = arrays(PW.transform_paa(df, 3), "paa")
+        assert short.shape == (3, 1) and np.isnan(short).all()
+        np.testing.assert_array_equal(four.ravel(), [1.0, 2.0, 4.0])
+        np.testing.assert_array_equal(six.ravel(), [1.5, 3.5, 5.5])
+        sax = PW.SAX(n_segments=3, alphabet_size_avg=4).fit(df)
+        sym = arrays(sax.transform(df, out_col="o"), "o")[0]
+        np.testing.assert_array_equal(sym.ravel(), [3, 3, 3])
+        odsax = PW.OneDSAX(n_segments=3, alphabet_size_avg=4,
+                           alphabet_size_slope=2).fit(df)
+        slopes = arrays(df.select("series_id",
+                                  odsax.slopes_col().alias("s")), "s")
+        assert np.isnan(slopes[0]).all()
+        np.testing.assert_array_equal(slopes[1].ravel(), [0.0, 0.0, 0.0])
+        np.testing.assert_array_equal(slopes[2].ravel(), [1.0, 1.0, 1.0])
+        sym = arrays(odsax.transform(df, out_col="o"), "o")[0]
+        np.testing.assert_array_equal(sym, [[3, 1]] * 3)
+
     def test_paa_golden(self, spark):
         # piecewise.py:77-107
         df = DS.dataset_to_df(spark, self.FIX)

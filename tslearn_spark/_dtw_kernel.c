@@ -37,6 +37,15 @@
  * radius < 0 means unconstrained (full window): wlo/whi are set so
  * cur_lo == 0 and hi == lb-1 on every row.
  *
+ * NaN: the reference's np.minimum and np.minimum.accumulate propagate
+ * it, the hot loop's `up < dg ? up : dg` and `t < m` drop it.  NaN only
+ * arises from a non-finite input value or from an overflow to inf (then
+ * inf - inf), so each pair is checked once (finite_dp, from the pair's
+ * largest |value|): a pair that could produce a NaN runs the
+ * NaN-propagating instance of dtw_core (compile-time flag `nan`), never
+ * abandoned, and returns the reference's value; every other pair runs
+ * the unchanged finite instance.
+ *
  * Both entry points return 0, or -1 when the scratch allocation fails
  * (nothing is written then; the Python side runs the reference).
  */
@@ -80,7 +89,7 @@ cost(const double *A, const double *B, long long i, long long c,
 static inline __attribute__((always_inline)) double
 dtw_core(const double *A, long long la, const double *B, long long lb,
          long long d, long long radius, double cap, double tail,
-         double *prev, double *row)
+         double *prev, double *row, int nan)
 {
     long long wlo, whi, prev_lo = 0, i, k;
     if (la <= 0 || lb <= 0)
@@ -112,10 +121,10 @@ dtw_core(const double *A, long long la, const double *B, long long lb,
             for (k = 0; k <= width; k++) {
                 double dw = cost(A, Bc, i, k, d);
                 double up = pu[k], dg = pu[k - 1];
-                double a = dw + (up < dg ? up : dg);
+                double a = dw + (up < dg || (nan && up != up) ? up : dg);
                 s += dw;
                 double t = a - s;
-                if (t < m) m = t;
+                if (t < m || (nan && t != t)) m = t;
                 double v = s + m;
                 row[k] = v;
                 if (v < rmin) rmin = v;
@@ -123,7 +132,7 @@ dtw_core(const double *A, long long la, const double *B, long long lb,
         }
         if (i + 1 == la)
             return row[lb - 1 - cur_lo];
-        if (rmin + tail > cap)
+        if (!nan && rmin + tail > cap)
             return INFINITY;
         row[width + 1] = INFINITY;
         double *tmp = prev;
@@ -134,13 +143,42 @@ dtw_core(const double *A, long long la, const double *B, long long lb,
     return INFINITY; /* not reached: the last row returns */
 }
 
+/* the larger of a and b, NaN when either is */
+static double nan_max(double a, double b)
+{
+    return a > b || a != a ? a : b;
+}
+
+/* Largest |value| of x, or NaN when x holds a NaN. */
+static double max_abs(const double *x, long long n)
+{
+    double m = 0.0;
+    long long j;
+    for (j = 0; j < n && m == m; j++)
+        m = nan_max(fabs(x[j]), m);
+    return m;
+}
+
+/* Whether no DP value of an (la, lb) pair with largest |value| m can
+ * overflow, so none can be NaN.  A local cost is at most 4 d m^2 (plus
+ * rounding), and every running sum, prefix-minimum term and cell of the
+ * row scan is at most (la + 2 lb + 2) such costs; the test allows twice
+ * that.  False for a NaN or infinite m. */
+static int finite_dp(long long la, long long lb, long long d, double m)
+{
+    return (double) (la + 2 * lb + 2) * 8.0 * (double) d * m * m < DBL_MAX;
+}
+
 static double dtw_pair(const double *A, long long la, const double *B,
                        long long lb, long long d, long long radius,
-                       double cap, double tail, double *prev, double *row)
+                       double cap, double tail, double *prev, double *row,
+                       double m)
 {
+    if (!finite_dp(la, lb, d, m))
+        return dtw_core(A, la, B, lb, d, radius, cap, tail, prev, row, 1);
     if (d == 1)
-        return dtw_core(A, la, B, lb, 1, radius, cap, tail, prev, row);
-    return dtw_core(A, la, B, lb, d, radius, cap, tail, prev, row);
+        return dtw_core(A, la, B, lb, 1, radius, cap, tail, prev, row, 0);
+    return dtw_core(A, la, B, lb, d, radius, cap, tail, prev, row, 0);
 }
 
 /* two DP row buffers of `lanes` + 2 doubles, lane -1 = +inf, plus
@@ -171,21 +209,15 @@ int dtw_batch(const double *bufA, const long long *offA, const long long *lenA,
     buf = dp_scratch(lanes, 0, &prev, &row);
     if (buf == NULL)
         return -1;
-    for (p = 0; p < n; p++)
+    for (p = 0; p < n; p++) {
+        double m = nan_max(max_abs(bufA + offA[p], lenA[p] * d),
+                           max_abs(bufB + offB[p], lenB[p] * d));
         out[p] = sqrt(dtw_pair(bufA + offA[p], lenA[p], bufB + offB[p],
                                lenB[p], d, radius, INFINITY, 0.0,
-                               prev, row));
+                               prev, row, m));
+    }
     free(buf);
     return 0;
-}
-
-static double max_abs(const double *x, long long n)
-{
-    double m = 0.0;
-    long long j;
-    for (j = 0; j < n; j++)
-        if (fabs(x[j]) > m) m = fabs(x[j]);
-    return m;
 }
 
 /* (dist, id) order of the final (dist, id2) window */
@@ -259,13 +291,13 @@ int dtw_knn(const double *bufQ, const long long *offQ, const long long *lenQ,
                 continue;
             const double *B = bufT + offT[j];
             long long lb = lenT[j];
+            double m = nan_max(maxT[j], maxq);
             double cap = cnt < kk ? INFINITY
-                : abandon_cap(td[kk - 1], la, lb, d,
-                              maxT[j] > maxq ? maxT[j] : maxq);
+                : abandon_cap(td[kk - 1], la, lb, d, m);
             double tail = la > 0 && lb > 0 ? cost(A, B, la - 1, lb - 1, d)
                                            : 0.0;
             double dist = sqrt(dtw_pair(A, la, B, lb, d, radius, cap, tail,
-                                        prev, row));
+                                        prev, row, m));
             if (!(dist < INFINITY))
                 continue;
             if (cnt == kk && !ranks_after(td[kk - 1], idT[ti[kk - 1]],

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from tslearn_spark import kernels as K
+from tslearn_spark.metrics import _to_arr
 
 
 # ---------------------------------------------------------------------------
@@ -126,7 +127,7 @@ def _dba_udf(center: np.ndarray, metric_params: dict):
     def _udf(values: pd.Series, weights: pd.Series) -> pd.Series:
         out = []
         for v, w in zip(values, weights):
-            ts = np.asarray([np.asarray(r, dtype=np.float64) for r in v])
+            ts = _to_arr(v)
             path, dist = K.dtw_path(center, ts, **metric_params)
             acc: dict[tuple[int, int], list[float]] = {}
             for (i, j) in path:
@@ -299,9 +300,7 @@ def dtw_barycenter_averaging_subgradient(
     pdf = src.select(
         F.col("series_id"), F.col("values"), F.col(wcol).alias("_w")
     ).orderBy("series_id").toPandas()
-    series = [
-        np.asarray([np.asarray(r, dtype=np.float64) for r in v]) for v in pdf["values"]
-    ]
+    series = [_to_arr(v) for v in pdf["values"]]
     weights = pdf["_w"].to_numpy(dtype=np.float64)
     n = len(series)
     d = series[0].shape[1]
@@ -365,7 +364,7 @@ def _sdtw_value_grad_udf(Z: np.ndarray, gamma: float):
     def _udf(values: pd.Series, weights: pd.Series) -> pd.DataFrame:
         vals, grads = [], []
         for v, w in zip(values, weights):
-            ts = np.asarray([np.asarray(r, dtype=np.float64) for r in v])
+            ts = _to_arr(v)
             val, g = K.soft_dtw_grad(Z, ts, gamma)
             vals.append(w * val)
             grads.append((w * g).tolist())

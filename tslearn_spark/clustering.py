@@ -6,9 +6,18 @@ utils.py:47-197).
 Spark-first structure (SURVEY.md §2.7): the driver holds the k (tiny)
 centroids and the loop control; every Lloyd iteration is
 
-    broadcast centroids -> assignment (metric UDF over a crossJoin with
-    a k-row literal DataFrame, i.e. map-only) -> min_by(cluster, dist)
+    centroids in the UDF closure -> assignment (a map-only pandas UDF:
+    per Arrow batch, every series against the k centers, then argmin)
     -> per-cluster centroid update (barycenter aggregate / applyInPandas)
+
+Every "series vs k centers" score — assignment (k-means and KShape),
+``transform``, the ``dtw_inertia`` re-measure and the driver-side
+k-means++ seeding — goes through ``_center_dists``, one call of the
+engine's pair-scoring dispatch (``metrics.pair_scores``, the one
+``cdist`` uses) per batch: the compiled DTW or the batched soft-DTW for
+the DP metrics, the per-pair kernel loop for euclidean and sbd.  Pairs
+are ``(center, series)``, both trimmed of trailing all-NaN rows
+(``kernels.to_2d``), so the scores are the per-pair kernels' doubles.
 
 The input DataFrame is cached once; nothing larger than (k, sz, d)
 floats ever reaches the driver.
@@ -20,9 +29,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, StructField,
+                               StructType)
 
 from tslearn_spark import kernels as K
+from tslearn_spark import metrics as M
 from tslearn_spark.barycenters import dtw_barycenter_averaging, softdtw_barycenter
 from tslearn_spark.bases import BaseModelPackage, TimeSeriesBaseEstimator
 from tslearn_spark.session import size_tasks
@@ -219,18 +230,21 @@ def _collect_small(df: DataFrame, n: int, seed: int) -> list[np.ndarray]:
     return [sample[i] for i in idx]
 
 
-def _k_init(sample: list[np.ndarray], k: int, rs: np.random.RandomState, dist_fn) -> list[np.ndarray]:
+def _k_init(sample: list[np.ndarray], k: int, rs: np.random.RandomState,
+            dist_to) -> list[np.ndarray]:
     """k-means++ seeding over a driver sample (kmeans.py:50-133).
 
     Mirrors the reference _k_init_metric: first center uniform, each next
     drawn proportionally to squared distance to the closest chosen center,
     with 2 + log(k) greedy local trials keeping the candidate that most
-    reduces total potential.
+    reduces total potential.  ``dist_to(i)``: the distances of every
+    sample series to ``sample[i]``, one batched call.
     """
     n = len(sample)
     n_local_trials = 2 + int(np.log(k))
-    centers = [sample[int(rs.randint(n))]]
-    closest = np.array([float(dist_fn(centers[0], x)) ** 2 for x in sample])
+    first = int(rs.randint(n))
+    centers = [sample[first]]
+    closest = dist_to(first) ** 2
     for _ in range(1, k):
         pot = closest.sum()
         if pot <= 0.0:  # all points coincide with a center: any pick works
@@ -241,8 +255,7 @@ def _k_init(sample: list[np.ndarray], k: int, rs: np.random.RandomState, dist_fn
         np.clip(cand_ids, None, n - 1, out=cand_ids)
         best = None
         for cid in cand_ids:
-            d = np.array([float(dist_fn(sample[cid], x)) ** 2 for x in sample])
-            new_closest = np.minimum(closest, d)
+            new_closest = np.minimum(closest, dist_to(cid) ** 2)
             npot = new_closest.sum()
             if best is None or npot < best[0]:
                 best = (npot, int(cid), new_closest)
@@ -251,27 +264,54 @@ def _k_init(sample: list[np.ndarray], k: int, rs: np.random.RandomState, dist_fn
     return centers
 
 
-def _assign_udf(centers: list[np.ndarray], metric: str, metric_params: dict):
-    """Map-only assignment: per series, distance to each broadcast center."""
-    kernel_factory = __import__("tslearn_spark.metrics", fromlist=["METRIC_PARAMS"]).METRIC_PARAMS
-    kernel = kernel_factory[metric](**metric_params)
+def _series(values) -> list[np.ndarray]:
+    """Arrow-delivered series as the ``(sz, d)`` arrays the kernels see
+    (trailing all-NaN rows trimmed, as the per-pair kernels do)."""
+    return [K.to_2d(M._to_arr(v)) for v in values]
 
+
+def _center_dists(centers, metric: str, params: dict):
+    """Distances of series to k centers through the one pair-scoring
+    dispatch (``metrics.pair_scores``), pairs ordered ``(center,
+    series)``.  Returns ``dists(series, which=None)``: the ``(n, k)``
+    distances of the trimmed ``series`` (``_series``) to every center in
+    one call, or with ``which`` the ``(n,)`` distances of series ``i`` to
+    ``centers[which[i]]``.  Centers are trimmed once, here."""
+    score = M.pair_scores(metric, params)
+    cs = [K.to_2d(c) for c in centers]
+    k = len(cs)
+
+    def dists(series: list, which=None) -> np.ndarray:
+        if which is not None:
+            return score([cs[int(j)] for j in which], series)
+        pairs = score([c for _ in series for c in cs],
+                      [t for t in series for _ in range(k)])
+        return pairs.reshape(len(series), k)
+
+    return dists
+
+
+def _assignments(df: DataFrame, centers, metric: str,
+                 params: dict) -> DataFrame:
+    """Map-only assignment: per series, the nearest broadcast center and
+    its distance.  ``np.argmin`` picks it: the first minimum wins, and a
+    NaN distance wins."""
+    dists = _center_dists(centers, metric, params)
     schema = StructType(
         [StructField("cluster", IntegerType()), StructField("dist", DoubleType())]
     )
 
     @F.pandas_udf(schema)
     def _udf(values: pd.Series) -> pd.DataFrame:
-        cl, ds = [], []
-        for v in values:
-            ts = np.asarray([np.asarray(r, dtype=np.float64) for r in v])
-            dists = [kernel(c, ts) for c in centers]
-            j = int(np.argmin(dists))
-            cl.append(j)
-            ds.append(float(dists[j]))
-        return pd.DataFrame({"cluster": cl, "dist": ds})
+        D = dists(_series(values))
+        j = np.argmin(D, axis=1)
+        return pd.DataFrame({"cluster": j.astype(np.int32),
+                             "dist": D[np.arange(len(j)), j]})
 
-    return _udf
+    return df.withColumn("_a", _udf("values")).select(
+        "series_id", "values", F.col("_a.cluster").alias("cluster"),
+        F.col("_a.dist").alias("dist"),
+    )
 
 
 class _LabelsCompatMixin:
@@ -389,11 +429,7 @@ class TimeSeriesKMeans(_LabelsCompatMixin, BaseModelPackage,
 
     # -- internal ----------------------------------------------------------
     def _assignments(self, df: DataFrame, centers) -> DataFrame:
-        udf = _assign_udf(centers, self.metric, self.metric_params)
-        return df.withColumn("_a", udf("values")).select(
-            "series_id", "values", F.col("_a.cluster").alias("cluster"),
-            F.col("_a.dist").alias("dist"),
-        )
+        return _assignments(df, centers, self.metric, self.metric_params)
 
     def _update_centroids(self, assigned: DataFrame, centers) -> list[np.ndarray]:
         """Metric-matched barycenter per cluster (kmeans.py:544-600).
@@ -555,12 +591,12 @@ class TimeSeriesKMeans(_LabelsCompatMixin, BaseModelPackage,
             )
             return centers
         if self.init == "k-means++":
-            from tslearn_spark import metrics as M
-
             sample = _collect_sample(df, _SEED_SAMPLE_CAP, seed)
-            dist_fn = M.METRIC_PARAMS[self.metric](**self.metric_params)
+            trimmed = [K.to_2d(x) for x in sample]
+            dists = _center_dists(trimmed, self.metric, self.metric_params)
             return _k_init(
-                sample, self.n_clusters, np.random.RandomState(seed), dist_fn
+                sample, self.n_clusters, np.random.RandomState(seed),
+                lambda i: dists(trimmed, np.full(len(trimmed), i)),
             )
         if self.init != "random":
             # reference kmeans.py:656-658
@@ -575,13 +611,11 @@ class TimeSeriesKMeans(_LabelsCompatMixin, BaseModelPackage,
         ASSIGNED center is re-measured with DTW (kmeans.py:698-704) in
         one extra map pass — labels are unchanged."""
         if self.dtw_inertia and self.metric != "dtw":
+            dists = _center_dists(centers, "dtw", {})
+
             @F.pandas_udf(DoubleType())
             def _dtw_to_assigned(values: pd.Series, cluster: pd.Series) -> pd.Series:
-                out = []
-                for v, c in zip(values, cluster):
-                    ts = np.asarray([np.asarray(r, dtype=np.float64) for r in v])
-                    out.append(float(K.dtw(centers[int(c)], ts)))
-                return pd.Series(out)
+                return pd.Series(dists(_series(values), cluster))
 
             assigned = assigned.withColumn(
                 "dist", _dtw_to_assigned("values", "cluster")
@@ -648,20 +682,12 @@ class TimeSeriesKMeans(_LabelsCompatMixin, BaseModelPackage,
 
         check_query_dims(df, _centers_d(getattr(self, "cluster_centers_", None)))
         df, _was_array = as_ts_df(df)
-        kernel = __import__("tslearn_spark.metrics", fromlist=["METRIC_PARAMS"]).METRIC_PARAMS[
-            self.metric
-        ](**self.metric_params)
-        centers = self.cluster_centers_
-
-        from pyspark.sql.types import ArrayType
+        dists = _center_dists(self.cluster_centers_, self.metric,
+                              self.metric_params)
 
         @F.pandas_udf(ArrayType(DoubleType()))
         def _udf(values: pd.Series) -> pd.Series:
-            out = []
-            for v in values:
-                ts = np.asarray([np.asarray(r, dtype=np.float64) for r in v])
-                out.append([float(kernel(c, ts)) for c in centers])
-            return pd.Series(out)
+            return pd.Series(dists(_series(values)).tolist())
 
         out = df.withColumn("distances", _udf("values"))
         return collect_col(out, _was_array, "distances")
@@ -716,11 +742,7 @@ class KShape(_LabelsCompatMixin, BaseModelPackage, TimeSeriesBaseEstimator):
         self.n_iter_: int = 0
 
     def _assignments(self, df: DataFrame, centers) -> DataFrame:
-        udf = _assign_udf(centers, "sbd", {})
-        return df.withColumn("_a", udf("values")).select(
-            "series_id", "values", F.col("_a.cluster").alias("cluster"),
-            F.col("_a.dist").alias("dist"),
-        )
+        return _assignments(df, centers, "sbd", {})
 
     @staticmethod
     def _solve_mu(S: np.ndarray) -> np.ndarray:
@@ -777,10 +799,7 @@ class KShape(_LabelsCompatMixin, BaseModelPackage, TimeSeriesBaseEstimator):
                     continue
                 for c, grp in pdf.groupby("cluster"):
                     c = int(c)
-                    members = [
-                        np.asarray([np.asarray(r, dtype=np.float64) for r in v])
-                        for v in grp["values"]
-                    ]
+                    members = [M._to_arr(v) for v in grp["values"]]
                     aligned = K.y_shifted_sbd_vec(centers[c], members)
                     X = np.stack([a[:, 0] for a in aligned])
                     S = X.T @ X
@@ -808,10 +827,7 @@ class KShape(_LabelsCompatMixin, BaseModelPackage, TimeSeriesBaseEstimator):
                     continue
                 for c, grp in pdf.groupby("cluster"):
                     c = int(c)
-                    members = [
-                        np.asarray([np.asarray(r, dtype=np.float64) for r in v])
-                        for v in grp["values"]
-                    ]
+                    members = [M._to_arr(v) for v in grp["values"]]
                     aligned = K.y_shifted_sbd_vec(centers[c], members)
                     X = np.stack([a[:, 0] for a in aligned])
                     d_plus, d_minus = KShape._sign_dists(X, mus[c])
@@ -856,10 +872,7 @@ class KShape(_LabelsCompatMixin, BaseModelPackage, TimeSeriesBaseEstimator):
 
         def one_cluster(key, pdf):
             c = int(key[0])
-            members = [
-                np.asarray([np.asarray(r, dtype=np.float64) for r in v])
-                for v in pdf["values"]
-            ]
+            members = [M._to_arr(v) for v in pdf["values"]]
             aligned = K.y_shifted_sbd_vec(centers[c], members)
             X = np.stack([a[:, 0] for a in aligned])
             mu = KShape._power_mu(X)

@@ -32,15 +32,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from tslearn_spark import session
 from tslearn_spark.bases import BaseModelPackage, TimeSeriesBaseEstimator
 from tslearn_spark.ckernel import Flat
+from tslearn_spark.metrics import _to_arr
 from tslearn_spark.session import collect_within
-
-
-# classifier halves up to ~this many float64 values ride the one-shot
-# broadcast confusion pass; bigger halves stream through in budget-sized
-# chunks (session.collect_within, as for the neighbors fast paths)
-_CLF_BROADCAST_LIMIT_VALUES = 8_000_000  # ~64 MB
 
 
 def _dense_by_id(tab):
@@ -244,7 +240,7 @@ class NonMyopicEarlyClassifier(BaseModelPackage, TimeSeriesBaseEstimator):
         spark = df.sparkSession
         classes_b = self.classes_
         min_t = self.min_t
-        t_tab = collect_within(self._clf_df, _CLF_BROADCAST_LIMIT_VALUES)
+        t_tab = collect_within(self._clf_df)
         if t_tab is not None:
             # fast path: the whole classifier half fits the broadcast
             # byte budget — ship it once, one map pass over half2
@@ -342,7 +338,7 @@ class NonMyopicEarlyClassifier(BaseModelPackage, TimeSeriesBaseEstimator):
         chunk + the (|q| x sz)-row best table regardless of n_clf."""
         import math
 
-        rows_per_chunk = max(1, _CLF_BROADCAST_LIMIT_VALUES
+        rows_per_chunk = max(1, session.BROADCAST_LIMIT_VALUES
                              // max(sz * d, 1))
         n_chunks = max(2, math.ceil(n_clf / rows_per_chunk))
         pos = np.arange(min_t - 1, sz)
@@ -501,7 +497,7 @@ class NonMyopicEarlyClassifier(BaseModelPackage, TimeSeriesBaseEstimator):
         def _stop_udf(values: pd.Series) -> pd.Series:
             out = []
             for v in values:
-                Xi = np.asarray([np.asarray(r, dtype=np.float64) for r in v])
+                Xi = _to_arr(v)
                 out.append(stopping(Xi))
             return pd.Series(out, dtype=np.int32)
 

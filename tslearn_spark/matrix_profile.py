@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 from tslearn_spark.bases import BaseModelPackage, TimeSeriesBaseEstimator
+from tslearn_spark.metrics import _to_arr
 from tslearn_spark.session import size_tasks
 
 
@@ -60,7 +61,7 @@ def matrix_profile_udf(m: int, scale: bool = True):
     def _udf(values: pd.Series) -> pd.Series:
         out = []
         for v in values:
-            arr = np.asarray([np.asarray(r, dtype=np.float64) for r in v]).reshape(len(v), -1)
+            arr = _to_arr(v).reshape(len(v), -1)
             out.append(matrix_profile_np(arr[:, 0], m, scale).tolist())
         return pd.Series(out)
 

@@ -17,6 +17,7 @@ same query runs on a laptop or a 1000-executor cluster:
 from __future__ import annotations
 
 import warnings
+from functools import partial
 from typing import Callable
 
 import numpy as np
@@ -35,6 +36,7 @@ TSLEARN_VALID_METRICS = ["ctw", "dtw", "gak", "sax", "softdtw", "lcss"]
 VARIABLE_LENGTH_METRICS = ["ctw", "dtw", "gak", "sax", "softdtw", "lcss"]
 
 __all__ = [
+    "pair_scores",
     "pair_metric_udf",
     "cross_pairs",
     "self_pairs",
@@ -175,75 +177,61 @@ def _make_ctw(max_iter: int = 100, n_components=None):
     return f
 
 
-def _mixed_batch_kernel(metric: str, params: dict):
-    """Return a (list[arr], list[arr]) -> scores kernel that handles a whole
-    Arrow batch of MIXED shapes in one vectorized DP, else None.
+def dtw_band(metric: str, params: dict) -> tuple[bool, int | None]:
+    """``(True, radius)`` when the batched DTW kernels run
+    ``metric(**params)``, the Sakoe-Chiba ``radius`` None for no band;
+    ``(False, None)`` for another metric or an Itakura constraint, which
+    only the per-pair ``K.dtw`` runs."""
+    if metric != "dtw" or params.get("global_constraint") == "itakura" \
+            or params.get("itakura_max_slope") is not None:
+        return False, None
+    radius = params.get("sakoe_chiba_radius")
+    if params.get("global_constraint") == "sakoe_chiba" and radius is None:
+        radius = 1
+    return True, radius
 
-    With variable-length series the per-(shape,shape) buckets of the
-    same-shape path shrink to a handful of pairs and the batch effect
-    dies (~500us/pair measured).  DTW runs the compiled kernel, one C
-    loop per batch; the padded masked DPs of the other families keep one
-    Python loop per batch regardless of shape spread.  Callers sort
-    partitions by series size, so Arrow batches are length-homogeneous
-    and padding waste stays small.
+
+def pair_scores(metric: str, params: dict) -> Callable[[list, list], np.ndarray]:
+    """The engine's one pair-scoring dispatch: a function mapping two
+    equally long lists of ``(sz, d)`` series to the float64 array of
+    ``metric(a[p], b[p])``, series taken as given.
+
+    The DP metrics score the whole list in ONE mixed-shape batch call:
+    DTW (``dtw_band``) runs the compiled kernel, one C loop per call;
+    soft-DTW (gamma > 0), GAK and unconstrained LCSS run padded
+    anti-diagonal numpy DPs, one Python loop per call whatever the shape
+    spread (per-pair numpy costs ~500us/pair on variable lengths).
+    Callers sort partitions by series size (``_pair_sort``), so padding
+    waste stays small.  Every other metric loops its per-pair kernel
+    (``METRIC_PARAMS``).
     """
-    if metric == "dtw" and params.get("global_constraint") != "itakura" \
-            and params.get("itakura_max_slope") is None:
-        radius = params.get("sakoe_chiba_radius")
-        if params.get("global_constraint") == "sakoe_chiba" and radius is None:
-            radius = 1
-        return lambda a, b: K.dtw_banded_batch_mixed(a, b, radius)
-    if metric == "softdtw":
-        gamma = params.get("gamma", 1.0)
-        if gamma > 0:
-            return lambda a, b: K.soft_dtw_batch_mixed(a, b, gamma)
-    if metric == "gak":
-        sigma = params.get("sigma", 1.0)
-        return lambda a, b: K.gak_batch_mixed(a, b, sigma, normalized=True)
-    if metric == "unnormalized_gak":
-        sigma = params.get("sigma", 1.0)
-        return lambda a, b: K.gak_batch_mixed(a, b, sigma, normalized=False)
-    if metric == "lcss" and not any(
-        params.get(k) for k in
-        ("global_constraint", "sakoe_chiba_radius", "itakura_max_slope")
-    ):
-        eps = params.get("eps", 1.0)
-        return lambda a, b: K.lcss_batch_mixed(a, b, eps)
-    return None
+    banded, radius = dtw_band(metric, params)
+    if banded:
+        batch = partial(K.dtw_banded_batch_mixed, radius=radius)
+    elif metric == "softdtw" and params.get("gamma", 1.0) > 0:
+        batch = partial(K.soft_dtw_batch_mixed, gamma=params.get("gamma", 1.0))
+    elif metric in ("gak", "unnormalized_gak"):
+        batch = partial(K.gak_batch_mixed, sigma=params.get("sigma", 1.0),
+                        normalized=metric == "gak")
+    elif metric == "lcss" and not any(params.get(k) for k in (
+            "global_constraint", "sakoe_chiba_radius", "itakura_max_slope")):
+        batch = partial(K.lcss_batch_mixed, eps=params.get("eps", 1.0))
+    else:
+        kernel = METRIC_PARAMS[metric](**params)
+        return lambda a, b: np.array(
+            [float(kernel(x, y)) for x, y in zip(a, b)], dtype=np.float64)
+    return batch
 
 
 def pair_metric_udf(metric: str, **params):
-    """Build a scalar pandas UDF computing ``metric(a, b)`` per row.
-
-    Arrow ships value arrays in columnar batches.  The DP metrics (DTW
-    band, soft-DTW, GAK, LCSS) evaluate each whole batch in ONE
-    vectorized mixed-shape kernel call — pairs are zero-padded, the
-    Python-level loop is over DP rows/anti-diagonals for the entire
-    batch, and each pair's score is gathered at its own (la, lb) cell.
-    Callers sort partitions with _pair_sort so batch padding stays
-    tight.  Other metrics loop the per-pair kernel.
-    """
-    mixed_fn = _mixed_batch_kernel(metric, params)
-    if mixed_fn is not None:
-
-        @F.pandas_udf(DoubleType())
-        def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-            arrs_a = [_to_arr(x) for x in a]
-            arrs_b = [_to_arr(y) for y in b]
-            if not arrs_a:
-                return pd.Series([], dtype=np.float64)
-            return pd.Series(mixed_fn(arrs_a, arrs_b))
-
-        return _udf
-
-    kernel = METRIC_PARAMS[metric](**params)
+    """A scalar pandas UDF computing ``metric(a, b)`` per row: one
+    ``pair_scores`` call per Arrow batch."""
+    score = pair_scores(metric, params)
 
     @F.pandas_udf(DoubleType())
     def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [float(kernel(_to_arr(x), _to_arr(y))) for x, y in zip(a, b)],
-            dtype=np.float64,
-        )
+        return pd.Series(score([_to_arr(x) for x in a], [_to_arr(y) for y in b]),
+                         dtype=np.float64)
 
     return _udf
 

@@ -44,11 +44,6 @@ from tslearn_spark.bases import (BaseModelPackage, ClassifierScoreMixin,
 from tslearn_spark.session import collect_within, size_tasks
 from tslearn_spark.topk import topk_matrix_tiebreak
 
-# query sets up to ~this many float64s (~64 MB) ride the broadcast-matmul
-# fast path for euclidean; beyond it (or for elastic metrics) the generic
-# pair join runs (session.collect_within)
-_EUCLIDEAN_BROADCAST_LIMIT_VALUES = 8_000_000
-
 
 def _euclidean_topk(queries: DataFrame, train: DataFrame, k: int,
                     drop_self: bool):
@@ -60,8 +55,7 @@ def _euclidean_topk(queries: DataFrame, train: DataFrame, k: int,
     Shuffle volume is O(n_queries x k x n_partitions); the train side is
     streamed, never collected.
     """
-    q_tab = collect_within(queries.select("series_id", "values"),
-                           _EUCLIDEAN_BROADCAST_LIMIT_VALUES)
+    q_tab = collect_within(queries.select("series_id", "values"))
     if q_tab is None:
         return None
     q_flat = ckernel.Flat.from_arrow(q_tab.column("values"))
@@ -133,10 +127,6 @@ def _euclidean_topk(queries: DataFrame, train: DataFrame, k: int,
         .select("id1", "id2", "dist", "rank")
     )
 
-
-# train sets up to ~this many float64s ride the broadcast DTW fast path;
-# bigger train sides fall back to the generic pair join
-_DTW_BROADCAST_LIMIT_VALUES = 8_000_000  # ~64 MB
 
 # task-sizing work of one banded-DP cell of the batched DTW kernel
 # (flop-equivalents of ~0.5 ns, see session.TASK_WORK).  Measured
@@ -257,17 +247,14 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
     """
     from tslearn_spark import kernels as K
 
-    if metric != "dtw" or params.get("itakura_max_slope") is not None \
-            or params.get("global_constraint") == "itakura":
+    banded, radius = M.dtw_band(metric, params)
+    if not banded:
         return None
-    radius = params.get("sakoe_chiba_radius")
-    if params.get("global_constraint") == "sakoe_chiba" and radius is None:
-        radius = 1
     kind, col, weights = reduce or (None, None, None)
     cols = ["series_id", "values"]
     if kind is not None:
         cols.append(F.col(col).alias("_y"))
-    t_tab = collect_within(train.select(*cols), _DTW_BROADCAST_LIMIT_VALUES)
+    t_tab = collect_within(train.select(*cols))
     if t_tab is None or t_tab.num_rows == 0:
         return None
     t_ids = t_tab.column("series_id").to_numpy()

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from tslearn_spark.bases import (BaseModelPackage, ClassifierScoreMixin,
                                  RegressorScoreMixin, TimeSeriesBaseEstimator)
+from tslearn_spark.metrics import _to_arr
 from tslearn_spark.session import TASK_WORK, size_tasks
 
 
@@ -456,7 +457,7 @@ class TimeSeriesMLPRegressor(RegressorScoreMixin, _MLPBase):
 
         @F.pandas_udf("double")
         def _udf(values: pd.Series) -> pd.Series:
-            X = np.array([np.asarray([np.asarray(r, dtype=np.float64) for r in v]).ravel() for v in values])
+            X = np.array([_to_arr(v).ravel() for v in values])
             return pd.Series(mlp.predict_raw(X).ravel() * sd + mu)
 
         out = df.select("series_id", _udf("values").alias("prediction"))

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from tslearn_spark.stats import sax_bin_medians, sax_breakpoints
 from tslearn_spark.bases import BaseModelPackage, TimeSeriesBaseEstimator
-from tslearn_spark.preprocessing import per_series
+from tslearn_spark.preprocessing import _NAN, per_series
 
 
 def _lit_array(vals) -> str:
@@ -38,16 +38,18 @@ def paa_col(values_col: str = "values", n_segments: int = 1) -> Column:
     (piecewise.py:147-153).  slice() is 1-indexed in Spark SQL.  The
     source is let-bound (evaluated once per row) so chaining after a
     scaler does not re-evaluate the scaler per segment.  An empty series
-    maps to an empty series.
+    maps to an empty series; a series shorter than ``n_segments`` has
+    empty segments, whose means are NaN like numpy's empty-slice mean.
     """
     n = n_segments
     return F.expr(per_series(values_col, f"""
           transform(sequence(0, {n - 1}), s ->
             transform(sequence(0, size(src[0]) - 1), d ->
+              CASE WHEN size(src) < {n} THEN {_NAN} ELSE
               aggregate(
                 slice(src, s * (size(src) div {n}) + 1, size(src) div {n}),
                 0.0D, (a, row) -> a + row[d]
-              ) / (size(src) div {n})
+              ) / (size(src) div {n}) END
             )
           )
         """))
@@ -521,14 +523,18 @@ class OneDSAX(SAX):
 
         slope = (sum(t*x) - sum(t)*sum(x)/n) / (sum(t^2) - sum(t)^2/n)
         computed over t in [s*seg, s*seg+seg).  An empty series maps to
-        an empty series.
+        an empty series; a series shorter than ``n_segments`` (seg = 0)
+        gets NaN slopes, like its NaN segment means in ``paa_col``, and
+        one-point segments (seg = 1, where the formula is 0 / 0) get the
+        minimum-norm least-squares slope, 0.
         """
         n = self.n_segments
         seg = "(size(src) div " + str(n) + ")"
         return F.expr(per_series(values_col, f"""
               transform(sequence(0, {n - 1}), s ->
                 transform(sequence(0, size(src[0]) - 1), d ->
-                  (
+                  CASE WHEN size(src) < {n} THEN {_NAN}
+                       WHEN size(src) < {2 * n} THEN 0.0D ELSE (
                     aggregate(sequence(s * {seg}, s * {seg} + {seg} - 1),
                               0.0D, (a, t) -> a + t * src[t][d])
                     - aggregate(sequence(s * {seg}, s * {seg} + {seg} - 1),
@@ -540,7 +546,7 @@ class OneDSAX(SAX):
                               0.0D, (a, t) -> a + cast(t as double) * t)
                     - pow(aggregate(sequence(s * {seg}, s * {seg} + {seg} - 1),
                                     0.0D, (a, t) -> a + t), 2) / {seg}
-                  )
+                  ) END
                 )
               )
             """))

@@ -286,10 +286,17 @@ def _leaf_count(col) -> int:
     return len(col)
 
 
-def collect_within(df: DataFrame, limit: int):
+# the broadcast budget of every fast path that collects one side to
+# broadcast it (kNN train or query sets, the early classifier's
+# classifier half): float64 values, ~64 MB
+BROADCAST_LIMIT_VALUES = 8_000_000
+
+
+def collect_within(df: DataFrame, limit: int | None = None):
     """The engine's one broadcast-budget policy: ``df`` collected to the
     driver as a ``pyarrow.Table`` in partition order, or None when its
-    ``values`` column holds more than ``limit`` float64s.
+    ``values`` column holds more than ``limit`` float64s (default
+    ``BROADCAST_LIMIT_VALUES``, read at call time).
 
     One Arrow collect (``collectAsArrowToPython``), the only job, runs
     under a job tag of its own; the caller's job group and tags are left
@@ -316,6 +323,8 @@ def collect_within(df: DataFrame, limit: int):
     from pyspark.serializers import read_int
     from pyspark.util import _create_local_socket
 
+    if limit is None:
+        limit = BROADCAST_LIMIT_VALUES
     sc = df.sparkSession.sparkContext
     tag = f"tslearn_spark.collect_within.{uuid.uuid4().hex}"
     sc.addJobTag(tag)

@@ -24,11 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 from tslearn_spark.bases import (BaseModelPackage, ClassifierScoreMixin,
                                  TimeSeriesBaseEstimator)
-
-
-def _nested(v) -> np.ndarray:
-    """Arrow nested list -> (sz, d) float array."""
-    return np.asarray([np.asarray(r, dtype=np.float64) for r in v])
+from tslearn_spark.metrics import _to_arr
 
 
 def grabocka_params_to_shapelet_size_dict(n_ts: int, ts_sz: int, n_classes: int,
@@ -457,7 +453,7 @@ class LearningShapelets(ClassifierScoreMixin, BaseModelPackage,
         minmax = self._minmax
 
         def prep(v) -> np.ndarray:
-            ts = _nested(v)
+            ts = _to_arr(v)
             return minmax(ts) if scale else ts
 
         if mode == "transform":
@@ -525,7 +521,7 @@ class LearningShapelets(ClassifierScoreMixin, BaseModelPackage,
         def _udf(values: pd.Series) -> pd.Series:
             out = []
             for v in values:
-                ts = _nested(v)
+                ts = _to_arr(v)
                 if scale:
                     ts = minmax(ts)
                 dists, _ = _min_dists(ts, bank)
@@ -554,7 +550,7 @@ class LearningShapelets(ClassifierScoreMixin, BaseModelPackage,
         def _udf(values: pd.Series) -> pd.Series:
             out = []
             for v in values:
-                ts = _nested(v)
+                ts = _to_arr(v)
                 if scale:
                     ts = minmax(ts)
                 dists, _ = _min_dists(ts, bank)
