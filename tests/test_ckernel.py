@@ -23,10 +23,21 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def _mixed(rs, n, lo=5, hi=100, d=1):
+def _mixed(rs, n, lo=5, hi=100, d=1, lengths=None):
+    """n random series, lengths drawn from [lo, hi) or, when given, from
+    ``lengths``."""
+    def draw():
+        return rs.choice(lengths) if lengths is not None else rs.randint(lo, hi)
     if d == 1:
-        return [rs.randn(rs.randint(lo, hi)) for _ in range(n)]
-    return [rs.randn(rs.randint(lo, hi), d) for _ in range(n)]
+        return [rs.randn(draw()) for _ in range(n)]
+    return [rs.randn(draw(), d) for _ in range(n)]
+
+
+def _few_lengths(rs, lo, hi):
+    """One or two lengths in [lo, hi): series drawn from them form
+    equal-length groups of two or more, in odd counts too, which the
+    kernel runs two at a time in its two lanes."""
+    return rs.randint(lo, hi, rs.randint(1, 3))
 
 
 def _reference_path(fn, *args, **kw):
@@ -50,13 +61,53 @@ class TestCKernelBitwise:
     @pytest.mark.parametrize("radius", [None, 0, 2, 5, 20])
     def test_bitwise_vs_reference(self, d, radius):
         rs = np.random.RandomState(11)
-        aa, bb = _mixed(rs, 150, d=d), _mixed(rs, 150, d=d)
-        c = ck.dtw_batch(aa, bb, radius)
-        base = _reference_path(K.dtw_banded_batch_mixed, aa, bb, radius)
-        # bit-for-bit: the C DP replicates the reference row scan's
-        # cumsum/prefix-min float association and its channel-order
-        # local cost exactly (no FMA: built with -ffp-contract=off)
-        assert _same_bits(c, base)
+        # mixed shapes (each pair runs alone), then a batch of few shapes
+        # (consecutive pairs of one shape share the two lanes)
+        for eq_len in (False, True):
+            la = _few_lengths(rs, 5, 100) if eq_len else None
+            lb = _few_lengths(rs, 5, 100) if eq_len else None
+            aa, bb = _mixed(rs, 150, d=d, lengths=la), \
+                _mixed(rs, 150, d=d, lengths=lb)
+            c = ck.dtw_batch(aa, bb, radius)
+            base = _reference_path(K.dtw_banded_batch_mixed, aa, bb, radius)
+            # bit-for-bit: the C DP replicates the reference row scan's
+            # cumsum/prefix-min float association and its channel-order
+            # local cost exactly (no FMA: built with -ffp-contract=off)
+            assert _same_bits(c, base)
+
+    def test_portable_min_build_matches_default(self, monkeypatch, tmp_path):
+        """Built with __SSE2__ undefined, the kernel takes its portable
+        min (a compare-mask select over GCC vector types, what targets
+        without SSE2 compile) in place of minpd; both entry points must
+        return the default build's results bit for bit."""
+        rs = np.random.RandomState(23)
+        cases = []
+        for d in (1, 2):
+            q, qid, t, tid = _knn_case(rs, 6, 25, d, 3, 30, eq_len=True)
+            aa = _mixed(rs, 40, 3, 30, d, _few_lengths(rs, 3, 30))
+            bb = _mixed(rs, 40, 3, 30, d, _few_lengths(rs, 3, 30))
+            cases += [(q, qid, t, tid, aa, bb, r) for r in (None, 0, 4)]
+
+        def run():
+            out = []
+            for q, qid, t, tid, aa, bb, r in cases:
+                out.append(ck.dtw_batch(aa + q, bb + t[:len(q)], r))
+                for k, drop in ((1, True), (4, False)):
+                    out.extend(ck.dtw_knn(q, qid, ck.flatten(t), tid, r, k,
+                                          drop))
+            return out
+
+        want = run()
+        monkeypatch.setattr(ck, "_CFLAGS", [*ck._CFLAGS, "-U__SSE2__"])
+        monkeypatch.setenv("TSLEARN_SPARK_CK_DIR", str(tmp_path))
+        monkeypatch.setattr(ck, "_lib", None)
+        monkeypatch.setattr(ck, "_tried", False)
+        lib = ck.lib_or_none()
+        assert lib is not None and lib._name.startswith(str(tmp_path))
+        got = run()
+        assert len(got) == len(want)
+        for a, b in zip(got, want):
+            assert a.dtype == b.dtype and _same_bits(a, b)
 
     def test_dispatch_is_wired(self):
         """kernels.dtw_banded_batch_mixed actually takes the C path when
@@ -317,12 +368,19 @@ def _knn_reference(q, qid, t, tid, radius, k, drop_self):
             np.array(dist, dtype=np.float64))
 
 
-def _knn_case(rs, n_q, n_t, d, lo=1, hi=40, dup=True):
+def _knn_case(rs, n_q, n_t, d, lo=1, hi=40, dup=True, eq_len=False):
     """Mixed lengths down to length-1 series; a few train series repeat
     queries (under ids shared with them) and each other, so drop_self
-    and exact ties at the cutoff are exercised."""
-    q = _mixed(rs, n_q, lo, hi, d)
-    t = _mixed(rs, n_t, lo, hi, d)
+    and exact ties at the cutoff are exercised.  Under ``eq_len`` every
+    series takes one of one or two lengths (_few_lengths): the kernel
+    then runs equal-length train series two at a time, so lanes that
+    both live, lanes beside a dead partner (drop_self, a length's odd
+    one out) and lanes that abandon on different rows all occur (the
+    non-finite property adds partners holding NaN, inf or values large
+    enough to overflow)."""
+    lengths = _few_lengths(rs, lo, hi) if eq_len else None
+    q = _mixed(rs, n_q, lo, hi, d, lengths)
+    t = _mixed(rs, n_t, lo, hi, d, lengths)
     qid = np.arange(n_q, dtype=np.int64)
     tid = rs.permutation(np.arange(n_q, n_q + n_t)).astype(np.int64)
     if dup and n_t >= 4 and n_q >= 2:
@@ -382,7 +440,7 @@ class TestDtwKnnTiers:
     @pytest.mark.parametrize("radius", [None, 0, 5])
     def test_agrees_with_per_pair_dtw(self, d, radius):
         # the public per-pair kernels.dtw sums the same local costs in
-        # the same order as the scalar DP, for every d
+        # the same order as the C DP in each lane, for every d
         rs = np.random.RandomState(7 + d)
         q, qid, t, tid = _knn_case(rs, 5, 16, d)
         got = K.dtw_knn_topk(q, qid, t, tid, radius, 3, True)
@@ -501,9 +559,10 @@ class TestDtwKnnAbandonSoundness:
         assert status[1:] == [-1, -1]
 
 
-def _check_knn_tiers(seed, n_q, n_t, k, radius, drop_self, d, hi, quantized):
+def _check_knn_tiers(seed, n_q, n_t, k, radius, drop_self, d, hi, quantized,
+                     eq_len):
     rs = np.random.RandomState(seed)
-    q, qid, t, tid = _knn_case(rs, n_q, n_t, d, 1, hi)
+    q, qid, t, tid = _knn_case(rs, n_q, n_t, d, 1, hi, eq_len=eq_len)
     if quantized:
         # integer-valued series: many exact distance ties across ids
         q = [np.round(a) for a in q]
@@ -518,22 +577,25 @@ def _knn_params(max_q, max_t, max_len):
         n_t=st.integers(1, max_t), k=st.integers(1, max_t + 2),
         radius=st.sampled_from([None, 0, 1, 3, 40, 2000]),
         drop_self=st.booleans(), d=st.sampled_from([1, 2, 3]),
-        hi=st.integers(2, max_len), quantized=st.booleans())
+        hi=st.integers(2, max_len), quantized=st.booleans(),
+        eq_len=st.booleans())
 
 
 @hyp_settings(max_examples=30, deadline=None, derandomize=True)
 @given(**_knn_params(5, 10, 16))
 def test_property_knn_tiers_agree(seed, n_q, n_t, k, radius, drop_self, d,
-                                  hi, quantized):
-    _check_knn_tiers(seed, n_q, n_t, k, radius, drop_self, d, hi, quantized)
+                                  hi, quantized, eq_len):
+    _check_knn_tiers(seed, n_q, n_t, k, radius, drop_self, d, hi, quantized,
+                     eq_len)
 
 
 @pytest.mark.slow
 @hyp_settings(max_examples=400, deadline=None)
 @given(**_knn_params(8, 40, 90))
 def test_property_knn_tiers_agree_deep(seed, n_q, n_t, k, radius, drop_self,
-                                       d, hi, quantized):
-    _check_knn_tiers(seed, n_q, n_t, k, radius, drop_self, d, hi, quantized)
+                                       d, hi, quantized, eq_len):
+    _check_knn_tiers(seed, n_q, n_t, k, radius, drop_self, d, hi, quantized,
+                     eq_len)
 
 
 # ---------------------------------------------------------------------------
@@ -552,10 +614,11 @@ def _same_or_both_nan(a, b):
         a[~both_nan].view(np.int64), b[~both_nan].view(np.int64))
 
 
-def _extreme_series(rs, n, d, hi):
+def _extreme_series(rs, n, d, hi, lengths=None):
     out = []
     for _ in range(n):
-        x = rs.randn(rs.randint(1, hi + 1), d)
+        x = rs.randn(rs.choice(lengths) if lengths is not None
+                     else rs.randint(1, hi + 1), d)
         for _ in range(rs.randint(0, 4)):
             x[rs.randint(len(x)), rs.randint(d)] = \
                 _EXTREME[rs.randint(len(_EXTREME))]
@@ -567,16 +630,20 @@ def _extreme_series(rs, n, d, hi):
 @given(seed=st.integers(0, 2**31 - 1), d=st.sampled_from([1, 2, 3]),
        radius=st.sampled_from([None, 0, 1, 3, 2000]),
        hi=st.integers(1, 12), k=st.integers(1, 6),
-       drop_self=st.booleans())
+       drop_self=st.booleans(), eq_len=st.booleans())
 def test_property_non_finite_input_matches_reference(seed, d, radius, hi, k,
-                                                     drop_self):
+                                                     drop_self, eq_len):
     """NaN, +-inf and values >= 1e154 (length-1 series included, radius
     0, None and past both lengths): dtw_batch returns the reference's
-    value per pair, and the fused top-k the reference tier's rows."""
+    value per pair, and the fused top-k the reference tier's rows.
+    Under ``eq_len`` (see _knn_case) a lane whose pair is non-finite
+    runs beside a finite partner lane."""
     import warnings
 
     rs = np.random.RandomState(seed)
-    aa, bb = _extreme_series(rs, 24, d, hi), _extreme_series(rs, 24, d, hi)
+    lengths = _few_lengths(rs, 1, hi + 1) if eq_len else None
+    aa, bb = (_extreme_series(rs, 24, d, hi, lengths),
+              _extreme_series(rs, 24, d, hi, lengths))
     with warnings.catch_warnings():
         warnings.simplefilter("ignore", RuntimeWarning)
         c = ck.dtw_batch(aa, bb, radius)

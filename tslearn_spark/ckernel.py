@@ -14,10 +14,13 @@ tries, in order: the local cache, the copy shipped to this Spark task
 (``SparkFiles``) and a local build — so an executor with no compiler
 runs the driver's build.
 
-The library holds one DP core behind two entry points, bound from the
-``_ENTRY_POINTS`` table: ``dtw_batch`` (one distance per pair, wrapped
-by ``dtw_batch`` here) and ``dtw_knn`` (each query's top-k over a train
-set, every DP capped at the running k-th best; wrapped by ``dtw_knn``).
+The library holds one DP core, two lanes wide (two pairs of one shape
+in the two double lanes of a 16-byte vector), behind two entry points,
+bound from the ``_ENTRY_POINTS`` table: ``dtw_batch`` (one distance per
+pair, wrapped by ``dtw_batch`` here; consecutive pairs of equal shape
+share the lanes) and ``dtw_knn`` (each query's top-k over a train set,
+equal-length train series two at a time, every lane capped at the
+running k-th best; wrapped by ``dtw_knn``).
 Both read series stored back to back (``Flat``: one float64 buffer,
 offsets and lengths), built from arrays by ``flatten`` or straight from
 an Arrow column by ``Flat.from_arrow``.
@@ -25,8 +28,9 @@ an Arrow column by ``Flat.from_arrow``.
 When all three sources fail, ``lib_or_none`` returns None and warns once
 (a RuntimeWarning naming each cause): ``kernels.dtw_banded_batch_mixed``
 and ``kernels.dtw_knn_topk`` then loop over the per-pair reference, with
-the same results at two orders of magnitude more time per pair (730 vs
-4.9 µs at lengths 45-99, radius 5, one thread of a 4-vCPU x86-64 VM).
+the same results at two orders of magnitude more time per pair (440-470
+vs 3.6-3.9 µs over 400 random pairs at lengths 45-99, radius 5, one
+thread of a 4-vCPU x86-64 VM).
 ``TSLEARN_SPARK_CKERNEL=0`` selects that reference tier on purpose, with
 no warning.  The compiled DP returns the reference's doubles bit for bit
 on non-abandoned pairs (see the .c header; pinned by

@@ -130,9 +130,10 @@ def _euclidean_topk(queries: DataFrame, train: DataFrame, k: int,
 
 # task-sizing work of one banded-DP cell of the batched DTW kernel
 # (flop-equivalents of ~0.5 ns, see session.TASK_WORK).  Measured
-# single-thread on a 4-vCPU x86-64 VM: 6.4 ns/cell at sz 50-85 r=4,
-# 6.0 at sz 120-136 r=5, 2.9 at sz 480-544 r=50, i.e. 6-13 units, so 16
-# errs toward more tasks
+# single-thread on a 4-vCPU x86-64 VM, z-normalized random walks: every
+# cell computed (dtw_batch) 1.4-1.6 ns/cell at sz 50-85 r=4, 120-136 r=5
+# and 480-544 r=50, i.e. ~3 units; the broadcast kNN's early abandon
+# (k=1) leaves 0.22-0.37 ns per banded cell.  16 errs toward more tasks
 _DP_CELL_WORK = 16
 
 
