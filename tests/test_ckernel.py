@@ -56,6 +56,18 @@ def _same_bits(a, b):
                                                  b.view(np.int64))
 
 
+def _rebuild(monkeypatch, tmp_path, *flags):
+    """Load a fresh build of the kernel compiled with ``flags`` added,
+    cached under tmp_path, for the rest of the test."""
+    monkeypatch.setattr(ck, "_CFLAGS", [*ck._CFLAGS, *flags])
+    monkeypatch.setenv("TSLEARN_SPARK_CK_DIR", str(tmp_path))
+    monkeypatch.setattr(ck, "_lib", None)
+    monkeypatch.setattr(ck, "_tried", False)
+    lib = ck.lib_or_none()
+    assert lib is not None and lib._name.startswith(str(tmp_path))
+    return lib
+
+
 class TestCKernelBitwise:
     @pytest.mark.parametrize("d", [1, 2, 3])
     @pytest.mark.parametrize("radius", [None, 0, 2, 5, 20])
@@ -76,10 +88,11 @@ class TestCKernelBitwise:
             assert _same_bits(c, base)
 
     def test_portable_min_build_matches_default(self, monkeypatch, tmp_path):
-        """Built with __SSE2__ undefined, the kernel takes its portable
-        min (a compare-mask select over GCC vector types, what targets
-        without SSE2 compile) in place of minpd; both entry points must
-        return the default build's results bit for bit."""
+        """Built with __SSE2__ undefined, the kernel runs two lanes and
+        takes its portable min (a compare-mask select over GCC vector
+        types, what targets without SSE2 compile) in place of minpd; both
+        entry points must return the default build's results bit for
+        bit."""
         rs = np.random.RandomState(23)
         cases = []
         for d in (1, 2):
@@ -98,12 +111,9 @@ class TestCKernelBitwise:
             return out
 
         want = run()
-        monkeypatch.setattr(ck, "_CFLAGS", [*ck._CFLAGS, "-U__SSE2__"])
-        monkeypatch.setenv("TSLEARN_SPARK_CK_DIR", str(tmp_path))
-        monkeypatch.setattr(ck, "_lib", None)
-        monkeypatch.setattr(ck, "_tried", False)
-        lib = ck.lib_or_none()
-        assert lib is not None and lib._name.startswith(str(tmp_path))
+        _rebuild(monkeypatch, tmp_path, "-U__SSE2__")
+        # no SSE2, no wider registers either: the generic two lanes
+        assert ck.lanes() == 2
         got = run()
         assert len(got) == len(want)
         for a, b in zip(got, want):
@@ -292,6 +302,20 @@ class TestShippedKernel:
         assert warned == [] and built == []
         assert out == want
 
+    def test_worker_reports_the_driver_tier_and_width(self, spark):
+        """A Python worker loads the compiled tier at the lane width the
+        driver runs (``ckernel.lanes``, read from the library itself)."""
+        def probe(_):
+            import tslearn_spark.ckernel as wck
+
+            yield ("c" if wck.lib_or_none() is not None else "reference",
+                   wck.lanes())
+
+        got = spark.sparkContext.parallelize([0], 1).mapPartitions(
+            probe).collect()
+        assert got == [("c", ck.lanes())]
+        assert ck.lanes() in (2, 4, 8)
+
     def test_task_with_nothing_shipped_warns_once(self, spark):
         (path, warned, built, out), want = _run_probe(spark, True)
         assert path is None and built == []
@@ -368,7 +392,8 @@ def _knn_reference(q, qid, t, tid, radius, k, drop_self):
             np.array(dist, dtype=np.float64))
 
 
-def _knn_case(rs, n_q, n_t, d, lo=1, hi=40, dup=True, eq_len=False):
+def _knn_case(rs, n_q, n_t, d, lo=1, hi=40, dup=True, eq_len=False,
+              lane_groups=False):
     """Mixed lengths down to length-1 series; a few train series repeat
     queries (under ids shared with them) and each other, so drop_self
     and exact ties at the cutoff are exercised.  Under ``eq_len`` every
@@ -377,7 +402,17 @@ def _knn_case(rs, n_q, n_t, d, lo=1, hi=40, dup=True, eq_len=False):
     both live, lanes beside a dead partner (drop_self, a length's odd
     one out) and lanes that abandon on different rows all occur (the
     non-finite property adds partners holding NaN, inf or values large
-    enough to overflow)."""
+    enough to overflow).
+
+    Under ``lane_groups`` (n_t ignored) the train set fills the kernel's
+    lane groups of every width W in 8, 4, 2 in every way: 7 lengths with
+    9..15 series each, so a length's last group holds 1..W-1 series and
+    leaves the other lanes dead; query 1 shares its values and id with
+    the 4th series of one length (a middle lane under drop_self); the
+    first length's 2nd, 3rd and 6th series hold NaN, +-inf and 1e154
+    beside finite lanes; one train series is empty."""
+    if lane_groups:
+        return _lane_groups_case(rs, n_q, d, lo, hi)
     lengths = _few_lengths(rs, lo, hi) if eq_len else None
     q = _mixed(rs, n_q, lo, hi, d, lengths)
     t = _mixed(rs, n_t, lo, hi, d, lengths)
@@ -386,6 +421,27 @@ def _knn_case(rs, n_q, n_t, d, lo=1, hi=40, dup=True, eq_len=False):
     if dup and n_t >= 4 and n_q >= 2:
         t[0], tid[0] = q[1].copy(), qid[1]
         t[2] = t[3].copy()
+    return q, qid, t, tid
+
+
+def _lane_groups_case(rs, n_q, d, lo, hi):
+    lengths = rs.choice(np.arange(max(lo, 2), hi), 7, replace=False)
+    t = []
+    for r, n in enumerate(lengths, 1):
+        t += _mixed(rs, 8 + r, d=d, lengths=[n])
+    # the kernel groups a length's series in train order: series 0..8 of
+    # the first length are its first lane group of 8
+    for pos, v in ((1, np.nan), (2, np.inf), (5, 1e154)):
+        t[pos] = t[pos].copy()
+        t[pos][len(t[pos]) // 2] = v
+    t[2][0] = -np.inf
+    q = _mixed(rs, n_q, lo, hi, d, lengths)
+    qid = np.arange(n_q, dtype=np.int64)
+    tid = rs.permutation(np.arange(n_q, n_q + len(t))).astype(np.int64)
+    mid = 9 + 10 + 3  # 4th series of the third length
+    q[1], tid[mid] = t[mid].copy(), qid[1]
+    t.insert(7, np.empty((0,) + t[0].shape[1:]))
+    tid = np.insert(tid, 7, n_q + len(tid))
     return q, qid, t, tid
 
 
@@ -446,6 +502,68 @@ class TestDtwKnnTiers:
         got = K.dtw_knn_topk(q, qid, t, tid, radius, 3, True)
         _assert_same_rows(got, _knn_reference(q, qid, t, tid, radius, 3,
                                               True))
+
+
+class TestDtwKnnLaneGroups:
+    """dtw_knn runs each length's train series W at a time (W = 8, 4 or
+    2 from the CPU, ckernel.lanes): groups short of W, a self match in a
+    middle lane, non-finite lanes beside finite ones and an empty series
+    must leave the rows of every width equal to the reference's."""
+
+    @pytest.mark.parametrize("d", [1, 2, 3])
+    @pytest.mark.parametrize("radius", [None, 0, 3])
+    @pytest.mark.parametrize("k", [1, 3, 12])
+    @pytest.mark.parametrize("drop_self", [False, True])
+    def test_c_equals_reference(self, d, radius, k, drop_self):
+        import warnings
+
+        rs = np.random.RandomState(10 * d + k)
+        q, qid, t, tid = _knn_case(rs, 4, 0, d, 3, 30, lane_groups=True)
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)
+            c, n = _knn_both(q, qid, t, tid, radius, k, drop_self)
+        _assert_same_rows(c, n)
+        # the self match is a row unless dropped; the non-finite and
+        # empty series never are
+        assert (qid[1] in c[1][c[0] == qid[1]]) == (not drop_self)
+        assert not np.isin(tid[[1, 2, 5, 7]], c[1]).any()
+
+    @pytest.mark.parametrize("lanes", [2, 4, 8])
+    def test_every_width_matches_default_build(self, monkeypatch, tmp_path,
+                                               lanes):
+        """A build capped at ``lanes`` (-DDTW_MAX_LANES) runs that width
+        when the CPU can, and its rows and batch distances equal the
+        default build's, and the reference's, bit for bit."""
+        import warnings
+
+        widest = ck.lanes()
+        if lanes > widest:
+            pytest.skip(f"this CPU runs at most {widest} lanes")
+        rs = np.random.RandomState(31)
+        cases = [_knn_case(rs, 4, 0, d, 3, 30, lane_groups=True)
+                 for d in (1, 2, 3)]
+        args = [(q, qid, t, tid, r, k, drop)
+                for q, qid, t, tid in cases for r in (None, 2)
+                for k, drop in ((1, True), (12, False))]
+
+        def run():
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore", RuntimeWarning)
+                return ([K.dtw_knn_topk(*a) for a in args],
+                        [K.dtw_banded_batch_mixed(q, t[:len(q)], 2)
+                         for q, _, t, _ in cases])
+
+        want = run()
+        ref = _reference_path(run)
+        _rebuild(monkeypatch, tmp_path, f"-DDTW_MAX_LANES={lanes}")
+        assert ck.lanes() == lanes
+        got = run()
+        for rows_g, rows_w, rows_r in zip(got[0], want[0], ref[0]):
+            _assert_same_rows(rows_g, rows_w)
+            _assert_same_rows(rows_g, rows_r)
+        for b_g, b_w, b_r in zip(got[1], want[1], ref[1]):
+            assert _same_or_both_nan(b_g, b_w)
+            assert _same_or_both_nan(b_g, b_r)
 
 
 class TestDtwKnnAbandonSoundness:

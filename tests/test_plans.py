@@ -8,8 +8,8 @@ refactor could silently regress — the 100-TB-critical shapes:
 * no CartesianProduct outside declared all-pairs operators,
 * scalar-only shuffles (vectors/series payloads projected away before
   the exchange),
-* Python stages vectorized (ArrowEvalPython / MapInPandas, never
-  BatchEvalPython row-at-a-time UDFs).
+* Python stages vectorized (ArrowEvalPython / MapInPandas /
+  MapInArrow, never BatchEvalPython row-at-a-time UDFs).
 
 Each test builds the SAME DataFrame the operator builds in production
 on tiny in-memory inputs — plan shape is data-size independent for the
@@ -98,7 +98,7 @@ class TestBroadcastShapes:
     @pytest.mark.parametrize("op", ["classify", "regress"])
     def test_broadcast_dtw_predict_is_one_map_stage(self, spark, op):
         """Broadcast-DTW kNN predict ranks and votes inside the kernel
-        task: one MapInPandas, no Window, no label BroadcastHashJoin and
+        task: one MapInArrow, no Window, no label BroadcastHashJoin and
         exactly one Exchange (size_tasks' round-robin below the map)."""
         import re
 
@@ -114,7 +114,7 @@ class TestBroadcastShapes:
         else:
             pred = knn_regress(q, df, k=3, metric="dtw", weights="distance")
         plan = plan_of(pred)
-        assert len(re.findall(r"\(\d+\) MapInPandas\b", plan)) == 1
+        assert len(re.findall(r"\(\d+\) MapInArrow\b", plan)) == 1
         assert "Window" not in plan
         assert "BroadcastHashJoin" not in plan
         assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 1
@@ -124,7 +124,7 @@ class TestBroadcastShapes:
 
         df = series_df(spark)
         plan = plan_of(kneighbors(df, df, k=3, metric="dtw", drop_self=True))
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
         assert "Window" not in plan
 
     def test_euclidean_gate_falls_back_past_byte_budget(self, spark, monkeypatch):

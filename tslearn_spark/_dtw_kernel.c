@@ -1,11 +1,12 @@
-/* Banded / unconstrained DTW: one DP core, two lanes wide, two entry
- * points.
+/* Banded / unconstrained DTW: one DP core, W lanes wide (W = 8, 4 or 2,
+ * picked from the CPU when the library loads), two entry points.
  *
  *   dtw_batch  a batch of variable-length pairs -> one distance each
  *              (behind kernels.dtw_banded_batch_mixed)
  *   dtw_knn    queries x train -> each query's k nearest train series,
  *              every DP capped at the running k-th best (exact early
  *              abandon inside the kernel; behind kernels.dtw_knn_topk)
+ *   dtw_lanes  the lane width dtw_knn runs at in this process
  *
  * This file is the engine's only batched DTW.  Both entry points run
  * dtw_core, the file's only recurrence, the twin of the per-pair
@@ -23,20 +24,33 @@
  *   IEEE ops; compile with -ffp-contract=off so no FMA re-rounds the
  *   subtract-square local cost.
  *
- * Two lanes: each cell waits on the running sum and running minimum of
- * the cell before it, so one DP is latency-bound and a second,
- * independent DP in the other double lane of the same 16-byte vector
- * costs almost nothing.  dtw_core runs two pairs of the same shape
- * (la, lb), one per lane, over one band geometry; both operands are
- * stored interleaved lane by lane (interleave).  Lane arithmetic is the
- * scalar arithmetic lane by lane.  The min is `a < b ? a : b` per lane:
- * SSE2's minpd is exactly that select (it returns its second operand
- * on equal values and on NaN), elsewhere a compare-mask select over GCC
- * vector types computes the same, so every lane keeps bit identity.
- * dtw_knn orders the train set by length once per call and feeds each
- * query's equal-length candidates two at a time; dtw_batch pairs two
+ * Lanes: each cell waits on the running sum and running minimum of the
+ * cell before it, so one DP is latency-bound and further, independent
+ * DPs in the other double lanes of the same vector cost almost nothing.
+ * dtw_core runs W pairs of the same shape (la, lb), one per lane, over
+ * one band geometry; the operands are stored interleaved lane by lane
+ * (interleave).  Lane arithmetic is the scalar arithmetic lane by lane.
+ * The min is `a < b ? a : b` per lane: minpd / vminpd is exactly that
+ * select at every width (it returns its second operand on equal values
+ * and on NaN); without SSE2 a compare-mask select over GCC vector types
+ * computes the same, so every lane keeps bit identity.  dtw_knn orders
+ * the train set by length once per call and feeds each query's
+ * equal-length candidates W at a time; dtw_batch groups up to W
  * consecutive pairs of equal shape (metrics._pair_sort sends batches in
- * shape order).  A lone pair runs with its partner lane dead.
+ * shape order).  Lanes a group does not fill run dead.
+ *
+ * Widths: the per-width half of this file (at its end, after `#else`)
+ * is compiled once per width by including this file again with LANES
+ * set: W = 2 for the build's own target (SSE2 on x86-64, GCC vector
+ * types elsewhere), and on x86 also W = 4 under target("avx2") and
+ * W = 8 under target("avx512f").  The build itself takes no -m flag, so
+ * one .so runs on any x86-64; pick_lanes chooses once per process, with
+ * __builtin_cpu_supports (which also checks that the OS saves the wider
+ * registers), the widest width the CPU runs for dtw_knn.  dtw_batch,
+ * whose random-shape batches are nearly all lone pairs, stays at two
+ * lanes (a lone pair measured no faster in a wider register).  Building
+ * with -DDTW_MAX_LANES=4 or =2 caps the width (the tests compare every
+ * width the machine runs against the default build).
  *
  * Out-of-band prev cells read inf, like the reference's inf cells
  * outside the band, through two sentinels instead of per-cell bounds
@@ -48,8 +62,8 @@
  * Early abandon (dtw_knn only; dtw_batch runs every pair uncapped): a
  * lane whose running band minimum exceeds its cap is dead and reports
  * +inf (the reference never abandons and returns the true value; both
- * are "provably worse than the current top-k"); the pair returns once
- * both lanes are dead.
+ * are "provably worse than the current top-k"); the group returns once
+ * all its lanes are dead.
  *
  * radius < 0 means unconstrained (full window): wlo/whi are set so
  * cur_lo == 0 and hi == lb-1 on every row.
@@ -65,55 +79,27 @@
  * Both entry points return 0, or -1 when the scratch allocation fails
  * (nothing is written then; the Python side runs the reference).
  */
+#ifndef LANES
+
 #include <float.h>
 #include <math.h>
 #include <stdint.h>
 #include <stdlib.h>
 #ifdef __SSE2__
-#include <emmintrin.h>
+#include <immintrin.h>
+#endif
+
+#ifndef DTW_MAX_LANES
+#define DTW_MAX_LANES 8
+#endif
+/* the 4- and 8-lane widths: x86 builds with SSE2 (every x86-64) */
+#if defined(__SSE2__) && (defined(__x86_64__) || defined(__i386__))
+#define WIDE_LANES 1
+#else
+#define WIDE_LANES 0
 #endif
 
 #define INLINE static inline __attribute__((always_inline))
-
-/* one value per lane; buffers of v2d are 16-byte aligned (dp_scratch),
- * so packed instructions read them straight from memory */
-typedef double v2d __attribute__((vector_size(16)));
-typedef long long v2i __attribute__((vector_size(16)));
-
-INLINE v2d splat(double x)
-{
-    v2d v = {x, x};
-    return v;
-}
-
-/* all-ones in lane l where bit l of bits is set */
-INLINE v2i lanes_of(int bits)
-{
-    v2i mk = {-(long long) (bits & 1), -(long long) (bits >> 1 & 1)};
-    return mk;
-}
-
-/* per lane: a where mk is all-ones, else b */
-INLINE v2d lane_select(v2i mk, v2d a, v2d b)
-{
-    return (v2d) ((mk & (v2i) a) | (~mk & (v2i) b));
-}
-
-/* per lane: a < b ? a : b */
-INLINE v2d vmin(v2d a, v2d b)
-{
-#ifdef __SSE2__
-    return (v2d) _mm_min_pd((__m128d) a, (__m128d) b);
-#else
-    return lane_select(a < b, a, b);
-#endif
-}
-
-/* per lane: a < b || a is NaN ? a : b, the NaN-propagating min */
-INLINE v2d vmin_nan(v2d a, v2d b)
-{
-    return lane_select((a < b) | (a != a), a, b);
-}
 
 static void band(long long la, long long lb, long long radius,
                  long long *wlo, long long *whi)
@@ -121,113 +107,6 @@ static void band(long long la, long long lb, long long radius,
     if (radius < 0) { *wlo = la; *whi = lb; }
     else if (la > lb) { *wlo = la - lb + radius; *whi = radius; }
     else { *wlo = radius; *whi = lb - la + radius; }
-}
-
-/* x and y, n values each, interleaved lane by lane into out */
-static void interleave(v2d *out, const double *x, const double *y,
-                       long long n)
-{
-    long long j;
-    /* a lone pair, or a dtw_knn query, fills both lanes from one series:
-     * one load per value (3-4% of a lone dtw_batch pair at sz 45-99) */
-    if (x == y) {
-        for (j = 0; j < n; j++)
-            out[j] = splat(x[j]);
-        return;
-    }
-    for (j = 0; j < n; j++) {
-        v2d v = {x[j], y[j]};
-        out[j] = v;
-    }
-}
-
-/* squared local cost of cell (i, c) in both lanes: (a - b)^2 summed over
- * the d channels in channel order, like kernels._dtw_local_cost */
-INLINE v2d cost(const v2d *A, const v2d *B, long long i, long long c,
-                long long d)
-{
-    if (d == 1) {
-        v2d t = A[i] - B[c];
-        return t * t;
-    }
-    long long dim;
-    v2d dw = splat(0.0);
-    for (dim = 0; dim < d; dim++) {
-        v2d t = A[i * d + dim] - B[c * d + dim];
-        dw += t * t;
-    }
-    return dw;
-}
-
-/* Squared DTW of two pairs of shape (la, lb), one per lane, operands
- * interleaved.  Lane l returns +inf when bit l of `dead` is set, or
- * once a row's band minimum plus tail[l] exceeds cap[l] (tail: 0, or
- * the last cell's local cost, which every path still has to pay after
- * any earlier row); the pair returns as soon as both lanes are dead.
- * prev/row point one cell into buffers of >= lb + 2 cells whose cell -1
- * holds +inf.  Inlined per call site so the d == 1 call compiles to a
- * straight loop. */
-INLINE v2d dtw_core(const v2d *A, long long la, const v2d *B, long long lb,
-                    long long d, long long radius, v2d cap, v2d tail,
-                    int dead, v2d *prev, v2d *row, int nan)
-{
-    const v2d inf = splat(INFINITY);
-    long long wlo, whi, prev_lo = 0, i, k;
-    /* the NaN instance never abandons; nor does a call without a cap */
-    int capped = !nan && (cap[0] < INFINITY || cap[1] < INFINITY);
-    if (la <= 0 || lb <= 0 || dead == 3)
-        return inf;
-    band(la, lb, radius, &wlo, &whi);
-    for (i = 0; i < la; i++) {
-        long long cur_lo = i - wlo;
-        if (cur_lo < 0) cur_lo = 0;
-        long long hi = i + whi;
-        if (hi > lb - 1) hi = lb - 1;
-        long long width = hi - cur_lo; /* inclusive cells [0, width] */
-        /* a fully out-of-band row (unreachable with valid bands) leaves
-         * no finite cell, and every later row would propagate inf */
-        if (width < 0)
-            return inf;
-        const v2d *Bc = B + cur_lo * d;
-        v2d s = splat(0.0), rmin = inf;
-        if (i == 0) {
-            /* row 0: row = cumsum(D), like the reference's row 0 */
-            for (k = 0; k <= width; k++) {
-                s += cost(A, Bc, i, k, d);
-                row[k] = s;
-                rmin = vmin(s, rmin);
-            }
-        } else {
-            /* up = prev cell k+shift, diag = prev cell k+shift-1 */
-            const v2d *pu = prev + (cur_lo - prev_lo);
-            v2d m = inf;
-            for (k = 0; k <= width; k++) {
-                v2d dw = cost(A, Bc, i, k, d);
-                v2d up = pu[k], dg = pu[k - 1];
-                v2d a = dw + (nan ? vmin_nan(up, dg) : vmin(up, dg));
-                s += dw;
-                v2d t = a - s;
-                m = nan ? vmin_nan(t, m) : vmin(t, m);
-                v2d v = s + m;
-                row[k] = v;
-                rmin = vmin(v, rmin);
-            }
-        }
-        if (i + 1 == la)
-            return lane_select(lanes_of(dead), inf, row[lb - 1 - cur_lo]);
-        if (capped) {
-            v2i over = rmin + tail > cap;
-            dead |= (int) (over[0] & 1) | (int) (over[1] & 2);
-            if (dead == 3)
-                return inf;
-        }
-        row[width + 1] = inf;
-        v2d *tmp = prev;
-        prev = row;
-        row = tmp;
-        prev_lo = cur_lo;
-    }
-    return inf; /* not reached: the last row returns */
 }
 
 /* the larger of a and b, NaN when either is */
@@ -256,86 +135,6 @@ static int finite_dp(long long la, long long lb, long long d, double m)
     return (double) (la + 2 * lb + 2) * 8.0 * (double) d * m * m < DBL_MAX;
 }
 
-/* dtw_core over both lanes, m[l] the largest |value| of lane l's pair:
- * lanes whose pair passes finite_dp run the finite instance, the others
- * the NaN-propagating one. */
-static v2d dtw_pair(const v2d *A, long long la, const v2d *B, long long lb,
-                    long long d, long long radius, v2d cap, v2d tail,
-                    int dead, const double *m, v2d *prev, v2d *row)
-{
-    int nan = (finite_dp(la, lb, d, m[0]) ? 0 : 1)
-              | (finite_dp(la, lb, d, m[1]) ? 0 : 2);
-    v2d out;
-    if (d == 1)
-        out = dtw_core(A, la, B, lb, 1, radius, cap, tail, dead | nan,
-                       prev, row, 0);
-    else
-        out = dtw_core(A, la, B, lb, d, radius, cap, tail, dead | nan,
-                       prev, row, 0);
-    if (nan & ~dead)
-        out = lane_select(lanes_of(nan & ~dead),
-                          dtw_core(A, la, B, lb, d, radius, cap, tail,
-                                   dead | (~nan & 3), prev, row, 1),
-                          out);
-    return out;
-}
-
-/* two DP row buffers of `cells` + 2 vectors, cell -1 = +inf, plus
- * `extra` vectors of caller scratch after them, all 16-byte aligned;
- * returns the pointer to free, NULL on failure.  A row spans at most lb
- * cells, so cells = the longest B series fits every pair. */
-static void *dp_scratch(long long cells, long long extra, v2d **prev,
-                        v2d **row)
-{
-    void *buf = malloc(
-        ((size_t) (2 * (cells + 2) + extra + 1)) * sizeof(v2d));
-    if (buf == NULL)
-        return NULL;
-    *prev = (v2d *) (((uintptr_t) buf + sizeof(v2d)) & ~(uintptr_t) 15) + 1;
-    *row = *prev + cells + 2;
-    (*prev)[-1] = splat(INFINITY);
-    (*row)[-1] = splat(INFINITY);
-    return buf;
-}
-
-int dtw_batch(const double *bufA, const long long *offA, const long long *lenA,
-              const double *bufB, const long long *offB, const long long *lenB,
-              long long n, long long d, long long radius, double *out)
-{
-    long long cells = 1, la_max = 1, p, w;
-    v2d *prev, *row, *AI, *BI;
-    void *buf;
-    for (p = 0; p < n; p++) {
-        if (lenB[p] > cells) cells = lenB[p];
-        if (lenA[p] > la_max) la_max = lenA[p];
-    }
-    buf = dp_scratch(cells, (la_max + cells) * d, &prev, &row);
-    if (buf == NULL)
-        return -1;
-    AI = row + cells + 1;
-    BI = AI + la_max * d;
-    /* w = 2: pairs p and p + 1 share a shape and run as the two lanes */
-    for (p = 0; p < n; p += w) {
-        long long la = lenA[p], lb = lenB[p];
-        w = p + 1 < n && lenA[p + 1] == la && lenB[p + 1] == lb ? 2 : 1;
-        const double *A0 = bufA + offA[p], *A1 = bufA + offA[p + w - 1];
-        const double *B0 = bufB + offB[p], *B1 = bufB + offB[p + w - 1];
-        double m[2];
-        m[0] = nan_max(max_abs(A0, la * d), max_abs(B0, lb * d));
-        m[1] = w == 2 ? nan_max(max_abs(A1, la * d), max_abs(B1, lb * d))
-                      : m[0];
-        interleave(AI, A0, A1, la * d);
-        interleave(BI, B0, B1, lb * d);
-        v2d r = dtw_pair(AI, la, BI, lb, d, radius, splat(INFINITY),
-                         splat(0.0), w == 2 ? 0 : 2, m, prev, row);
-        out[p] = sqrt(r[0]);
-        if (w == 2)
-            out[p + 1] = sqrt(r[1]);
-    }
-    free(buf);
-    return 0;
-}
-
 /* (dist, id) order of the final (dist, id2) window */
 static int ranks_after(double da, long long ia, double db, long long ib)
 {
@@ -358,9 +157,9 @@ static int ranks_after(double da, long long ia, double db, long long ib)
  *    sound (la >= 2 there) with margin left for the rounding of this
  *    formula; the la lb DBL_TRUE_MIN term covers gradual underflow.
  * A non-finite M gives an infinite cap: no abandon for that pair.
- * Each lane of a two-lane call takes the cap of the k-th best held
- * before the call: it is never below the k-th best at the time the
- * lane's result is offered, so the argument holds per lane. */
+ * Every lane of a W-lane group takes the cap of the k-th best held
+ * before the group starts: it is never below the k-th best at the time
+ * the lane's result is offered, so the argument holds per lane. */
 static double abandon_cap(double kth, long long la, long long lb,
                           long long d, double m)
 {
@@ -392,16 +191,79 @@ static void offer(double *td, long long *ti, long long *cnt, long long kk,
     ti[pos] = j;
 }
 
+/* ---- the per-width half, once per width ---- */
+
+#define LANES 2
+#define LANE_TARGET
+#ifdef __SSE2__
+#define LANE_MIN(a, b) _mm_min_pd(a, b)
+#define LANE_GT_BITS(a, b) _mm_movemask_pd(_mm_cmpgt_pd(a, b))
+#endif
+#include "_dtw_kernel.c"
+
+#if WIDE_LANES && DTW_MAX_LANES >= 4
+#define LANES 4
+#define LANE_TARGET __attribute__((target("avx2")))
+#define LANE_MIN(a, b) _mm256_min_pd(a, b)
+#define LANE_GT_BITS(a, b) _mm256_movemask_pd(_mm256_cmp_pd(a, b, _CMP_GT_OQ))
+#include "_dtw_kernel.c"
+#endif
+
+#if WIDE_LANES && DTW_MAX_LANES >= 8
+#define LANES 8
+#define LANE_TARGET __attribute__((target("avx512f")))
+#define LANE_MIN(a, b) _mm512_min_pd(a, b)
+#define LANE_GT_BITS(a, b) ((int) _mm512_cmp_pd_mask(a, b, _CMP_GT_OQ))
+#include "_dtw_kernel.c"
+#endif
+
+/* ---- dispatch: one width per process ---- */
+
+static int knn_lanes = 2;
+static __typeof__(knn_2) *knn_run = knn_2;
+
+/* The widest width this CPU runs (and its OS saves the registers of),
+ * capped by DTW_MAX_LANES; run when the library loads. */
+__attribute__((constructor)) static void pick_lanes(void)
+{
+#if WIDE_LANES && DTW_MAX_LANES >= 4
+    __builtin_cpu_init();
+#if DTW_MAX_LANES >= 8
+    if (__builtin_cpu_supports("avx512f")) {
+        knn_lanes = 8;
+        knn_run = knn_8;
+        return;
+    }
+#endif
+    if (__builtin_cpu_supports("avx2")) {
+        knn_lanes = 4;
+        knn_run = knn_4;
+    }
+#endif
+}
+
+int dtw_lanes(void)
+{
+    return knn_lanes;
+}
+
+int dtw_batch(const double *bufA, const long long *offA, const long long *lenA,
+              const double *bufB, const long long *offB, const long long *lenB,
+              long long n, long long d, long long radius, double *out)
+{
+    return batch_2(bufA, offA, lenA, bufB, offB, lenB, n, d, radius, out);
+}
+
 /* For each query q the kk = min(k, nt) train series smallest in
  * (sqrt'd distance, train id) order, ascending, skipping idT == idQ[q]
  * under drop_self and every non-finite distance: out_cnt[q] rows in
  * out_dist / out_idx[q * kk ...] (out_idx holds train positions).  The
- * train set is sorted by length (counting sort) and cut into lane
- * pairs of equal length, interleaved once per call (a length's odd one
- * out runs alone); each pair's lanes run under abandon_cap of the
- * current k-th best.  The rows depend only on (dist, id) order, not on
- * the order candidates are offered in.  Returns -1 (nothing written)
- * when the scratch allocation fails. */
+ * train set is sorted by length (counting sort) and each length cut into
+ * groups of W, interleaved once per call (knn_W); each group's lanes run
+ * under abandon_cap of the k-th best held before the group starts.  The
+ * rows depend only on (dist, id) order, not on the order candidates are
+ * offered in.  Returns -1 (nothing written) when the scratch allocation
+ * fails. */
 int dtw_knn(const double *bufQ, const long long *offQ, const long long *lenQ,
             const long long *idQ, long long nq,
             const double *bufT, const long long *offT, const long long *lenT,
@@ -409,11 +271,10 @@ int dtw_knn(const double *bufQ, const long long *offQ, const long long *lenQ,
             long long d, long long radius, long long k, int drop_self,
             double *out_dist, long long *out_idx, long long *out_cnt)
 {
-    long long kk = k < nt ? k : nt, cells = 1, la_max = 1, np = 0, nv = 0;
-    long long q, j, p, w, *ix, *start, *order, *pairs;
-    v2d *prev, *row, *AI, *BI;
-    void *buf;
+    long long kk = k < nt ? k : nt, cells = 1, la_max = 1, q, j;
+    long long *start, *order;
     double *maxT;
+    int rc;
     if (kk <= 0) {
         for (q = 0; q < nq; q++) out_cnt[q] = 0;
         return 0;
@@ -422,44 +283,352 @@ int dtw_knn(const double *bufQ, const long long *offQ, const long long *lenQ,
         if (lenT[j] > cells) cells = lenT[j];
     for (q = 0; q < nq; q++)
         if (lenQ[q] > la_max) la_max = lenQ[q];
-    /* counting sort of the train positions by length, stable */
-    ix = (long long *) malloc((size_t) (cells + 2 + 3 * nt) * sizeof(long long));
-    if (ix == NULL)
+    /* counting sort of the train positions by length, stable, and each
+     * train series' largest |value| */
+    start = (long long *) malloc((size_t) (cells + 2 + 2 * nt)
+                                 * sizeof(long long));
+    if (start == NULL)
         return -1;
-    start = ix;
-    order = ix + cells + 2;
-    pairs = order + nt;
+    order = start + cells + 2;
+    maxT = (double *) (order + nt);
     for (j = 0; j <= cells + 1; j++) start[j] = 0;
     for (j = 0; j < nt; j++) start[lenT[j] + 1]++;
     for (j = 1; j <= cells + 1; j++) start[j] += start[j - 1];
     for (j = 0; j < nt; j++) order[start[lenT[j]]++] = j;
-    /* lane pairs of equal length (a lone one pairs with itself); empty
-     * series have no finite distance and never run */
-    for (j = start[0]; j < nt; j += w) {
-        long long j0 = order[j];
-        w = j + 1 < nt && lenT[order[j + 1]] == lenT[j0] ? 2 : 1;
-        pairs[2 * np] = j0;
-        pairs[2 * np + 1] = order[j + w - 1];
-        nv += lenT[j0] * d;
-        np++;
+    for (j = 0; j < nt; j++)
+        maxT[j] = max_abs(bufT + offT[j], lenT[j] * d);
+    /* empty series have no finite distance and never run: after the
+     * sort the non-empty ones start at start[0] */
+    rc = knn_run(bufQ, offQ, lenQ, idQ, nq, bufT, offT, lenT, idT,
+                 order + start[0], nt - start[0], maxT, cells, la_max, d,
+                 radius, kk, drop_self, out_dist, out_idx, out_cnt);
+    free(start);
+    return rc;
+}
+
+#else /* LANES: the per-width half, W = LANES */
+
+#define CAT_(a, b) a##_##b
+#define CAT(a, b) CAT_(a, b)
+#define WIDE(name) CAT(name, LANES)
+#define ALL ((1 << LANES) - 1)
+#define FN INLINE LANE_TARGET
+
+/* one value per lane; buffers of vd are sizeof(vd)-aligned (dp_scratch),
+ * so packed instructions read them straight from memory */
+typedef double WIDE(vd) __attribute__((vector_size(8 * LANES)));
+typedef long long WIDE(vi) __attribute__((vector_size(8 * LANES)));
+#define vd WIDE(vd)
+#define vi WIDE(vi)
+
+FN vd WIDE(splat)(double x)
+{
+    return (vd) {0} + x;
+}
+
+/* all-ones in lane l where bit l of bits is set */
+FN vi WIDE(lanes_of)(int bits)
+{
+    vi mk = {0};
+    int l;
+    for (l = 0; l < LANES; l++)
+        mk[l] = -(long long) (bits >> l & 1);
+    return mk;
+}
+
+/* per lane: a where mk is all-ones, else b */
+FN vd WIDE(lane_select)(vi mk, vd a, vd b)
+{
+    return (vd) ((mk & (vi) a) | (~mk & (vi) b));
+}
+
+/* per lane: a < b ? a : b */
+FN vd WIDE(vmin)(vd a, vd b)
+{
+#ifdef LANE_MIN
+    return (vd) LANE_MIN(a, b);
+#else
+    return WIDE(lane_select)(a < b, a, b);
+#endif
+}
+
+/* per lane: a < b || a is NaN ? a : b, the NaN-propagating min */
+FN vd WIDE(vmin_nan)(vd a, vd b)
+{
+    return WIDE(lane_select)((a < b) | (a != a), a, b);
+}
+
+/* bit l set where lane l of a > b */
+FN int WIDE(gt_bits)(vd a, vd b)
+{
+#ifdef LANE_GT_BITS
+    return LANE_GT_BITS(a, b);
+#else
+    vi gt = a > b;
+    int l, bits = 0;
+    for (l = 0; l < LANES; l++)
+        bits |= (int) (gt[l] & 1) << l;
+    return bits;
+#endif
+}
+
+/* src[l], n values each, interleaved lane by lane into out */
+static LANE_TARGET void WIDE(interleave)(vd *out, const double *const *src,
+                                         long long n)
+{
+    long long j;
+    int l, same = 1;
+    for (l = 1; l < LANES; l++)
+        same &= src[l] == src[0];
+    /* one series in every lane (a lone pair, a dtw_knn query): one load
+     * per value (3-4% of a lone dtw_batch pair at sz 45-99) */
+    if (same) {
+        for (j = 0; j < n; j++)
+            out[j] = WIDE(splat)(src[0][j]);
+        return;
     }
-    buf = dp_scratch(cells, la_max * d + nv + (nt + 1) / 2, &prev, &row);
+    for (j = 0; j < n; j++)
+        for (l = 0; l < LANES; l++)
+            out[j][l] = src[l][j];
+}
+
+/* squared local cost of cell (i, c) in every lane: (a - b)^2 summed
+ * over the d channels in channel order, like kernels._dtw_local_cost */
+FN vd WIDE(cost)(const vd *A, const vd *B, long long i, long long c,
+                 long long d)
+{
+    if (d == 1) {
+        vd t = A[i] - B[c];
+        return t * t;
+    }
+    long long dim;
+    vd dw = WIDE(splat)(0.0);
+    for (dim = 0; dim < d; dim++) {
+        vd t = A[i * d + dim] - B[c * d + dim];
+        dw += t * t;
+    }
+    return dw;
+}
+
+/* Squared DTW of W pairs of shape (la, lb), one per lane, operands
+ * interleaved.  Lane l returns +inf when bit l of `dead` is set, or
+ * once a row's band minimum plus tail[l] exceeds cap[l] (tail: 0, or
+ * the last cell's local cost, which every path still has to pay after
+ * any earlier row); the group returns as soon as every lane is dead.
+ * prev/row point one cell into buffers of >= lb + 2 cells whose cell -1
+ * holds +inf.  Inlined per call site so the d == 1 call compiles to a
+ * straight loop. */
+FN vd WIDE(dtw_core)(const vd *A, long long la, const vd *B, long long lb,
+                     long long d, long long radius, vd cap, vd tail,
+                     int dead, vd *prev, vd *row, int nan)
+{
+    const vd inf = WIDE(splat)(INFINITY);
+    long long wlo, whi, prev_lo = 0, i, k;
+    /* the NaN instance never abandons; nor does a call without a cap */
+    int capped = !nan && WIDE(gt_bits)(inf, cap) != 0;
+    if (la <= 0 || lb <= 0 || dead == ALL)
+        return inf;
+    band(la, lb, radius, &wlo, &whi);
+    for (i = 0; i < la; i++) {
+        long long cur_lo = i - wlo;
+        if (cur_lo < 0) cur_lo = 0;
+        long long hi = i + whi;
+        if (hi > lb - 1) hi = lb - 1;
+        long long width = hi - cur_lo; /* inclusive cells [0, width] */
+        /* a fully out-of-band row (unreachable with valid bands) leaves
+         * no finite cell, and every later row would propagate inf */
+        if (width < 0)
+            return inf;
+        const vd *Bc = B + cur_lo * d;
+        vd s = WIDE(splat)(0.0), rmin = inf;
+        if (i == 0) {
+            /* row 0: row = cumsum(D), like the reference's row 0 */
+            for (k = 0; k <= width; k++) {
+                s += WIDE(cost)(A, Bc, i, k, d);
+                row[k] = s;
+                rmin = WIDE(vmin)(s, rmin);
+            }
+        } else {
+            /* up = prev cell k+shift, diag = prev cell k+shift-1 */
+            const vd *pu = prev + (cur_lo - prev_lo);
+            vd m = inf;
+            for (k = 0; k <= width; k++) {
+                vd dw = WIDE(cost)(A, Bc, i, k, d);
+                vd up = pu[k], dg = pu[k - 1];
+                vd a = dw + (nan ? WIDE(vmin_nan)(up, dg)
+                                 : WIDE(vmin)(up, dg));
+                s += dw;
+                vd t = a - s;
+                m = nan ? WIDE(vmin_nan)(t, m) : WIDE(vmin)(t, m);
+                vd v = s + m;
+                row[k] = v;
+                rmin = WIDE(vmin)(v, rmin);
+            }
+        }
+        if (i + 1 == la)
+            return WIDE(lane_select)(WIDE(lanes_of)(dead), inf,
+                                     row[lb - 1 - cur_lo]);
+        if (capped) {
+            dead |= WIDE(gt_bits)(rmin + tail, cap);
+            if (dead == ALL)
+                return inf;
+        }
+        row[width + 1] = inf;
+        vd *tmp = prev;
+        prev = row;
+        row = tmp;
+        prev_lo = cur_lo;
+    }
+    return inf; /* not reached: the last row returns */
+}
+
+/* dtw_core over every lane, m[l] the largest |value| of lane l's pair:
+ * lanes whose pair passes finite_dp run the finite instance, the others
+ * the NaN-propagating one. */
+static LANE_TARGET vd WIDE(dtw_group)(const vd *A, long long la, const vd *B,
+                                      long long lb, long long d,
+                                      long long radius, vd cap, vd tail,
+                                      int dead, const double *m, vd *prev,
+                                      vd *row)
+{
+    int nan = 0, l;
+    vd out;
+    for (l = 0; l < LANES; l++)
+        nan |= !finite_dp(la, lb, d, m[l]) << l;
+    if (d == 1)
+        out = WIDE(dtw_core)(A, la, B, lb, 1, radius, cap, tail, dead | nan,
+                             prev, row, 0);
+    else
+        out = WIDE(dtw_core)(A, la, B, lb, d, radius, cap, tail, dead | nan,
+                             prev, row, 0);
+    if (nan & ~dead)
+        out = WIDE(lane_select)(
+            WIDE(lanes_of)(nan & ~dead),
+            WIDE(dtw_core)(A, la, B, lb, d, radius, cap, tail,
+                           dead | (~nan & ALL), prev, row, 1),
+            out);
+    return out;
+}
+
+/* two DP row buffers of `cells` + 2 vectors, cell -1 = +inf, plus
+ * `extra` vectors of caller scratch after them, all sizeof(vd)-aligned;
+ * returns the pointer to free, NULL on failure.  A row spans at most lb
+ * cells, so cells = the longest B series fits every pair. */
+static LANE_TARGET void *WIDE(dp_scratch)(long long cells, long long extra,
+                                          vd **prev, vd **row)
+{
+    void *buf = malloc(
+        ((size_t) (2 * (cells + 2) + extra + 1)) * sizeof(vd));
+    if (buf == NULL)
+        return NULL;
+    *prev = (vd *) (((uintptr_t) buf + sizeof(vd))
+                    & ~(uintptr_t) (sizeof(vd) - 1)) + 1;
+    *row = *prev + cells + 2;
+    (*prev)[-1] = WIDE(splat)(INFINITY);
+    (*row)[-1] = WIDE(splat)(INFINITY);
+    return buf;
+}
+
+#if LANES == 2
+/* dtw_batch's width, two lanes: up to W consecutive pairs of one shape
+ * share a group.  Random-shape batches are nearly all lone pairs, and a
+ * lone pair ran twice as long in eight lanes (4.2 against 2.0 us at
+ * lengths 45-99, radius 5). */
+static LANE_TARGET int WIDE(batch)(
+    const double *bufA, const long long *offA, const long long *lenA,
+    const double *bufB, const long long *offB, const long long *lenB,
+    long long n, long long d, long long radius, double *out)
+{
+    long long cells = 1, la_max = 1, p;
+    int g, l;
+    vd *prev, *row, *AI, *BI;
+    void *buf;
+    for (p = 0; p < n; p++) {
+        if (lenB[p] > cells) cells = lenB[p];
+        if (lenA[p] > la_max) la_max = lenA[p];
+    }
+    buf = WIDE(dp_scratch)(cells, (la_max + cells) * d, &prev, &row);
+    if (buf == NULL)
+        return -1;
+    AI = row + cells + 1;
+    BI = AI + la_max * d;
+    for (p = 0; p < n; p += g) {
+        long long la = lenA[p], lb = lenB[p];
+        const double *as[LANES], *bs[LANES];
+        double m[LANES];
+        for (g = 1; g < LANES && p + g < n && lenA[p + g] == la
+                    && lenB[p + g] == lb; g++)
+            ;
+        for (l = 0; l < LANES; l++) {
+            long long q = p + (l < g ? l : 0);
+            as[l] = bufA + offA[q];
+            bs[l] = bufB + offB[q];
+            m[l] = l < g ? nan_max(max_abs(as[l], la * d),
+                                   max_abs(bs[l], lb * d))
+                         : m[0];
+        }
+        WIDE(interleave)(AI, as, la * d);
+        WIDE(interleave)(BI, bs, lb * d);
+        vd r = WIDE(dtw_group)(AI, la, BI, lb, d, radius,
+                               WIDE(splat)(INFINITY), WIDE(splat)(0.0),
+                               ALL & ~((1 << g) - 1), m, prev, row);
+        for (l = 0; l < g; l++)
+            out[p + l] = sqrt(r[l]);
+    }
+    free(buf);
+    return 0;
+}
+#endif
+
+/* dtw_knn at W lanes over the n non-empty train positions `order`,
+ * sorted by length: each length is cut into groups of W (the last one
+ * of a length may leave lanes dead), interleaved once per call. */
+static LANE_TARGET int WIDE(knn)(
+    const double *bufQ, const long long *offQ, const long long *lenQ,
+    const long long *idQ, long long nq,
+    const double *bufT, const long long *offT, const long long *lenT,
+    const long long *idT, const long long *order, long long n,
+    const double *maxT, long long cells, long long la_max, long long d,
+    long long radius, long long kk, int drop_self,
+    double *out_dist, long long *out_idx, long long *out_cnt)
+{
+    long long ng = 0, nv = 0, q, j, p, *grp;
+    int g, l;
+    vd *prev, *row, *AI, *BI;
+    void *buf;
+    /* grp: per group, its W train positions (a short group repeats its
+     * first) and then its live-lane count */
+    grp = (long long *) malloc((size_t) (n + 1) * (LANES + 1)
+                               * sizeof(long long));
+    if (grp == NULL)
+        return -1;
+    for (j = 0; j < n; j += g) {
+        long long *gp = grp + ng * (LANES + 1);
+        long long lb = lenT[order[j]];
+        for (g = 1; g < LANES && j + g < n && lenT[order[j + g]] == lb; g++)
+            ;
+        for (l = 0; l < LANES; l++)
+            gp[l] = order[j + (l < g ? l : 0)];
+        gp[LANES] = g;
+        nv += lb * d;
+        ng++;
+    }
+    buf = WIDE(dp_scratch)(cells, la_max * d + nv, &prev, &row);
     if (buf == NULL) {
-        free(ix);
+        free(grp);
         return -1;
     }
     AI = row + cells + 1;
     BI = AI + la_max * d;
-    maxT = (double *) (BI + nv);
-    for (j = 0; j < nt; j++)
-        maxT[j] = max_abs(bufT + offT[j], lenT[j] * d);
     {
-        v2d *B = BI;
-        for (p = 0; p < np; p++) {
-            long long lb = lenT[pairs[2 * p]];
-            interleave(B, bufT + offT[pairs[2 * p]],
-                       bufT + offT[pairs[2 * p + 1]], lb * d);
-            B += lb * d;
+        vd *B = BI;
+        for (p = 0; p < ng; p++) {
+            const long long *gp = grp + p * (LANES + 1);
+            const double *src[LANES];
+            for (l = 0; l < LANES; l++)
+                src[l] = bufT + offT[gp[l]];
+            WIDE(interleave)(B, src, lenT[gp[0]] * d);
+            B += lenT[gp[0]] * d;
         }
     }
     for (q = 0; q < nq; q++) {
@@ -467,35 +636,48 @@ int dtw_knn(const double *bufQ, const long long *offQ, const long long *lenQ,
         double *td = out_dist + q * kk;
         long long *ti = out_idx + q * kk;
         double maxq = max_abs(bufQ + offQ[q], la * d);
-        const v2d *B = BI;
-        interleave(AI, bufQ + offQ[q], bufQ + offQ[q], la * d);
-        for (p = 0; la > 0 && p < np; p++) {
-            long long j0 = pairs[2 * p], j1 = pairs[2 * p + 1];
-            long long lb = lenT[j0];
-            const v2d *Bp = B;
+        const double *src[LANES];
+        const vd *B = BI;
+        for (l = 0; l < LANES; l++)
+            src[l] = bufQ + offQ[q];
+        WIDE(interleave)(AI, src, la * d);
+        for (p = 0; la > 0 && p < ng; p++) {
+            const long long *gp = grp + p * (LANES + 1);
+            long long lb = lenT[gp[0]];
+            const vd *Bp = B;
+            double m[LANES];
+            int dead = ALL & ~((1 << gp[LANES]) - 1);
+            vd cap = WIDE(splat)(INFINITY);
             B += lb * d;
-            int dead = (j1 == j0) << 1;
             if (drop_self)
-                dead |= (idT[j0] == idQ[q]) | (idT[j1] == idQ[q]) << 1;
-            if (dead == 3)
+                for (l = 0; l < LANES; l++)
+                    dead |= (idT[gp[l]] == idQ[q]) << l;
+            if (dead == ALL)
                 continue;
-            double m[2] = {nan_max(maxT[j0], maxq), nan_max(maxT[j1], maxq)};
-            v2d cap = splat(INFINITY);
-            if (cnt == kk) {
-                cap[0] = abandon_cap(td[kk - 1], la, lb, d, m[0]);
-                cap[1] = abandon_cap(td[kk - 1], la, lb, d, m[1]);
+            for (l = 0; l < LANES; l++) {
+                m[l] = nan_max(maxT[gp[l]], maxq);
+                if (cnt == kk)
+                    cap[l] = abandon_cap(td[kk - 1], la, lb, d, m[l]);
             }
-            v2d r = dtw_pair(AI, la, Bp, lb, d, radius, cap,
-                             cost(AI, Bp, la - 1, lb - 1, d), dead, m,
-                             prev, row);
-            if (!(dead & 1))
-                offer(td, ti, &cnt, kk, idT, sqrt(r[0]), j0);
-            if (!(dead & 2))
-                offer(td, ti, &cnt, kk, idT, sqrt(r[1]), j1);
+            vd r = WIDE(dtw_group)(AI, la, Bp, lb, d, radius, cap,
+                                   WIDE(cost)(AI, Bp, la - 1, lb - 1, d),
+                                   dead, m, prev, row);
+            for (l = 0; l < LANES; l++)
+                if (!(dead >> l & 1))
+                    offer(td, ti, &cnt, kk, idT, sqrt(r[l]), gp[l]);
         }
         out_cnt[q] = cnt;
     }
     free(buf);
-    free(ix);
+    free(grp);
     return 0;
 }
+
+#undef vd
+#undef vi
+#undef LANES
+#undef LANE_TARGET
+#undef LANE_MIN
+#undef LANE_GT_BITS
+
+#endif /* LANES */

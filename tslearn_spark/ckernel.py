@@ -14,13 +14,17 @@ tries, in order: the local cache, the copy shipped to this Spark task
 (``SparkFiles``) and a local build — so an executor with no compiler
 runs the driver's build.
 
-The library holds one DP core, two lanes wide (two pairs of one shape
-in the two double lanes of a 16-byte vector), behind two entry points,
-bound from the ``_ENTRY_POINTS`` table: ``dtw_batch`` (one distance per
-pair, wrapped by ``dtw_batch`` here; consecutive pairs of equal shape
-share the lanes) and ``dtw_knn`` (each query's top-k over a train set,
-equal-length train series two at a time, every lane capped at the
-running k-th best; wrapped by ``dtw_knn``).
+The library holds one DP core, W lanes wide (W pairs of one shape in the
+double lanes of one vector register), behind two entry points, bound
+from the ``_ENTRY_POINTS`` table: ``dtw_batch`` (one distance per pair,
+wrapped by ``dtw_batch`` here; consecutive pairs of equal shape share
+the two lanes it runs at) and ``dtw_knn`` (each query's top-k over a
+train set, equal-length train series W at a time, every lane capped at
+the running k-th best; wrapped by ``dtw_knn``).  The build takes no
+``-m`` flag, so the shipped library runs on any machine of its
+architecture; on x86-64 the library picks W once per process from the
+CPU it runs on: 8 with AVX-512F, 4 with AVX2, else 2 (``lanes`` reports
+it, and ``-DDTW_MAX_LANES=4`` or ``=2`` in ``_CFLAGS`` caps it).
 Both read series stored back to back (``Flat``: one float64 buffer,
 offsets and lengths), built from arrays by ``flatten`` or straight from
 an Arrow column by ``Flat.from_arrow``.
@@ -69,9 +73,11 @@ _I64P = np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS")
 _F64P = np.ctypeslib.ndpointer(np.float64, flags="C_CONTIGUOUS")
 _LL = ctypes.c_longlong
 
-# every exported symbol and its argument types; each returns 0, or -1
-# when its scratch allocation failed
+# every exported symbol and its argument types; each returns an int:
+# the DP entry points 0, or -1 when their scratch allocation failed,
+# dtw_lanes the lane width dtw_knn runs at
 _ENTRY_POINTS = {
+    "dtw_lanes": [],
     "dtw_batch": [
         _F64P, _I64P, _I64P,        # bufA, offA, lenA
         _F64P, _I64P, _I64P,        # bufB, offB, lenB
@@ -178,6 +184,14 @@ def lib_or_none():
         return _lib
 
 
+def lanes() -> int | None:
+    """The lane width ``dtw_knn`` runs at in this process (8, 4 or 2,
+    picked by the library from the CPU when it loads), or None on the
+    reference tier."""
+    lib = lib_or_none()
+    return None if lib is None else lib.dtw_lanes()
+
+
 def ship(sc) -> None:
     """Send the driver's build to every executor of ``sc`` (once per
     context), where ``lib_or_none`` loads it when that machine has no
@@ -223,6 +237,11 @@ class Flat(NamedTuple):
             leaf.to_numpy(zero_copy_only=False), dtype=np.float64)
         return cls(buf, (outer[:-1] - outer[0]) * d, np.diff(outer), d)
 
+    def arrays(self) -> list:
+        """Each series as a ``(sz, d)`` view of ``buf``."""
+        return [self.buf[o:o + n * self.d].reshape(n, self.d)
+                for o, n in zip(self.off, self.lens)]
+
 
 def flatten(arrs: list, d: int | None = None) -> Flat:
     """A list of ``(sz, d)`` series (1-D for d=1) as one ``Flat``; d
@@ -263,20 +282,27 @@ def dtw_batch(arrs_a: list, arrs_b: list, radius) -> np.ndarray:
     return out
 
 
-def dtw_knn(q_arrs: list, q_ids, train: Flat, t_ids, radius, k: int,
+def dtw_knn(queries, q_ids, train: Flat, t_ids, radius, k: int,
             drop_self: bool):
     """Each query's ``min(k, n_t)`` nearest train series under (banded)
     DTW, in one compiled pass: ``(id1, id2, dist)`` arrays, query order,
     then ascending (dist, id2) within a query; non-finite distances and,
-    under ``drop_self``, equal ids are left out.  The queries are
-    ``(sz, d)`` arrays of the train side's width d.
+    under ``drop_self``, equal ids are left out.  The queries are a
+    ``Flat`` or a list of ``(sz, d)`` arrays, of the train side's width
+    d.
 
     Caller guarantees lib_or_none() is not None and both sides are
     non-empty.  Raises MemoryError when the kernel's scratch allocation
     fails (nothing is returned then).
     """
     lib = lib_or_none()
-    n_q, n_t = len(q_arrs), len(train.lens)
+    q = queries if isinstance(queries, Flat) else flatten(queries, train.d)
+    # offsets follow each side's width: a query buffer of another width
+    # would send the kernel past it (an all-empty one reads nothing)
+    if q.d != train.d and q.buf.size:
+        raise ValueError(
+            f"series must all be (sz, {train.d}) for the C kernel")
+    n_q, n_t = len(q.lens), len(train.lens)
     kk = min(int(k), n_t)
     q_ids = np.ascontiguousarray(q_ids, dtype=np.int64)
     t_ids = np.ascontiguousarray(t_ids, dtype=np.int64)
@@ -285,7 +311,7 @@ def dtw_knn(q_arrs: list, q_ids, train: Flat, t_ids, radius, k: int,
     dist = np.empty(n_q * kk, dtype=np.float64)
     idx = np.empty(n_q * kk, dtype=np.int64)
     cnt = np.empty(n_q, dtype=np.int64)
-    if lib.dtw_knn(*flatten(q_arrs, train.d)[:3], q_ids, n_q,
+    if lib.dtw_knn(*q[:3], q_ids, n_q,
                    *train[:3], t_ids, n_t,
                    train.d, -1 if radius is None else int(radius), kk,
                    int(bool(drop_self)), dist, idx, cnt):

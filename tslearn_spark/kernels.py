@@ -337,18 +337,20 @@ def dtw_band_estimate(lens_t: np.ndarray, radius) -> tuple[float, float]:
     return med_t, w_est
 
 
-def dtw_knn_topk(q_arrs: list, q_ids, train, t_ids, radius, k: int,
+def dtw_knn_topk(queries, q_ids, train, t_ids, radius, k: int,
                  drop_self: bool):
     """Each query's k nearest train series under (banded) DTW: ``(id1,
     id2, dist)`` arrays in query order, then ascending (dist, id2) — the
     order of the final (dist, id2) window — with non-finite distances
     and, under ``drop_self``, equal ids left out.  Every pair that could
-    rank is evaluated exactly.  ``train``: a list of ``(sz, d)`` arrays,
-    or the ``ckernel.Flat`` buffer the kernel reads (what the broadcast
-    kNN ships).
+    rank is evaluated exactly.  ``queries`` and ``train``: each a list
+    of ``(sz, d)`` arrays, or the ``ckernel.Flat`` buffer the kernel
+    reads (what the broadcast kNN ships and decodes from Arrow).
 
     Runs the fused compiled kernel (``ckernel.dtw_knn``: one pass over
-    the train set per query, each DP capped at the running k-th best).
+    the train set per query, its equal-length train series W at a time
+    in the lanes of one vector register, each DP capped at the running
+    k-th best; W = 8, 4 or 2 from the CPU, ``ckernel.lanes``).
     When it is not loaded, or its scratch allocation fails, each query
     runs the per-pair reference against every train series and ranks
     with ``topk_rows_tiebreak``.  Both tiers return the same rows bit for
@@ -361,20 +363,21 @@ def dtw_knn_topk(q_arrs: list, q_ids, train, t_ids, radius, k: int,
     t_ids = np.asarray(t_ids, dtype=np.int64)
     if not isinstance(train, ckernel.Flat):
         train = ckernel.flatten(train)
-    if not q_arrs or not train.lens.size or k < 1:
+    if not len(q_ids) or not train.lens.size or k < 1:
         empty = np.empty(0, dtype=np.int64)
         return empty, empty, np.empty(0)
     if ckernel.lib_or_none() is not None:
         try:
-            return ckernel.dtw_knn(q_arrs, q_ids, train, t_ids, radius, k,
+            return ckernel.dtw_knn(queries, q_ids, train, t_ids, radius, k,
                                    drop_self)
         except MemoryError:
             pass
-    t_arrs = [train.buf[o:o + n * train.d].reshape(n, train.d)
-              for o, n in zip(train.off, train.lens)]
+    if isinstance(queries, ckernel.Flat):
+        queries = queries.arrays()
+    t_arrs = train.arrays()
     kk = min(k, len(t_arrs))
     id1, id2, dist = [], [], []
-    for qi, a in zip(q_ids, q_arrs):
+    for qi, a in zip(q_ids, queries):
         dd = _dtw_reference_pairs([a] * len(t_arrs), t_arrs, radius, train.d)
         # NaN never ranks, like a non-finite distance in the kernel
         dd[~(dd < np.inf) | (drop_self & (t_ids == qi))] = np.inf

@@ -9,10 +9,12 @@ stage, with no shuffle after the kernel, after one bounded collect:
 
     session.collect_within(train)   one Arrow job, cancelled past the
       budget -> flat train buffer (ckernel.Flat), ids, labels|targets
-    broadcast(that) -> size_tasks(queries) -> mapInPandas: per query
-      batch, the fused top-k (kernels.dtw_knn_topk, rows in (dist, id)
-      order), then in the same task rank -> (id1, id2, dist, rank) |
-      vote / weighted mean -> (series_id, prediction)
+    broadcast(that) -> size_tasks(queries) -> mapInArrow: per query
+      record batch, read straight into the kernel's flat buffer
+      (ckernel.Flat.from_arrow), the fused top-k (kernels.dtw_knn_topk,
+      rows in (dist, id) order), then in the same task rank ->
+      (id1, id2, dist, rank) | vote / weighted mean ->
+      (series_id, prediction)
 
 A kNN predict on this path runs 3 Spark jobs: the collect, then the
 round-robin shuffle and the map of the predict itself.
@@ -34,6 +36,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -246,6 +249,8 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
     deterministic.  A query with no finite neighbor (a NaN series, an
     empty train series) emits no row.
     """
+    from pyspark.sql.pandas.types import to_arrow_type
+
     from tslearn_spark import kernels as K
 
     banded, radius = M.dtw_band(metric, params)
@@ -268,6 +273,7 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
         if kind == "classify":
             dtype = train.schema[col].dataType
             codes, values = _label_codes(y, dtype)
+            values = pa.array(values, type=to_arrow_type(dtype))
             side = (t_ids[by_id], codes[by_id], values)
             schema = f"series_id long, prediction {dtype.simpleString()}"
         else:
@@ -281,35 +287,39 @@ def _dtw_topk_broadcast(queries: DataFrame, train: DataFrame, k: int,
 
     def gen(batches):
         ids_t, T, side_b = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
             id1, id2, dist = K.dtw_knn_topk(
-                [M._to_arr(v) for v in pdf["values"]],
-                pdf["series_id"].to_numpy(dtype=np.int64),
-                T, ids_t, radius, k, drop_self)
+                ckernel.Flat.from_arrow(batch.column("values")),
+                batch.column("series_id").to_numpy(), T, ids_t, radius, k,
+                drop_self)
             if id1.size == 0:
                 continue
             if kind is None:
                 starts, run = _query_runs(id1)
                 rank = np.arange(id1.size) - starts[run] + 1
-                yield pd.DataFrame({"id1": id1, "id2": id2, "dist": dist,
-                                    "rank": rank.astype(np.int32)})
+                yield pa.RecordBatch.from_arrays(
+                    [id1, id2, dist, rank.astype(np.int32)],
+                    ["id1", "id2", "dist", "rank"])
                 continue
             sorted_ids, per_train, values = side_b
             at = per_train[np.searchsorted(sorted_ids, id2)]
             if kind == "regress":
                 sid, pred = _weighted_mean(id1, dist, at, weights)
+                # an all-null target's NaN prediction leaves as null
+                pred = pa.array(pred, from_pandas=True)
             else:
                 sid, code = _vote(id1, dist, at, weights)
-                pred = pd.Series(values[code], dtype=object)
-            yield pd.DataFrame({"series_id": sid, "prediction": pred})
+                pred = values.take(code)
+            yield pa.RecordBatch.from_arrays([sid, pred],
+                                             ["series_id", "prediction"])
 
     # per query row: one banded DP against every train series
     return size_tasks(
         queries.select("series_id", "values"),
         n_t * (med_t * w_est) * _DP_CELL_WORK,
-    ).mapInPandas(gen, schema)
+    ).mapInArrow(gen, schema)
 
 
 def _sax_word_candidates(q_words: DataFrame, t_cand: DataFrame, sax,

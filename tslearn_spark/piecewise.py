@@ -32,7 +32,14 @@ def _lit_array(vals) -> str:
 # ---------------------------------------------------------------------------
 
 def paa_col(values_col: str = "values", n_segments: int = 1) -> Column:
-    """PAA transform: per-segment per-dim mean, shape (n_segments, d).
+    """PAA transform: per-segment per-dim mean, shape (n_segments, d)
+    (the Column of ``paa_sql``)."""
+    return F.expr(paa_sql(values_col, n_segments))
+
+
+def paa_sql(values_col: str = "values", n_segments: int = 1) -> str:
+    """SQL of the PAA transform: per-segment per-dim mean, shape
+    (n_segments, d).
 
     seg_sz = ts_size // n_segments; the tail remainder is dropped
     (piecewise.py:147-153).  slice() is 1-indexed in Spark SQL.  The
@@ -42,7 +49,7 @@ def paa_col(values_col: str = "values", n_segments: int = 1) -> Column:
     empty segments, whose means are NaN like numpy's empty-slice mean.
     """
     n = n_segments
-    return F.expr(per_series(values_col, f"""
+    return per_series(values_col, f"""
           transform(sequence(0, {n - 1}), s ->
             transform(sequence(0, size(src[0]) - 1), d ->
               CASE WHEN size(src) < {n} THEN {_NAN} ELSE
@@ -52,7 +59,7 @@ def paa_col(values_col: str = "values", n_segments: int = 1) -> Column:
               ) / (size(src) div {n}) END
             )
           )
-        """))
+        """)
 
 
 def paa_inverse_col(paa_col_name: str, original_size: int) -> Column:
@@ -152,7 +159,40 @@ def symbols_col(real_col_expr: str, breakpoints: np.ndarray) -> str:
     """
 
 
-class SAX(BaseModelPackage, TimeSeriesBaseEstimator):
+class _FitDims:
+    """The reference's ``_X_fit_dims_``, the padded fit dataset's shape
+    ``(None, sz, d)`` with sz = MAX length, which only the numpy instance
+    methods (distance/inverse) and model saving read.  ``fit`` records
+    its input; the dims query is built and run (one tiny job) at the
+    first such use, so pure Spark pipelines pay neither an extra scan nor
+    the query's plan analysis at fit."""
+
+    def _record_fit_input(self, df: DataFrame, values_col: str) -> None:
+        self._X_fit_dims_ = None
+        self._fit_input = (df, values_col)
+
+    def _has_fit_dims(self) -> bool:
+        return (getattr(self, "_X_fit_dims_", None) is not None
+                or getattr(self, "_fit_input", None) is not None)
+
+    def _require_fit_dims(self) -> None:
+        if getattr(self, "_X_fit_dims_", None) is not None:
+            return
+        if getattr(self, "_fit_input", None) is None:
+            raise ValueError(
+                "Model must be fit on data first: the fit-time series "
+                "length drives the distance scaling / inverse length "
+                "(reference _X_fit_dims_)"
+            )
+        df, col = self._fit_input
+        first = df.select(
+            F.max(F.size(col)).alias("sz"),
+            F.first(F.size(F.element_at(col, 1))).alias("d"),
+        ).first()
+        self._X_fit_dims_ = (None, int(first["sz"]), int(first["d"]))
+
+
+class SAX(_FitDims, BaseModelPackage, TimeSeriesBaseEstimator):
     """SymbolicAggregateApproximation twin (piecewise.py:261-505).
 
     Fitted state = breakpoints (+ optional global mu/std when scale=True),
@@ -180,15 +220,7 @@ class SAX(BaseModelPackage, TimeSeriesBaseEstimator):
         self.breakpoints_avg_ = sax_breakpoints(self.alphabet_size_avg)
         self.breakpoints_avg_middle_ = sax_bin_medians(self.alphabet_size_avg)
         df, _ = as_ts_df(df)
-        # fit-time dims (reference _X_fit_dims_ = the padded dataset's
-        # shape, so sz = MAX length): needed only by the numpy instance
-        # methods (distance/inverse) — kept LAZY as a plan here so pure
-        # Spark pipelines never pay an extra scan at fit
-        self._X_fit_dims_ = None
-        self._fit_dims_plan = df.select(
-            F.max(F.size(values_col)).alias("sz"),
-            F.first(F.size(F.element_at(values_col, 1))).alias("d"),
-        )
+        self._record_fit_input(df, values_col)
         if self.scale:
             # global (dataset-wide) per-dim mean/std — one tiny aggregate
             long_stats = (
@@ -226,14 +258,9 @@ class SAX(BaseModelPackage, TimeSeriesBaseEstimator):
                 "or fit_transform before transform/distance")
 
         def build(d):
-            v = self._scaled(values_col)
-            paa = paa_col(v, self.n_segments)
-            sym = symbols_col(f"__paa", self.breakpoints_avg_)
-            return (
-                d.withColumn("__paa", paa)
-                .withColumn(out_col, F.expr(sym))
-                .drop("__paa")
-            )
+            paa = paa_sql(self._scaled(values_col), self.n_segments)
+            return d.withColumn(
+                out_col, F.expr(symbols_col(paa, self.breakpoints_avg_)))
 
         return transform_compat(df, build, out_col, int_out=True)
 
@@ -248,8 +275,7 @@ class SAX(BaseModelPackage, TimeSeriesBaseEstimator):
         collector misses it); materializes the lazy dims plan so the
         artifact's numpy distance/inverse methods work after load."""
         params = super()._get_model_params()
-        if getattr(self, "_X_fit_dims_", None) is not None \
-                or getattr(self, "_fit_dims_plan", None) is not None:
+        if self._has_fit_dims():
             self._require_fit_dims()
             params["_X_fit_dims_"] = list(self._X_fit_dims_)
         return params
@@ -274,18 +300,6 @@ class SAX(BaseModelPackage, TimeSeriesBaseEstimator):
             return X
         X = np.asarray(X, dtype=np.float64)
         return X * self.std_.reshape((1, 1, -1)) + self.mu_.reshape((1, 1, -1))
-
-    def _require_fit_dims(self) -> None:
-        if getattr(self, "_X_fit_dims_", None) is None:
-            plan = getattr(self, "_fit_dims_plan", None)
-            if plan is None:
-                raise ValueError(
-                    "Model must be fit on data first: the fit-time series "
-                    "length drives the distance scaling / inverse length "
-                    "(reference _X_fit_dims_)"
-                )
-            first = plan.first()  # one tiny job, first numpy-method use only
-            self._X_fit_dims_ = (None, int(first["sz"]), int(first["d"]))
 
     @staticmethod
     def _as_sym2d(x) -> np.ndarray:
@@ -435,13 +449,12 @@ class OneDSAX(SAX):
 
         df, _ = as_ts_df(df)
         super().fit(df, values_col=values_col)
-        # materialize the SAX dims plan (one tiny job, same count as the
-        # old min-size probe) — MAX length, the reference's padded-
-        # dataset shape (piecewise.py:601-617 reads X.shape[1]), so the
-        # numpy surface is consistent with the SAX/PAA siblings
-        first = self._fit_dims_plan.first()
-        self._X_fit_dims_ = (None, int(first["sz"]), int(first["d"]))
-        return self.fit_sz(int(first["sz"]))
+        # the SAX fit dims now (one tiny job) — MAX length, the
+        # reference's padded-dataset shape (piecewise.py:601-617 reads
+        # X.shape[1]), so the numpy surface is consistent with the
+        # SAX/PAA siblings
+        self._require_fit_dims()
+        return self.fit_sz(self._X_fit_dims_[1])
 
     def fit_sz(self, sz: int) -> "OneDSAX":
         """Breakpoints need the fit-time sz (piecewise.py:601-617).
@@ -519,7 +532,13 @@ class OneDSAX(SAX):
         return out
 
     def slopes_col(self, values_col: str = "values") -> Column:
-        """Per-segment per-dim OLS slope over absolute t (cyslopes).
+        """Per-segment per-dim OLS slope over absolute t (cyslopes), the
+        Column of ``slopes_sql``."""
+        return F.expr(self.slopes_sql(values_col))
+
+    def slopes_sql(self, values_col: str = "values") -> str:
+        """SQL of the per-segment per-dim OLS slope over absolute t
+        (cyslopes).
 
         slope = (sum(t*x) - sum(t)*sum(x)/n) / (sum(t^2) - sum(t)^2/n)
         computed over t in [s*seg, s*seg+seg).  An empty series maps to
@@ -530,7 +549,7 @@ class OneDSAX(SAX):
         """
         n = self.n_segments
         seg = "(size(src) div " + str(n) + ")"
-        return F.expr(per_series(values_col, f"""
+        return per_series(values_col, f"""
               transform(sequence(0, {n - 1}), s ->
                 transform(sequence(0, size(src[0]) - 1), d ->
                   CASE WHEN size(src) < {n} THEN {_NAN}
@@ -549,7 +568,7 @@ class OneDSAX(SAX):
                   ) END
                 )
               )
-            """))
+            """)
 
     def transform(self, df: DataFrame, values_col: str = "values",
                   out_col: str = "sax1d") -> DataFrame:
@@ -564,17 +583,12 @@ class OneDSAX(SAX):
 
         def build(d):
             v = self._scaled(values_col)
-            avg_sym = symbols_col("__paa", self.breakpoints_avg_)
-            slope_sym = symbols_col("__slopes", self.breakpoints_slope_)
-            return (
-                d.withColumn("__paa", paa_col(v, self.n_segments))
-                .withColumn("__slopes", self.slopes_col(v))
-                .withColumn(
-                    out_col,
-                    F.expr(f"zip_with({avg_sym}, {slope_sym}, (a, s) -> concat(a, s))"),
-                )
-                .drop("__paa", "__slopes")
-            )
+            avg_sym = symbols_col(paa_sql(v, self.n_segments),
+                                  self.breakpoints_avg_)
+            slope_sym = symbols_col(self.slopes_sql(v),
+                                    self.breakpoints_slope_)
+            return d.withColumn(out_col, F.expr(
+                f"zip_with({avg_sym}, {slope_sym}, (a, s) -> concat(a, s))"))
 
         return transform_compat(df, build, out_col, int_out=True)
 
@@ -634,7 +648,8 @@ class OneDSAX(SAX):
 # reference-named estimator classes (drop-in import parity)
 # ---------------------------------------------------------------------------
 
-class PiecewiseAggregateApproximation(BaseModelPackage, TimeSeriesBaseEstimator):
+class PiecewiseAggregateApproximation(_FitDims, BaseModelPackage,
+                                       TimeSeriesBaseEstimator):
     """Estimator twin of the reference PAA class (piecewise.py:112-258):
     segment-mean downsampling, inverse, and the PAA lower-bound distance,
     over the expression layer above."""
@@ -651,14 +666,8 @@ class PiecewiseAggregateApproximation(BaseModelPackage, TimeSeriesBaseEstimator)
             from tslearn_spark.bases import as_ts_df
 
             df2, _ = as_ts_df(df)
-            # reference _X_fit_dims_ (piecewise.py:154-158, the padded
-            # dataset shape: sz = MAX length) — lazy plan, materialized
-            # only when the numpy distance/inverse methods need it
-            self._X_fit_dims_ = None
-            self._fit_dims_plan = df2.select(
-                F.max(F.size("values")).alias("sz"),
-                F.first(F.size(F.element_at("values", 1))).alias("d"),
-            )
+            # reference _X_fit_dims_ (piecewise.py:154-158)
+            self._record_fit_input(df2, "values")
         return self
 
     def transform(self, df: DataFrame, values_col: str = "values",
@@ -679,8 +688,7 @@ class PiecewiseAggregateApproximation(BaseModelPackage, TimeSeriesBaseEstimator)
     # state IS _X_fit_dims_, leading-underscore so the default trailing-
     # underscore collector misses it) --------------------------------
     def _is_fitted(self) -> bool:
-        return (getattr(self, "_X_fit_dims_", None) is not None
-                or getattr(self, "_fit_dims_plan", None) is not None)
+        return self._has_fit_dims()
 
     def _get_model_params(self) -> dict:
         params = super()._get_model_params()
@@ -702,18 +710,6 @@ class PiecewiseAggregateApproximation(BaseModelPackage, TimeSeriesBaseEstimator)
         return paa_distance_col(paa1, paa2, original_size)
 
     # -- numpy instance API (reference piecewise.py:191-258) ------------
-    def _require_fit_dims(self) -> None:
-        if getattr(self, "_X_fit_dims_", None) is None:
-            plan = getattr(self, "_fit_dims_plan", None)
-            if plan is None:
-                raise ValueError(
-                    "Model must be fit on data first: the fit-time series "
-                    "length drives the distance scaling / inverse length "
-                    "(reference _X_fit_dims_)"
-                )
-            first = plan.first()
-            self._X_fit_dims_ = (None, int(first["sz"]), int(first["d"]))
-
     def distance_paa(self, paa1, paa2) -> float:
         """Keogh-Pazzani PAA lower-bound distance between two PAA
         representations (piecewise.py:191-213):
