@@ -36,7 +36,7 @@ def _mixed(rs, n, lo=5, hi=100, d=1, lengths=None):
 def _few_lengths(rs, lo, hi):
     """One or two lengths in [lo, hi): series drawn from them form
     equal-length groups of two or more, in odd counts too, which the
-    kernel runs two at a time in its two lanes."""
+    kernel runs together in the lanes of one register."""
     return rs.randint(lo, hi, rs.randint(1, 3))
 
 
@@ -406,11 +406,13 @@ def _knn_case(rs, n_q, n_t, d, lo=1, hi=40, dup=True, eq_len=False,
 
     Under ``lane_groups`` (n_t ignored) the train set fills the kernel's
     lane groups of every width W in 8, 4, 2 in every way: 7 lengths with
-    9..15 series each, so a length's last group holds 1..W-1 series and
-    leaves the other lanes dead; query 1 shares its values and id with
-    the 4th series of one length (a middle lane under drop_self); the
-    first length's 2nd, 3rd and 6th series hold NaN, +-inf and 1e154
-    beside finite lanes; one train series is empty."""
+    9..15 series each, so a length leaves 1..W-1 series after its groups
+    of W, which run as one group of 2, 4 or 8 lanes with the other lanes
+    dead; query 1 shares its values and id with the 4th series of one
+    length (a middle lane under drop_self); the first length's 2nd, 3rd
+    and 6th series hold NaN, +-inf and 1e154 beside finite lanes, and
+    the second length's 10th (a leftover at W = 8 and 4) holds 1e154;
+    one train series is empty."""
     if lane_groups:
         return _lane_groups_case(rs, n_q, d, lo, hi)
     lengths = _few_lengths(rs, lo, hi) if eq_len else None
@@ -429,9 +431,9 @@ def _lane_groups_case(rs, n_q, d, lo, hi):
     t = []
     for r, n in enumerate(lengths, 1):
         t += _mixed(rs, 8 + r, d=d, lengths=[n])
-    # the kernel groups a length's series in train order: series 0..8 of
+    # the kernel groups a length's series in train order: series 0..7 of
     # the first length are its first lane group of 8
-    for pos, v in ((1, np.nan), (2, np.inf), (5, 1e154)):
+    for pos, v in ((1, np.nan), (2, np.inf), (5, 1e154), (9 + 9, 1e154)):
         t[pos] = t[pos].copy()
         t[pos][len(t[pos]) // 2] = v
     t[2][0] = -np.inf
@@ -506,9 +508,10 @@ class TestDtwKnnTiers:
 
 class TestDtwKnnLaneGroups:
     """dtw_knn runs each length's train series W at a time (W = 8, 4 or
-    2 from the CPU, ckernel.lanes): groups short of W, a self match in a
-    middle lane, non-finite lanes beside finite ones and an empty series
-    must leave the rows of every width equal to the reference's."""
+    2 from the CPU, ckernel.lanes) and its leftover in a narrower group:
+    leftovers of every size, a self match in a middle lane, non-finite
+    lanes beside finite ones and an empty series must leave the rows of
+    every width equal to the reference's."""
 
     @pytest.mark.parametrize("d", [1, 2, 3])
     @pytest.mark.parametrize("radius", [None, 0, 3])
@@ -526,14 +529,15 @@ class TestDtwKnnLaneGroups:
         # the self match is a row unless dropped; the non-finite and
         # empty series never are
         assert (qid[1] in c[1][c[0] == qid[1]]) == (not drop_self)
-        assert not np.isin(tid[[1, 2, 5, 7]], c[1]).any()
+        assert not np.isin(tid[[1, 2, 5, 7, 19]], c[1]).any()
 
-    @pytest.mark.parametrize("lanes", [2, 4, 8])
+    @pytest.mark.parametrize("lanes", [2, 4])
     def test_every_width_matches_default_build(self, monkeypatch, tmp_path,
                                                lanes):
         """A build capped at ``lanes`` (-DDTW_MAX_LANES) runs that width
         when the CPU can, and its rows and batch distances equal the
-        default build's, and the reference's, bit for bit."""
+        default build's, and the reference's, bit for bit (the default
+        build's own width is test_c_equals_reference's)."""
         import warnings
 
         widest = ck.lanes()

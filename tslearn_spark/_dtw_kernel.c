@@ -35,9 +35,11 @@
  * and on NaN); without SSE2 a compare-mask select over GCC vector types
  * computes the same, so every lane keeps bit identity.  dtw_knn orders
  * the train set by length once per call and feeds each query's
- * equal-length candidates W at a time; dtw_batch groups up to W
- * consecutive pairs of equal shape (metrics._pair_sort sends batches in
- * shape order).  Lanes a group does not fill run dead.
+ * equal-length candidates W at a time, a length's leftover (fewer than
+ * W) as one group at the narrowest width that holds it; dtw_batch groups
+ * up to two consecutive pairs of equal shape at two lanes
+ * (metrics._pair_sort sends batches in shape order).  Lanes a group does
+ * not fill run dead.
  *
  * Widths: the per-width half of this file (at its end, after `#else`)
  * is compiled once per width by including this file again with LANES
@@ -46,11 +48,15 @@
  * W = 8 under target("avx512f").  The build itself takes no -m flag, so
  * one .so runs on any x86-64; pick_lanes chooses once per process, with
  * __builtin_cpu_supports (which also checks that the OS saves the wider
- * registers), the widest width the CPU runs for dtw_knn.  dtw_batch,
- * whose random-shape batches are nearly all lone pairs, stays at two
- * lanes (a lone pair measured no faster in a wider register).  Building
- * with -DDTW_MAX_LANES=4 or =2 caps the width (the tests compare every
- * width the machine runs against the default build).
+ * registers), the widest width W the CPU runs for dtw_knn's full
+ * groups.  A group that fills fewer lanes runs narrower (lanes_for): a
+ * lone pair measured twice as slow in eight lanes as in two (4.2 against
+ * 2.0 us at lengths 45-99, radius 5), so every group fills more than
+ * half of its lanes, or one of two, and its interleaved operands take at
+ * most twice the values of its series.  dtw_batch, whose random-shape
+ * batches are nearly all lone pairs, stays at two lanes.  Building with
+ * -DDTW_MAX_LANES=4 or =2 caps W (the tests compare every width the
+ * machine runs against the default build).
  *
  * Out-of-band prev cells read inf, like the reference's inf cells
  * outside the band, through two sentinels instead of per-cell bounds
@@ -76,8 +82,8 @@
  * of dtw_core (compile-time flag `nan`), never abandoned, and returns
  * the reference's value; every other lane runs the finite instance.
  *
- * Both entry points return 0, or -1 when the scratch allocation fails
- * (nothing is written then; the Python side runs the reference).
+ * Both entry points return 0, or -1 when a scratch allocation fails
+ * (their output is then incomplete; the Python side runs the reference).
  */
 #ifndef LANES
 
@@ -191,6 +197,14 @@ static void offer(double *td, long long *ti, long long *cnt, long long kk,
     ti[pos] = j;
 }
 
+/* The lane width a dtw_knn group of g equal-length series runs at: the
+ * narrowest of 2, 4 and 8 that holds it, so a group fills more than half
+ * of its lanes (a lone series fills one of two). */
+static int lanes_for(long long g)
+{
+    return g <= 2 ? 2 : g <= 4 ? 4 : 8;
+}
+
 /* ---- the per-width half, once per width ---- */
 
 #define LANES 2
@@ -220,25 +234,21 @@ static void offer(double *td, long long *ti, long long *cnt, long long kk,
 /* ---- dispatch: one width per process ---- */
 
 static int knn_lanes = 2;
-static __typeof__(knn_2) *knn_run = knn_2;
 
 /* The widest width this CPU runs (and its OS saves the registers of),
- * capped by DTW_MAX_LANES; run when the library loads. */
+ * capped by DTW_MAX_LANES; run when the library loads.  Eight lanes also
+ * take four (a length's leftover of 3 or 4 series runs at four). */
 __attribute__((constructor)) static void pick_lanes(void)
 {
 #if WIDE_LANES && DTW_MAX_LANES >= 4
     __builtin_cpu_init();
-#if DTW_MAX_LANES >= 8
-    if (__builtin_cpu_supports("avx512f")) {
-        knn_lanes = 8;
-        knn_run = knn_8;
+    if (!__builtin_cpu_supports("avx2"))
         return;
-    }
+    knn_lanes = 4;
+#if DTW_MAX_LANES >= 8
+    if (__builtin_cpu_supports("avx512f"))
+        knn_lanes = 8;
 #endif
-    if (__builtin_cpu_supports("avx2")) {
-        knn_lanes = 4;
-        knn_run = knn_4;
-    }
 #endif
 }
 
@@ -258,12 +268,14 @@ int dtw_batch(const double *bufA, const long long *offA, const long long *lenA,
  * (sqrt'd distance, train id) order, ascending, skipping idT == idQ[q]
  * under drop_self and every non-finite distance: out_cnt[q] rows in
  * out_dist / out_idx[q * kk ...] (out_idx holds train positions).  The
- * train set is sorted by length (counting sort) and each length cut into
- * groups of W, interleaved once per call (knn_W); each group's lanes run
- * under abandon_cap of the k-th best held before the group starts.  The
- * rows depend only on (dist, id) order, not on the order candidates are
- * offered in.  Returns -1 (nothing written) when the scratch allocation
- * fails. */
+ * train set is sorted by length (counting sort); each length is cut into
+ * groups of W and one group of what is left, which runs at lanes_for of
+ * its size.  One pass per width, widest first, runs every query against
+ * that width's groups (knn_W) and carries each query's rows on to the
+ * next; each group's lanes run under abandon_cap of the k-th best held
+ * before the group starts.  The rows depend only on (dist, id) order,
+ * not on the order candidates are offered in.  Returns -1 when a scratch
+ * allocation fails (the rows are then incomplete). */
 int dtw_knn(const double *bufQ, const long long *offQ, const long long *lenQ,
             const long long *idQ, long long nq,
             const double *bufT, const long long *offT, const long long *lenT,
@@ -271,26 +283,27 @@ int dtw_knn(const double *bufQ, const long long *offQ, const long long *lenQ,
             long long d, long long radius, long long k, int drop_self,
             double *out_dist, long long *out_idx, long long *out_cnt)
 {
-    long long kk = k < nt ? k : nt, cells = 1, la_max = 1, q, j;
-    long long *start, *order;
+    long long kk = k < nt ? k : nt, cells = 1, la_max = 1, q, j, n;
+    long long *start, *order, *cut, *run;
     double *maxT;
-    int rc;
-    if (kk <= 0) {
-        for (q = 0; q < nq; q++) out_cnt[q] = 0;
+    int rc = 0;
+    for (q = 0; q < nq; q++)
+        out_cnt[q] = 0;
+    if (kk <= 0)
         return 0;
-    }
     for (j = 0; j < nt; j++)
         if (lenT[j] > cells) cells = lenT[j];
     for (q = 0; q < nq; q++)
         if (lenQ[q] > la_max) la_max = lenQ[q];
     /* counting sort of the train positions by length, stable, and each
      * train series' largest |value| */
-    start = (long long *) malloc((size_t) (cells + 2 + 2 * nt)
+    start = (long long *) malloc((size_t) (cells + 2 + 3 * nt)
                                  * sizeof(long long));
     if (start == NULL)
         return -1;
     order = start + cells + 2;
     maxT = (double *) (order + nt);
+    cut = (long long *) (maxT + nt);
     for (j = 0; j <= cells + 1; j++) start[j] = 0;
     for (j = 0; j < nt; j++) start[lenT[j] + 1]++;
     for (j = 1; j <= cells + 1; j++) start[j] += start[j - 1];
@@ -298,10 +311,29 @@ int dtw_knn(const double *bufQ, const long long *offQ, const long long *lenQ,
     for (j = 0; j < nt; j++)
         maxT[j] = max_abs(bufT + offT[j], lenT[j] * d);
     /* empty series have no finite distance and never run: after the
-     * sort the non-empty ones start at start[0] */
-    rc = knn_run(bufQ, offQ, lenQ, idQ, nq, bufT, offT, lenT, idT,
-                 order + start[0], nt - start[0], maxT, cells, la_max, d,
-                 radius, kk, drop_self, out_dist, out_idx, out_cnt);
+     * sort the non-empty ones start at start[0].  cut[j]: the size of
+     * the group that starts at run[j] */
+    run = order + start[0];
+    n = nt - start[0];
+    for (j = 0; j < n; j += cut[j]) {
+        long long g = 1;
+        while (g < knn_lanes && j + g < n && lenT[run[j + g]] == lenT[run[j]])
+            g++;
+        cut[j] = g;
+    }
+#define PASS(w)                                                           \
+    if (rc == 0 && knn_lanes >= w)                                        \
+        rc = knn_##w(bufQ, offQ, lenQ, idQ, nq, bufT, offT, lenT, idT,    \
+                     run, cut, n, maxT, cells, la_max, d, radius, kk,     \
+                     drop_self, out_dist, out_idx, out_cnt);
+#if WIDE_LANES && DTW_MAX_LANES >= 8
+    PASS(8)
+#endif
+#if WIDE_LANES && DTW_MAX_LANES >= 4
+    PASS(4)
+#endif
+    PASS(2)
+#undef PASS
     free(start);
     return rc;
 }
@@ -580,96 +612,88 @@ static LANE_TARGET int WIDE(batch)(
 }
 #endif
 
-/* dtw_knn at W lanes over the n non-empty train positions `order`,
- * sorted by length: each length is cut into groups of W (the last one
- * of a length may leave lanes dead), interleaved once per call. */
+/* g <= W series `pos` of n values each, interleaved into out (a short
+ * group's dead lanes repeat its first series) */
+static LANE_TARGET void WIDE(interleave_group)(
+    vd *out, const double *bufT, const long long *offT,
+    const long long *pos, long long g, long long n)
+{
+    const double *src[LANES];
+    int l;
+    for (l = 0; l < LANES; l++)
+        src[l] = bufT + offT[pos[l < g ? l : 0]];
+    WIDE(interleave)(out, src, n);
+}
+
+/* dtw_knn's pass at W lanes over the n non-empty train positions `order`,
+ * sorted by length and cut into groups (cut[j] series from order[j] on):
+ * the groups that run at W (lanes_for) are interleaved once per call, and
+ * each query's out_cnt[q] rows so far are carried on over them. */
 static LANE_TARGET int WIDE(knn)(
     const double *bufQ, const long long *offQ, const long long *lenQ,
     const long long *idQ, long long nq,
     const double *bufT, const long long *offT, const long long *lenT,
-    const long long *idT, const long long *order, long long n,
-    const double *maxT, long long cells, long long la_max, long long d,
-    long long radius, long long kk, int drop_self,
+    const long long *idT, const long long *order, const long long *cut,
+    long long n, const double *maxT, long long cells, long long la_max,
+    long long d, long long radius, long long kk, int drop_self,
     double *out_dist, long long *out_idx, long long *out_cnt)
 {
-    long long ng = 0, nv = 0, q, j, p, *grp;
-    int g, l;
-    vd *prev, *row, *AI, *BI;
+    long long nv = 0, q, j;
+    vd *prev, *row, *AI, *BI, *B;
     void *buf;
-    /* grp: per group, its W train positions (a short group repeats its
-     * first) and then its live-lane count */
-    grp = (long long *) malloc((size_t) (n + 1) * (LANES + 1)
-                               * sizeof(long long));
-    if (grp == NULL)
-        return -1;
-    for (j = 0; j < n; j += g) {
-        long long *gp = grp + ng * (LANES + 1);
-        long long lb = lenT[order[j]];
-        for (g = 1; g < LANES && j + g < n && lenT[order[j + g]] == lb; g++)
-            ;
-        for (l = 0; l < LANES; l++)
-            gp[l] = order[j + (l < g ? l : 0)];
-        gp[LANES] = g;
-        nv += lb * d;
-        ng++;
-    }
+    for (j = 0; j < n; j += cut[j])
+        if (lanes_for(cut[j]) == LANES)
+            nv += lenT[order[j]] * d;
+    if (nv == 0)
+        return 0;
     buf = WIDE(dp_scratch)(cells, la_max * d + nv, &prev, &row);
-    if (buf == NULL) {
-        free(grp);
+    if (buf == NULL)
         return -1;
-    }
     AI = row + cells + 1;
     BI = AI + la_max * d;
-    {
-        vd *B = BI;
-        for (p = 0; p < ng; p++) {
-            const long long *gp = grp + p * (LANES + 1);
-            const double *src[LANES];
-            for (l = 0; l < LANES; l++)
-                src[l] = bufT + offT[gp[l]];
-            WIDE(interleave)(B, src, lenT[gp[0]] * d);
-            B += lenT[gp[0]] * d;
+    B = BI;
+    for (j = 0; j < n; j += cut[j])
+        if (lanes_for(cut[j]) == LANES) {
+            WIDE(interleave_group)(B, bufT, offT, order + j, cut[j],
+                                   lenT[order[j]] * d);
+            B += lenT[order[j]] * d;
         }
-    }
     for (q = 0; q < nq; q++) {
-        long long la = lenQ[q], cnt = 0;
+        long long la = lenQ[q], cnt = out_cnt[q];
         double *td = out_dist + q * kk;
         long long *ti = out_idx + q * kk;
         double maxq = max_abs(bufQ + offQ[q], la * d);
-        const double *src[LANES];
-        const vd *B = BI;
-        for (l = 0; l < LANES; l++)
-            src[l] = bufQ + offQ[q];
-        WIDE(interleave)(AI, src, la * d);
-        for (p = 0; la > 0 && p < ng; p++) {
-            const long long *gp = grp + p * (LANES + 1);
-            long long lb = lenT[gp[0]];
-            const vd *Bp = B;
+        WIDE(interleave_group)(AI, bufQ, offQ, &q, 1, la * d);
+        B = BI;
+        for (j = 0; la > 0 && j < n; j += cut[j]) {
+            long long lb = lenT[order[j]], g = cut[j], l;
             double m[LANES];
-            int dead = ALL & ~((1 << gp[LANES]) - 1);
+            int dead = ALL & ~((1 << g) - 1);
             vd cap = WIDE(splat)(INFINITY);
+            const vd *Bg = B;
+            if (lanes_for(g) != LANES)
+                continue;
             B += lb * d;
             if (drop_self)
-                for (l = 0; l < LANES; l++)
-                    dead |= (idT[gp[l]] == idQ[q]) << l;
+                for (l = 0; l < g; l++)
+                    dead |= (idT[order[j + l]] == idQ[q]) << l;
             if (dead == ALL)
                 continue;
             for (l = 0; l < LANES; l++) {
-                m[l] = nan_max(maxT[gp[l]], maxq);
+                m[l] = nan_max(maxT[order[j + (l < g ? l : 0)]], maxq);
                 if (cnt == kk)
                     cap[l] = abandon_cap(td[kk - 1], la, lb, d, m[l]);
             }
-            vd r = WIDE(dtw_group)(AI, la, Bp, lb, d, radius, cap,
-                                   WIDE(cost)(AI, Bp, la - 1, lb - 1, d),
+            vd r = WIDE(dtw_group)(AI, la, Bg, lb, d, radius, cap,
+                                   WIDE(cost)(AI, Bg, la - 1, lb - 1, d),
                                    dead, m, prev, row);
-            for (l = 0; l < LANES; l++)
+            for (l = 0; l < g; l++)
                 if (!(dead >> l & 1))
-                    offer(td, ti, &cnt, kk, idT, sqrt(r[l]), gp[l]);
+                    offer(td, ti, &cnt, kk, idT, sqrt(r[l]), order[j + l]);
         }
         out_cnt[q] = cnt;
     }
     free(buf);
-    free(grp);
     return 0;
 }
 

@@ -19,8 +19,9 @@ double lanes of one vector register), behind two entry points, bound
 from the ``_ENTRY_POINTS`` table: ``dtw_batch`` (one distance per pair,
 wrapped by ``dtw_batch`` here; consecutive pairs of equal shape share
 the two lanes it runs at) and ``dtw_knn`` (each query's top-k over a
-train set, equal-length train series W at a time, every lane capped at
-the running k-th best; wrapped by ``dtw_knn``).  The build takes no
+train set, equal-length train series W at a time and a length's
+leftover in the narrowest width that holds it, every lane capped at the
+running k-th best; wrapped by ``dtw_knn``).  The build takes no
 ``-m`` flag, so the shipped library runs on any machine of its
 architecture; on x86-64 the library picks W once per process from the
 CPU it runs on: 8 with AVX-512F, 4 with AVX2, else 2 (``lanes`` reports

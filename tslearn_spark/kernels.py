@@ -349,8 +349,9 @@ def dtw_knn_topk(queries, q_ids, train, t_ids, radius, k: int,
 
     Runs the fused compiled kernel (``ckernel.dtw_knn``: one pass over
     the train set per query, its equal-length train series W at a time
-    in the lanes of one vector register, each DP capped at the running
-    k-th best; W = 8, 4 or 2 from the CPU, ``ckernel.lanes``).
+    in the lanes of one vector register and a length's leftover in a
+    narrower one, each DP capped at the running k-th best; W = 8, 4 or 2
+    from the CPU, ``ckernel.lanes``).
     When it is not loaded, or its scratch allocation fails, each query
     runs the per-pair reference against every train series and ranks
     with ``topk_rows_tiebreak``.  Both tiers return the same rows bit for
