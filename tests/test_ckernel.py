@@ -216,6 +216,45 @@ def test_flat_from_arrow_matches_flatten(d):
                                     pa.list_(pa.list_(pa.float64()))))
 
 
+def test_rows_from_arrow_matches_per_row_decode():
+    """rows_from_arrow reads a list<float> column off its list offsets
+    into the very float64 bits the per-row ``list(v)`` decode gives, on
+    a plain, a sliced and a chunked column and on an empty batch."""
+    import pyarrow as pa
+
+    rs = np.random.RandomState(4)
+    v = (rs.randn(7, 5) * 1e3).astype(np.float32)
+    v[2, 1] = np.nan
+    col = pa.array(v.tolist(), pa.list_(pa.float32()))
+    chunked = pa.chunked_array([col.slice(0, 2), col.slice(2, 0),
+                                col.slice(2)])
+    for values in (col, col.slice(3, 3), chunked):
+        want = np.array([list(r) for r in values.to_pandas()],
+                        dtype=np.float64)
+        got = ck.rows_from_arrow(values)
+        assert got.dtype == np.float64 and got.shape == want.shape
+        assert got.tobytes() == want.tobytes()
+    empty = pa.RecordBatch.from_arrays([col.slice(0, 0)], ["values"])
+    assert ck.rows_from_arrow(empty.column("values")).shape == (0, 0)
+
+
+def test_rows_from_arrow_refuses_ragged_and_null_vectors():
+    """Unequal widths and a null vector raise ValueError: read off the
+    offsets alone, a null row would be a silent zero-width vector,
+    where the per-row ``list(None)`` raised."""
+    import pyarrow as pa
+
+    t = pa.list_(pa.float32())
+    # the last two hold as many leaf values as rows x first width
+    for rows in ([[1.0, 2.0], [1.0]], [[1.0, 2.0], None],
+                 [None, [1.0, 2.0]], [[1.0], [2.0, 3.0], []], [[], None]):
+        with pytest.raises(ValueError):
+            ck.rows_from_arrow(pa.array(rows, t))
+    # a null vector outside the slice is not read
+    col = pa.array([None, [1.0, 2.0]], t)
+    assert ck.rows_from_arrow(col.slice(1)).tolist() == [[1.0, 2.0]]
+
+
 def test_so_path_keys_on_build_flags(monkeypatch):
     """The .so cache key covers the C source, the compile flags and the
     machine: changing _CFLAGS must build a fresh library, never reuse

@@ -7,6 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tslearn_spark import pipeline as pl
+
 
 def docs_df(spark):
     rows = [
@@ -318,6 +320,33 @@ class TestSimsearch:
             expect = set(np.argsort(-sims[q])[:3])
             got = {r["neighbor_id"] for r in out.collect() if r["query_id"] == q}
             assert got == expect
+
+    @pytest.mark.parametrize("call, budget, what, instead", [
+        (lambda df: pl.brute_force_topk(df, df, k=3), 100,
+         "brute_force_topk's query side", "use lsh_topk"),
+        (lambda df: pl.ivf_topk(df, df, k=3, n_lists=4, n_probe=2), 100,
+         "ivf_topk's query side", "use lsh_topk"),
+        # 4 centroids x 8 values are over a budget of 10
+        (lambda df: pl.ivf_topk(df, df, k=3, n_lists=4, n_probe=2), 10,
+         "ivf_topk's default centroids", "use lsh_topk"),
+        (lambda df: pl.embedding_neardup_pairs(df, threshold=0.9), 100,
+         "embedding_neardup_pairs(bits=None)'s embedding table",
+         "use bits="),
+    ])
+    def test_broadcast_side_past_budget_raises(self, spark, monkeypatch,
+                                               call, budget, what, instead):
+        """A side over the broadcast budget (here 30 x 8 values) fails
+        loudly with a ValueError naming the budget and the distributed
+        alternative, instead of collecting it to the driver."""
+        from tslearn_spark import session as S
+
+        df, _ = self.make_vecs(spark)
+        monkeypatch.setattr(S, "BROADCAST_LIMIT_VALUES", budget)
+        with pytest.raises(ValueError) as err:
+            call(df)
+        msg = str(err.value)
+        assert what in msg and instead in msg
+        assert f"BROADCAST_LIMIT_VALUES = {budget:,}" in msg
 
     def test_lsh_recall(self, spark):
         from tslearn_spark.pipeline import brute_force_topk, lsh_topk

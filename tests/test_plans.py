@@ -137,9 +137,9 @@ class TestBroadcastShapes:
         monkeypatch.setattr(S, "BROADCAST_LIMIT_VALUES", 10)
         nn = N.kneighbors(df, df, k=2, metric="euclidean", drop_self=True)
         plan = plan_of(nn)
-        # generic path: no MapInPandas partial-top-k stage (that is the
+        # generic path: no MapInArrow partial-top-k stage (that is the
         # broadcast fast path's signature); still exact
-        assert "MapInPandas" not in plan
+        assert "MapInArrow" not in plan
         got = {r["id1"] for r in nn.collect()}
         assert got == set(range(10))
 
@@ -148,7 +148,7 @@ class TestBroadcastShapes:
 
         df = series_df(spark, n=10, sz=16)
         nn = kneighbors(df, df, k=2, metric="euclidean", drop_self=True)
-        assert "MapInPandas" in plan_of(nn)
+        assert "MapInArrow" in plan_of(nn)
 
 
 class TestNoCartesianProduct:
@@ -455,6 +455,36 @@ class TestOneBroadcastBudget:
         assert arrow == ["session.py"]
         assert not [p for p, src in sources.items()
                     if "broadcast_gate" in src]
+
+    def test_no_per_row_vector_decoders_or_unbounded_handoffs(self):
+        """Vectors cross the Arrow boundary one way: blocks decode from
+        the list offsets (ckernel.rows_from_arrow / Flat.from_arrow), so
+        no ``list(v) for v in`` decoder is left in the engine; and a
+        side headed for the driver goes through collect_within, so no
+        ``toPandas()`` is left in pipeline/ or neighbors.py.  The one
+        allowed toPandas is connected_components' edge probe: it reads
+        ``limit(driver_cap + 1)``, so it holds at most driver_cap + 1
+        rows of two int64s by construction.  Source scan, no Spark."""
+        import ast
+        import pathlib
+        import re
+
+        import tslearn_spark
+
+        pkg = pathlib.Path(tslearn_spark.__file__).parent
+        decoder = re.compile(r"list\(v\)\s+for\s+v\s+in")
+        assert sorted(str(p.relative_to(pkg)) for p in pkg.rglob("*.py")
+                      if decoder.search(p.read_text())) == []
+
+        handoffs = []
+        for p in [*(pkg / "pipeline").rglob("*.py"), pkg / "neighbors.py"]:
+            for fn in ast.parse(p.read_text()).body:
+                handoffs += [
+                    (str(p.relative_to(pkg)), getattr(fn, "name", None))
+                    for node in ast.walk(fn)
+                    if isinstance(node, ast.Call)
+                    and getattr(node.func, "attr", None) == "toPandas"]
+        assert handoffs == [("pipeline/dedup.py", "connected_components")]
 
 
 class TestPostShuffleWidth:

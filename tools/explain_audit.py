@@ -48,7 +48,7 @@ AUDITS = [
      "id joins + array_intersect; the whole-corpus inverted index is "
      "never rebuilt (no token-keyed join anywhere in the plan — "
      "test_pipeline.py asserts it)"),
-    ("ann_cosine_topk", ["MapInPandas", "Window"], None,
+    ("ann_cosine_topk", ["MapInArrow", "Window"], None,
      "BLAS matmul per partition, partial top-k, tiny final window"),
     ("kernel_kmeans_assign_tiny", ["ArrowEvalPython", "Window"], None,
      "hash-gated kernel-kmeans assignment: Arrow-vectorized GAK cross-"
@@ -57,7 +57,7 @@ AUDITS = [
     ("cdist_dtw_tiny", ["ArrowEvalPython", "BroadcastNestedLoopJoin"], None,
      "hash-gated exact DTW: the same triangle+mirror cdist machinery on "
      "tiny integer series; kernel Arrow-vectorized"),
-    ("knn_euclidean_16", ["MapInPandas", "Window"], None,
+    ("knn_euclidean_16", ["MapInArrow", "Window"], None,
      "broadcast-queries BLAS matmul per partition + partial top-k; final "
      "window sees (id,id,dist) only"),
     ("knn_sax_classify", ["Window"], None,
@@ -66,13 +66,13 @@ AUDITS = [
     ("dedup_ngram_jaccard", ["HashAggregate"], None,
      "inverted-index equi-join with size-ratio prefilter during the join; "
      "token sets deduped per-row (array_distinct), no cluster-wide distinct"),
-    ("knn_dtw_classify", ["MapInPandas", "!Window", "!BroadcastHashJoin"], 1,
+    ("knn_dtw_classify", ["MapInArrow", "!Window", "!BroadcastHashJoin"], 1,
      "broadcast-train banded DTW in ONE map stage (r11: hash-gated "
      "integer sample): the train series and labels are broadcast, each "
      "query task runs the fused top-k DP, ranks and votes its own "
      "queries; the only Exchange is size_tasks' round-robin below the "
      "map — no rank window, no label join, no vote shuffle"),
-    ("knn_dtw_classify_full", ["MapInPandas", "!Window", "!BroadcastHashJoin"], 1,
+    ("knn_dtw_classify_full", ["MapInArrow", "!Window", "!BroadcastHashJoin"], 1,
      "the full-population perf twin keeps the identical one-stage "
      "broadcast-DTW plan at quadratic pair count"),
     ("clustering_labels", ["ArrowEvalPython", "!SortMergeJoin"], 2,
@@ -107,7 +107,7 @@ AUDITS = [
     ("events_asof_orders", ["Union", "Window"], 1,
      "as-of join = union both streams + ONE shuffle on the key + one "
      "sorted carry-forward window — never a pairwise join"),
-    ("ann_ivf_topk", ["MapInPandas", "WindowGroupLimit"], None,
+    ("ann_ivf_topk", ["MapInArrow", "WindowGroupLimit"], None,
      "IVF assignment+scoring fused in one candidate pass; only partial "
      "top-k scalars shuffle; rank pushdown via WindowGroupLimit"),
     ("ann_lsh_topk", ["!ArrowEvalPython", "partial_max(cosine", "!partial_first(qv"], None,

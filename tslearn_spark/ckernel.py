@@ -203,6 +203,22 @@ def ship(sc) -> None:
     _shipped_to.add(sc)
 
 
+def rows_from_arrow(values) -> np.ndarray:
+    """The vectors of an Arrow ``list<float|double>`` column (an Array or
+    a ChunkedArray, sliced or not) as one ``(n, dim)`` float64 matrix,
+    read off its list offsets with no per-row Python (a null element
+    reads NaN).  Unequal widths raise ValueError, and so does a null
+    vector, whose offsets alone would read as a zero-width one."""
+    import pyarrow.compute as pc
+
+    widths = pc.list_value_length(values).to_numpy(zero_copy_only=False)
+    dim = widths[0] if len(widths) else 0  # NaN for a null vector
+    if not (widths == dim).all():
+        raise ValueError("vectors must all have one width and none be null")
+    leaf = pc.list_flatten(values).to_numpy(zero_copy_only=False)
+    return np.asarray(leaf, dtype=np.float64).reshape(len(widths), int(dim))
+
+
 class Flat(NamedTuple):
     """Series stored back to back, the layout the kernel reads: series
     ``i`` is the row-major ``(lens[i], d)`` block of ``buf`` starting at
@@ -216,27 +232,17 @@ class Flat(NamedTuple):
     @classmethod
     def from_arrow(cls, values) -> "Flat":
         """The series of an Arrow ``list<list<double>>`` column (an Array
-        or a ChunkedArray), read off its list offsets with no per-row
-        Python and at most one copy of the leaf doubles (a null reads
-        NaN).  Every timestamp must have the same width d (1 when no
-        series has a timestamp); another width raises ValueError, as
-        ``flatten``."""
-        import pyarrow as pa
+        or a ChunkedArray): its timestamps read by ``rows_from_arrow``, a
+        null series as an empty one.  Every timestamp must have the same
+        width d (1 when no series has a timestamp); another width raises
+        ValueError, as ``flatten``."""
+        import pyarrow.compute as pc
 
-        if isinstance(values, pa.ChunkedArray):
-            values = (values.combine_chunks() if values.num_chunks
-                      else pa.array([], values.type))
-        outer = values.offsets.to_numpy().astype(np.int64)
-        steps = values.values.offsets.to_numpy().astype(np.int64)
-        steps = steps[outer[0]:outer[-1] + 1]
-        widths = np.diff(steps)
-        d = int(widths[0]) if widths.size else 1
-        if (widths != d).any():
-            raise ValueError(f"series must all be (sz, {d}) for the C kernel")
-        leaf = values.values.values.slice(steps[0], steps[-1] - steps[0])
-        buf = np.ascontiguousarray(
-            leaf.to_numpy(zero_copy_only=False), dtype=np.float64)
-        return cls(buf, (outer[:-1] - outer[0]) * d, np.diff(outer), d)
+        lens = pc.list_value_length(values).fill_null(0).to_numpy(
+            zero_copy_only=False).astype(np.int64)
+        steps = rows_from_arrow(pc.list_flatten(values))
+        d = steps.shape[1] if len(steps) else 1
+        return cls(steps.reshape(-1), (np.cumsum(lens) - lens) * d, lens, d)
 
     def arrays(self) -> list:
         """Each series as a ``(sz, d)`` view of ``buf``."""

@@ -70,7 +70,7 @@ def _euclidean_topk(queries: DataFrame, train: DataFrame, k: int,
     sizes.update(v for v in t_sz if v is not None)
     if len(sizes) != 1:
         return None
-    q_ids = q_tab.column("series_id").to_numpy()
+    q_ids = q_tab.column("series_id").to_numpy().astype(np.int64)
     Q = q_flat.buf.reshape(len(q_ids), -1)
     spark = train.sparkSession
     bc = spark.sparkContext.broadcast((q_ids, Q))
@@ -81,11 +81,12 @@ def _euclidean_topk(queries: DataFrame, train: DataFrame, k: int,
         limit_blas_threads(1)  # task-parallel workers: 1 BLAS thread each
         ids_b, Qm = bc.value
         q_sq = np.einsum("ij,ij->i", Qm, Qm)
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            C = np.array([M._to_arr(v).ravel() for v in pdf["values"]])
-            cid = pdf["series_id"].to_numpy(dtype=np.int64)
+            cid = batch.column("series_id").to_numpy().astype(np.int64)
+            C = ckernel.Flat.from_arrow(batch.column("values")).buf.reshape(
+                cid.size, -1)
             c_sq = np.einsum("ij,ij->i", C, C)
             d2 = c_sq[:, None] + q_sq[None, :] - 2.0 * (C @ Qm.T)
             np.maximum(d2, 0.0, out=d2)
@@ -114,13 +115,12 @@ def _euclidean_topk(queries: DataFrame, train: DataFrame, k: int,
             # smallest id or the final (dist, id2) window loses rows
             sel = topk_matrix_tiebreak(d2, cid, kk)
             cols = np.arange(d2.shape[1])[None, :]
-            yield pd.DataFrame({
-                "id1": np.repeat(ids_b, kk),
-                "id2": cid[sel].T.ravel(),
-                "dist": np.sqrt(d2[sel, cols]).T.ravel(),
-            })
+            yield pa.RecordBatch.from_arrays(
+                [np.repeat(ids_b, kk), cid[sel].T.ravel(),
+                 np.sqrt(d2[sel, cols]).T.ravel()], ["id1", "id2", "dist"])
 
-    partial = train.mapInPandas(gen, "id1 long, id2 long, dist double").where(
+    partial = train.select("series_id", "values").mapInArrow(
+        gen, "id1 long, id2 long, dist double").where(
         F.col("dist") < float("inf")
     )
     w = Window.partitionBy("id1").orderBy(F.col("dist").asc(), F.col("id2").asc())

@@ -458,8 +458,9 @@ def embedding_neardup_pairs(
     partition runs one BLAS matmul against its candidate rows and emits
     ONLY above-threshold pairs (the n^2 similarity matrix never
     materializes anywhere, and the shuffle carries just the survivor
-    triples).  Needs a broadcastable embedding set — the correctness
-    baseline and the right plan up to ~1M vectors.
+    triples).  The correctness baseline; a table over
+    ``session.BROADCAST_LIMIT_VALUES`` vector values (8M: 125k vectors
+    of dim 64) raises ValueError, so pass ``bits=`` for it.
 
     bits=k (scale path): random-hyperplane LSH bucketing
     (simsearch.lsh_bucket_col, literal planes — replayable in SQL), one
@@ -470,19 +471,19 @@ def embedding_neardup_pairs(
     one-row probe job that otherwise reads it from the first row.
     """
     from tslearn_spark.pipeline.simsearch import (
-        _hyperplanes, cosine_from_norms, lsh_bucket_col, norm_col,
+        _broadcast_side, _hyperplanes, _unit_vectors, cosine_from_norms,
+        lsh_bucket_col, norm_col,
     )
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     if bits is None:
-        e_pdf = embeddings.select(F.col(id_col), F.col(vec_col)).toPandas()
-        ids = e_pdf[id_col].to_numpy(dtype=np.int64)
-        Q = np.array([list(v) for v in e_pdf[vec_col]], dtype=np.float64)
-        Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-        spark = embeddings.sparkSession
-        bc = spark.sparkContext.broadcast((ids, Qn))
+        ids, Qn = _broadcast_side(
+            embeddings, id_col, vec_col,
+            "embedding_neardup_pairs(bits=None)'s embedding table",
+            "bits= (the LSH path)")
+        bc = embeddings.sparkSession.sparkContext.broadcast((ids, Qn))
         thr = float(threshold)
 
         def gen(batches):
@@ -490,21 +491,16 @@ def embedding_neardup_pairs(
 
             limit_blas_threads(1)  # task-parallel: 1 BLAS thread each
             ids_b, Qn_b = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
+            for batch in batches:
+                if batch.num_rows == 0:
                     continue
-                C = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-                cid = pdf[id_col].to_numpy(dtype=np.int64)
-                Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
+                cid, Cn = _unit_vectors(batch, id_col, vec_col)
                 sims = Cn @ Qn_b.T  # (n_cand, n_all)
                 # emit each unordered pair once: candidate id strictly below
                 keep = (sims >= thr) & (cid[:, None] < ids_b[None, :])
                 r, c = np.nonzero(keep)
-                yield pd.DataFrame({
-                    "id1": cid[r],
-                    "id2": ids_b[c],
-                    "cosine": sims[r, c],
-                })
+                yield pa.RecordBatch.from_arrays(
+                    [cid[r], ids_b[c], sims[r, c]], ["id1", "id2", "cosine"])
 
         # like brute_force_topk: a byte-sized scan must not serialize
         # the GEMM stage on one single-BLAS-thread worker.  Per row one
@@ -512,7 +508,7 @@ def embedding_neardup_pairs(
         # driver-side matrix's.
         return size_tasks(
             embeddings.select(F.col(id_col), F.col(vec_col)),
-            float(Qn.size), n_rows=len(ids)).mapInPandas(
+            float(Qn.size), n_rows=len(ids)).mapInArrow(
             gen, "id1 long, id2 long, cosine double"
         )
 

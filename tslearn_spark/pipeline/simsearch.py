@@ -1,9 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
-* brute_force_topk — exact cosine top-k via crossJoin + JVM-side
-  zip_with/aggregate dot product (no Python in the loop).  The query
-  side is broadcast; per-partition the candidate scan is sequential and
-  cache-friendly.  This is the correctness baseline.
+* brute_force_topk — exact cosine top-k: one BLAS matmul of each
+  candidate Arrow batch against the broadcast query side.  This is the
+  correctness baseline.
 * lsh_topk — random-hyperplane LSH: queries and candidates bucketed by
   sign bits of projections onto fixed random planes; the top-k runs
   per-bucket.  Candidate volume drops by ~2^bits, the scale path.
@@ -16,9 +15,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tslearn_spark import session
+from tslearn_spark.ckernel import rows_from_arrow
 from tslearn_spark.session import size_tasks
 from tslearn_spark.topk import topk_matrix_tiebreak
 
@@ -70,6 +72,40 @@ def cosine_from_norms(dot_a: str, dot_b: str, n_a: str, n_b: str):
     )
 
 
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The top ``k`` rows per query by (cosine DESC, neighbor_id ASC)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "cosine", "rank"))
+
+
+def _unit_rows(X: np.ndarray) -> np.ndarray:
+    """Each row of ``X`` over its L2 norm (a zero row stays zero)."""
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
+
+
+def _unit_vectors(batch, id_col: str, vec_col: str):
+    """int64 ids and ``_unit_rows`` vectors of an Arrow batch."""
+    return (batch.column(id_col).to_numpy().astype(np.int64),
+            _unit_rows(rows_from_arrow(batch.column(vec_col))))
+
+
+def _broadcast_side(df: DataFrame, id_col: str, vec_col: str, what: str,
+                    instead: str):
+    """``_unit_vectors`` of a side to broadcast, in partition order, collected
+    under the broadcast budget (``session.collect_within``); past it a
+    ValueError names the budget and ``instead``."""
+    tab = session.collect_within(
+        df.select(F.col(id_col), F.col(vec_col).alias("values")))
+    if tab is None:
+        raise ValueError(
+            f"{what} holds more than session.BROADCAST_LIMIT_VALUES = "
+            f"{session.BROADCAST_LIMIT_VALUES:,} values; use {instead}")
+    return _unit_vectors(tab, id_col, "values")
+
+
 def brute_force_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -82,22 +118,17 @@ def brute_force_topk(
 
     Scale design: the query matrix is broadcast to every partition; each
     candidate partition computes one BLAS matmul (candidates x queries^T)
-    via mapInPandas and emits only its *partial* top-k per query — the
+    via mapInArrow and emits only its *partial* top-k per query — the
     final window reduce sees (#partitions x k) rows per query, never the
     full pair set.  This is orders of magnitude faster than a crossJoin
     with interpreted higher-order-function dot products, and the shuffle
     volume is O(n_queries x k x n_partitions) regardless of candidate
-    count.  (For query sets too big to broadcast, use lsh_topk.)
+    count.  A query side over ``session.BROADCAST_LIMIT_VALUES`` vector
+    values raises ValueError: use lsh_topk for it.
     """
-    # Arrow transfer (toPandas), not collect(): Row objects wrap the
-    # vectors in per-element Python objects — ~5-10x the heap of the
-    # raw doubles on a large query set
-    q_pdf = queries.select(F.col(id_col), F.col(vec_col)).toPandas()
-    q_ids = q_pdf[id_col].to_numpy(dtype=np.int64)
-    Q = np.array([list(v) for v in q_pdf[vec_col]], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast((q_ids, Qn))
+    q_ids, Qn = _broadcast_side(queries, id_col, vec_col,
+                                "brute_force_topk's query side", "lsh_topk")
+    bc = candidates.sparkSession.sparkContext.broadcast((q_ids, Qn))
 
     def gen(batches):
         from tslearn_spark.blasctl import limit_blas_threads
@@ -120,12 +151,10 @@ def brute_force_topk(
         q_chunk = max(1, min(4096, n_q))
         best_s = best_i = None  # running per-TASK partial (k, n_query)
         sims_buf = None
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            C = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            cid = pdf[id_col].to_numpy(dtype=np.int64)
-            Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
+            cid, Cn = _unit_vectors(batch, id_col, vec_col)
             CnT = np.ascontiguousarray(Cn.T)   # (d, n_cand), tiny
             n_cand = Cn.shape[0]
             kk = min(k, n_cand)
@@ -155,27 +184,18 @@ def brute_force_topk(
                 best_s, best_i = merge_topk_columns(
                     best_s, best_i, part_s, part_i, k)
         if best_s is not None:
-            yield pd.DataFrame({
-                "query_id": np.repeat(ids_b, best_s.shape[0]),
-                "neighbor_id": best_i.T.ravel(),
-                "cosine": best_s.T.ravel(),
-            })
+            yield pa.RecordBatch.from_arrays(
+                [np.repeat(ids_b, best_s.shape[0]), best_i.T.ravel(),
+                 best_s.T.ravel()], ["query_id", "neighbor_id", "cosine"])
 
     partial = size_tasks(
-        candidates, float(Qn.size),
+        candidates.select(id_col, vec_col), float(Qn.size),
         # parquet float32 array + id: ~5 B/element + fixed overhead
         row_bytes=16.0 + 5.0 * Qn.shape[1]
-    ).mapInPandas(
+    ).mapInArrow(
         gen, "query_id long, neighbor_id long, cosine double"
     ).where(F.col("cosine") > float("-inf"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(partial, k)
 
 
 def assign_ivf_lists(
@@ -196,9 +216,7 @@ def assign_ivf_lists(
     L2-normalized first, argmax returns the FIRST max -> lowest centroid
     index on ties.
     """
-    Cen = np.asarray(centroids, dtype=np.float64)
-    Cen = Cen / np.maximum(np.linalg.norm(Cen, axis=1, keepdims=True),
-                           1e-300)
+    Cen = _unit_rows(np.asarray(centroids, dtype=np.float64))
     bc = candidates.sparkSession.sparkContext.broadcast(Cen)
 
     def gen(batches):
@@ -206,20 +224,18 @@ def assign_ivf_lists(
 
         limit_blas_threads(1)  # task-parallel workers: 1 BLAS thread each
         C = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            V = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            Vn = V / np.maximum(
-                np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-            yield pdf.assign(**{
-                list_col: np.argmax(Vn @ C.T, axis=1).astype(np.int32)})
+            Vn = _unit_rows(rows_from_arrow(batch.column(vec_col)))
+            yield batch.append_column(list_col, pa.array(
+                np.argmax(Vn @ C.T, axis=1).astype(np.int32)))
 
     schema = candidates.select(id_col, vec_col).schema.add(
         list_col, "integer")
     return size_tasks(
         candidates.select(id_col, vec_col), float(Cen.size),
-        row_bytes=16.0 + 5.0 * Cen.shape[1]).mapInPandas(gen, schema)
+        row_bytes=16.0 + 5.0 * Cen.shape[1]).mapInArrow(gen, schema)
 
 
 def ivf_topk(
@@ -266,7 +282,8 @@ def ivf_topk(
     assigns its rows to lists, runs one BLAS block per list against the
     broadcast probing queries, and emits only its partial top-k per
     query; the final window reduce sees O(q x k x partitions) scalar
-    rows, like brute_force_topk but with the per-list candidate cut.
+    rows, like brute_force_topk but with the per-list candidate cut,
+    and the same ValueError past the broadcast budget.
 
     Ties break identically on both engines: assignment by lowest
     centroid index, probe order and final rank by (cosine DESC, id ASC).
@@ -307,20 +324,16 @@ def ivf_topk(
         n_probe = min(ap, max(int(n_lists) // 16, 4), int(n_lists)) \
             if n_probe == "auto" else n_probe
     if centroids is None:
-        c_pdf = (
-            candidates.select(id_col, vec_col).orderBy(id_col).limit(n_lists).toPandas()
-        )
-        centroids = np.array([list(v) for v in c_pdf[vec_col]], dtype=np.float64)
-    Cen = np.asarray(centroids, dtype=np.float64)
-    Cen = Cen / np.maximum(np.linalg.norm(Cen, axis=1, keepdims=True), 1e-300)
+        Cen = _broadcast_side(
+            candidates.orderBy(id_col).limit(n_lists), id_col, vec_col,
+            "ivf_topk's default centroids", "lsh_topk")[1]
+    else:
+        Cen = _unit_rows(np.asarray(centroids, dtype=np.float64))
 
-    # probes on the driver: queries are broadcastable by contract (same
-    # assumption as brute_force_topk); Arrow toPandas for the same
-    # heap reason; stable argsort -> ascending centroid index on ties
-    q_pdf = queries.select(id_col, vec_col).toPandas()
-    q_ids = q_pdf[id_col].to_numpy(dtype=np.int64)
-    Q = np.array([list(v) for v in q_pdf[vec_col]], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
+    # probes on the driver; stable argsort -> ascending centroid index
+    # on ties
+    q_ids, Qn = _broadcast_side(queries, id_col, vec_col,
+                                "ivf_topk's query side", "lsh_topk")
     order = np.argsort(-(Qn @ Cen.T), axis=1, kind="stable")[:, : min(n_probe, len(Cen))]
     probers = {
         int(l): np.where((order == l).any(axis=1))[0] for l in range(len(Cen))
@@ -341,16 +354,14 @@ def ivf_topk(
         best_s = np.full((k, n_q), -np.inf)
         best_i = np.full((k, n_q), np.iinfo(np.int64).max, dtype=np.int64)
         touched = False
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            V = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-            cid = pdf[id_col].to_numpy(dtype=np.int64)
+            cid, Vn = _unit_vectors(batch, id_col, vec_col)
             if list_col is not None:
                 # prebuilt index: the assignment matmul already ran at
                 # ingest (assign_ivf_lists) and rode in as a column
-                lists = pdf[list_col].to_numpy(dtype=np.int64)
+                lists = batch.column(list_col).to_numpy().astype(np.int64)
             else:
                 # argmax returns the FIRST max -> lowest centroid index
                 # on ties
@@ -377,11 +388,9 @@ def ivf_topk(
         if touched:
             emit = best_s > -np.inf  # (k, n_q) mask of real partials
             n_per_q = emit.sum(axis=0)
-            yield pd.DataFrame({
-                "query_id": np.repeat(q_ids_b, n_per_q),
-                "neighbor_id": best_i.T[emit.T],
-                "cosine": best_s.T[emit.T],
-            })
+            yield pa.RecordBatch.from_arrays(
+                [np.repeat(q_ids_b, n_per_q), best_i.T[emit.T],
+                 best_s.T[emit.T]], ["query_id", "neighbor_id", "cosine"])
 
     if list_col is not None:
         probed = sorted(int(l) for l, q in probers.items() if len(q) > 0)
@@ -401,17 +410,9 @@ def ivf_topk(
     fpr = avg_probers * d_dim + (0.0 if list_col is not None
                                  else float(Cen.size))
     partial = size_tasks(
-        cand_src, fpr, row_bytes=16.0 + 5.0 * d_dim).mapInPandas(
-        score_gen, "query_id long, neighbor_id long, cosine double"
-    ).where(F.col("cosine") > float("-inf"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+        cand_src, fpr, row_bytes=16.0 + 5.0 * d_dim).mapInArrow(
+        score_gen, "query_id long, neighbor_id long, cosine double")
+    return _rank_topk(partial, k)
 
 
 def train_ivf_centroids(
@@ -797,11 +798,4 @@ def lsh_topk(
     ).agg(F.max("cosine").alias("cosine"))
     if drop_self:
         deduped = deduped.where(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        deduped.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(deduped, k)

@@ -286,9 +286,10 @@ def _leaf_count(col) -> int:
     return len(col)
 
 
-# the broadcast budget of every fast path that collects one side to
-# broadcast it (kNN train or query sets, the early classifier's
-# classifier half): float64 values, ~64 MB
+# the broadcast budget of every path that collects one side to broadcast
+# it (kNN train or query sets, the early classifier's classifier half,
+# the simsearch query sides and IVF centroids, exact embedding near-dup's
+# whole table): float64 values, ~64 MB
 BROADCAST_LIMIT_VALUES = 8_000_000
 
 

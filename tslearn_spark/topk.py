@@ -1,6 +1,6 @@
 """Tie-aware map-side partial top-k selection.
 
-Every broadcast/mapInPandas kNN path in the engine emits a per-batch
+Every broadcast map-side kNN path in the engine emits a per-batch
 partial top-k and lets a final window (``score, id``) produce the global
 ranking.  ``np.argpartition`` alone picks an ARBITRARY subset of rows
 tied at the cutoff value, so a tied candidate with a smaller id can be
